@@ -8,7 +8,10 @@ SURVEY.md §2 operator, each with a DuckDB-equivalent oracle).
 
 from __future__ import annotations
 
+import glob
+import json
 import os
+import re
 import sys
 from collections.abc import Callable
 
@@ -47,10 +50,33 @@ def entry(spark: SparkSession) -> DataFrame:
     )
 
 
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    from wq_data_pipeline_spark.plans.queries import QUERIES
+def _last_green_rounds() -> dict[str, int]:
+    """Entry name -> the latest round whose committed
+    ``CORRECTNESS_r<N>.json`` record shows the entry green (rows,
+    schema and hash all matching)."""
+    last: dict[str, int] = {}
+    for path in glob.glob(os.path.join(_HERE, "CORRECTNESS_r*.json")):
+        m = re.search(r"_r(\d+)\.json$", path)
+        if m is None:
+            continue
+        with open(path) as f:
+            record = json.load(f)
+        for name, row in record.items():
+            if row.get("rows_match") and row.get("schema_match") and row.get("hash_match"):
+                last[name] = max(last.get(name, -1), int(m.group(1)))
+    return last
 
-    return dict(QUERIES)
+
+def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+    """The catalog, stalest driver check first: the driver's correctness
+    gate reads only the first 50 entries, so oracled entries lead,
+    ordered by the latest round that recorded them green (never green
+    = -1), ties by name; the entries without an oracle come last."""
+    from wq_data_pipeline_spark.plans.queries import ORACLES, QUERIES
+
+    last = _last_green_rounds()
+    order = sorted(QUERIES, key=lambda n: (n not in ORACLES, last.get(n, -1), n))
+    return {name: QUERIES[name] for name in order}
 
 
 def oracle_sql() -> dict[str, str]:

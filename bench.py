@@ -3,6 +3,10 @@
 ONE JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
 "queries": {name: sec}, "sf": ...}.
 
+``python bench.py name [name ...]`` runs only the named entries under
+the same warmups and protocol (a quick before/after A/B) and prints the
+same line; a subset run leaves the BENCH_LOCAL.json record untouched.
+
 Each query is timed from CONSTRUCTION through completion of a
 collect-free noop sink (``df.write.format('noop')`` executes the full
 plan without collecting rows to the driver, which is what a cluster
@@ -36,7 +40,8 @@ it) is re-run twice back-to-back and the better of {median,
 isolated-min} is recorded, with the adjudication kept in an
 "isolation_reruns" field so the excursion is visible, not silently
 swallowed. The prior record is $SPARK_GRAFT_BENCH_PRIOR, defaulting
-to the newest committed BENCH_LOCAL*.json.
+to the committed BENCH_LOCAL.json (older snapshots live under
+records/).
 
 The full per-query JSON is ALSO written to $SPARK_GRAFT_BENCH_OUT
 (default BENCH_LOCAL.json next to this file): the driver's recorded
@@ -47,7 +52,6 @@ in-repo copy is the durable record (VERDICT r7 what's-wrong #5).
 from __future__ import annotations
 
 import gc
-import glob
 import json
 import os
 import re
@@ -57,25 +61,12 @@ import time
 
 def _prior_medians(here: str) -> dict[str, float]:
     """Per-query medians from the previous recorded run, for the
-    isolation re-run rule. Env override SPARK_GRAFT_BENCH_PRIOR;
-    default: the newest BENCH_LOCAL*.json in the repo (BENCH_LOCAL
-    .json itself still holds the PREVIOUS run at this point — it is
-    only overwritten at the end)."""
-    path = os.environ.get("SPARK_GRAFT_BENCH_PRIOR")
-    if not path:
-        cands = glob.glob(os.path.join(here, "BENCH_LOCAL*.json"))
-        if not cands:
-            return {}
-        # tie-break toward the canonical BENCH_LOCAL.json: a fresh
-        # checkout stamps every committed record with ONE mtime, and
-        # plain max-by-mtime then picks an arbitrary (possibly
-        # rounds-old) snapshot as "prior" — the r9 run that let an
-        # image_ahash 21 s excursion through compared it against the
-        # r8 record's 25 s instead of the previous run's 1.6 s
-        canonical = os.path.join(here, "BENCH_LOCAL.json")
-        path = max(
-            cands, key=lambda p: (os.path.getmtime(p), p == canonical)
-        )
+    isolation re-run rule: $SPARK_GRAFT_BENCH_PRIOR if set, else
+    BENCH_LOCAL.json next to this file (it still holds the PREVIOUS
+    run at this point — it is only overwritten at the end)."""
+    path = os.environ.get("SPARK_GRAFT_BENCH_PRIOR") or os.path.join(
+        here, "BENCH_LOCAL.json"
+    )
     try:
         with open(path) as f:
             return dict(json.load(f).get("queries", {}))
@@ -106,7 +97,7 @@ def _adjudicate_outliers(
     return reruns
 
 
-def main() -> None:
+def main(names: tuple[str, ...] = ()) -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1)) if m else -1.0
@@ -121,6 +112,9 @@ def main() -> None:
     import __spark_entry__ as entry_mod
 
     queries = entry_mod.queries()
+    unknown = sorted(set(names) - set(queries))
+    if unknown:
+        raise SystemExit(f"unknown catalog entries: {', '.join(unknown)}")
 
     # JVM/codegen warmup so the alphabetically-first query doesn't
     # absorb session start-up in its number: exercise the scan, a
@@ -155,7 +149,7 @@ def main() -> None:
         "noop"
     ).mode("overwrite").save()
 
-    order = sorted(queries)
+    order = sorted(names or queries)
     runs: dict[str, list[float]] = {name: [] for name in order}
     for sweep in range(3):
         seq = list(reversed(order)) if sweep == 1 else order
@@ -204,14 +198,15 @@ def main() -> None:
     out_path = os.environ.get(
         "SPARK_GRAFT_BENCH_OUT", os.path.join(here, "BENCH_LOCAL.json")
     )
-    try:
-        with open(out_path, "w") as f:
-            json.dump(payload, f, indent=1)
-            f.write("\n")
-    except OSError:
-        pass  # stdout line below is still the contract
+    if not names:  # a subset must not replace the full-catalog record
+        try:
+            with open(out_path, "w") as f:
+                json.dump(payload, f, indent=1)
+                f.write("\n")
+        except OSError:
+            pass  # stdout line below is still the contract
     print(json.dumps(payload))
 
 
 if __name__ == "__main__":
-    main()
+    main(tuple(sys.argv[1:]))

@@ -1,5 +1,5 @@
 """Keep-one invariant of the keeper-protected removal
-(plans/queries_r6o.py) on the exact merged-island scenario that
+(keepone_removal in plans/dedup.py) on the exact merged-island scenario that
 breaks gram-island keeper rules (the r4/r5 ADVICE case): two distinct
 duplicated strings ADJACENT in one copy merge into a single island,
 and island-level keep-one then removes every occurrence of one of
@@ -10,7 +10,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from wq_data_pipeline_spark.plans.queries_r6o import (
+from wq_data_pipeline_spark.plans.dedup import (
     _KP_L,
     keepone_marks_and_removed,
     keepone_removal_report,
@@ -91,7 +91,7 @@ def test_sweep_counts_match_per_char_form(spark, frames):
     keepone_removal_report) must count EXACTLY the chars the per-char
     binned-join form removes — per document, on the merged-island
     scenario."""
-    from wq_data_pipeline_spark.plans.queries_r6o import (
+    from wq_data_pipeline_spark.plans.dedup import (
         keepone_marked,
         keepone_removed_counts,
     )
@@ -111,7 +111,7 @@ def test_sweep_counts_match_per_char_form(spark, frames):
 def test_sweep_parity_on_testdata(spark):
     """Sweep-vs-per-char parity on real data (sf0.001 documents):
     the strongest form of the unchanged-oracle acceptance bar."""
-    from wq_data_pipeline_spark.plans.queries_r6o import (
+    from wq_data_pipeline_spark.plans.dedup import (
         keepone_marked,
         keepone_marks_and_removed,
         keepone_removed_counts,

@@ -1,4 +1,5 @@
-"""Round-10 pins: batch 30 (queries_r10.py).
+"""Entry pins: embed_decontaminate (similarity), para_dedup (dedup) and
+the quality_train family (corpus).
 
 Pure-Python replications + planted fixtures pin what the DuckDB oracle
 can't: that the LSH candidate stage actually CATCHES planted
@@ -10,98 +11,23 @@ that the learned weights carry real signal (held-out AUC).
 
 from __future__ import annotations
 
-import hashlib
-import math
-import re
-
 import pytest
-from pyspark.sql import functions as F, types as T
+from pyspark.sql import functions as F
 
-from wq_data_pipeline_spark.plans import queries_r10 as R10
-
-# ---------------------------------------------------------------- fixtures
-
-_DOC_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType(), False),
-        T.StructField("text", T.StringType(), True),
-        T.StructField("lang", T.StringType(), True),
-        T.StructField("source", T.StringType(), True),
-        T.StructField("n_chars", T.LongType(), True),
-    ]
+from tests.replicas import (
+    _py_band_sigs,
+    _py_bucket,
+    _py_cos,
+    _py_quant,
+    _py_tokens,
+    _py_train,
+    _write_docs,
+    _write_embs,
 )
-
-_EMB_SCHEMA = T.StructType(
-    [
-        T.StructField("vec_id", T.LongType(), False),
-        T.StructField("embedding", T.ArrayType(T.FloatType()), True),
-        T.StructField("label", T.IntegerType(), True),
-    ]
-)
-
-
-def _write_docs(spark, path, rows):
-    full = [(i, t, lg, s, len(t)) for (i, t, lg, s) in rows]
-    spark.createDataFrame(full, _DOC_SCHEMA).coalesce(2).write.mode(
-        "overwrite"
-    ).parquet(f"{path}/documents.parquet")
-
-
-def _write_embs(spark, path, rows):
-    spark.createDataFrame(rows, _EMB_SCHEMA).coalesce(2).write.mode(
-        "overwrite"
-    ).parquet(f"{path}/embeddings.parquet")
-
-
-# ------------------------------------------------- pure-Python replications
-
-
-def _py_quant(v):
-    # mirror of queries_ext._quantized: round(float32-as-double * 1e7)
-    return [int(_round_half_away(float(x) * 10_000_000)) for x in v]
-
-
-def _round_half_away(x: float) -> int:
-    return int(math.copysign(math.floor(abs(x) + 0.5), x))
-
-
-def _py_plane(p: int, dim: int):
-    return [
-        1 if int(hashlib.md5(f"{p}:{i}".encode()).hexdigest()[0], 16) % 2 == 0
-        else -1
-        for i in range(dim)
-    ]
-
-
-def _py_band_sigs(q, bands, planes):
-    """(band, sig) list for one quantized vector — mirror of
-    similarity.banded_signatures."""
-    dim = len(q)
-    out = []
-    for b in range(bands):
-        sig = 0
-        for j in range(planes):
-            h = _py_plane(b * planes + j, dim)
-            if sum(x * hh for x, hh in zip(q, h)) > 0:
-                sig |= 1 << j
-        out.append((b, sig))
-    return out
-
-
-def _py_cos(a, b):
-    d = sum(x * y for x, y in zip(a, b))
-    return d / (
-        math.sqrt(sum(x * x for x in a)) * math.sqrt(sum(x * x for x in b))
-    )
-
-
-def _py_tokens(text: str):
-    return [t for t in re.split(r"\s+", text.lower()) if t]
-
-
-def _py_bucket(tok: str) -> int:
-    return int(hashlib.md5(tok.encode()).hexdigest()[:15], 16) % R10._QT_B
-
+from wq_data_pipeline_spark.plans import corpus as CORPUS
+from wq_data_pipeline_spark.plans import dedup as DEDUP
+from wq_data_pipeline_spark.plans import similarity as SIMILARITY
+from wq_data_pipeline_spark.plans.queries import ORACLES, QUERIES
 
 # ---------------------------------------------------- embed_decontaminate
 
@@ -142,7 +68,7 @@ def test_embed_decontaminate_planted_full_replication(spark, tmp_path):
     )
     got = {
         r["source"]: r.asDict()
-        for r in R10.q_embed_decontaminate(spark, str(tmp_path)).collect()
+        for r in SIMILARITY.q_embed_decontaminate(spark, str(tmp_path)).collect()
     }
 
     # full independent replication
@@ -150,7 +76,7 @@ def test_embed_decontaminate_planted_full_replication(spark, tmp_path):
     bench = [i for i in qv if i % 10 == 7]
     corp = [i for i in qv if i % 10 != 7]
     sigs = {
-        i: set(_py_band_sigs(qv[i], R10._DC_BANDS, R10._DC_PLANES))
+        i: set(_py_band_sigs(qv[i], SIMILARITY._DC_BANDS, SIMILARITY._DC_PLANES))
         for i in qv
     }
     hits = {}
@@ -158,7 +84,7 @@ def test_embed_decontaminate_planted_full_replication(spark, tmp_path):
         for b in bench:
             if sigs[c] & sigs[b]:
                 cos = _py_cos(qv[c], qv[b])
-                if cos >= R10._DC_TAU:
+                if cos >= SIMILARITY._DC_TAU:
                     n, m = hits.get(c, (0, -2.0))
                     hits[c] = (n + 1, max(m, cos))
     src = {i: s for i, _, s in base}
@@ -194,7 +120,7 @@ def test_embed_decontaminate_hits_are_sound(spark, sf_dir):
     and at least one source reports contamination (non-degenerate)."""
     from wq_data_pipeline_spark.sources.testdata import load_table
 
-    rows = R10.q_embed_decontaminate(spark, sf_dir).collect()
+    rows = SIMILARITY.q_embed_decontaminate(spark, sf_dir).collect()
     assert sum(r["n_contaminated"] for r in rows) >= 1
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     data = {r["vec_id"]: _py_quant(r["embedding"]) for r in emb.collect()}
@@ -202,7 +128,7 @@ def test_embed_decontaminate_hits_are_sound(spark, sf_dir):
     corp = {i: v for i, v in data.items() if i % 10 != 7}
     true_hits = {}
     for c, cv in corp.items():
-        n = sum(1 for bv in bench.values() if _py_cos(cv, bv) >= R10._DC_TAU)
+        n = sum(1 for bv in bench.values() if _py_cos(cv, bv) >= SIMILARITY._DC_TAU)
         if n:
             true_hits[c] = n
     src = {
@@ -242,7 +168,7 @@ def test_para_dedup_planted_block_copy(spark, tmp_path):
     _write_docs(spark, tmp_path, rows)
     got = {
         (r["doc_a"], r["doc_b"]): r.asDict()
-        for r in R10.q_para_dedup(spark, str(tmp_path)).collect()
+        for r in DEDUP.q_para_dedup(spark, str(tmp_path)).collect()
     }
     assert (1, 2) in got, got
     assert got[(1, 2)]["is_doc_dup"] is False
@@ -256,12 +182,12 @@ def test_para_dedup_finds_what_doc_level_misses(spark, sf_dir):
     """The round-10 capability pin on the REAL fixture: part-level
     near-dedup reports doc pairs that are NOT byte-identical — the
     copied-block dupes doc-level exact dedup cannot see."""
-    rows = R10.q_para_dedup(spark, sf_dir).collect()
+    rows = DEDUP.q_para_dedup(spark, sf_dir).collect()
     non_doc_dup = [r for r in rows if not r["is_doc_dup"]]
     assert len(non_doc_dup) >= 1
     # and every reported pair shares at least one chunk at J >= tau
     assert all(r["n_dup_chunk_pairs"] >= 1 for r in rows)
-    assert all(r["max_jac"] >= R10._PARA_JTAU for r in rows)
+    assert all(r["max_jac"] >= DEDUP._PARA_JTAU for r in rows)
 
 
 def test_para_dedup_pairs_match_brute_force(spark, tmp_path):
@@ -279,15 +205,15 @@ def test_para_dedup_pairs_match_brute_force(spark, tmp_path):
     rows.append((10, first16 + " zz1 zz2 zz3 zz4 zz5 zz6 zz7 zz8", "en", "s1"))
     _write_docs(spark, tmp_path, rows)
     got = {
-        (r["doc_a"], r["doc_b"]) for r in R10.q_para_dedup(spark, str(tmp_path)).collect()
+        (r["doc_a"], r["doc_b"]) for r in DEDUP.q_para_dedup(spark, str(tmp_path)).collect()
     }
 
     def chunks(txt):
         t = _py_tokens(txt)
         out = []
-        for i in range(0, len(t), R10._PARA_C):
-            c = t[i : i + R10._PARA_C]
-            if len(c) >= R10._PARA_MIN:
+        for i in range(0, len(t), DEDUP._PARA_C):
+            c = t[i : i + DEDUP._PARA_C]
+            if len(c) >= DEDUP._PARA_MIN:
                 out.append(set(c))
         return out
 
@@ -299,48 +225,12 @@ def test_para_dedup_pairs_match_brute_force(spark, tmp_path):
                 for ca in ch[a]:
                     for cb in ch[b]:
                         j = len(ca & cb) / len(ca | cb)
-                        if j >= R10._PARA_JTAU:
+                        if j >= DEDUP._PARA_JTAU:
                             exp.add((a, b))
     assert got == exp, (got, exp)
 
 
 # ---------------------------------------------------------- quality_train
-
-
-def _py_train(docs):
-    """From-scratch replication of the 3-round integer-GD trainer.
-    docs: list of (doc_id, text)."""
-    bl = set(R10._BLOCKLIST)
-    x = {}  # doc -> {bucket: cnt}
-    y = {}
-    for i, t in docs:
-        if i % R10._QT_HOLD_MOD == R10._QT_HOLD_RES:
-            continue
-        toks = _py_tokens(t)
-        if not toks:
-            continue
-        y[i] = 0 if any(tok in bl for tok in toks) else 1
-        d = x.setdefault(i, {})
-        for tok in toks:
-            b = _py_bucket(tok)
-            d[b] = d.get(b, 0) + 1
-    n = len(x)
-    w = [0] * R10._QT_B
-    traj = []
-    for _ in range(R10._QT_ROUNDS):
-        g = [0] * R10._QT_B
-        for i, feats in x.items():
-            z = sum(c * w[b] for b, c in feats.items())
-            p = 1.0 / (1.0 + math.exp(-(z / 1000000.0)))
-            e = _round_half_away((p - y[i]) * 1000000.0)
-            for b, c in feats.items():
-                g[b] += c * e
-        w = [
-            w[b] - _round_half_away(R10._QT_LR * g[b] / n)
-            for b in range(R10._QT_B)
-        ]
-        traj.append(list(w))
-    return traj
 
 
 def test_quality_train_matches_python_replication(spark, tmp_path):
@@ -360,11 +250,11 @@ def test_quality_train_matches_python_replication(spark, tmp_path):
     _write_docs(spark, tmp_path, rows)
     got = {
         r["b"]: (r["w_micro_r1"], r["w_micro_r2"], r["w_micro_r3"])
-        for r in R10.q_quality_train(spark, str(tmp_path)).collect()
+        for r in CORPUS.q_quality_train(spark, str(tmp_path)).collect()
     }
     traj = _py_train([(i, t) for i, t, _, _ in rows])
-    assert len(got) == R10._QT_B
-    for b in range(R10._QT_B):
+    assert len(got) == CORPUS._QT_B
+    for b in range(CORPUS._QT_B):
         assert got[b] == (traj[0][b], traj[1][b], traj[2][b]), (b, got[b])
 
 
@@ -381,7 +271,7 @@ def test_quality_train_learns_the_gate(spark, tmp_path):
     _write_docs(spark, tmp_path, rows)
     w3 = {
         r["b"]: r["w_micro_r3"]
-        for r in R10.q_quality_train(spark, str(tmp_path)).collect()
+        for r in CORPUS.q_quality_train(spark, str(tmp_path)).collect()
     }
     bad = {_py_bucket("slow"), _py_bucket("error")}
     good = {_py_bucket(t) for t in clean} - bad
@@ -402,16 +292,16 @@ def test_quality_train_zero_trainable_docs_oracle_parity(spark, tmp_path):
         (14, "slow error doc", "en", "s0"),
     ]
     _write_docs(spark, tmp_path, rows)
-    got = R10.q_quality_train(spark, str(tmp_path)).collect()
-    assert len(got) == R10._QT_B
+    got = CORPUS.q_quality_train(spark, str(tmp_path)).collect()
+    assert len(got) == CORPUS._QT_B
     assert all(
         r["w_micro_r1"] == 0 and r["w_micro_r2"] == 0 and r["w_micro_r3"] == 0
         for r in got
     )
     for name in ("quality_train", "quality_train_apply"):
         ok, msg = compare(
-            R10.QUERIES30[name](spark, str(tmp_path)),
-            R10.ORACLES30[name],
+            QUERIES[name](spark, str(tmp_path)),
+            ORACLES[name],
             str(tmp_path),
         )
         assert ok, (name, msg)
@@ -437,12 +327,12 @@ def test_para_dedup_packing_bound_excludes_overflow(spark, tmp_path):
         (7, "completely different content in this doc", "en", "s2"),
     ]
     _write_docs(spark, tmp_path, rows)
-    got = R10.q_para_dedup(spark, str(tmp_path)).collect()
+    got = DEDUP.q_para_dedup(spark, str(tmp_path)).collect()
     # the overflow chunk is excluded, so NO pair involves doc 6
     assert all(r["doc_b"] != 6 and r["doc_a"] != 6 for r in got), got
     ok, msg = compare(
-        R10.q_para_dedup(spark, str(tmp_path)),
-        R10.SQL_PARA_DEDUP,
+        DEDUP.q_para_dedup(spark, str(tmp_path)),
+        DEDUP.SQL_PARA_DEDUP,
         str(tmp_path),
     )
     assert ok, msg
@@ -465,7 +355,7 @@ def test_quality_train_apply_matches_python_scoring(spark, tmp_path):
     _write_docs(spark, tmp_path, rows)
     got = {
         r["source"]: (r["n_docs"], r["n_kept"], r["sum_z_micro"])
-        for r in R10.q_quality_train_apply(spark, str(tmp_path)).collect()
+        for r in CORPUS.q_quality_train_apply(spark, str(tmp_path)).collect()
     }
     w3 = _py_train([(i, t) for i, t, _, _ in rows])[-1]
     exp = {}
@@ -482,10 +372,10 @@ def test_quality_train_apply_matches_python_scoring(spark, tmp_path):
 def _py_eval(docs, w3):
     """Independent confusion/kappa/AUC replication over the held-out
     slice, given final weights."""
-    bl = set(R10._BLOCKLIST)
+    bl = set(CORPUS._BLOCKLIST)
     scored = []
     for i, t in docs:
-        if i % R10._QT_HOLD_MOD != R10._QT_HOLD_RES:
+        if i % CORPUS._QT_HOLD_MOD != CORPUS._QT_HOLD_RES:
             continue
         toks = _py_tokens(t or "")
         if not toks:
@@ -538,7 +428,7 @@ def test_quality_train_eval_matches_python_replication(spark, tmp_path):
         else:
             rows.append((i, "fast clean merge sort filter query scan", "en", "s0"))
     _write_docs(spark, tmp_path, rows)
-    got = R10.q_quality_train_eval(spark, str(tmp_path)).collect()[0].asDict()
+    got = CORPUS.q_quality_train_eval(spark, str(tmp_path)).collect()[0].asDict()
     w3 = _py_train([(i, t) for i, t, _, _ in rows])[-1]
     exp = _py_eval([(i, t) for i, t, _, _ in rows], w3)
     for k in ("n_docs", "n_pos", "n_neg", "tp", "fp", "fn", "tn"):
@@ -557,10 +447,10 @@ def test_quality_train_eval_auc_matches_real_fixture(spark, sf_dir):
     below checks is > 0.7)."""
     from wq_data_pipeline_spark.sources.testdata import load_table
 
-    got = R10.q_quality_train_eval(spark, sf_dir).collect()[0]
+    got = CORPUS.q_quality_train_eval(spark, sf_dir).collect()[0]
     w3 = {
         r["b"]: r["w_micro_r3"]
-        for r in R10.q_quality_train(spark, sf_dir).collect()
+        for r in CORPUS.q_quality_train(spark, sf_dir).collect()
     }
     docs = [
         (r["doc_id"], r["text"])
@@ -588,11 +478,11 @@ def test_quality_train_eval_degenerate_edges_oracle_parity(spark, tmp_path):
         (2, "more clean words", "en", "s1"),
     ]
     _write_docs(spark, tmp_path, rows)
-    got = R10.q_quality_train_eval(spark, str(tmp_path)).collect()
+    got = CORPUS.q_quality_train_eval(spark, str(tmp_path)).collect()
     assert len(got) == 1 and got[0]["n_docs"] == 0 and got[0]["auc"] is None
     ok, msg = compare(
-        R10.q_quality_train_eval(spark, str(tmp_path)),
-        R10.SQL_QUALITY_TRAIN_EVAL,
+        CORPUS.q_quality_train_eval(spark, str(tmp_path)),
+        CORPUS.SQL_QUALITY_TRAIN_EVAL,
         str(tmp_path),
     )
     assert ok, msg
@@ -606,11 +496,11 @@ def test_quality_train_eval_degenerate_edges_oracle_parity(spark, tmp_path):
         (14, "same held doc text", "en", "s1"),
     ]
     _write_docs(spark, tmp_path, rows)
-    got = R10.q_quality_train_eval(spark, str(tmp_path)).collect()[0]
+    got = CORPUS.q_quality_train_eval(spark, str(tmp_path)).collect()[0]
     assert got["n_docs"] == 3 and got["n_neg"] == 0 and got["auc"] is None
     ok, msg = compare(
-        R10.q_quality_train_eval(spark, str(tmp_path)),
-        R10.SQL_QUALITY_TRAIN_EVAL,
+        CORPUS.q_quality_train_eval(spark, str(tmp_path)),
+        CORPUS.SQL_QUALITY_TRAIN_EVAL,
         str(tmp_path),
     )
     assert ok, msg
@@ -623,14 +513,14 @@ def test_quality_train_heldout_auc(spark, sf_dir):
 
     w3 = {
         r["b"]: r["w_micro_r3"]
-        for r in R10.q_quality_train(spark, sf_dir).collect()
+        for r in CORPUS.q_quality_train(spark, sf_dir).collect()
     }
-    bl = set(R10._BLOCKLIST)
+    bl = set(CORPUS._BLOCKLIST)
     scored = []
     for r in (
         load_table(spark, sf_dir, "documents")
         .filter(
-            (F.col("doc_id") % R10._QT_HOLD_MOD) == R10._QT_HOLD_RES
+            (F.col("doc_id") % CORPUS._QT_HOLD_MOD) == CORPUS._QT_HOLD_RES
         )
         .select("doc_id", "text")
         .collect()

@@ -5,9 +5,9 @@
    still be oracle-green for audio_energy / image_ahash (both sides
    exclude NULL symmetrically) and leak_free_split (both sides
    fingerprint NULL as md5('')).
-2. The 80/10/10 split rule has ONE definition: queries_r9c re-exports
-   queries_ext's objects (identity-pinned), and SQL_HASH_SPLIT embeds
-   the exact _sql_split_case fragment.
+2. The 80/10/10 split rule has ONE definition: hash_split and
+   leak_free_split share the corpus family's rule, and both oracles
+   embed the exact _sql_split_case fragment.
 3. audio_features / perceptual_hash raise an explicit ValueError on
    NULL/empty content instead of an opaque TypeError from bytes(None).
 """
@@ -17,9 +17,8 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F, types as T
 
-from wq_data_pipeline_spark.plans import queries_ext as EXT
-from wq_data_pipeline_spark.plans import queries_r6 as R6
-from wq_data_pipeline_spark.plans import queries_r9c as R9C
+from wq_data_pipeline_spark.plans import corpus as CORPUS
+from wq_data_pipeline_spark.plans import multimodal as MULTIMODAL
 
 _DOC_SCHEMA = T.StructType(
     [
@@ -57,10 +56,10 @@ def test_null_text_oracle_parity(spark, tmp_path, qname):
 
     sf_dir = _write_nully_docs(spark, tmp_path)
     fns = {
-        "audio_energy": (R9C.q_audio_energy, R9C.SQL_AUDIO_ENERGY),
-        "image_ahash": (R6.q_image_ahash, R6.SQL_IMAGE_AHASH),
-        "leak_free_split": (R9C.q_leak_free_split, R9C.SQL_LEAK_FREE_SPLIT),
-        "hash_split": (EXT.q_hash_split, EXT.SQL_HASH_SPLIT),
+        "audio_energy": (MULTIMODAL.q_audio_energy, MULTIMODAL.SQL_AUDIO_ENERGY),
+        "image_ahash": (MULTIMODAL.q_image_ahash, MULTIMODAL.SQL_IMAGE_AHASH),
+        "leak_free_split": (CORPUS.q_leak_free_split, CORPUS.SQL_LEAK_FREE_SPLIT),
+        "hash_split": (CORPUS.q_hash_split, CORPUS.SQL_HASH_SPLIT),
     }
     fn, sql = fns[qname]
     ok, msg = compare(fn(spark, sf_dir), sql, sf_dir)
@@ -72,10 +71,10 @@ def test_media_entries_exclude_null_rows_only(spark, tmp_path):
     a valid clip seed and stays)."""
     sf_dir = _write_nully_docs(spark, tmp_path)
     ids = {
-        r["media_id"] for r in R9C.q_audio_energy(spark, sf_dir).collect()
+        r["media_id"] for r in MULTIMODAL.q_audio_energy(spark, sf_dir).collect()
     }
     assert ids == {1, 2, 4, 5}
-    ids = {r["media_id"] for r in R6.q_image_ahash(spark, sf_dir).collect()}
+    ids = {r["media_id"] for r in MULTIMODAL.q_image_ahash(spark, sf_dir).collect()}
     assert ids == {1, 2, 4, 5}
 
 
@@ -84,7 +83,7 @@ def test_leak_free_split_groups_null_with_empty(spark, tmp_path):
     text — on the engine side (concat_ws NULL rule), and the oracle's
     coalesce mirrors it (parity pinned above)."""
     sf_dir = _write_nully_docs(spark, tmp_path)
-    rows = R9C.q_leak_free_split(spark, sf_dir).collect()
+    rows = CORPUS.q_leak_free_split(spark, sf_dir).collect()
     # docs 3 (NULL) + 4 (empty) form a 2-doc group; docs 1+2 another;
     # doc 5 a singleton -> total dup docs = 4 across all splits
     assert sum(r["n_dup_docs"] for r in rows) == 4
@@ -92,13 +91,13 @@ def test_leak_free_split_groups_null_with_empty(spark, tmp_path):
 
 
 def test_split_rule_single_definition():
-    """The published split rule is literally ONE set of objects."""
-    assert R9C._split_of is EXT._split_of
-    assert R9C._md5_bucket is EXT._md5_bucket
-    assert R9C._sql_split_case is EXT._sql_split_case
-    # hash_split's oracle embeds the shared fragment verbatim
-    assert EXT._sql_split_case("md5(CAST(doc_id AS VARCHAR))") in EXT.SQL_HASH_SPLIT
-    assert EXT._TRAIN_LT == 80 and EXT._VAL_LT == 90
+    """The published split rule is ONE fragment in both oracles."""
+    # hash_split's and leak_free_split's oracles embed the shared
+    # fragment verbatim
+    per_doc = CORPUS._sql_split_case("md5(CAST(doc_id AS VARCHAR))")
+    assert per_doc in CORPUS.SQL_HASH_SPLIT
+    assert per_doc in CORPUS.SQL_LEAK_FREE_SPLIT
+    assert CORPUS._TRAIN_LT == 80 and CORPUS._VAL_LT == 90
 
 
 @pytest.mark.parametrize("op", ["audio", "image"])

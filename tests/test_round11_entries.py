@@ -1,4 +1,5 @@
-"""Round-11 pins: batch 31 (queries_r11.py) + the trainer stash.
+"""Entry pins: hybrid_rrf (similarity), quality_train_bigram (corpus)
+and the trainer stash.
 
 What the DuckDB oracle can't pin: that the fused RRF ranking equals an
 independent from-scratch BM25+cosine+RRF replication (the oracle
@@ -17,7 +18,7 @@ import math
 
 import pytest
 
-from tests.test_round10_entries import (
+from tests.replicas import (
     _py_bucket,
     _py_cos,
     _py_quant,
@@ -26,8 +27,8 @@ from tests.test_round10_entries import (
     _write_docs,
     _write_embs,
 )
-from wq_data_pipeline_spark.plans import queries_r10 as R10
-from wq_data_pipeline_spark.plans import queries_r11 as R11
+from wq_data_pipeline_spark.plans import corpus as CORPUS
+from wq_data_pipeline_spark.plans import similarity as SIMILARITY
 
 # ---------------------------------------------------------------- hybrid_rrf
 
@@ -65,7 +66,7 @@ def _py_hybrid(docs, embs):
     """Full RRF replication: BM25 list, cosine list vs the BM25
     rank-1 anchor's embedding, integer-micro fusion. embs: {id: vec}.
     Returns {doc_id: (bm25_rank, vec_rank, rrf_micro, fused_rank)}."""
-    from wq_data_pipeline_spark.plans.queries_ext import (
+    from wq_data_pipeline_spark.plans.similarity import (
         _BM25_B,
         _BM25_K1,
         _BM25_TERMS,
@@ -83,18 +84,18 @@ def _py_hybrid(docs, embs):
             if i != anchor
         }
         ranked = sorted(cos.items(), key=lambda kv: (-kv[1], kv[0]))
-        vr = {doc: r + 1 for r, (doc, _) in enumerate(ranked[: R11._RRF_TOPN])}
+        vr = {doc: r + 1 for r, (doc, _) in enumerate(ranked[: SIMILARITY._RRF_TOPN])}
     fused = {}
     for d in set(bm) | set(vr):
         m = sum(
-            _round_half_away(1_000_000.0 / (R11._RRF_K + r))
+            _round_half_away(1_000_000.0 / (SIMILARITY._RRF_K + r))
             for r in (bm.get(d), vr.get(d))
             if r is not None
         )
         fused[d] = m
     out = {}
     ranked = sorted(fused.items(), key=lambda kv: (-kv[1], kv[0]))
-    for fr, (d, m) in enumerate(ranked[: R11._RRF_TOPN]):
+    for fr, (d, m) in enumerate(ranked[: SIMILARITY._RRF_TOPN]):
         out[d] = (bm.get(d), vr.get(d), m, fr + 1)
     return out
 
@@ -144,7 +145,7 @@ def test_hybrid_rrf_matches_python_replication(spark, tmp_path):
             r["rrf_micro"],
             r["fused_rank"],
         )
-        for r in R11.q_hybrid_rrf(spark, str(tmp_path)).collect()
+        for r in SIMILARITY.q_hybrid_rrf(spark, str(tmp_path)).collect()
     }
     exp = _py_hybrid([(i, t) for i, t, _, _ in rows], embs)
     assert got == exp, (got, exp)
@@ -161,10 +162,10 @@ def test_hybrid_rrf_no_text_hits_is_empty_and_oracle_green(spark, tmp_path):
     ]
     _write_docs(spark, tmp_path, rows)
     _write_embs(spark, tmp_path, [(0, [1.0, 0.0], 0), (1, [0.5, 0.5], 0)])
-    assert R11.q_hybrid_rrf(spark, str(tmp_path)).count() == 0
+    assert SIMILARITY.q_hybrid_rrf(spark, str(tmp_path)).count() == 0
     ok, msg = compare(
-        R11.q_hybrid_rrf(spark, str(tmp_path)),
-        R11.SQL_HYBRID_RRF,
+        SIMILARITY.q_hybrid_rrf(spark, str(tmp_path)),
+        SIMILARITY.SQL_HYBRID_RRF,
         str(tmp_path),
     )
     assert ok, msg
@@ -186,12 +187,12 @@ def test_hybrid_rrf_anchor_without_embedding_degrades_to_bm25(
     _write_docs(spark, tmp_path, rows)
     # embeddings exist only for doc 2, which can never be the anchor
     _write_embs(spark, tmp_path, [(2, [1.0, 0.5], 0)])
-    got = R11.q_hybrid_rrf(spark, str(tmp_path)).collect()
+    got = SIMILARITY.q_hybrid_rrf(spark, str(tmp_path)).collect()
     assert len(got) == 2  # docs 0 and 1 carry BM25 hits
     assert all(r["vec_rank"] is None for r in got)
     ok, msg = compare(
-        R11.q_hybrid_rrf(spark, str(tmp_path)),
-        R11.SQL_HYBRID_RRF,
+        SIMILARITY.q_hybrid_rrf(spark, str(tmp_path)),
+        SIMILARITY.SQL_HYBRID_RRF,
         str(tmp_path),
     )
     assert ok, msg
@@ -209,10 +210,10 @@ def test_hybrid_rrf_refuses_ragged_or_null_embeddings(spark, tmp_path):
     _write_docs(spark, tmp_path, rows)
     _write_embs(spark, tmp_path, [(0, [1.0, 0.5], 0), (1, [1.0, 0.5, 0.25], 0)])
     with pytest.raises(ValueError, match="uniform embedding width"):
-        R11.q_hybrid_rrf(spark, str(tmp_path))
+        SIMILARITY.q_hybrid_rrf(spark, str(tmp_path))
     _write_embs(spark, tmp_path, [(0, [1.0, 0.5], 0), (1, None, 0)])
     with pytest.raises(ValueError, match="NULL embedding"):
-        R11.q_hybrid_rrf(spark, str(tmp_path))
+        SIMILARITY.q_hybrid_rrf(spark, str(tmp_path))
 
 
 def test_embed_decontaminate_refuses_null_embeddings(spark, tmp_path):
@@ -221,21 +222,21 @@ def test_embed_decontaminate_refuses_null_embeddings(spark, tmp_path):
     _write_docs(spark, tmp_path, [(0, "words here", "en", "s0")])
     _write_embs(spark, tmp_path, [(0, [1.0, 0.5], 0), (7, None, 0)])
     with pytest.raises(ValueError, match="NULL embedding"):
-        R10.q_embed_decontaminate(spark, str(tmp_path))
+        SIMILARITY.q_embed_decontaminate(spark, str(tmp_path))
 
 
 def test_hybrid_rrf_real_fixture_properties(spark, sf_dir):
     """On the real fixture: fused ranks are contiguous from 1, every
     row sits in at least one source list, and rrf_micro is exactly
     recomputable from the emitted rank columns."""
-    rows = R11.q_hybrid_rrf(spark, sf_dir).collect()
-    assert 1 <= len(rows) <= R11._RRF_TOPN
+    rows = SIMILARITY.q_hybrid_rrf(spark, sf_dir).collect()
+    assert 1 <= len(rows) <= SIMILARITY._RRF_TOPN
     ranks = sorted(r["fused_rank"] for r in rows)
     assert ranks == list(range(1, len(rows) + 1))
     for r in rows:
         assert r["bm25_rank"] is not None or r["vec_rank"] is not None
         exp = sum(
-            _round_half_away(1_000_000.0 / (R11._RRF_K + rr))
+            _round_half_away(1_000_000.0 / (SIMILARITY._RRF_K + rr))
             for rr in (r["bm25_rank"], r["vec_rank"])
             if rr is not None
         )
@@ -253,17 +254,17 @@ def _py_bg_features(toks):
         b = _py_bucket(tok)
         feats[b] = feats.get(b, 0) + 1
     for i in range(len(toks) - 1):
-        b = R10._QT_B + _py_bucket(f"{toks[i]} {toks[i + 1]}")
+        b = CORPUS._QT_B + _py_bucket(f"{toks[i]} {toks[i + 1]}")
         feats[b] = feats.get(b, 0) + 1
     return feats
 
 
 def _py_train_bg(docs):
     """From-scratch replication of the bigram-featured trainer."""
-    bl = set(R10._BLOCKLIST)
+    bl = set(CORPUS._BLOCKLIST)
     x, y = {}, {}
     for i, t in docs:
-        if i % R10._QT_HOLD_MOD == R10._QT_HOLD_RES:
+        if i % CORPUS._QT_HOLD_MOD == CORPUS._QT_HOLD_RES:
             continue
         toks = _py_tokens(t or "")
         if not toks:
@@ -271,9 +272,9 @@ def _py_train_bg(docs):
         y[i] = 0 if any(tok in bl for tok in toks) else 1
         x[i] = _py_bg_features(toks)
     n = len(x)
-    w = [0] * R11._BG_NB
-    for _ in range(R10._QT_ROUNDS):
-        g = [0] * R11._BG_NB
+    w = [0] * CORPUS._BG_NB
+    for _ in range(CORPUS._QT_ROUNDS):
+        g = [0] * CORPUS._BG_NB
         for i, feats in x.items():
             z = sum(c * w[b] for b, c in feats.items())
             p = 1.0 / (1.0 + math.exp(-(z / 1_000_000.0)))
@@ -281,18 +282,18 @@ def _py_train_bg(docs):
             for b, c in feats.items():
                 g[b] += c * e
         w = [
-            w[b] - _round_half_away(R10._QT_LR * g[b] / n)
-            for b in range(R11._BG_NB)
+            w[b] - _round_half_away(CORPUS._QT_LR * g[b] / n)
+            for b in range(CORPUS._BG_NB)
         ]
     return w
 
 
 def _py_eval_bg(docs, w):
     """_py_eval with the bigram featurizer (same confusion/AUC rules)."""
-    bl = set(R10._BLOCKLIST)
+    bl = set(CORPUS._BLOCKLIST)
     scored = []
     for i, t in docs:
-        if i % R10._QT_HOLD_MOD != R10._QT_HOLD_RES:
+        if i % CORPUS._QT_HOLD_MOD != CORPUS._QT_HOLD_RES:
             continue
         toks = _py_tokens(t or "")
         if not toks:
@@ -340,7 +341,7 @@ def test_quality_train_bigram_matches_python_replication(spark, tmp_path):
         (19, "another clean held out doc words", "en", "s1"),
     ]
     _write_docs(spark, tmp_path, rows)
-    got = R11.q_quality_train_bigram(spark, str(tmp_path)).collect()[0]
+    got = CORPUS.q_quality_train_bigram(spark, str(tmp_path)).collect()[0]
     w = _py_train_bg([(i, t) for i, t, _, _ in rows])
     exp = _py_eval_bg([(i, t) for i, t, _, _ in rows], w)
     for k in ("n_docs", "n_pos", "tp", "tn"):
@@ -361,8 +362,8 @@ def test_bigram_separates_where_unigram_cannot(spark, tmp_path):
         lead = "slow" if i % 2 == 0 else "tok38"
         rows.append((i, f"{lead} alpha beta gamma", "en", "s0"))
     _write_docs(spark, tmp_path, rows)
-    uni = R10.q_quality_train_eval(spark, str(tmp_path)).collect()[0]
-    bi = R11.q_quality_train_bigram(spark, str(tmp_path)).collect()[0]
+    uni = CORPUS.q_quality_train_eval(spark, str(tmp_path)).collect()[0]
+    bi = CORPUS.q_quality_train_bigram(spark, str(tmp_path)).collect()[0]
     assert uni["auc"] == pytest.approx(0.5, abs=1e-9)
     assert bi["auc"] == pytest.approx(1.0, abs=1e-9)
     assert bi["tp"] + bi["tn"] == bi["n_docs"]  # perfect held-out gate
@@ -379,8 +380,8 @@ def test_bigram_oracle_green_on_aliasing_fixture(spark, tmp_path):
         rows.append((i, f"{lead} alpha beta gamma", "en", "s0"))
     _write_docs(spark, tmp_path, rows)
     ok, msg = compare(
-        R11.q_quality_train_bigram(spark, str(tmp_path)),
-        R11.SQL_QUALITY_TRAIN_BIGRAM,
+        CORPUS.q_quality_train_bigram(spark, str(tmp_path)),
+        CORPUS.SQL_QUALITY_TRAIN_BIGRAM,
         str(tmp_path),
     )
     assert ok, msg
@@ -392,8 +393,8 @@ def test_bigram_real_fixture_auc_band(spark, sf_dir):
     parity — not collapse — is the correct expectation; measured r11:
     uni/bi AUC 0.837/0.843 at sf0.001, 0.775/0.778 at sf0.01,
     0.802/0.800 at sf0.1)."""
-    bi = R11.q_quality_train_bigram(spark, sf_dir).collect()[0]
-    uni = R10.q_quality_train_eval(spark, sf_dir).collect()[0]
+    bi = CORPUS.q_quality_train_bigram(spark, sf_dir).collect()[0]
+    uni = CORPUS.q_quality_train_eval(spark, sf_dir).collect()[0]
     assert bi["auc"] is not None and bi["auc"] > 0.7
     assert abs(bi["auc"] - uni["auc"]) < 0.05
 
@@ -406,13 +407,13 @@ def test_trainer_stash_one_build_per_family(spark, tmp_path, monkeypatch):
     (session, fixture); the bigram variant builds its own (different
     featurizer tag) and is then served from the stash too."""
     calls = []
-    orig = R10._train_traj_build
+    orig = CORPUS._train_traj_build
 
     def counting(*a, **k):
         calls.append(1)
         return orig(*a, **k)
 
-    monkeypatch.setattr(R10, "_train_traj_build", counting)
+    monkeypatch.setattr(CORPUS, "_train_traj_build", counting)
     rows = [
         (0, "fast clean words here", "en", "s0"),
         (1, "slow error words there", "en", "s0"),
@@ -420,21 +421,21 @@ def test_trainer_stash_one_build_per_family(spark, tmp_path, monkeypatch):
     ]
     _write_docs(spark, tmp_path, rows)
     p = str(tmp_path)
-    R10.q_quality_train(spark, p).collect()
-    R10.q_quality_train_apply(spark, p).collect()
-    R10.q_quality_train_eval(spark, p).collect()
+    CORPUS.q_quality_train(spark, p).collect()
+    CORPUS.q_quality_train_apply(spark, p).collect()
+    CORPUS.q_quality_train_eval(spark, p).collect()
     assert len(calls) == 1
-    R11.q_quality_train_bigram(spark, p).collect()
+    CORPUS.q_quality_train_bigram(spark, p).collect()
     assert len(calls) == 2
-    R11.q_quality_train_bigram(spark, p).collect()
+    CORPUS.q_quality_train_bigram(spark, p).collect()
     assert len(calls) == 2
     # the stash key derives from the featurizer actually passed, so a
     # direct bigram call on the unigram-trained path can never be
     # served 64-bucket weights (r11 review)
-    traj = R10._train_traj(
-        spark, p, feats=R11._bg_bucket_counts, n_buckets=R11._BG_NB
+    traj = CORPUS._train_traj(
+        spark, p, feats=CORPUS._bg_bucket_counts, n_buckets=CORPUS._BG_NB
     )
-    assert traj[-1].count() == R11._BG_NB
+    assert traj[-1].count() == CORPUS._BG_NB
     assert len(calls) == 2  # and it WAS the stashed bigram build
 
 
@@ -452,7 +453,7 @@ def test_trainer_stash_invalidates_on_fixture_overwrite(
     p = str(tmp_path)
     w_a = {
         r["b"]: r["w_micro_r3"]
-        for r in R10.q_quality_train(spark, p).collect()
+        for r in CORPUS.q_quality_train(spark, p).collect()
     }
     # new corpus at the same path: all-clean docs -> different weights
     rows_b = [
@@ -463,10 +464,10 @@ def test_trainer_stash_invalidates_on_fixture_overwrite(
     _write_docs(spark, tmp_path, rows_b)
     w_b = {
         r["b"]: r["w_micro_r3"]
-        for r in R10.q_quality_train(spark, p).collect()
+        for r in CORPUS.q_quality_train(spark, p).collect()
     }
     assert w_a != w_b
-    from tests.test_round10_entries import _py_train
+    from tests.replicas import _py_train
 
     traj = _py_train([(i, t) for i, t, _, _ in rows_b])
-    assert w_b == {b: traj[-1][b] for b in range(R10._QT_B)}
+    assert w_b == {b: traj[-1][b] for b in range(CORPUS._QT_B)}

@@ -1,4 +1,5 @@
-"""Round-11 wave-2 pins: batch 32 (queries_r11b.py).
+"""Entry pins: hll_distinct (relational) and cluster_balanced_sample
+(similarity).
 
 What the oracle can't pin: that the HLL estimate is actually CLOSE to
 the true cardinality (both engines replay the same sketch, so they'd
@@ -15,13 +16,14 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
-from tests.test_round10_entries import (
+from tests.replicas import (
     _py_plane,
     _py_quant,
     _write_docs,
     _write_embs,
 )
-from wq_data_pipeline_spark.plans import queries_r11b as R11B
+from wq_data_pipeline_spark.plans import relational as RELATIONAL
+from wq_data_pipeline_spark.plans import similarity as SIMILARITY
 from wq_data_pipeline_spark.sources.testdata import load_table
 
 # ------------------------------------------------------------- hll_distinct
@@ -34,7 +36,7 @@ def _py_h60(s: str) -> int:
 def _py_hll(user_ids):
     """From-scratch HLL replication over one group's user ids.
     Returns (n_zero_registers, est_distinct rounded 6dp)."""
-    m, p, wbits = R11B._HLL_M, R11B._HLL_P, R11B._HLL_W
+    m, p, wbits = RELATIONAL._HLL_M, RELATIONAL._HLL_P, RELATIONAL._HLL_W
     regs = {}
     for u in user_ids:
         h = _py_h60(str(u))
@@ -48,7 +50,7 @@ def _py_hll(user_ids):
     s_int = sum(1 << (cap - mj) for mj in regs.values())
     v = m - len(regs)
     s_int += v * (1 << cap)
-    est = R11B._HLL_ALPHA * float(m * m) * float(1 << cap) / float(s_int)
+    est = RELATIONAL._HLL_ALPHA * float(m * m) * float(1 << cap) / float(s_int)
     if est <= 2.5 * m and v > 0:
         est = float(m) * math.log(float(m) / float(v))
     return v, round(est, 6)
@@ -58,7 +60,7 @@ def test_hll_matches_python_replication(spark, sf_dir):
     """Engine rows equal the from-scratch sketch, value for value."""
     got = {
         r["event_type"]: (r["n_rows"], r["n_zero_registers"], r["est_distinct"])
-        for r in R11B.q_hll_distinct(spark, sf_dir).collect()
+        for r in RELATIONAL.q_hll_distinct(spark, sf_dir).collect()
     }
     rows = (
         load_table(spark, sf_dir, "events")
@@ -81,7 +83,7 @@ def test_hll_accuracy_band(spark, sf_dir):
     raw-HLL stderr 1.04/sqrt(256) ~ 6.5% past 2.5m)."""
     got = {
         r["event_type"]: r["est_distinct"]
-        for r in R11B.q_hll_distinct(spark, sf_dir).collect()
+        for r in RELATIONAL.q_hll_distinct(spark, sf_dir).collect()
     }
     exact = {
         r["event_type"]: r["d"]
@@ -102,7 +104,7 @@ def test_hll_registers_merge(spark, tmp_path):
     estimate — the persist-per-day / union-at-query-time pattern."""
     ids = list(range(1, 301))
     full = _py_hll(ids)
-    m, p, wbits = R11B._HLL_M, R11B._HLL_P, R11B._HLL_W
+    m, p, wbits = RELATIONAL._HLL_M, RELATIONAL._HLL_P, RELATIONAL._HLL_W
 
     def regs_of(chunk):
         regs = {}
@@ -119,7 +121,7 @@ def test_hll_registers_merge(spark, tmp_path):
     s_int = sum(1 << (cap - mj) for mj in merged.values())
     v = m - len(merged)
     s_int += v * (1 << cap)
-    est = R11B._HLL_ALPHA * float(m * m) * float(1 << cap) / float(s_int)
+    est = RELATIONAL._HLL_ALPHA * float(m * m) * float(1 << cap) / float(s_int)
     if est <= 2.5 * m and v > 0:
         est = float(m) * math.log(float(m) / float(v))
     assert (v, round(est, 6)) == full
@@ -131,7 +133,7 @@ def test_hll_registers_merge(spark, tmp_path):
 def _py_cbs(embs):
     """From-scratch assignment + quota replication. embs: {id: vec}.
     Returns {cluster: (n_total, n_kept, kept_id_sum)}."""
-    k, quota = R11B._CBS_K, R11B._CBS_QUOTA
+    k, quota = SIMILARITY._CBS_K, SIMILARITY._CBS_QUOTA
     if not embs:
         return {}
     dim = len(next(iter(embs.values())))
@@ -153,7 +155,7 @@ def _py_cbs(embs):
 def test_cbs_matches_python_replication(spark, sf_dir):
     got = {
         r["cluster"]: (r["n_total"], r["n_kept"], r["kept_id_sum"])
-        for r in R11B.q_cluster_balanced_sample(spark, sf_dir).collect()
+        for r in SIMILARITY.q_cluster_balanced_sample(spark, sf_dir).collect()
     }
     embs = {
         r["vec_id"]: list(r["embedding"])
@@ -165,11 +167,11 @@ def test_cbs_matches_python_replication(spark, sf_dir):
 
 
 def test_cbs_quota_and_population_laws(spark, sf_dir):
-    rows = R11B.q_cluster_balanced_sample(spark, sf_dir).collect()
+    rows = SIMILARITY.q_cluster_balanced_sample(spark, sf_dir).collect()
     n = load_table(spark, sf_dir, "embeddings").count()
     assert sum(r["n_total"] for r in rows) == n  # every vector lands once
     for r in rows:
-        assert r["n_kept"] == min(r["n_total"], R11B._CBS_QUOTA)
+        assert r["n_kept"] == min(r["n_total"], SIMILARITY._CBS_QUOTA)
 
 
 def test_cbs_zero_vector_ties_to_cluster_zero(spark, tmp_path):
@@ -181,7 +183,7 @@ def test_cbs_zero_vector_ties_to_cluster_zero(spark, tmp_path):
     _write_docs(spark, tmp_path, [(0, "words", "en", "s0")])
     embs = [(0, [0.0, 0.0, 0.0, 0.0], 0), (1, [1.0, -0.5, 0.25, 0.75], 0)]
     _write_embs(spark, tmp_path, embs)
-    got = R11B.q_cluster_balanced_sample(spark, str(tmp_path)).collect()
+    got = SIMILARITY.q_cluster_balanced_sample(spark, str(tmp_path)).collect()
     zero_cluster = [
         r["cluster"] for r in got if r["kept_id_sum"] == 0 and r["n_total"] >= 1
     ]
@@ -191,8 +193,8 @@ def test_cbs_zero_vector_ties_to_cluster_zero(spark, tmp_path):
         r["cluster"] == 0 and r["n_total"] == py[0][0] for r in got
     )
     ok, msg = compare(
-        R11B.q_cluster_balanced_sample(spark, str(tmp_path)),
-        R11B._sql_cbs(dim=4),
+        SIMILARITY.q_cluster_balanced_sample(spark, str(tmp_path)),
+        SIMILARITY._sql_cbs(dim=4),
         str(tmp_path),
     )
     assert ok, msg
@@ -203,7 +205,7 @@ def test_cbs_refuses_ragged_or_null_embeddings(spark, tmp_path):
     _write_docs(spark, tmp_path, [(0, "words", "en", "s0")])
     _write_embs(spark, tmp_path, [(0, [1.0, 0.5], 0), (1, [1.0], 0)])
     with pytest.raises(ValueError, match="uniform embedding width"):
-        R11B.q_cluster_balanced_sample(spark, str(tmp_path))
+        SIMILARITY.q_cluster_balanced_sample(spark, str(tmp_path))
     _write_embs(spark, tmp_path, [(0, [1.0, 0.5], 0), (1, None, 0)])
     with pytest.raises(ValueError, match="NULL embedding"):
-        R11B.q_cluster_balanced_sample(spark, str(tmp_path))
+        SIMILARITY.q_cluster_balanced_sample(spark, str(tmp_path))

@@ -1,4 +1,4 @@
-"""Round-12 pins: batch 33 (queries_r12.py) — trained language ID.
+"""Corpus-family pins: trained language ID (lang_id_train/apply/eval).
 
 Three layers, mirroring the r10 classifier pins:
 - integer-for-integer pure-Python replication of the multi-class
@@ -21,8 +21,8 @@ import re
 
 from pyspark.sql import functions as F
 
-import wq_data_pipeline_spark.plans.queries_r12 as R12
-from tests.test_round10_entries import (
+from wq_data_pipeline_spark.plans import corpus as CORPUS
+from tests.replicas import (
     _DOC_SCHEMA,
     _round_half_away,
     _write_docs,
@@ -30,12 +30,12 @@ from tests.test_round10_entries import (
 
 
 def _py_trigrams(text: str):
-    sn = text[: R12._LI_SNIP].lower()
+    sn = text[: CORPUS._LI_SNIP].lower()
     return [sn[i : i + 3] for i in range(len(sn) - 2)]
 
 
 def _py_bucket(g: str) -> int:
-    return int(hashlib.md5(g.encode()).hexdigest()[:15], 16) % R12._LI_B
+    return int(hashlib.md5(g.encode()).hexdigest()[:15], 16) % CORPUS._LI_B
 
 
 def _py_li_train(docs):
@@ -45,7 +45,7 @@ def _py_li_train(docs):
     lab = {}
     classes = set()
     for i, t, lg in docs:
-        if i % R12._LI_HOLD_MOD == R12._LI_HOLD_RES or lg is None or t is None:
+        if i % CORPUS._LI_HOLD_MOD == CORPUS._LI_HOLD_RES or lg is None or t is None:
             continue
         classes.add(lg)
         grams = _py_trigrams(t)
@@ -58,10 +58,10 @@ def _py_li_train(docs):
             d[b] = d.get(b, 0) + 1
     n = max(len(x), 1)
     cls = sorted(classes)
-    w = {c: [0] * R12._LI_B for c in cls}
+    w = {c: [0] * CORPUS._LI_B for c in cls}
     traj = []
-    for _ in range(R12._LI_ROUNDS):
-        g = {c: [0] * R12._LI_B for c in cls}
+    for _ in range(CORPUS._LI_ROUNDS):
+        g = {c: [0] * CORPUS._LI_B for c in cls}
         for i, feats in x.items():
             for c in cls:
                 z = sum(cnt * w[c][b] for b, cnt in feats.items())
@@ -72,8 +72,8 @@ def _py_li_train(docs):
                     g[c][b] += cnt * e
         w = {
             c: [
-                w[c][b] - _round_half_away(R12._LI_LR * g[c][b] / n)
-                for b in range(R12._LI_B)
+                w[c][b] - _round_half_away(CORPUS._LI_LR * g[c][b] / n)
+                for b in range(CORPUS._LI_B)
             ]
             for c in cls
         }
@@ -144,14 +144,14 @@ def test_lang_id_train_matches_python_replication(spark, tmp_path):
         (r["lang"], r["b"]): (
             r["w_micro_r1"], r["w_micro_r2"], r["w_micro_r3"]
         )
-        for r in R12.q_lang_id_train(spark, str(tmp_path)).collect()
+        for r in CORPUS.q_lang_id_train(spark, str(tmp_path)).collect()
     }
     traj = _py_li_train([(i, t, lg) for (i, t, lg, _s) in rows])
     cls = sorted(traj[0])
     assert set(c for c, _b in got) == set(cls)
     for c in cls:
-        for b in range(R12._LI_B):
-            want = tuple(traj[r][c][b] for r in range(R12._LI_ROUNDS))
+        for b in range(CORPUS._LI_B):
+            want = tuple(traj[r][c][b] for r in range(CORPUS._LI_ROUNDS))
             assert got[(c, b)] == want, (c, b, got[(c, b)], want)
     # the model learned SOMETHING (non-zero weights exist)
     assert any(any(v) for v in got.values())
@@ -168,14 +168,14 @@ def test_lang_id_beats_heuristic_on_held_out(spark, tmp_path):
     held = [
         (i, t, lg)
         for (i, t, lg, _s) in rows
-        if i % R12._LI_HOLD_MOD == R12._LI_HOLD_RES
+        if i % CORPUS._LI_HOLD_MOD == CORPUS._LI_HOLD_RES
     ]
     assert len(held) >= 10
     traj = _py_li_train([(i, t, lg) for (i, t, lg, _s) in rows])
     w_engine = {}
-    for r in R12.q_lang_id_train(spark, str(tmp_path)).collect():
-        w_engine.setdefault(r["lang"], [0] * R12._LI_B)[r["b"]] = r[
-            f"w_micro_r{R12._LI_ROUNDS}"
+    for r in CORPUS.q_lang_id_train(spark, str(tmp_path)).collect():
+        w_engine.setdefault(r["lang"], [0] * CORPUS._LI_B)[r["b"]] = r[
+            f"w_micro_r{CORPUS._LI_ROUNDS}"
         ]
     assert w_engine == traj[-1]  # engine == replication, again
     model_acc = sum(
@@ -206,15 +206,15 @@ def test_lang_id_zero_model_and_tiebreak(spark, tmp_path):
         (4, "some other apply doc", "bb", "s0"),  # held out of training
     ]
     _write_docs(spark, tmp_path, rows)
-    tr = R12.q_lang_id_train(spark, str(tmp_path)).collect()
-    assert len(tr) == 2 * R12._LI_B
+    tr = CORPUS.q_lang_id_train(spark, str(tmp_path)).collect()
+    assert len(tr) == 2 * CORPUS._LI_B
     assert all(
         r["w_micro_r1"] == r["w_micro_r2"] == r["w_micro_r3"] == 0
         for r in tr
     )
     conf = {
         (r["lang"], r["pred_lang"]): r["n_docs"]
-        for r in R12.q_lang_id_apply(spark, str(tmp_path)).collect()
+        for r in CORPUS.q_lang_id_apply(spark, str(tmp_path)).collect()
     }
     # every doc predicts 'aa' (ties at z=0, lang ASC)
     assert conf == {("aa", "aa"): 1, ("bb", "aa"): 2}
@@ -227,10 +227,10 @@ def test_lang_id_no_trainable_docs(spark, tmp_path):
     rows = [(4, "only held out docs here", "en", "s0"),
             (9, "more held out text", "fr", "s0")]
     _write_docs(spark, tmp_path, rows)
-    t = R12.q_lang_id_train(spark, str(tmp_path))
+    t = CORPUS.q_lang_id_train(spark, str(tmp_path))
     assert t.count() == 0
     assert t.columns == ["lang", "b", "w_micro_r1", "w_micro_r2", "w_micro_r3"]
-    a = R12.q_lang_id_apply(spark, str(tmp_path))
+    a = CORPUS.q_lang_id_apply(spark, str(tmp_path))
     assert a.count() == 0
     assert a.columns == ["lang", "pred_lang", "n_docs"]
 
@@ -246,7 +246,7 @@ def test_lang_id_eval_matches_python_replication(spark, tmp_path):
     held = [
         (i, t, lg)
         for (i, t, lg, _s) in rows
-        if i % R12._LI_HOLD_MOD == R12._LI_HOLD_RES
+        if i % CORPUS._LI_HOLD_MOD == CORPUS._LI_HOLD_RES
     ]
     preds = {i: _py_li_score(w, t) for (i, t, lg) in held}
     cls = sorted(w)
@@ -257,7 +257,7 @@ def test_lang_id_eval_matches_python_replication(spark, tmp_path):
         tp = sum(1 for (i, t, lg) in held if lg == c and preds[i] == c)
         want[c] = (n_true, n_pred, tp)
     got = {
-        r["lang"]: r for r in R12.q_lang_id_eval(spark, str(tmp_path)).collect()
+        r["lang"]: r for r in CORPUS.q_lang_id_eval(spark, str(tmp_path)).collect()
     }
     assert sorted(got) == cls
     for c in cls:
@@ -291,7 +291,7 @@ def test_lang_id_eval_class_absent_from_held_slice(spark, tmp_path):
     ]
     _write_docs(spark, tmp_path, rows)
     got = {
-        r["lang"]: r for r in R12.q_lang_id_eval(spark, str(tmp_path)).collect()
+        r["lang"]: r for r in CORPUS.q_lang_id_eval(spark, str(tmp_path)).collect()
     }
     assert sorted(got) == ["de", "es"]
     assert got["de"]["n_true"] == 0 and got["de"]["rec"] is None
@@ -301,11 +301,11 @@ def test_lang_id_eval_class_absent_from_held_slice(spark, tmp_path):
 def test_li_snippet_is_prefix_bounded(spark):
     """The featurizer reads exactly the first _LI_SNIP chars: two
     texts sharing that prefix featurize identically."""
-    base = "x" * R12._LI_SNIP
+    base = "x" * CORPUS._LI_SNIP
     df = spark.createDataFrame(
         [(0, base + "aaaa"), (1, base + "zzzz")], ["doc_id", "text"]
     )
-    f = R12._li_features(df, []).collect()
+    f = CORPUS._li_features(df, []).collect()
     by_doc = {}
     for r in f:
         by_doc.setdefault(r["doc_id"], {})[r["b"]] = r["cnt"]

@@ -1,5 +1,5 @@
-"""Round-12 pins: batch 34 (queries_r12b.py) — quality_calibration and
-tokenizer_fertility.
+"""Corpus-family pins: quality_calibration, tokenizer_fertility and
+epoch_mix_plan.
 
 Layers (the r10 classifier-pin structure):
 - pure-Python replications that recompute each entry from scratch
@@ -20,10 +20,8 @@ from collections import Counter
 
 import pytest
 
-import wq_data_pipeline_spark.plans.queries_r5 as R5
-import wq_data_pipeline_spark.plans.queries_r10 as R10
-import wq_data_pipeline_spark.plans.queries_r12b as R12B
-from tests.test_round10_entries import (
+from wq_data_pipeline_spark.plans import corpus as CORPUS
+from tests.replicas import (
     _py_bucket,
     _py_tokens,
     _py_train,
@@ -39,10 +37,10 @@ def _py_calibration(docs):
     """From-scratch held-out reliability table. docs: (doc_id, text)."""
     traj = _py_train(docs)
     w = traj[-1]
-    bl = set(R10._BLOCKLIST)
+    bl = set(CORPUS._BLOCKLIST)
     bins = {}
     for i, t in docs:
-        if i % R10._QT_HOLD_MOD != R10._QT_HOLD_RES:
+        if i % CORPUS._QT_HOLD_MOD != CORPUS._QT_HOLD_RES:
             continue
         toks = _py_tokens(t)
         if not toks:
@@ -85,7 +83,7 @@ def test_quality_calibration_matches_python_replication(spark, tmp_path):
             r["mean_p"],
             r["gap"],
         )
-        for r in R12B.q_quality_calibration(spark, str(tmp_path)).collect()
+        for r in CORPUS.q_quality_calibration(spark, str(tmp_path)).collect()
     }
     exp = _py_calibration([(i, t) for i, t, _, _ in rows])
     assert set(got) == set(exp)
@@ -106,11 +104,11 @@ def test_quality_calibration_laws(spark, sf_dir):
 
     import pyspark.sql.functions as F
 
-    rows = R12B.q_quality_calibration(spark, sf_dir).collect()
+    rows = CORPUS.q_quality_calibration(spark, sf_dir).collect()
     held_n = (
         load_table(spark, sf_dir, "documents")
         .filter(
-            ((F.col("doc_id") % R10._QT_HOLD_MOD) == R10._QT_HOLD_RES)
+            ((F.col("doc_id") % CORPUS._QT_HOLD_MOD) == CORPUS._QT_HOLD_RES)
             & (F.size(tokens("text")) > 0)
         )
         .count()
@@ -145,7 +143,7 @@ def _py_bpe_fertility(docs):
         for tok in _py_tokens(t):
             freq[tok] += 1
     sym = {wd: list(wd) for wd in freq}
-    for _ in range(R5._BPT_ROUNDS):
+    for _ in range(CORPUS._BPT_ROUNDS):
         pc = Counter()
         for wd, s in sym.items():
             for i in range(len(s) - 1):
@@ -195,7 +193,7 @@ def test_tokenizer_fertility_matches_python_replication(spark, tmp_path):
             r["bpe_per_word_micro"],
             r["chars_per_bpe_micro"],
         )
-        for r in R12B.q_tokenizer_fertility(spark, str(tmp_path)).collect()
+        for r in CORPUS.q_tokenizer_fertility(spark, str(tmp_path)).collect()
     }
     exp = _py_bpe_fertility([(i, t, lg) for i, t, lg, _ in rows])
     assert got == exp
@@ -205,8 +203,8 @@ def test_tokenizer_fertility_agrees_with_bpe_apply(spark, sf_dir):
     """One trained tokenizer, two rollups: fertility's per-language
     totals must sum to bpe_apply's per-document totals. A drift here
     means the two entries tokenized the corpus differently."""
-    fert = R12B.q_tokenizer_fertility(spark, sf_dir).collect()
-    per_doc = R5.q_bpe_apply(spark, sf_dir).collect()
+    fert = CORPUS.q_tokenizer_fertility(spark, sf_dir).collect()
+    per_doc = CORPUS.q_bpe_apply(spark, sf_dir).collect()
     assert sum(r["n_words"] for r in fert) == sum(
         r["n_words"] for r in per_doc
     )
@@ -238,10 +236,10 @@ def _py_epoch_plan(docs):
         return 1 + (int(m.group(1)) if m else 0) % 4
 
     T = sum(per.values())
-    B = R12B._EMP_BUDGET_MULT * T
+    B = CORPUS._EMP_BUDGET_MULT * T
     items = sorted(
         (
-            (s, n, wgt(s), R12B._EMP_MAX_EPOCHS * n)
+            (s, n, wgt(s), CORPUS._EMP_MAX_EPOCHS * n)
             for s, n in per.items()
         ),
         key=lambda x: (x[3] * (12 // x[2]), x[0]),
@@ -300,7 +298,7 @@ def test_epoch_mix_plan_matches_python_replication(spark, tmp_path):
             r["alloc_tokens"],
             r["epochs_micro"],
         )
-        for r in R12B.q_epoch_mix_plan(spark, str(tmp_path)).collect()
+        for r in CORPUS.q_epoch_mix_plan(spark, str(tmp_path)).collect()
     }
     exp = _py_epoch_plan([(i, t, s) for i, t, _, s in rows])
     assert got == exp
@@ -313,8 +311,8 @@ def test_epoch_mix_plan_laws(spark, sf_dir):
     """Waterfill invariants on the real corpus: budget conservation
     with a sub-weight-sum remainder, the epoch cap, per-weight equal
     shares among unsaturated sources, and saturated == at-capacity."""
-    rows = R12B.q_epoch_mix_plan(spark, sf_dir).collect()
-    B = R12B._EMP_BUDGET_MULT * sum(r["n_tokens"] for r in rows)
+    rows = CORPUS.q_epoch_mix_plan(spark, sf_dir).collect()
+    B = CORPUS._EMP_BUDGET_MULT * sum(r["n_tokens"] for r in rows)
     alloc = sum(r["alloc_tokens"] for r in rows)
     w_unsat = sum(r["w"] for r in rows if not r["saturated"])
     assert alloc <= B
@@ -322,9 +320,9 @@ def test_epoch_mix_plan_laws(spark, sf_dir):
         assert B - alloc < w_unsat  # floor remainder only
     shares = {}
     for r in rows:
-        assert r["capacity"] == R12B._EMP_MAX_EPOCHS * r["n_tokens"]
+        assert r["capacity"] == CORPUS._EMP_MAX_EPOCHS * r["n_tokens"]
         assert 0 <= r["alloc_tokens"] <= r["capacity"]
-        assert r["epochs_micro"] <= R12B._EMP_MAX_EPOCHS * 1_000_000
+        assert r["epochs_micro"] <= CORPUS._EMP_MAX_EPOCHS * 1_000_000
         if r["saturated"]:
             assert r["alloc_tokens"] == r["capacity"]
         else:
@@ -339,10 +337,10 @@ def test_epoch_mix_plan_single_source(spark, tmp_path):
     rows = [(0, "alpha beta gamma delta", "en", "src2"),
             (1, "epsilon zeta eta", "en", "src2")]
     _write_docs(spark, tmp_path, rows)
-    [r] = R12B.q_epoch_mix_plan(spark, str(tmp_path)).collect()
+    [r] = CORPUS.q_epoch_mix_plan(spark, str(tmp_path)).collect()
     assert not r["saturated"]
-    assert r["alloc_tokens"] == R12B._EMP_BUDGET_MULT * r["n_tokens"]
-    assert r["epochs_micro"] == R12B._EMP_BUDGET_MULT * 1_000_000
+    assert r["alloc_tokens"] == CORPUS._EMP_BUDGET_MULT * r["n_tokens"]
+    assert r["epochs_micro"] == CORPUS._EMP_BUDGET_MULT * 1_000_000
 
 
 def test_tokenizer_fertility_single_char_corpus(spark, tmp_path):
@@ -355,6 +353,6 @@ def test_tokenizer_fertility_single_char_corpus(spark, tmp_path):
     _write_docs(spark, tmp_path, rows)
     got = {
         r["lang"]: (r["n_words"], r["n_bpe_tokens"], r["n_chars"])
-        for r in R12B.q_tokenizer_fertility(spark, str(tmp_path)).collect()
+        for r in CORPUS.q_tokenizer_fertility(spark, str(tmp_path)).collect()
     }
     assert got == {"en": (4, 4, 4), "de": (3, 3, 3)}

@@ -1,6 +1,6 @@
-"""Invariant and plan tests for the late-r4 scale entries
-(queries_scale.py): planted-duplicate spans, PQ code sanity + plan
-shape, windowed-dedup tie-break."""
+"""Invariant and plan tests for the scale-machinery entries (dedup,
+similarity, relational and streaming families): planted-duplicate
+spans, PQ code sanity + plan shape, windowed-dedup tie-break."""
 
 from __future__ import annotations
 
@@ -25,7 +25,7 @@ def test_dup_spans_finds_planted_run(spark, tmp_path):
     """Two docs share one 12-token sentence inside unique filler; the
     operator must report exactly one span per doc, covering exactly
     the planted 12 tokens (merged from the 5 duplicated 8-grams)."""
-    from wq_data_pipeline_spark.plans.queries_scale import q_dup_spans
+    from wq_data_pipeline_spark.plans.dedup import q_dup_spans
 
     planted = " ".join(f"shared{i}" for i in range(12))
     fill_a = " ".join(f"au{i}" for i in range(10))
@@ -49,7 +49,7 @@ def test_dup_spans_finds_planted_run(spark, tmp_path):
 def test_dup_spans_merges_adjacent_runs(spark, tmp_path):
     """Two shared runs separated by < 8 unique tokens in one doc merge
     into one span; separated by >= 9 they stay two spans."""
-    from wq_data_pipeline_spark.plans.queries_scale import q_dup_spans
+    from wq_data_pipeline_spark.plans.dedup import q_dup_spans
 
     run1 = " ".join(f"p{i}" for i in range(8))
     run2 = " ".join(f"q{i}" for i in range(8))
@@ -78,7 +78,7 @@ def test_pq_encode_plan_and_codebook_selfmatch(spark, sf_dir):
     """PQ plan: codebook broadcast, no cartesian product. Codebook
     vectors (vec_id < 16) must encode to themselves with zero error;
     all codes lie in [0, 16)."""
-    from wq_data_pipeline_spark.plans.queries_scale import q_pq_encode
+    from wq_data_pipeline_spark.plans.similarity import q_pq_encode
 
     df = q_pq_encode(spark, sf_dir)
     p = _plan(df)
@@ -100,7 +100,7 @@ def test_dup_span_removal_keeps_lowest_doc(spark, tmp_path):
     its md5 equals the hand-built cleaned text."""
     import hashlib
 
-    from wq_data_pipeline_spark.plans.queries_scale import q_dup_span_removal
+    from wq_data_pipeline_spark.plans.dedup import q_dup_span_removal
 
     planted = " ".join(f"shared{i}" for i in range(10))
     fill_a = " ".join(f"au{i}" for i in range(5))
@@ -131,7 +131,7 @@ def test_dup_span_removal_merged_island_over_removes(spark, tmp_path):
     landed — update the q_dup_span_removal docstring contract."""
     import hashlib
 
-    from wq_data_pipeline_spark.plans.queries_scale import q_dup_span_removal
+    from wq_data_pipeline_spark.plans.dedup import q_dup_span_removal
 
     run_a = " ".join(f"aa{i}" for i in range(8))  # exactly one 8-gram
     run_b = " ".join(f"bb{i}" for i in range(8))
@@ -162,10 +162,7 @@ def test_pq_search_shape_and_recall(spark, sf_dir):
     query, self excluded; and the PQ top-1 neighbor's TRUE L2 distance
     is within the top quartile of true distances (coarse-codebook
     sanity — 16 centroids/subspace can't promise more)."""
-    from wq_data_pipeline_spark.plans.queries_scale import (
-        q_pq_search,
-        _pq_subvectors,
-    )
+    from wq_data_pipeline_spark.plans.similarity import q_pq_search, _pq_subvectors
 
     df = q_pq_search(spark, sf_dir)
     p = _plan(df)
@@ -209,7 +206,7 @@ def test_ivf_pq_search_probes_and_ranks(spark, sf_dir):
     probed buckets; ranks are dense from 1; self excluded; and the
     candidate set is a strict subset of pq_search's full scan (the
     point of the coarse index)."""
-    from wq_data_pipeline_spark.plans.queries_scale import (
+    from wq_data_pipeline_spark.plans.similarity import (
         _IVF_NPROBE,
         q_ivf_pq_search,
         q_pq_search,
@@ -241,7 +238,7 @@ def test_ivf_pq_search_probes_and_ranks(spark, sf_dir):
 def test_event_dedup_window_tiebreak(spark, tmp_path):
     """Same (user, type, window, ts) twice -> the smaller event_id is
     kept; a later event in the same window is dropped but counted."""
-    from wq_data_pipeline_spark.plans.queries_scale import q_event_dedup_window
+    from wq_data_pipeline_spark.plans.streaming import q_event_dedup_window
 
     t0 = datetime.datetime(2024, 1, 1, 0, 1, 0)
     rows = [
@@ -270,10 +267,7 @@ def test_dup_spans_guarantee_randomized(spark, tmp_path):
     tokens from the higher doc_id and none from the lower."""
     import numpy as np
 
-    from wq_data_pipeline_spark.plans.queries_scale import (
-        q_dup_span_removal,
-        q_dup_spans,
-    )
+    from wq_data_pipeline_spark.plans.dedup import q_dup_span_removal, q_dup_spans
 
     rng = np.random.default_rng(11)
     n_cases = 15
@@ -315,11 +309,8 @@ def test_r4_entries_survive_degenerate_inputs(spark, tmp_path):
     import datetime
     import hashlib
 
-    from wq_data_pipeline_spark.plans.queries_scale import (
-        q_dup_span_removal,
-        q_dup_spans,
-        q_event_dedup_window,
-    )
+    from wq_data_pipeline_spark.plans.dedup import q_dup_span_removal, q_dup_spans
+    from wq_data_pipeline_spark.plans.streaming import q_event_dedup_window
 
     # every doc under the 8-token gram width -> no grams at all
     _write_documents(spark, tmp_path, ["one two three", "four five", "six"])
@@ -350,7 +341,7 @@ def test_salted_user_stats_no_single_reducer_key(spark, sf_dir):
     """The salted entry's plan must contain TWO hash aggregations over
     the exchange (partial on (key, salt), final on key) — i.e. the
     salt column reaches the first shuffle."""
-    from wq_data_pipeline_spark.plans.queries_scale import q_salted_user_stats
+    from wq_data_pipeline_spark.plans.relational import q_salted_user_stats
 
     p = _plan(q_salted_user_stats(spark, sf_dir))
     assert "_salt" in p, p
@@ -366,7 +357,7 @@ def test_dup_span_removal_merged_islands_documented_overremoval(spark, tmp_path)
     agree exactly on this case."""
     import hashlib
 
-    from wq_data_pipeline_spark.plans.queries_scale import (
+    from wq_data_pipeline_spark.plans.dedup import (
         SQL_DUP_SPAN_REMOVAL,
         q_dup_span_removal,
     )
@@ -409,7 +400,7 @@ def test_dup_span_removal_keepone_basic(spark, tmp_path):
     same outcome as the first-gram rule when islands align."""
     import hashlib
 
-    from wq_data_pipeline_spark.plans.queries_r6d import q_dup_span_removal_keepone
+    from wq_data_pipeline_spark.plans.dedup import q_dup_span_removal_keepone
 
     planted = " ".join(f"shared{i}" for i in range(10))
     fill_a = " ".join(f"au{i}" for i in range(5))
@@ -442,7 +433,7 @@ def test_dup_span_removal_keepone_merged_island_conserves(spark, tmp_path):
     survives (the strict keep-one guarantee)."""
     import hashlib
 
-    from wq_data_pipeline_spark.plans.queries_r6d import q_dup_span_removal_keepone
+    from wq_data_pipeline_spark.plans.dedup import q_dup_span_removal_keepone
 
     run_a = " ".join(f"aa{i}" for i in range(8))
     run_b = " ".join(f"bb{i}" for i in range(8))

@@ -10,12 +10,12 @@ import random
 import pytest
 from pyspark.sql import functions as F
 
-from wq_data_pipeline_spark.plans.queries_r5 import (
+from wq_data_pipeline_spark.plans.corpus import (
     _merge_fold,
     q_domain_rebalance,
-    q_semdedup_trained,
     q_token_budget_fill,
 )
+from wq_data_pipeline_spark.plans.similarity import q_semdedup_trained
 
 
 def _greedy_merge_ref(seq: list[str], lft: str, rgt: str) -> list[str]:
@@ -108,7 +108,7 @@ def test_semdedup_trained_oracle_k_is_dynamic():
     clustering whenever the embeddings table wasn't ~500 rows)."""
     import duckdb
 
-    from wq_data_pipeline_spark.plans.queries_r5 import (
+    from wq_data_pipeline_spark.plans.similarity import (
         _SDT_TARGET,
         SQL_SEMDEDUP_TRAINED,
     )
@@ -206,7 +206,7 @@ def test_r5_operators_survive_degenerate_inputs(spark):
     assert kc1.count() >= 1
 
     # merge fold on empty / single-symbol arrays
-    from wq_data_pipeline_spark.plans.queries_r5 import _merge_fold
+    from wq_data_pipeline_spark.plans.corpus import _merge_fold
 
     df = spark.createDataFrame([(0, []), (1, ["a"])], "id INT, s ARRAY<STRING>")
     got = {r["id"]: list(r["m"]) for r in df.select("id", _merge_fold(F.col("s"), "a", "b").alias("m")).collect()}
@@ -229,7 +229,7 @@ def test_bpe_entries_survive_merge_exhaustion(spark, tmp_path):
     of emptying it through a CROSS JOIN)."""
     from tests.oracle_utils import compare
 
-    from wq_data_pipeline_spark.plans.queries_r5 import (
+    from wq_data_pipeline_spark.plans.corpus import (
         SQL_BPE_APPLY,
         SQL_BPE_TRAIN,
         q_bpe_apply,
@@ -255,7 +255,7 @@ def test_domain_rebalance_digitless_source(spark, tmp_path):
     engines (a raw '' cast is NULL on Spark and an ERROR in DuckDB)."""
     from tests.oracle_utils import compare
 
-    from wq_data_pipeline_spark.plans.queries_r5 import (
+    from wq_data_pipeline_spark.plans.corpus import (
         SQL_DOMAIN_REBALANCE,
         q_domain_rebalance,
     )
@@ -274,7 +274,7 @@ def test_bpe_train_monotone_counts(spark, sf_dir, _):
     """Merge counts are non-increasing only within equal-pair classes
     is NOT guaranteed, but every learned count must be positive and
     rounds must be 1..N with distinct merged symbols."""
-    from wq_data_pipeline_spark.plans.queries_r5 import q_bpe_train
+    from wq_data_pipeline_spark.plans.corpus import q_bpe_train
 
     rows = q_bpe_train(spark, sf_dir).collect()
     assert [r["round"] for r in rows] == list(range(1, len(rows) + 1))

@@ -54,7 +54,7 @@ def test_dq_uniqueness_counts_all_rows_of_dup_keys(spark):
 
 
 def test_ewma_weights_are_exact_and_normalized():
-    from wq_data_pipeline_spark.plans.queries_r6f import _EWMA_NORM, _EWMA_TAPS
+    from wq_data_pipeline_spark.plans.qc import _EWMA_NORM, _EWMA_TAPS
 
     # the truncated mass is exactly 2 - 2^-(taps-1); repr round-trips
     assert float(_EWMA_NORM) == 2.0 - 0.5 ** (_EWMA_TAPS - 1)
@@ -69,8 +69,8 @@ def test_khop_reach_matches_hand_bfs(spark, sf_dir):
     """Cross-check the DataFrame BFS against a driver-side BFS over
     the same (collected) edge set — pins the frontier/anti-join
     logic, not just the oracle SQL."""
-    from wq_data_pipeline_spark.plans.queries_r6f import cooccurrence_edges
-    from wq_data_pipeline_spark.plans.queries_r6h import q_khop_reach
+    from wq_data_pipeline_spark.plans.relational import cooccurrence_edges
+    from wq_data_pipeline_spark.plans.relational import q_khop_reach
 
     edges = cooccurrence_edges(spark, sf_dir).collect()
     adj: dict[int, set[int]] = {}
@@ -102,7 +102,7 @@ def test_khop_reach_matches_hand_bfs(spark, sf_dir):
 def test_market_basket_counts_dup_part_once_per_order(spark, sf_dir):
     """A part on two lineitems of one order must contribute one
     basket membership (DISTINCT before the self-join)."""
-    from wq_data_pipeline_spark.plans.queries_r6h import q_market_basket
+    from wq_data_pipeline_spark.plans.relational import q_market_basket
     from wq_data_pipeline_spark.sources.testdata import load_table
 
     out = q_market_basket(spark, sf_dir)

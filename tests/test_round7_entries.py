@@ -93,9 +93,9 @@ def test_gap_lerp_single_bucket_series(spark):
     """A series whose samples all land inside one hour bucket yields
     zero interpolated rows (oracle range() semantics), not a Spark
     Illegal-sequence-boundaries error."""
-    from wq_data_pipeline_spark.plans.queries_r6j import q_gap_lerp
+    from wq_data_pipeline_spark.plans.qc import q_gap_lerp
 
-    import wq_data_pipeline_spark.plans.queries_r6j as mod
+    from wq_data_pipeline_spark.plans import qc as QC
 
     rows = [
         Row(event_type="solo", ts_us=100_000_000, event_id=1, vc=100),
@@ -103,12 +103,12 @@ def test_gap_lerp_single_bucket_series(spark):
     ]
     ev = spark.createDataFrame(rows)
     # drive the operator body directly on the constructed frame
-    orig = mod._events
-    mod._events = lambda s, d: ev
+    orig = QC._events
+    QC._events = lambda s, d: ev
     try:
         out = q_gap_lerp(spark, "unused").collect()
     finally:
-        mod._events = orig
+        QC._events = orig
     assert out == []
 
 
@@ -256,10 +256,10 @@ def test_auto_planes_law_and_candidate_coverage(spark):
 def test_seasonal_naive_skips_gap_hours(spark):
     """pred must be NULL (row excluded) when hour h-24 is unobserved,
     and must equal the h-24 value when it is."""
-    import wq_data_pipeline_spark.plans.queries_r6n as mod
-    from wq_data_pipeline_spark.plans.queries_r6n import q_seasonal_naive_mae
+    from wq_data_pipeline_spark.plans import qc as QC
+    from wq_data_pipeline_spark.plans.qc import q_seasonal_naive_mae
 
-    H = mod._HOUR_US
+    H = QC._HOUR_US
     rows = []
     # series: hours 0..200 observed EXCEPT hour 100; value = hour
     for h in range(201):
@@ -267,12 +267,12 @@ def test_seasonal_naive_skips_gap_hours(spark):
             continue
         rows.append(Row(event_type="s", ts_us=h * H + 1, vc=h))
     ev = spark.createDataFrame(rows)
-    orig = mod._events
-    mod._events = lambda s, d: ev
+    orig = QC._events
+    QC._events = lambda s, d: ev
     try:
         out = {r["event_type"]: r for r in q_seasonal_naive_mae(spark, "x").collect()}
     finally:
-        mod._events = orig
+        QC._events = orig
     r = out["s"]
     # last 7*24=168 hours = hours 33..200; hour 124 has no h-24
     # (hour 100 missing) and hour 100 itself is absent -> 168 - 2

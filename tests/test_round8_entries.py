@@ -34,7 +34,7 @@ def test_auto_mode_matches_exact_below_gate(spark):
     centroids on integer-quantized vectors (the property the entry
     oracles' exact-prefix replay relies on)."""
     from wq_data_pipeline_spark.operators.similarity import kmeans_centroids
-    from wq_data_pipeline_spark.plans.queries_ext import _quantized
+    from wq_data_pipeline_spark.plans.similarity import _quantized
     from wq_data_pipeline_spark.sources.testdata import load_table
 
     emb = (
@@ -60,7 +60,7 @@ def test_auto_mode_resolves_banded_past_gate(spark):
     round plan must carry the banded candidate join (a join on the
     signature columns) rather than the exact crossJoin."""
     from wq_data_pipeline_spark.operators.similarity import kmeans_centroids
-    from wq_data_pipeline_spark.plans.queries_ext import _quantized
+    from wq_data_pipeline_spark.plans.similarity import _quantized
     from wq_data_pipeline_spark.sources.testdata import load_table
 
     emb = (
@@ -93,7 +93,7 @@ def test_banded_prefix_sql_still_matches_engine(spark):
         cosine,
         kmeans_centroids,
     )
-    from wq_data_pipeline_spark.plans.queries_ext import (
+    from wq_data_pipeline_spark.plans.similarity import (
         _kmeans_banded_prefix_sql,
         _quantized,
     )
@@ -134,7 +134,7 @@ def test_des_kernel_composition_invariants():
     kernel: sum(w2) == sum(w1)^2 and w2[m] == sum_{j+k=m} w1[j]w1[k]
     — the identity that makes the truncated double smoothing a real
     second EWMA pass, not an arbitrary FIR."""
-    from wq_data_pipeline_spark.plans.queries_r8 import _DES_TAPS, _des_coeffs
+    from wq_data_pipeline_spark.plans.qc import _DES_TAPS, _des_coeffs
 
     w1, w2 = _des_coeffs()
     assert len(w1) == _DES_TAPS and len(w2) == 2 * _DES_TAPS - 1
@@ -153,7 +153,8 @@ def test_ngram_novelty_first_doc_semantics(spark):
     doc_id; later docs repeating it lose novelty, the first keeps it
     — pinned on a hand-built corpus where doc 3 repeats doc 1's
     grams entirely and doc 2 is fresh."""
-    import wq_data_pipeline_spark.plans.queries_r8 as R8
+    from wq_data_pipeline_spark.plans import corpus as CORPUS
+    from wq_data_pipeline_spark.plans import qc as QC
 
     base = "a b c d e f g h i j"  # 10 tokens -> 3 distinct 8-grams
     docs = spark.createDataFrame(
@@ -168,7 +169,7 @@ def test_ngram_novelty_first_doc_semantics(spark):
         docs.write.mode("overwrite").parquet(f"{td}/documents.parquet")
         out = {
             r["doc_id"]: r
-            for r in R8.q_ngram_novelty(spark, td).collect()
+            for r in CORPUS.q_ngram_novelty(spark, td).collect()
         }
     assert out[1]["n_grams"] == 3 and out[1]["novelty"] == 1.0
     assert out[2]["novelty"] == 1.0
@@ -181,7 +182,8 @@ def test_token_entropy_extremes(spark):
     tokens (normalized entropy 1)."""
     import tempfile
 
-    import wq_data_pipeline_spark.plans.queries_r8 as R8
+    from wq_data_pipeline_spark.plans import corpus as CORPUS
+    from wq_data_pipeline_spark.plans import qc as QC
 
     docs = spark.createDataFrame(
         [(1, "x x x x", "en", "s0", 7),
@@ -190,7 +192,7 @@ def test_token_entropy_extremes(spark):
     )
     with tempfile.TemporaryDirectory() as td:
         docs.write.mode("overwrite").parquet(f"{td}/documents.parquet")
-        out = {r["doc_id"]: r for r in R8.q_token_entropy(spark, td).collect()}
+        out = {r["doc_id"]: r for r in CORPUS.q_token_entropy(spark, td).collect()}
     assert out[1]["entropy"] == 0.0 and out[1]["norm_entropy"] == 0.0
     assert out[2]["entropy"] == 2.0 and out[2]["norm_entropy"] == 1.0
 
@@ -205,10 +207,7 @@ def test_lcp_capped_randomized_against_brute_force(spark):
 
     from pyspark.sql import functions as F
 
-    from wq_data_pipeline_spark.operators.suffix import (
-        _lcp_capped,
-        _lcp_capped2,
-    )
+    from wq_data_pipeline_spark.operators.suffix import _lcp_capped2
 
     rng = random.Random(8)
     rows = []
@@ -217,10 +216,7 @@ def test_lcp_capped_randomized_against_brute_force(spark):
         tb = "".join(rng.choice("ab") for _ in range(rng.randint(2, 120)))
         a = rng.randrange(len(ta))
         b = rng.randrange(len(tb))
-        # same-text case needs distinct positions (the documented
-        # different-suffix-length precondition of _lcp_capped)
-        p, q = sorted(rng.sample(range(len(ta)), 2))
-        rows.append((i, ta, tb, a, b, p, q))
+        rows.append((i, ta, tb, a, b))
 
     def brute(x: str, y: str, cap: int = 63) -> int:
         m = 0
@@ -230,25 +226,19 @@ def test_lcp_capped_randomized_against_brute_force(spark):
             m += 1
         return m
 
-    df = spark.createDataFrame(
-        rows, "i INT, ta STRING, tb STRING, a INT, b INT, p INT, q INT"
-    )
+    df = spark.createDataFrame(rows, "i INT, ta STRING, tb STRING, a INT, b INT")
     got = {
-        r["i"]: (r["x"], r["s"])
+        r["i"]: r["x"]
         for r in df.select(
             "i",
             _lcp_capped2(
                 F.col("ta"), F.col("a"), F.col("tb"), F.col("b"), 63
             ).alias("x"),
-            _lcp_capped(F.col("p"), F.col("q"), F.col("ta"), 63).alias("s"),
         ).collect()
     }
-    for i, ta, tb, a, b, p, q in rows:
-        assert got[i][0] == brute(ta[a:], tb[b:]), (i, ta[a:], tb[b:])
-        assert got[i][1] == brute(ta[p:], ta[q:]), (i, ta[p:], ta[q:])
+    for i, ta, tb, a, b in rows:
+        assert got[i] == brute(ta[a:], tb[b:]), (i, ta[a:], tb[b:])
 
-    with pytest.raises(ValueError, match="all-ones"):
-        _lcp_capped(F.col("p"), F.col("q"), F.col("ta"), 5)
     with pytest.raises(ValueError, match="all-ones"):
         _lcp_capped2(F.col("ta"), F.col("a"), F.col("tb"), F.col("b"), 5)
 
@@ -262,7 +252,8 @@ def test_theil_sen_trend_hand_computed(spark):
     import math
     import tempfile
 
-    import wq_data_pipeline_spark.plans.queries_r8 as R8
+    from wq_data_pipeline_spark.plans import corpus as CORPUS
+    from wq_data_pipeline_spark.plans import qc as QC
 
     rows = [
         (i, dt.datetime(2024, 1, 1 + d, 12, 0, 0), 1, "a", v / 100.0)
@@ -274,7 +265,7 @@ def test_theil_sen_trend_hand_computed(spark):
     )
     with tempfile.TemporaryDirectory() as td:
         ev.write.mode("overwrite").parquet(f"{td}/events.parquet")
-        out = R8.q_theil_sen_trend(spark, td).collect()
+        out = QC.q_theil_sen_trend(spark, td).collect()
     assert len(out) == 1
     r = out[0]
     assert r["n_days"] == 4 and r["n_pairs"] == 6

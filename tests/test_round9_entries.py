@@ -1,4 +1,4 @@
-"""Round-9 pins: the CDC / merge-on-read batch (queries_r9.py).
+"""Lakehouse-family pins: the CDC / merge-on-read entries.
 
 Hand-computed semantics on a 5-key synthetic change stream whose ts
 span makes the version cuts land on exact minute marks (span = 100
@@ -15,7 +15,7 @@ import datetime as dt
 
 import pytest
 
-from wq_data_pipeline_spark.plans import queries_r9 as R9
+from wq_data_pipeline_spark.plans import lakehouse as LAKEHOUSE
 
 _BASE = dt.datetime(2024, 3, 1, tzinfo=dt.timezone.utc)
 
@@ -56,7 +56,7 @@ def cdc_dir(spark, tmp_path_factory):
 def test_cdc_merge_on_read_hand_computed(spark, cdc_dir):
     out = {
         (r.user_id, r.event_type): r
-        for r in R9.q_cdc_merge_on_read(spark, cdc_dir).collect()
+        for r in LAKEHOUSE.q_cdc_merge_on_read(spark, cdc_dir).collect()
     }
     # B killed by the winning delete marker; C never materialized
     assert set(out) == {(1, "a"), (4, "b"), (5, "c")}
@@ -82,14 +82,14 @@ def test_cdc_merge_on_read_base_wins_when_log_silent(spark, tmp_path):
     ).coalesce(1).write.parquet(str(d / "events.parquet"))
     out = {
         (r.user_id, r.event_type): r
-        for r in R9.q_cdc_merge_on_read(spark, str(d)).collect()
+        for r in LAKEHOUSE.q_cdc_merge_on_read(spark, str(d)).collect()
     }
     a = out[(1, "a")]
     assert (a.value, a.n_log_records, a.from_log) == (2.0, 0, False)
 
 
 def test_cdc_changes_between_hand_computed(spark, cdc_dir):
-    rows = R9.q_cdc_changes_between(spark, cdc_dir).collect()
+    rows = LAKEHOUSE.q_cdc_changes_between(spark, cdc_dir).collect()
     # only key A has activity in (lo=40min, hi=70min]; key C's t60
     # delete has no pre-image -> net no-op, excluded
     assert len(rows) == 1
@@ -114,7 +114,7 @@ def test_cdc_changes_between_delete_and_insert_types(spark, tmp_path):
     ).coalesce(1).write.parquet(str(d / "events.parquet"))
     out = {
         (r.user_id, r.event_type): r
-        for r in R9.q_cdc_changes_between(spark, str(d)).collect()
+        for r in LAKEHOUSE.q_cdc_changes_between(spark, str(d)).collect()
     }
     assert out[(1, "a")].change_type == "delete"
     assert out[(1, "a")].pre_value == 1.0
@@ -125,7 +125,7 @@ def test_cdc_changes_between_delete_and_insert_types(spark, tmp_path):
 
 
 def test_compaction_plan_hand_computed(spark, cdc_dir):
-    out = {r.bucket: r for r in R9.q_compaction_plan(spark, cdc_dir).collect()}
+    out = {r.bucket: r for r in LAKEHOUSE.q_compaction_plan(spark, cdc_dir).collect()}
     # bucket = user_id % 32; key C (user 3) vanishes entirely: its
     # delete marker won at compaction and it has no log rows
     assert set(out) == {1, 2, 4, 5}
@@ -159,7 +159,7 @@ def test_mor_equals_cow_snapshot_when_log_empty(spark, tmp_path):
     ).coalesce(1).write.parquet(str(d / "events.parquet"))
     out = {
         (r.user_id, r.event_type): r.value
-        for r in R9.q_cdc_merge_on_read(spark, str(d)).collect()
+        for r in LAKEHOUSE.q_cdc_merge_on_read(spark, str(d)).collect()
     }
     assert out == {(1, "a"): 2.0, (2, "b"): 4.0}
 
@@ -219,7 +219,7 @@ def test_mor_matches_brute_force_on_random_stream(spark, tmp_path):
 
     got = {
         (r.user_id, r.event_type): (r.ts_us, r.value, r.n_log_records, r.from_log)
-        for r in R9.q_cdc_merge_on_read(spark, str(d)).collect()
+        for r in LAKEHOUSE.q_cdc_merge_on_read(spark, str(d)).collect()
     }
     assert got == expect
     assert expect, "random stream must produce a non-empty view"
@@ -280,7 +280,7 @@ def test_changes_between_matches_brute_force_on_random_stream(spark, tmp_path):
         (r.user_id, r.event_type): (
             r.change_type, r.pre_value, r.post_value, r.post_ts_us, r.n_changes
         )
-        for r in R9.q_cdc_changes_between(spark, str(d)).collect()
+        for r in LAKEHOUSE.q_cdc_changes_between(spark, str(d)).collect()
     }
     assert got == expect
     assert any(v[0] == "delete" for v in expect.values())

@@ -112,17 +112,15 @@ def test_bench_prior_medians_env_override(tmp_path, monkeypatch):
     assert bench._prior_medians(str(tmp_path)) == {"q1": 1.5, "q2": 0.3}
 
 
-def test_bench_prior_medians_newest_local(tmp_path, monkeypatch):
-    import os
+def test_bench_prior_medians_reads_canonical_record(tmp_path, monkeypatch):
+    """Without the env override the prior is BENCH_LOCAL.json, whatever
+    other snapshots sit next to it."""
     import bench
 
     monkeypatch.delenv("SPARK_GRAFT_BENCH_PRIOR", raising=False)
-    a = tmp_path / "BENCH_LOCAL_r08.json"
-    a.write_text(json.dumps({"queries": {"q": 9.0}}))
-    b = tmp_path / "BENCH_LOCAL.json"
-    b.write_text(json.dumps({"queries": {"q": 2.0}}))
-    os.utime(a, (1, 1))  # make the r08 record older
-    assert bench._prior_medians(str(tmp_path)) == {"q": 2.0}
+    (tmp_path / "BENCH_LOCAL_r08.json").write_text(json.dumps({"queries": {"q": 25.0}}))
+    (tmp_path / "BENCH_LOCAL.json").write_text(json.dumps({"queries": {"q": 1.6}}))
+    assert bench._prior_medians(str(tmp_path)) == {"q": 1.6}
 
 
 def test_bench_prior_medians_absent(tmp_path, monkeypatch):
@@ -132,38 +130,16 @@ def test_bench_prior_medians_absent(tmp_path, monkeypatch):
     assert bench._prior_medians(str(tmp_path)) == {}
 
 
-def test_bench_prior_medians_mtime_tie_prefers_canonical(tmp_path, monkeypatch):
-    """A fresh checkout stamps every committed BENCH_LOCAL*.json with
-    ONE mtime; the tie must resolve to BENCH_LOCAL.json (the previous
-    run), not an arbitrary rounds-old snapshot — the r9 bug that let
-    an image_ahash 21 s excursion through unadjudicated (compared
-    against the r8 snapshot's 25 s instead of the prior run's 1.6 s)."""
-    import os
-    import bench
-
-    monkeypatch.delenv("SPARK_GRAFT_BENCH_PRIOR", raising=False)
-    old = tmp_path / "BENCH_LOCAL_r08.json"
-    old.write_text(json.dumps({"queries": {"q": 25.0}}))
-    cur = tmp_path / "BENCH_LOCAL.json"
-    cur.write_text(json.dumps({"queries": {"q": 1.6}}))
-    os.utime(old, (100, 100))
-    os.utime(cur, (100, 100))  # identical mtimes, checkout-style
-    assert bench._prior_medians(str(tmp_path)) == {"q": 1.6}
-
-
-# ---------------------------------------------- sen_slope_c rounding
-
-
 def test_sen_slope_rounded_in_both_dialects():
     """ADVICE r8: sen_slope_c must be quantized in BOTH dialects so
     the oracle doesn't depend on engine-internal median midpoint
     arithmetic."""
-    from wq_data_pipeline_spark.plans import queries_r8 as R8
+    from wq_data_pipeline_spark.plans import qc as QC
 
-    assert "round(median(" in R8.SQL_THEIL_SEN_TREND
+    assert "round(median(" in QC.SQL_THEIL_SEN_TREND
     import inspect
 
-    src = inspect.getsource(R8.q_theil_sen_trend)
+    src = inspect.getsource(QC.q_theil_sen_trend)
     assert 'F.round(F.median(slope), 6).alias("sen_slope_c")' in src
 
 

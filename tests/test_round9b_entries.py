@@ -1,4 +1,6 @@
-"""Round-9 second-wave pins: batch 28 (queries_r9b.py).
+"""Entry pins: time travel, compaction, incremental view maintenance
+and vacuum (lakehouse), incremental/containment/SimHash/keep-best dedup
+(dedup) and key_skew_profile (relational).
 
 Hand-computed semantics + invariant laws on synthetic fixtures; the
 sf-oracle equivalence is pinned by test_oracle.py (the entries are in
@@ -15,7 +17,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from wq_data_pipeline_spark.operators import dedup as DD
-from wq_data_pipeline_spark.plans import queries_r9b as R9B
+from wq_data_pipeline_spark.plans import dedup as DEDUP
+from wq_data_pipeline_spark.plans import lakehouse as LAKEHOUSE
+from wq_data_pipeline_spark.plans import relational as RELATIONAL
 
 _BASE = dt.datetime(2024, 3, 1, tzinfo=dt.timezone.utc)
 
@@ -62,7 +66,7 @@ def test_time_travel_hand_computed(spark, tmp_path):
     _write_events(spark, tmp_path, rows)
     out = {
         (r.user_id, r.event_type): (r.value, r.from_log)
-        for r in R9B.q_cdc_time_travel(spark, str(tmp_path)).collect()
+        for r in LAKEHOUSE.q_cdc_time_travel(spark, str(tmp_path)).collect()
     }
     assert out == {(1, "a"): (2.0, True), (5, "c"): (1.5, False)}
 
@@ -91,7 +95,7 @@ def test_time_travel_equals_direct_resolution(spark, tmp_path):
 
     us = [int(r[1].timestamp() * 1_000_000) for r in rows]
     t0, t1 = min(us), max(us)
-    asof = t0 + (t1 - t0) * R9B._TT_NUM // R9B._TT_DEN
+    asof = t0 + (t1 - t0) * LAKEHOUSE._TT_NUM // LAKEHOUSE._TT_DEN
     by_key: dict = {}
     for (eid, _ts, uid, et, val), u in zip(rows, us):
         if u <= asof:
@@ -106,7 +110,7 @@ def test_time_travel_equals_direct_resolution(spark, tmp_path):
 
     got = {
         (r.user_id, r.event_type): (r.ts_us, r.value)
-        for r in R9B.q_cdc_time_travel(spark, str(tmp_path)).collect()
+        for r in LAKEHOUSE.q_cdc_time_travel(spark, str(tmp_path)).collect()
     }
     assert got == expect
     assert expect, "random stream must produce a non-empty version"
@@ -147,7 +151,7 @@ def test_incremental_dedup_planted(spark, tmp_path):
     )
     out = {
         r.doc_id: (r.status, r.match_id, r.jaccard)
-        for r in R9B.q_incremental_dedup(spark, str(tmp_path)).collect()
+        for r in DEDUP.q_incremental_dedup(spark, str(tmp_path)).collect()
     }
     assert set(out) == {10, 20, 30}
     assert out[10] == ("exact_dup", 3, None)
@@ -207,7 +211,7 @@ def test_key_skew_profile_hand_computed(spark, tmp_path):
     _write_events(spark, tmp_path, rows)
     out = {
         r.event_type: r
-        for r in R9B.q_key_skew_profile(spark, str(tmp_path)).collect()
+        for r in RELATIONAL.q_key_skew_profile(spark, str(tmp_path)).collect()
     }
     a = out["a"]
     assert (a.n_keys, a.n_rows, a.max_rows, a.top_user_id, a.n_hot_keys) == (
@@ -240,7 +244,7 @@ def test_containment_detects_subset_duplication(spark, tmp_path):
     )
     rows = {
         (r.id_a, r.id_b): (r.containment, r.jaccard)
-        for r in R9B.q_containment_pairs(spark, str(tmp_path)).collect()
+        for r in DEDUP.q_containment_pairs(spark, str(tmp_path)).collect()
     }
     assert set(rows) == {(5, 7)}
     c, j = rows[(5, 7)]
@@ -347,7 +351,7 @@ def test_dedup_keep_best_planted_policy(spark, tmp_path):
     )
     out = {
         r.doc_id: (r.canonical_id, r.group_size, r.is_kept)
-        for r in R9B.q_dedup_keep_best(spark, str(tmp_path)).collect()
+        for r in DEDUP.q_dedup_keep_best(spark, str(tmp_path)).collect()
     }
     assert out[20] == (20, 3, True)
     assert out[10] == (20, 3, False)
@@ -360,7 +364,7 @@ def test_dedup_keep_best_ties_to_smaller_id(spark, tmp_path):
     _write_docs(spark, tmp_path, [(7, "a b c"), (3, "c a b"), (9, "b c a")])
     out = {
         r.doc_id: r.canonical_id
-        for r in R9B.q_dedup_keep_best(spark, str(tmp_path)).collect()
+        for r in DEDUP.q_dedup_keep_best(spark, str(tmp_path)).collect()
     }
     assert out == {3: 3, 7: 3, 9: 3}
 
@@ -424,7 +428,7 @@ def test_compaction_preserves_mor_view(spark, tmp_path):
 
     from pyspark.sql import Window
 
-    from wq_data_pipeline_spark.plans import queries_r9 as R9
+    from wq_data_pipeline_spark.plans import lakehouse as LAKEHOUSE
 
     rng = random.Random(777)
     rows = []
@@ -437,12 +441,12 @@ def test_compaction_preserves_mor_view(spark, tmp_path):
     _write_events(spark, tmp_path, rows)
     sf = str(tmp_path)
 
-    plan = {r.bucket for r in R9.q_compaction_plan(spark, sf).collect()
+    plan = {r.bucket for r in LAKEHOUSE.q_compaction_plan(spark, sf).collect()
             if r.needs_compaction}
     assert plan, "seeded stream must flag at least one bucket"
 
-    r = R9._records(spark, sf)
-    latest = R9._latest(R9._KEY)
+    r = LAKEHOUSE._records(spark, sf)
+    latest = LAKEHOUSE._latest(LAKEHOUSE._KEY)
     flagged = (F.col("user_id") % 32).isin(*sorted(plan))
 
     # physical pieces of the PRE-compaction layout
@@ -450,10 +454,10 @@ def test_compaction_preserves_mor_view(spark, tmp_path):
         r.filter(F.col("ts_us") <= F.col("_cut_us"))
         .withColumn("_rn", F.row_number().over(latest))
         .filter((F.col("_rn") == 1) & (F.col("op") == "U"))
-        .select(*R9._KEY, "ts_us", "event_id", "value", "op")
+        .select(*LAKEHOUSE._KEY, "ts_us", "event_id", "value", "op")
     )
     old_log = r.filter(F.col("ts_us") > F.col("_cut_us")).select(
-        *R9._KEY, "ts_us", "event_id", "value", "op"
+        *LAKEHOUSE._KEY, "ts_us", "event_id", "value", "op"
     )
 
     def resolve(base, log):
@@ -461,7 +465,7 @@ def test_compaction_preserves_mor_view(spark, tmp_path):
         return (
             m.withColumn("_rn", F.row_number().over(latest))
             .filter((F.col("_rn") == 1) & (F.col("op") == "U"))
-            .select(*R9._KEY, "ts_us", "value")
+            .select(*LAKEHOUSE._KEY, "ts_us", "value")
         )
 
     before = resolve(old_base, old_log)
@@ -470,7 +474,7 @@ def test_compaction_preserves_mor_view(spark, tmp_path):
     # view (what the compactor writes); their log rows are gone
     new_base_flagged = resolve(
         old_base.filter(flagged), old_log.filter(flagged)
-    ).select(*R9._KEY, "ts_us", F.lit(0).cast("long").alias("event_id"),
+    ).select(*LAKEHOUSE._KEY, "ts_us", F.lit(0).cast("long").alias("event_id"),
              "value", F.lit("U").alias("op"))
     compacted_base = old_base.filter(~flagged).unionByName(new_base_flagged)
     compacted_log = old_log.filter(~flagged)
@@ -517,7 +521,7 @@ def test_ivm_matches_brute_force_direct_agg(spark, tmp_path):
             expect[et] = (n + 1, s + round(win[2] * 100))
     got = {
         r.event_type: (r.n_keys, r.sum_cents)
-        for r in R9B.q_incremental_agg_maintenance(spark, str(tmp_path)).collect()
+        for r in LAKEHOUSE.q_incremental_agg_maintenance(spark, str(tmp_path)).collect()
     }
     assert got == expect
     assert expect
@@ -549,7 +553,7 @@ def test_ivm_handles_delete_and_reinsert(spark, tmp_path):
     _write_events(spark, tmp_path, rows)
     got = {
         r.event_type: (r.n_keys, r.sum_cents)
-        for r in R9B.q_incremental_agg_maintenance(spark, str(tmp_path)).collect()
+        for r in LAKEHOUSE.q_incremental_agg_maintenance(spark, str(tmp_path)).collect()
     }
     # at hi: A=12.50, C=7.25, D=2.00 live; B deleted; E never lived
     assert got["a"] == (3, 1250 + 725 + 200)
@@ -576,7 +580,7 @@ def test_vacuum_plan_hand_computed(spark, tmp_path):
     _write_events(spark, tmp_path, rows)
     out = {
         r.bucket: (r.n_records, r.n_vacuumable, r.n_tombstones_vacuumable)
-        for r in R9B.q_vacuum_plan(spark, str(tmp_path)).collect()
+        for r in LAKEHOUSE.q_vacuum_plan(spark, str(tmp_path)).collect()
     }
     # bucket 1 = users 1 and 33: 5 records; A's t0 (U) and t50 (D)
     # vacuumable; A's t60 winner, t80 post-horizon, 33's t100 stay

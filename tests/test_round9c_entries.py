@@ -1,4 +1,6 @@
-"""Round-9 third-wave pins: batch 29 (queries_r9c.py).
+"""Entry pins: leak_free_split, domain_top_cap, corpus_manifest
+(corpus), audio_energy (multimodal), txn_conflict_check (lakehouse)
+and mrl_recall (similarity).
 
 Hand-computed semantics + brute-force laws on synthetic fixtures; the
 sf-oracle equivalence is pinned by test_oracle.py. These pin what the
@@ -16,7 +18,10 @@ import struct
 
 from pyspark.sql import functions as F
 
-from wq_data_pipeline_spark.plans import queries_r9c as R9C
+from wq_data_pipeline_spark.plans import corpus as CORPUS
+from wq_data_pipeline_spark.plans import lakehouse as LAKEHOUSE
+from wq_data_pipeline_spark.plans import multimodal as MULTIMODAL
+from wq_data_pipeline_spark.plans import similarity as SIMILARITY
 
 _DOC_SCHEMA = "doc_id long, text string, lang string, source string, n_chars long"
 
@@ -71,7 +76,7 @@ def test_leak_free_split_matches_python_brute_force(spark, tmp_path):
     _write_docs(spark, tmp_path, rows)
     got = {
         r["split"]: r.asDict()
-        for r in R9C.q_leak_free_split(spark, str(tmp_path)).collect()
+        for r in CORPUS.q_leak_free_split(spark, str(tmp_path)).collect()
     }
 
     groups: dict[str, list[tuple[int, str]]] = {}
@@ -124,7 +129,7 @@ def test_leak_free_split_flags_naive_leak(spark, tmp_path):
     assert len(ids) == 2
     rows = [(ids[0], text, "en", "s0"), (ids[1], text + " ", "en", "s1")]
     _write_docs(spark, tmp_path, rows)
-    out = R9C.q_leak_free_split(spark, str(tmp_path)).collect()
+    out = CORPUS.q_leak_free_split(spark, str(tmp_path)).collect()
     assert len(out) == 1  # one group -> one split row: never torn
     r = out[0].asDict()
     assert r["n_groups"] == 1 and r["n_docs"] == 2
@@ -148,7 +153,7 @@ def test_domain_top_cap_brute_force_with_ties(spark, tmp_path):
     _write_docs(spark, tmp_path, rows)
     got = {
         r["source"]: r.asDict()
-        for r in R9C.q_domain_top_cap(spark, str(tmp_path)).collect()
+        for r in CORPUS.q_domain_top_cap(spark, str(tmp_path)).collect()
     }
 
     docs = [(i, len(t), s) for (i, t, _lg, s) in rows]
@@ -157,8 +162,8 @@ def test_domain_top_cap_brute_force_with_ties(spark, tmp_path):
             [(n, i) for (i, n, s) in docs if s == src],
             key=lambda p: (-p[0], p[1]),
         )
-        kept = mine[: R9C._CAP]
-        dropped = mine[R9C._CAP :]
+        kept = mine[: CORPUS._CAP]
+        dropped = mine[CORPUS._CAP :]
         g = got[src]
         assert g["n_docs"] == len(mine)
         assert g["n_kept"] == len(kept)
@@ -197,7 +202,7 @@ def test_leak_free_split_random_corpora_match_brute_force(spark, tmp_path):
         _write_docs(spark, tmp_path / f"t{trial}", rows)
         got = {
             r["split"]: r.asDict()
-            for r in R9C.q_leak_free_split(
+            for r in CORPUS.q_leak_free_split(
                 spark, str(tmp_path / f"t{trial}")
             ).collect()
         }
@@ -244,13 +249,13 @@ def test_domain_top_cap_random_sizes_and_ties(spark, tmp_path):
         rows = []
         did = 0
         for s in range(rng.randint(2, 5)):
-            for _ in range(rng.randint(1, 2 * R9C._CAP + 5)):
+            for _ in range(rng.randint(1, 2 * CORPUS._CAP + 5)):
                 did += rng.randint(1, 3)
                 rows.append((did, "x" * rng.randint(1, 6), "en", f"s{s}"))
         _write_docs(spark, tmp_path / f"t{trial}", rows)
         got = {
             r["source"]: r.asDict()
-            for r in R9C.q_domain_top_cap(spark, str(tmp_path / f"t{trial}")).collect()
+            for r in CORPUS.q_domain_top_cap(spark, str(tmp_path / f"t{trial}")).collect()
         }
         by_src: dict[str, list[tuple[int, int]]] = {}
         for i, t, _lg, s in rows:
@@ -258,7 +263,7 @@ def test_domain_top_cap_random_sizes_and_ties(spark, tmp_path):
         assert set(got) == set(by_src), trial
         for s, docs in by_src.items():
             mine = sorted(docs, key=lambda p: (-p[0], p[1]))
-            kept, dropped = mine[: R9C._CAP], mine[R9C._CAP :]
+            kept, dropped = mine[: CORPUS._CAP], mine[CORPUS._CAP :]
             g = got[s]
             assert g["n_kept"] == len(kept) and g["n_dropped"] == len(dropped)
             assert g["kept_chars"] == sum(n for (n, _i) in kept)
@@ -302,7 +307,7 @@ def test_txn_conflict_hand_computed(spark, tmp_path):
         rows,
         "event_id long, ts timestamp, user_id long, event_type string, value double",
     ).coalesce(2).write.mode("overwrite").parquet(f"{tmp_path}/events.parquet")
-    out = R9C.q_txn_conflict_check(spark, str(tmp_path)).collect()
+    out = LAKEHOUSE.q_txn_conflict_check(spark, str(tmp_path)).collect()
     assert len(out) == 1
     r = out[0].asDict()
     assert r == {
@@ -324,12 +329,12 @@ def _py_audio_features(text: str) -> dict:
     independently of the SQL oracle."""
     seed = hashlib.md5(text.encode()).hexdigest()
     raw = b"".join(
-        hashlib.md5(f"{seed}:{c}".encode()).digest() for c in range(R9C._N_CHUNKS)
+        hashlib.md5(f"{seed}:{c}".encode()).digest() for c in range(MULTIMODAL._N_CHUNKS)
     )
     vals = [v for (v,) in struct.iter_unpack("<h", raw)]
     return {
         "n_frames": len(vals),
-        "sample_rate": R9C._RATE,
+        "sample_rate": MULTIMODAL._RATE,
         "sum_abs": sum(abs(v) for v in vals),
         "sum_sq": sum(v * v for v in vals),
         "peak_abs": max(abs(v) for v in vals),
@@ -347,7 +352,7 @@ def test_audio_energy_matches_direct_python(spark, tmp_path):
     _write_docs(spark, tmp_path, rows)
     got = {
         r["media_id"]: r.asDict()
-        for r in R9C.q_audio_energy(spark, str(tmp_path)).collect()
+        for r in MULTIMODAL.q_audio_energy(spark, str(tmp_path)).collect()
     }
     assert set(got) == {1, 2, 3, 4}
     for i, t, _lg, _s in rows:
@@ -385,8 +390,8 @@ def test_corpus_manifest_order_invariant_and_tamper_local(spark, tmp_path):
     ).parquet(f"{tmp_path}/b/documents.parquet")
 
     key = lambda r: (r["source"], r["split"])  # noqa: E731
-    ma = {key(r): r.asDict() for r in R9C.q_corpus_manifest(spark, str(tmp_path / "a")).collect()}
-    mb = {key(r): r.asDict() for r in R9C.q_corpus_manifest(spark, str(tmp_path / "b")).collect()}
+    ma = {key(r): r.asDict() for r in CORPUS.q_corpus_manifest(spark, str(tmp_path / "a")).collect()}
+    mb = {key(r): r.asDict() for r in CORPUS.q_corpus_manifest(spark, str(tmp_path / "b")).collect()}
     assert ma == mb
 
     # python replication of one row's checksum
@@ -411,7 +416,7 @@ def test_corpus_manifest_order_invariant_and_tamper_local(spark, tmp_path):
         (i, t + "!" if i == victim[0] else t, lg, s) for (i, t, lg, s) in rows
     ]
     _write_docs(spark, tmp_path / "c", tampered)
-    mc = {key(r): r.asDict() for r in R9C.q_corpus_manifest(spark, str(tmp_path / "c")).collect()}
+    mc = {key(r): r.asDict() for r in CORPUS.q_corpus_manifest(spark, str(tmp_path / "c")).collect()}
     vkey = (victim[3], _py_doc_split(victim[0]))
     for k in ma:
         if k == vkey:
@@ -452,7 +457,7 @@ def test_mrl_recall_matches_python_brute_force(spark, tmp_path):
     q = {i: [qz(x) for x in v] for i, v in vecs.items()}
     queries = [i for i in ids if i % 100 == 0]
     topk = {}
-    for d in R9C._MRL_DIMS:
+    for d in SIMILARITY._MRL_DIMS:
         for qi in queries:
             scored = []
             for ni in ids:
@@ -464,15 +469,15 @@ def test_mrl_recall_matches_python_brute_force(spark, tmp_path):
                 cos = dot / (math.sqrt(n1) * math.sqrt(n2))
                 scored.append((-cos, ni))
             scored.sort()
-            topk[(qi, d)] = {ni for (_c, ni) in scored[: R9C._MRL_K]}
+            topk[(qi, d)] = {ni for (_c, ni) in scored[: SIMILARITY._MRL_K]}
 
-    full_d = max(R9C._MRL_DIMS)
+    full_d = max(SIMILARITY._MRL_DIMS)
     exp = {}
-    for d in R9C._MRL_DIMS:
+    for d in SIMILARITY._MRL_DIMS:
         hits = sum(
             len(topk[(qi, d)] & topk[(qi, full_d)]) for qi in queries
         )
-        n_ranked = R9C._MRL_K * len(queries)
+        n_ranked = SIMILARITY._MRL_K * len(queries)
         exp[d] = {
             "n_queries": len(queries),
             "n_ranked": n_ranked,
@@ -482,7 +487,7 @@ def test_mrl_recall_matches_python_brute_force(spark, tmp_path):
 
     got = {
         r["trunc_dim"]: r.asDict()
-        for r in R9C.q_mrl_recall(spark, str(tmp_path)).collect()
+        for r in SIMILARITY.q_mrl_recall(spark, str(tmp_path)).collect()
     }
     assert set(got) == set(exp)
     for d in exp:
@@ -490,7 +495,7 @@ def test_mrl_recall_matches_python_brute_force(spark, tmp_path):
             assert got[d][k] == v, (d, k, got[d], exp[d])
     assert got[full_d]["recall_at_5"] == 1.0
     # the planted random vectors must actually exercise truncation loss
-    assert any(got[d]["recall_at_5"] < 1.0 for d in R9C._MRL_DIMS[:-1])
+    assert any(got[d]["recall_at_5"] < 1.0 for d in SIMILARITY._MRL_DIMS[:-1])
 
 
 def test_audio_features_window_word_rejects_nonpcm16(spark):

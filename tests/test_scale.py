@@ -31,21 +31,21 @@ def test_filter_pushdown_parquet(spark, sf_dir):
 def test_single_window_exec_for_shared_sort(spark, sf_dir):
     """All frames on the same (partition, order) key must collapse
     into few WindowExec nodes — not one sort per expression."""
-    from wq_data_pipeline_spark.plans.queries import q_w7_rolling_var
+    from wq_data_pipeline_spark.plans.qc import q_w7_rolling_var
 
     plan = _plan(q_w7_rolling_var(spark, sf_dir))
     assert plan.count("Sort ") <= 2, plan  # agg-shuffle sort + window sort
 
 
 def test_broadcast_join_for_dims(spark, sf_dir):
-    from wq_data_pipeline_spark.plans.queries import q_tpch_q5
+    from wq_data_pipeline_spark.plans.relational import q_tpch_q5
 
     plan = _plan(q_tpch_q5(spark, sf_dir))
     assert "BroadcastHashJoin" in plan, plan
 
 
 def test_whole_stage_codegen_in_detectors(spark, sf_dir):
-    from wq_data_pipeline_spark.plans.queries import q_w5_flat_runs
+    from wq_data_pipeline_spark.plans.qc import q_w5_flat_runs
 
     df = q_w5_flat_runs(spark, sf_dir)
     df.collect()  # AQE finalizes the physical plan only on execution
@@ -167,7 +167,7 @@ def test_embed_near_dup_plan_has_no_cartesian(spark, sf_dir):
     """The CATALOGED embed_near_dup query must be the banded-LSH plan:
     its physical plan contains no CartesianProduct / BroadcastNestedLoop
     (VERDICT r1: the O(n^2) exact form is validation-only)."""
-    from wq_data_pipeline_spark.plans.queries_ext import q_embed_near_dup
+    from wq_data_pipeline_spark.plans.similarity import q_embed_near_dup
 
     plan = q_embed_near_dup(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan
@@ -441,7 +441,7 @@ def test_bucketed_join_no_shuffle(spark, sf_dir, tmp_path):
         spark.sql("DROP TABLE IF EXISTS agg_b")
 
 
-def test_round3_operators_empty_and_edge_inputs(spark):
+def test_operators_empty_and_edge_inputs(spark):
     """Operators touched in r3 must survive degenerate inputs: empty
     corpus, no-edge graphs, queries with no matching terms."""
     from wq_data_pipeline_spark.operators.dedup import (
@@ -489,7 +489,7 @@ def test_sketch_profile_error_bounds(spark, sf_dir):
     inside their documented error bounds vs the exact profile — the
     verification that replaces a cross-engine oracle for
     engine-specific sketch implementations."""
-    from wq_data_pipeline_spark.plans.queries_rel import q_sketch_profile
+    from wq_data_pipeline_spark.plans.relational import q_sketch_profile
     from wq_data_pipeline_spark.sources.testdata import load_table
 
     got = {r.event_type: r for r in q_sketch_profile(spark, sf_dir).collect()}
@@ -553,7 +553,7 @@ def test_retrieval_plans(spark, sf_dir):
     ONLY as the broadcast 1-row corpus-stats cross-join (the lazy
     scalar pattern); its build side is a global aggregate, so the
     loop body runs once per probe row."""
-    from wq_data_pipeline_spark.plans.queries_ext import q_bm25_search, q_tfidf_terms
+    from wq_data_pipeline_spark.plans.similarity import q_bm25_search, q_tfidf_terms
 
     p = _plan(q_bm25_search(spark, sf_dir))
     assert "TakeOrderedAndProject" in p, p
@@ -569,7 +569,7 @@ def test_retrieval_builds_with_zero_jobs(spark, sf_dir):
     """Constructing tfidf/bm25 queries must run NO driver jobs — the
     corpus scalars (N, avgdl) are lazy 1-row aggs inside the plan, not
     eager count()/first() actions (VERDICT r3 nit #1)."""
-    from wq_data_pipeline_spark.plans.queries_ext import q_bm25_search, q_tfidf_terms
+    from wq_data_pipeline_spark.plans.similarity import q_bm25_search, q_tfidf_terms
 
     from wq_data_pipeline_spark.operators.retrieval import bm25_search, tfidf_top_terms
 
@@ -600,7 +600,7 @@ def test_streaming_mirror_plans(spark, sf_dir):
     range as a residual (never a nested-loop/cartesian), and the
     session rollup is ONE hash exchange with map-side partial
     aggregation."""
-    from wq_data_pipeline_spark.plans.queries_stream import (
+    from wq_data_pipeline_spark.plans.streaming import (
         q_stream_interval_join,
         q_stream_session_rollup,
         q_stream_tumbling_rollup,
@@ -646,10 +646,7 @@ def test_pack_assignments_invariants(spark, sf_dir):
     """Packing map invariants: each doc's spans sum to its token count
     and tile it contiguously from 0; every sequence except the last
     holds exactly 512 tokens."""
-    from wq_data_pipeline_spark.plans.queries_corpus import (
-        _PACK_SEQ_LEN,
-        q_pack_assignments,
-    )
+    from wq_data_pipeline_spark.plans.corpus import _PACK_SEQ_LEN, q_pack_assignments
 
     df = q_pack_assignments(spark, sf_dir).cache()
     rows = df.orderBy("doc_id", "seq_id").collect()
@@ -791,7 +788,7 @@ def test_kmeans_distributed_shift_tol_early_stop(spark, sf_dir):
     stops after round 1, matching an iters=1 run exactly; tol=0 runs
     all rounds and matches the default fixed-iter result."""
     from wq_data_pipeline_spark.operators.similarity import kmeans_centroids
-    from wq_data_pipeline_spark.plans.queries_ext import _quantized
+    from wq_data_pipeline_spark.plans.similarity import _quantized
     from wq_data_pipeline_spark.sources.testdata import load_table
 
     emb = (

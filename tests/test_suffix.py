@@ -1,12 +1,12 @@
-"""suffix_ranks / adjacent_lcp vs a pure-Python suffix sort on
-adversarial strings — periodic text, runs of one character, shared
-64+ prefixes (the depth-bound tie region)."""
+"""doc_adjacent_lcp / global_adjacent_lcp vs a pure-Python suffix sort
+on adversarial strings — periodic text, runs of one character, shared
+64+ prefixes (the depth-bound tie region), multibyte text."""
 
 from __future__ import annotations
 
 import pytest
 
-from wq_data_pipeline_spark.operators.suffix import adjacent_lcp, suffix_ranks
+from wq_data_pipeline_spark.operators.suffix import doc_adjacent_lcp
 
 DOCS = [
     (1, "banana"),
@@ -15,6 +15,14 @@ DOCS = [
     (4, "x" * 70 + "y" + "x" * 70),  # shared prefixes past depth 64
     (5, "the quick brown fox jumps over the lazy dog the quick brown fox"),
     (6, "ab"),
+]
+# non-ASCII docs take suffix_window_keys' char-indexed slow path, the
+# ASCII docs above its byte-sliced fast path
+MULTIBYTE_DOCS = [
+    (7, "héllo wörld héllo wörld héllo"),  # multibyte
+    (8, "日本語のテキスト日本語のテキスト"),  # CJK, periodic
+    (9, "a"),  # single char: zero adjacency rows
+    (10, "cafécafé" * 12),  # periodic past depth 64
 ]
 DEPTH = 64
 
@@ -40,64 +48,21 @@ def docs_df(spark):
     return spark.createDataFrame(DOCS, ["doc_id", "text"])
 
 
-def test_suffix_ranks_match_reference(spark, docs_df):
-    rows = suffix_ranks(docs_df, "doc_id", "text", DEPTH).collect()
-    by_doc: dict[int, list] = {}
-    for r in rows:
-        by_doc.setdefault(r["doc_id"], []).append(r)
-    for doc_id, text in DOCS:
-        got = sorted(by_doc[doc_id], key=lambda r: (r["rank"], r["pos"]))
-        want = _ref_order(text)
-        assert [r["pos"] for r in got] == want, (doc_id, text)
-        # rank must be depth-bounded-order-preserving: equal 64-prefix
-        # suffixes share a dense rank
-        for r in got:
-            assert r["n"] == len(text)
-
-
-def test_adjacent_lcp_matches_reference(spark, docs_df):
-    rows = adjacent_lcp(docs_df, "doc_id", "text", DEPTH).collect()
+def test_adjacent_lcp_matches_reference(spark):
+    docs = DOCS + MULTIBYTE_DOCS
+    df = spark.createDataFrame(docs, ["doc_id", "text"])
+    rows = doc_adjacent_lcp(df, "doc_id", "text", DEPTH).collect()
     got = {(r["doc_id"], r["prev_pos"], r["pos"]): r["lcp"] for r in rows}
-    for doc_id, text in DOCS:
+    texts = dict(docs)
+    assert all(r["n"] == len(texts[r["doc_id"]]) for r in rows)
+    for doc_id, text in docs:
         order = _ref_order(text)
         for prev, cur in zip(order, order[1:]):
             want = _ref_lcp(text, prev, cur, DEPTH - 1)
             assert got[(doc_id, prev, cur)] == want, (doc_id, prev, cur)
     # every adjacency is covered exactly once
-    n_pairs = sum(len(t) - 1 for _, t in DOCS)
+    n_pairs = sum(len(t) - 1 for _, t in docs)
     assert len(got) == n_pairs
-
-
-def test_doc_adjacent_lcp_parity_with_doubling(spark):
-    """The direct window form (r13) must reproduce the doubling form
-    row-for-row — adversarial strings PLUS non-ASCII docs so both the
-    byte-sliced fast path and the char-indexed slow path of
-    suffix_window_keys are exercised."""
-    from wq_data_pipeline_spark.operators.suffix import doc_adjacent_lcp
-
-    docs = DOCS + [
-        (7, "héllo wörld héllo wörld héllo"),  # slow path: multibyte
-        (8, "日本語のテキスト日本語のテキスト"),  # slow path: CJK, periodic
-        (9, "a"),  # single char: zero adjacency rows
-        (10, "cafécafé" * 12),  # slow path, periodic past depth? no: 96 chars
-    ]
-    df = spark.createDataFrame(docs, ["doc_id", "text"])
-    want = {
-        (r["doc_id"], r["prev_pos"], r["pos"]): (r["lcp"], r["n"])
-        for r in adjacent_lcp(df, "doc_id", "text", DEPTH).collect()
-    }
-    got = {
-        (r["doc_id"], r["prev_pos"], r["pos"]): (r["lcp"], r["n"])
-        for r in doc_adjacent_lcp(df, "doc_id", "text", DEPTH).collect()
-    }
-    assert got == want
-
-
-def test_depth_validation(docs_df):
-    with pytest.raises(ValueError):
-        suffix_ranks(docs_df, "doc_id", "text", depth=48)
-    with pytest.raises(ValueError):
-        suffix_ranks(docs_df, "doc_id", "text", depth=64, seed=3)
 
 
 def test_global_adjacency_matches_reference(spark, docs_df):

@@ -6,7 +6,7 @@ Usage:
     python tools/plan_audit.py [name ...]          # default: all queries
 Env:
     SPARK_GRAFT_SF_DIR   data dir (default /root/testdata/sf0.1)
-    PLAN_AUDIT_OUT       output dir (default plans/r12)
+    PLAN_AUDIT_OUT       output dir (default records/plan_audit)
     PLAN_AUDIT_SUFFIX    file suffix (default _before)
 
 Construction only — the query is built and explained, never executed
@@ -61,7 +61,7 @@ def summarize(plan: str) -> dict[str, int]:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    out_dir = os.environ.get("PLAN_AUDIT_OUT", os.path.join(HERE, "plans", "r12"))
+    out_dir = os.environ.get("PLAN_AUDIT_OUT", os.path.join(HERE, "records", "plan_audit"))
     suffix = os.environ.get("PLAN_AUDIT_SUFFIX", "_before")
     os.makedirs(out_dir, exist_ok=True)
 

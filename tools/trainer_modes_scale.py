@@ -24,7 +24,7 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     from wq_data_pipeline_spark.operators.similarity import kmeans_centroids
-    from wq_data_pipeline_spark.plans.queries_ext import _KM_ITERS, _quantized
+    from wq_data_pipeline_spark.plans.similarity import _KM_ITERS, _quantized
     from wq_data_pipeline_spark.session import get_spark
 
     spark = get_spark(app_name="trainer-modes")

@@ -551,7 +551,7 @@ def _kmeans_distributed(
     centroid as always). planes/band follows
     :func:`auto_planes_per_band`; every signature bit is integer-dot
     exact, so the oracle replays the rounds bit-for-bit
-    (queries_ext._kmeans_banded_prefix_sql).
+    (plans/similarity.py:_kmeans_banded_prefix_sql).
 
     ``banded=False`` keeps the exact O(n·k) assignment with the
     per-round k-row broadcast — bit-identical to the literal mode on
@@ -758,60 +758,6 @@ def exact_near_dup_pairs(
     ).filter(F.col("cos_sim") >= threshold)
 
 
-def lsh_bucketed_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    n_bands: int = 4,
-    planes_per_band: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    qid_col: str = "query_id",
-    dim: int | None = None,
-) -> DataFrame:
-    """ANN top-k with banded OR-amplification: a candidate matches if
-    it shares ANY band signature with the query (n_bands independent
-    plane sets), then exact cosine within the candidate set.
-
-    At scale the candidate generation is ONE broadcast join on
-    (band, sig) pairs — bands unpivoted to rows on both sides, the
-    (small) query side broadcast — instead of a cross join or one
-    join leg per band; recall rises with n_bands (1 − (1 − p^r)^b
-    curve), precision with planes_per_band."""
-
-    def banded(side: DataFrame, out_id: str) -> DataFrame:
-        sigs = F.array(
-            *[
-                F.struct(
-                    F.lit(b).alias("band"),
-                    rp_lsh_signature(
-                        vec_col, planes_per_band, plane_offset=b * planes_per_band, dim=dim
-                    ).alias("sig"),
-                )
-                for b in range(n_bands)
-            ]
-        )
-        return side.select(
-            F.col(id_col).alias(out_id), F.explode(sigs).alias("bs")
-        ).select(out_id, F.col("bs.band").alias("band"), F.col("bs.sig").alias("sig"))
-
-    cand = (
-        banded(corpus, "neighbor_id")
-        .join(F.broadcast(banded(queries, qid_col)), on=["band", "sig"])
-        .filter(F.col("neighbor_id") != F.col(qid_col))
-        .dropDuplicates([qid_col, "neighbor_id"])
-    )
-    cv = corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_cv"))
-    qv = queries.select(F.col(id_col).alias(qid_col), F.col(vec_col).alias("_qv"))
-    scored = (
-        cand.join(cv, "neighbor_id")
-        .join(F.broadcast(qv), qid_col)
-        .select(qid_col, "neighbor_id", cosine("_cv", "_qv").alias("cos_sim"))
-    )
-    w = Window.partitionBy(qid_col).orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
-
-
 def quantized_cosine(a: str | Column, b: str | Column) -> Column:
     """Cosine over integer-quantized vectors (array<long>): the dot
     product and both norms are EXACT integer folds, converted to
@@ -929,7 +875,10 @@ def semdedup_within(
     parse) instead of a zip_with array allocation + fold per pair.
     Bit-exact either way: the integer dot and norms are exact in any
     association order, and sqrt/divide touch the same doubles as
-    ``quantized_cosine`` did."""
+    ``quantized_cosine`` did. A pair with a vector whose width is not
+    ``dim`` gets a NULL similarity and is dropped — the zip_with fold's
+    treatment of mismatched widths — instead of indexing past the
+    array end, which throws INVALID_ARRAY_INDEX under ANSI mode."""
     zero = F.lit(0).cast("long")
     nrm = F.sqrt(
         F.aggregate(
@@ -950,7 +899,9 @@ def semdedup_within(
     )
     if dim is not None:
         dot = F.expr(
-            "(" + " + ".join(f"`_qa`[{i}] * `_qb`[{i}]" for i in range(dim)) + ")"
+            f"CASE WHEN size(`_qa`) = {dim} AND size(`_qb`) = {dim} THEN ("
+            + " + ".join(f"`_qa`[{i}] * `_qb`[{i}]" for i in range(dim))
+            + ") END"
         )
     else:
         dot = F.aggregate(

@@ -263,24 +263,3 @@ def global_robust_z(
         .filter(F.abs(F.col("robust_z")) >= thresh)
         .drop("_med", "_mad")
     )
-
-
-def availability_stats(
-    df: DataFrame,
-    keys: Sequence[str] = SERIES_KEYS,
-    value: str = "value",
-    flag: str | None = None,
-) -> DataFrame:
-    """% finite / % flagged per series (A9; reference
-    scripts/sentemqc.py:167-169)."""
-    keys = list(keys)
-    aggs = [
-        F.round(F.avg(F.col(value).isNotNull().cast("double")) * 100, 4).alias(
-            "pct_available"
-        )
-    ]
-    if flag:
-        aggs.append(
-            F.round(F.avg(F.col(flag).cast("double")) * 100, 4).alias("pct_flagged")
-        )
-    return df.groupBy(*keys).agg(*aggs)

@@ -1,38 +1,20 @@
-"""Suffix-array construction by prefix doubling — pure DataFrame
-algebra, no UDFs.
+"""Suffix-order operators — pure DataFrame algebra, no UDFs.
 
 The reference corpus-dedup literature (Lee et al. 2022 §3) detects
 exact duplicated substrings with a suffix array; the repo's gram-hash
 operators (dup_spans / dup_span_removal) approximate that with fixed
-n-grams. This module adds the genuine article at the per-document
-grain: ``suffix_ranks`` computes, for every position of every
-document, the rank of its suffix among that document's suffixes under
-depth-bounded lexicographic order — via prefix doubling:
+n-grams. This module orders suffixes directly by their first ``depth``
+characters (ties by position):
 
-    rank_1    = dense_rank of the single character
-    rank_{2k} = dense_rank of the pair (rank_k[pos], rank_k[pos+k])
+- ``doc_adjacent_lcp``: per-document suffix order and adjacent-suffix
+  LCPs, one window sort partitioned by document — no global sort.
+- ``global_adjacent_lcp``: the corpus-global order (cross-document
+  repeats), range-partitioned on a packed int64 seed of the key.
 
-Each doubling round is ONE equi-join (pos+k lookup) and ONE dense-rank
-window, both partitioned by doc_id — embarrassingly parallel across
-documents, no global sort anywhere, and the number of rounds is
-log2(depth), a CONSTANT chosen by the caller (depth 64 -> 6 rounds),
-not a function of corpus size.
-
-Depth bound: ranks order suffixes by their first ``depth`` characters
-(ties broken by position). For repeat detection with a minimum match
-length L <= depth this is exact; it is also what keeps the operator
-scale-sane — the full-depth variant would need ceil(log2(max_doc_len))
-rounds.
-
-Scaling to the corpus-global suffix array (cross-document repeats):
-the same doubling recurrence applies with (doc_id, pos) replaced by a
-global offset (distributed_prefix_sum in operators/scale.py builds
-the offsets) and each dense-rank window replaced by a range-partitioned
-sort + two-level rank — i.e. rounds stay O(log depth), each round one
-shuffle of (pos, rank, rank2) triples. Per-doc windows are used here
-because the catalog entry targets within-document repetition
-(the Gopher self-repetition class) where the oracle can brute-force
-the answer.
+Depth bound: suffixes are ordered by their first ``depth`` characters.
+For repeat detection with a minimum match length L <= depth this is
+exact; it is also what keeps the operators scale-sane, since each
+position ships one depth-char key regardless of document length.
 """
 
 from __future__ import annotations
@@ -42,129 +24,20 @@ import threading
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
 
-def suffix_positions(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """One row per (doc, 0-based position): (id, pos, n).
-
-    Empty documents yield ZERO rows: sequence(0, -1) with no step
-    would infer step -1 and emit phantom positions [0, -1], so the
-    sequence is guarded (same pattern as operators/text.py)."""
-    return docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.col(text_col).alias("_text"),
-        F.length(text_col).alias("n"),
-    ).select(
-        "doc_id",
-        "_text",
-        "n",
-        F.explode(
-            F.when(
-                F.col("n") > 0, F.sequence(F.lit(0), F.col("n") - 1)
-            ).otherwise(F.array().cast("array<int>"))
-        ).alias("pos"),
-    ).withColumn("pos", F.col("pos").cast("long"))
-
-
-def suffix_ranks(
-    docs: DataFrame, id_col: str, text_col: str, depth: int = 64, seed: int = 8
-) -> DataFrame:
-    """(doc_id, pos, rank): rank of the suffix starting at ``pos``
-    among the document's suffixes, ordered by the first ``depth``
-    characters. ``depth`` and ``seed`` must be powers of two.
-
-    ``seed`` is the length of the literal prefix the FIRST rank sorts
-    on; doubling then runs log2(depth/seed) rounds. The trade: a
-    bigger seed shuffles seed-length strings once but removes whole
-    join+rank rounds (seed 8 / depth 64 = 3 rounds vs 6 from seed 1 —
-    measured 2x faster end-to-end); at cluster scale the seed is the
-    8 chars that pack into one int64 sort key."""
-    if depth < 1 or depth & (depth - 1):
-        raise ValueError(f"depth must be a power of two, got {depth}")
-    if seed < 1 or seed & (seed - 1) or seed > depth:
-        raise ValueError(f"seed must be a power of two <= depth, got {seed}")
-    p = suffix_positions(docs, id_col, text_col)
-    wd = Window.partitionBy("doc_id")
-    r = p.withColumn(
-        "rank",
-        F.dense_rank()
-        .over(wd.orderBy(F.col("_text").substr(F.col("pos") + 1, F.lit(seed))))
-        .cast("long"),
-    ).select("doc_id", "n", "pos", "rank")
-    k = seed
-    while k < depth:
-        # the rank of the suffix k positions ahead IS lead(rank, k)
-        # in position order — the shift is a window, NOT a self-join.
-        # (The join formulation reads each round's output twice, so
-        # the chain re-executes 2^rounds times unless every round is
-        # checkpointed — measured 34 s + an OOM at 10x replicas; the
-        # lead form is one linear window chain, nothing cached.)
-        wp = wd.orderBy("pos")
-        r = (
-            r.withColumn("_r2", F.coalesce(F.lead("rank", k).over(wp), F.lit(0)))
-            .withColumn(
-                "rank",
-                F.dense_rank()
-                .over(wd.orderBy(F.col("rank"), F.col("_r2")))
-                .cast("long"),
-            )
-            .select("doc_id", "n", "pos", "rank")
-        )
-        k *= 2
-    return r
-
-
-def _lcp_capped(a: Column, b: Column, text: Column, cap: int) -> Column:
-    """Length of the common prefix of the suffixes at 0-based ``a``
-    and ``b`` of ``text``, capped at ``cap`` — by GREEDY BINARY
-    DESCENT: for step in cap's descending binary decomposition, test
-    whether the next ``step`` characters match and extend the
-    accumulated length if so. log2(cap) substring comparisons per
-    row, all plain codegen expressions. (Two rejected forms, both
-    measured at sf0.01: a k-prefix indicator sum re-extracts
-    O(cap^2) chars/row; a per-char array fold runs outside codegen
-    with a struct allocation per element — 13.7 s vs 1.3 s for the
-    descent on the same 85k pairs.)
-
-    Precondition: the two suffixes must have different lengths —
-    always true for distinct positions of one document. (When a
-    comparison window runs past both string ends, truncated-equal
-    prefixes would over-count; different lengths make truncated
-    tails unequal, so the descent stops exactly at the true LCP.)
-
-    ``cap`` must be all-ones binary (2**m - 1, e.g. depth-1 for a
-    power-of-two depth): the greedy descent through cap's binary
-    decomposition is exact only then — cap=5 descends [4, 1] and
-    returns 1 for a true LCP of 3 because the 2-step is missing
-    (ADVICE r7). Guarded here rather than at each caller."""
-    if cap & (cap + 1):
-        raise ValueError(f"cap must be 2**m - 1 (all-ones binary), got {cap}")
-    pa = text.substr(a + 1, F.lit(cap))
-    pb = text.substr(b + 1, F.lit(cap))
-    steps: list[int] = []
-    rem = cap
-    p = 1
-    while p * 2 <= cap:
-        p *= 2
-    while p:
-        if rem >= p:
-            steps.append(p)
-            rem -= p
-        p //= 2
-    lcp: Column = F.lit(0).cast("long")
-    for step in steps:
-        ext = pa.substr(lcp + 1, F.lit(step)) == pb.substr(lcp + 1, F.lit(step))
-        lcp = lcp + F.when(ext, F.lit(step)).otherwise(F.lit(0))
-    return lcp
-
-
 def _lcp_capped2(ta: Column, a: Column, tb: Column, b: Column, cap: int) -> Column:
     """LCP of suffix ``a`` of ``ta`` vs suffix ``b`` of ``tb`` (both
-    0-based), capped at ``cap`` — the cross-document form. Same
-    greedy binary descent as ``_lcp_capped``, made exact for
-    arbitrary inputs by right-padding the two windows with DISTINCT
-    sentinels (chr(1)/chr(2), outside the text alphabet): equal
-    truncated tails then mismatch at the first pad position instead
-    of over-counting. Same all-ones ``cap`` precondition as
-    :func:`_lcp_capped` (the descent is exact only for 2**m - 1)."""
+    0-based), capped at ``cap`` — by GREEDY BINARY DESCENT: for step
+    in cap's descending binary decomposition, test whether the next
+    ``step`` characters match and extend the accumulated length if
+    so. Exact for arbitrary inputs by right-padding the two windows
+    with DISTINCT sentinels (chr(1)/chr(2), outside the text
+    alphabet): equal truncated tails then mismatch at the first pad
+    position instead of over-counting.
+
+    ``cap`` must be all-ones binary (2**m - 1): the greedy descent
+    through cap's binary decomposition is exact only then — cap=5
+    descends [4, 1] and returns 1 for a true LCP of 3 because the
+    2-step is missing."""
     if cap & (cap + 1):
         raise ValueError(f"cap must be 2**m - 1 (all-ones binary), got {cap}")
     pa = F.rpad(ta.substr(a + 1, F.lit(cap)), cap, "\x01")
@@ -327,20 +200,15 @@ def suffix_window_keys(
 def doc_adjacent_lcp(
     docs: DataFrame, id_col: str, text_col: str, depth: int = 64
 ) -> DataFrame:
-    """Per-document adjacent-suffix LCPs by ONE direct window sort —
-    the same (doc_id, n, pos, prev_pos, lcp) frame ``adjacent_lcp``
-    derives through prefix doubling, computed from the definition
-    instead: within each document order positions by
-    (first-``depth``-chars window, pos) — literally the depth-bounded
-    suffix order — and pair each row with its predecessor.
+    """Per-document adjacent-suffix LCPs by ONE direct window sort:
+    (doc_id, n, pos, prev_pos, lcp), lcp capped at depth-1. Within
+    each document positions are ordered by (first-``depth``-chars
+    window, pos) — literally the depth-bounded suffix order — and
+    each row is paired with its predecessor. The longest internally
+    repeated substring of a document is max(lcp) — the suffix-array
+    identity the gram-hash operators approximate.
 
-    Why this replaces the doubling for the CATALOG entry (r13, guide
-    §1.2/§2.4): the doubling form is 1 + 2·log2(depth/seed) window
-    passes over every position (seed rank, then a lead + a dense_rank
-    per round — 7 window execs at depth 64 / seed 8, every one a
-    per-doc re-sort), plus a final adjacency window and a JOIN of the
-    full document text back onto every adjacent pair for the LCP.
-    This form is one explode + ONE window pass, with the LCP computed
+    Shape: one explode + ONE window pass, with the LCP computed
     from the depth-char keys themselves (the global_adjacent_lcp
     trick: LCP of two suffixes capped at depth-1 IS the LCP of their
     depth-char windows capped at depth-1 — sentinel padding keeps
@@ -350,18 +218,9 @@ def doc_adjacent_lcp(
     and the sort resolves almost every comparison on the packed int64
     seed ``_k0`` before touching the string key.
 
-    The doubling form (``suffix_ranks``/``adjacent_lcp``) remains the
-    right shape when depth must exceed what a shipped key can carry —
-    it ships (doc, pos, rank) longs per round regardless of depth —
-    and stays exercised by tests/test_suffix.py, including a parity
-    test against this function.
-
-    Order/value parity with ``adjacent_lcp`` (why results are
-    bit-identical): dense ranks from doubling order suffixes by their
-    first ``depth`` chars; (rank, pos) ties therefore order exactly
-    like (_key, pos); and equal-truncated keys (suffixes of the same
-    doc have distinct lengths) mismatch at the first sentinel pad, so
-    the key-LCP equals the text-LCP capped at depth-1."""
+    Equal-truncated keys (suffixes of the same doc have distinct
+    lengths) mismatch at the first sentinel pad, so the key-LCP
+    equals the text-LCP capped at depth-1."""
     p = suffix_window_keys(docs, id_col, text_col, depth)
     w = Window.partitionBy("doc_id").orderBy("_k0", "_key", "pos")
     return (
@@ -566,30 +425,3 @@ def global_adjacent_lcp(
         pairs = inner.unionByName(bdf)
     return pairs
 
-
-def adjacent_lcp(
-    docs: DataFrame, id_col: str, text_col: str, depth: int = 64
-) -> DataFrame:
-    """Adjacent-suffix LCPs in per-document suffix-array order:
-    (doc_id, pos, prev_pos, lcp), lcp capped at depth-1. The longest
-    internally repeated substring of a document is max(lcp) — the
-    suffix-array identity the gram-hash operators approximate."""
-    ranks = suffix_ranks(docs, id_col, text_col, depth)
-    base = docs.select(
-        F.col(id_col).alias("doc_id"), F.col(text_col).alias("_text")
-    )
-    w = Window.partitionBy("doc_id").orderBy("rank", "pos")
-    adj = (
-        ranks.withColumn("prev_pos", F.lag("pos").over(w))
-        .filter(F.col("prev_pos").isNotNull())
-        .join(base, "doc_id")
-    )
-    return adj.select(
-        "doc_id",
-        "n",
-        "pos",
-        "prev_pos",
-        _lcp_capped(
-            F.col("pos"), F.col("prev_pos"), F.col("_text"), depth - 1
-        ).alias("lcp"),
-    )

@@ -1,35 +1,22 @@
-"""Catalog batch 22 (round 6, tenth wave): suffix-array repetition
-profile — the genuine suffix-array operator family the gram-hash
-dedup entries approximate (Lee et al. 2022 §3 build a corpus suffix
-array for exact-substring dedup; dup_spans/dup_span_removal use
+"""Suffix family: suffix-order repetition profiles. ``suffix_repeats``
+profiles each document's internal repeats from its adjacent-suffix LCPs;
+``suffix_xdoc_repeats`` finds cross-document repeats from the
+corpus-global suffix order (Lee et al. 2022 §3 build a corpus suffix
+array for exact-substring dedup; the dedup family's span entries use
 fixed 8-gram hashing instead).
 
-* suffix_repeats — per-document suffix array by PREFIX DOUBLING
-                   (operators/suffix.py: log2(depth) dense-rank
-                   rounds, each one equi-join + one per-doc window,
-                   no UDFs, no global sort), then the adjacent-
-                   suffix LCP profile: longest internal repeat,
-                   total repeat mass, and the count of heavy
-                   adjacent repeats.
-
-The ORACLE builds the same suffix array by brute force — sorting
-every suffix's leading 64 characters directly — so a green row
-proves the doubling recurrence correct against the definition, not
-against a reimplementation of itself.
-
-Determinism: the order is depth-bounded (first 64 chars, ties by
-position) in BOTH engines; LCP is the monotone indicator sum capped
-at 63 — exact integers everywhere, no floats at all.
-"""
+The oracles sort every suffix's depth-bounded prefix directly, so a
+green row checks the engine's order against the definition, not
+against a reimplementation of itself. Orders are depth-bounded (ties by
+position) in both engines and LCPs are capped integers."""
 
 from __future__ import annotations
-
-from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from wq_data_pipeline_spark.operators.suffix import doc_adjacent_lcp
 from wq_data_pipeline_spark.sources.testdata import load_table
+
 
 _SA_DEPTH = 64
 _REP_MIN = 10
@@ -44,13 +31,10 @@ def q_suffix_repeats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: every stage — the one suffix-order window, the LCP
     evaluation, the final agg — partitions by doc_id; corpus size
-    only widens the partition count. r13: the doubling form (7 window
-    execs + a text re-join) is replaced by the DIRECT depth-bounded
-    suffix sort (operators/suffix.py:doc_adjacent_lcp — one window
-    pass, LCP from the keys, text never re-joins); the doubling
-    operator remains in the library for depths past what a shipped
-    key can carry, with a row-for-row parity test between the two
-    forms in tests/test_suffix.py."""
+    only widens the partition count. The suffix order is the DIRECT
+    depth-bounded sort (operators/suffix.py:doc_adjacent_lcp — one
+    window pass, LCP from the keys, text never re-joins), checked
+    against a pure-Python suffix sort in tests/test_suffix.py."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     adj = doc_adjacent_lcp(docs, "doc_id", "text", depth=_SA_DEPTH)
     return (
@@ -178,12 +162,7 @@ SELECT doc_id,
 FROM x GROUP BY 1 ORDER BY 1"""
 
 
-QUERIES22: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "suffix_repeats": q_suffix_repeats,
-    "suffix_xdoc_repeats": q_suffix_xdoc_repeats,
-}
-
-ORACLES22: dict[str, str] = {
-    "suffix_repeats": SQL_SUFFIX_REPEATS,
-    "suffix_xdoc_repeats": SQL_SUFFIX_XDOC_REPEATS,
+ENTRIES = {
+    "suffix_repeats": (q_suffix_repeats, SQL_SUFFIX_REPEATS),
+    "suffix_xdoc_repeats": (q_suffix_xdoc_repeats, SQL_SUFFIX_XDOC_REPEATS),
 }

@@ -353,7 +353,7 @@ def _mor(key, pdfs, state):
 def streaming_upsert_with_deletes(stream: DataFrame) -> DataFrame:
     """Streaming merge-on-read resolution with tombstones — the
     incremental twin of the batch ``cdc_merge_on_read`` catalog entry
-    (plans/queries_r9.py): per (user_id, event_type) the state holds
+    (plans/lakehouse.py): per (user_id, event_type) the state holds
     the current winning version INCLUDING delete markers, O(1) per
     key. Each micro-batch emits the refreshed row for touched keys
     with ``is_deleted`` — downstream sinks upsert on the key and drop

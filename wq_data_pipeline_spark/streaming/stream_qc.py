@@ -196,19 +196,6 @@ def stream_interval_join(
     )
 
 
-def stateless_qc_flags(
-    stream: DataFrame, lo: float = 0.0, hi: float = 40.0
-) -> DataFrame:
-    """Per-row QC flags on the stream — the same Column exprs as the
-    batch detectors (stateless ops are mode-agnostic)."""
-    from wq_data_pipeline_spark.operators.detectors import flag_range, flags_to_code
-
-    flagged = flag_range("value", lo, hi)
-    return stream.withColumn("saqc_flag", flags_to_code(flagged)).withColumn(
-        "accepted", F.when(flagged, None).otherwise(F.col("value"))
-    )
-
-
 def run_microbatch_qc(
     stream: DataFrame,
     output_dir: str,
