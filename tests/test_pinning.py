@@ -9,9 +9,12 @@ executor and the truncated lineage cannot rebuild it).
 
 from __future__ import annotations
 
+from types import SimpleNamespace
+
+from pyspark import StorageLevel
 from pyspark.sql import functions as F
 
-from wq_data_pipeline_spark.operators.pinning import is_local_master, pin
+from wq_data_pipeline_spark.operators.pinning import is_local_master, pin, unpin
 
 
 def test_is_local_master_shapes():
@@ -45,3 +48,37 @@ def test_pin_lazy_materializes_on_first_action(spark):
     df = spark.range(5)
     out = pin(df, eager=False)
     assert out.count() == 5
+
+
+class _RecordingFrame:
+    """DataFrame stand-in whose session reports ``master``; records
+    the pin/unpin calls made on it."""
+
+    def __init__(self, master: str):
+        self.sparkSession = SimpleNamespace(sparkContext=SimpleNamespace(master=master))
+        self.calls: list[tuple] = []
+
+    def localCheckpoint(self, eager=False):
+        self.calls.append(("localCheckpoint", eager))
+        return self
+
+    def persist(self, level):
+        self.calls.append(("persist", level))
+        return self
+
+    def unpersist(self, blocking=False):
+        self.calls.append(("unpersist", blocking))
+        return self
+
+
+def test_unpin_releases_cluster_pin_without_blocking():
+    df = _RecordingFrame("spark://h:7077")
+    unpin(pin(df))
+    assert df.calls == [("persist", StorageLevel.DISK_ONLY), ("unpersist", False)]
+
+
+def test_unpin_is_noop_in_local_mode():
+    df = _RecordingFrame("local[4]")
+    unpin(pin(df))
+    # ContextCleaner frees localCheckpoint blocks; nothing to release
+    assert df.calls == [("localCheckpoint", False)]

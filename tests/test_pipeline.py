@@ -126,6 +126,26 @@ def test_write_outputs(outputs, tmp_path):
     assert any(f.endswith(".csv") for f in os.listdir(f"{base}/events"))
 
 
+def test_multi_consumer_outputs_read_pinned_tables(spark, fixture_csv):
+    """The flag chain and the event detectors run once per pipeline:
+    the outputs that several sinks and figures read must start from
+    the pinned tables, so no pandas island and no window pass is left
+    in their plans to re-run per action."""
+    import re
+
+    from wq_data_pipeline_spark.plans.qc_pipeline import QCConfig, run_qc_pipeline
+    from wq_data_pipeline_spark.sources.csv_source import melt_wide, read_wide_csv
+
+    wide = read_wide_csv(spark, fixture_csv, station_field="station", station_value="stn1")
+    long = melt_wide(wide, ["o2", "ph"], station_col="station")
+    out = run_qc_pipeline(long, QCConfig(full_suite=True))
+    for name in ("timeseries", "timeseries_wide", "events", "seasonal"):
+        plan = getattr(out, name)._jdf.queryExecution().optimizedPlan().toString()
+        flatmaps = len(re.findall(r"\bFlatMapGroupsInPandas\b", plan))
+        windows = len(re.findall(r"\bWindow\b", plan))
+        assert (flatmaps, windows) == (0, 0), (name, flatmaps, windows)
+
+
 def test_wrtds_matches_reference_numpy(spark):
     """WRTDS applyInPandas vs an independent dense-numpy loop on a
     small synthetic series."""

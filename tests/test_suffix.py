@@ -71,16 +71,52 @@ def test_global_adjacency_matches_reference(spark, docs_df):
     stitched pair) and empty-partition handling."""
     from wq_data_pipeline_spark.operators.suffix import global_adjacent_lcp
 
-    got = {
+    got = _global_pairs(global_adjacent_lcp(docs_df, "doc_id", "text", DEPTH, num_partitions=16))
+    assert got == _ref_global_pairs(DOCS)
+
+
+def test_global_adjacency_thin_sample_falls_back_to_full_bounds(spark, monkeypatch):
+    """A skewed corpus — almost every position in one repeated-
+    character document family, so the 5% doc sample yields one or two
+    distinct range bounds — must rerun the quantiles over the full
+    pass, and the pairs must not change."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    from wq_data_pipeline_spark.operators.suffix import global_adjacent_lcp
+
+    seen: list[list[float]] = []
+    approx = DataFrame.approxQuantile
+
+    def recording(self, *args, **kwargs):
+        out = approx(self, *args, **kwargs)
+        seen.append(out)
+        return out
+
+    monkeypatch.setattr(DataFrame, "approxQuantile", recording)
+    # 150 docs keep an empty sample improbable on any partitioning;
+    # their 7 short tail keys per doc stay under the lowest quantile
+    docs = [(i, "a" * 120) for i in range(100, 250)] + [d for d in DOCS if d[0] != 4]
+    df = spark.createDataFrame(docs, ["doc_id", "text"])
+    got = _global_pairs(global_adjacent_lcp(df, "doc_id", "text", DEPTH, num_partitions=16))
+    assert len(seen) == 2, "the full-pass quantiles did not run"
+    assert 1 <= len(set(seen[0])) <= 2, seen[0]
+    assert got == _ref_global_pairs(docs)
+
+
+def _global_pairs(adj) -> dict:
+    return {
         (r["prev_doc"], r["prev_pos"], r["doc_id"], r["pos"]): r["lcp"]
-        for r in global_adjacent_lcp(
-            docs_df, "doc_id", "text", DEPTH, num_partitions=16
-        ).collect()
+        for r in adj.collect()
     }
-    texts = dict(DOCS)
+
+
+def _ref_global_pairs(docs) -> dict:
+    """Brute-force corpus-global adjacency: (prev_doc, prev_pos,
+    doc_id, pos) -> LCP capped at DEPTH-1."""
+    texts = dict(docs)
     allpos = [
         (texts[d][p : p + DEPTH], d, p)
-        for d, t in DOCS
+        for d, t in docs
         for p in range(len(t))
     ]
     allpos.sort()
@@ -94,7 +130,7 @@ def test_global_adjacency_matches_reference(spark, docs_df):
                 break
             n += 1
         want[(da, pa, db, pb)] = n
-    assert got == want
+    return want
 
 
 def test_lcp_key_tree_matches_descent(spark):

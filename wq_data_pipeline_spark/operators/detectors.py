@@ -187,13 +187,30 @@ def _run_events(
     w = ordered(keys, ts)
     d = df.withColumn("_in_run", run_flag)
     d = with_islands(d, "_in_run", keys, ts, out="_island")
-    d = d.withColumn("_prev_ts", F.lag(ts).over(w)).withColumn(
-        "_next_ts", F.lead(ts).over(w)
+    return d.withColumns(
+        {
+            "_prev_ts": F.lag(ts).over(w),
+            "_next_ts": F.lead(ts).over(w),
+            "_prev_val": F.lag(value).over(w),
+            "_next_val": F.lead(value).over(w),
+        }
     )
-    d = d.withColumn("_prev_val", F.lag(value).over(w)).withColumn(
-        "_next_val", F.lead(value).over(w)
-    )
-    return d
+
+
+def _run_span(keys: Sequence[str], event_type: str, *extra: str) -> list[Column]:
+    """Output columns of a run-event aggregate: ``end`` is the first
+    row after the run (falling back to the run's last row at series
+    end) and ``hours`` the run's duration."""
+    end = F.coalesce(F.col("_after_ts"), F.col("_last_ts"))
+    hours = (F.unix_micros(end) - F.unix_micros(F.col("start"))) / F.lit(3.6e9)
+    return [
+        *keys,
+        F.lit(event_type).alias("type"),
+        F.col("start"),
+        end.alias("end"),
+        hours.alias("hours"),
+        *[F.col(c) for c in extra],
+    ]
 
 
 def detect_flat_runs(
@@ -232,21 +249,8 @@ def detect_flat_runs(
             F.min_by(value, ts).alias("value"),
             F.count(F.lit(1)).alias("n_points"),
         )
-        .withColumn("end", F.coalesce(F.col("_after_ts"), F.col("_last_ts")))
-        .withColumn(
-            "hours",
-            (F.unix_micros(F.col("end")) - F.unix_micros(F.col("start"))) / F.lit(3.6e9),
-        )
+        .select(*_run_span(keys, event_type, "value", "n_points"))
         .filter(F.col("hours") >= min_hours)
-        .select(
-            *keys,
-            F.lit(event_type).alias("type"),
-            "start",
-            "end",
-            "hours",
-            "value",
-            "n_points",
-        )
     )
     return runs
 
@@ -359,13 +363,8 @@ def _slope_runs(d: DataFrame, flat: Column, keys, ts, min_hours: float) -> DataF
             F.max("_next_ts").alias("_after_ts"),
             F.count(F.lit(1)).alias("n_points"),
         )
-        .withColumn("end", F.coalesce(F.col("_after_ts"), F.col("_last_ts")))
-        .withColumn(
-            "hours",
-            (F.unix_micros(F.col("end")) - F.unix_micros(F.col("start"))) / F.lit(3.6e9),
-        )
+        .select(*_run_span(keys, "flat_slopes", "n_points"))
         .filter(F.col("hours") >= min_hours)
-        .select(*keys, F.lit("flat_slopes").alias("type"), "start", "end", "hours", "n_points")
     )
 
 
@@ -393,10 +392,10 @@ def detect_isolated_groups(
     """
     w = ordered(keys, ts)
     finite = F.col(value).isNotNull()
-    d = with_islands(df.withColumn("_fin", finite), "_fin", keys, ts, out="_isl")
-    d = d.withColumn("_prev_ts", F.lag(ts).over(w)).withColumn("_next_ts", F.lead(ts).over(w))
+    d = with_islands(df, finite, keys, ts, out="_isl")
+    d = d.withColumns({"_prev_ts": F.lag(ts).over(w), "_next_ts": F.lead(ts).over(w)})
     isl = (
-        d.filter(F.col("_fin"))
+        d.filter(finite)
         .groupBy(*keys, "_isl")
         .agg(
             F.count(F.lit(1)).alias("_npts"),
@@ -412,13 +411,15 @@ def detect_isolated_groups(
     gap_after = F.col("_after_ts").isNotNull() & (
         (F.unix_micros("_after_ts") - F.unix_micros("_last_ts")) / 1e6 > min_gap_seconds
     )
-    flagged = isl.withColumn(
-        "_isolated", (F.col("_npts") <= max_group_points) & gap_before & gap_after
-    ).select(*keys, "_isl", "_isolated")
+    flagged = isl.select(
+        *keys,
+        "_isl",
+        ((F.col("_npts") <= max_group_points) & gap_before & gap_after).alias("_isolated"),
+    )
     res = d.join(flagged, on=[*keys, "_isl"], how="left")
     return res.withColumn(
-        out, F.coalesce(F.col("_fin") & F.col("_isolated"), F.lit(False))
-    ).drop("_fin", "_isl", "_isolated", "_prev_ts", "_next_ts")
+        out, F.coalesce(finite & F.col("_isolated"), F.lit(False))
+    ).drop("_isl", "_isolated", "_prev_ts", "_next_ts")
 
 
 def merge_flags(*flags: Column) -> Column:

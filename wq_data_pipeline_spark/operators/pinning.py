@@ -23,6 +23,11 @@ mode-dependent (r12-VERDICT #3):
 ``eager=True`` materializes via the same mechanism the lazy form's
 first action would use (localCheckpoint(eager=True) locally, a
 count() on the persisted frame on clusters).
+
+``unpin`` releases a pin once its last consumer has run: it drops the
+persisted blocks on a cluster, and does nothing locally, where
+ContextCleaner frees localCheckpoint blocks once the pinned frame is
+no longer referenced.
 """
 
 from __future__ import annotations
@@ -50,3 +55,11 @@ def pin(df: DataFrame, eager: bool = False) -> DataFrame:
     if eager:
         out.count()
     return out
+
+
+def unpin(df: DataFrame) -> None:
+    """Release a frame returned by :func:`pin` — unpersist without
+    blocking on a cluster; a no-op in local mode (see module
+    docstring)."""
+    if not is_local_master(df.sparkSession.sparkContext.master):
+        df.unpersist(blocking=False)

@@ -91,6 +91,19 @@ def rolling_mean_std(
     """W12: centered rolling mean (or exact median) + POPULATION std
     with pandas min_periods = max(3, ceil(w*0.3)) (reference
     rolling_mean_std_basic, scripts/sentemqc.py:25-30; std ddof=0)."""
+    ma, sd = _rolling_mean_std_cols(value, window, keys, ts, stat, minp)
+    return df.withColumns({ma_col: ma, sd_col: sd})
+
+
+def _rolling_mean_std_cols(
+    value: str,
+    window: int,
+    keys: Sequence[str],
+    ts: str,
+    stat: str = "mean",
+    minp: int | None = None,
+) -> tuple[Column, Column]:
+    """(center, std) window expressions of :func:`rolling_mean_std`."""
     import math
 
     if minp is None:
@@ -101,9 +114,10 @@ def rolling_mean_std(
     else:
         center = F.avg(value).over(frame)
     sd = F.stddev_pop(value).over(frame)
-    return df.withColumn(
-        ma_col, guard_min_periods(center, value, frame, minp)
-    ).withColumn(sd_col, guard_min_periods(sd, value, frame, minp))
+    return (
+        guard_min_periods(center, value, frame, minp),
+        guard_min_periods(sd, value, frame, minp),
+    )
 
 
 def rolling_mean_std_prefix(
@@ -133,23 +147,47 @@ def rolling_mean_std_prefix(
     :func:`rolling_mean_std` where results feed a bit-exact
     cross-engine comparison; use this in the pipeline hot path.
     """
-    import math
+    ma, sd = _prefix_mean_std_cols(window, keys, ts, minp)
+    return (
+        df.withColumns(_prefix_sums(value, keys, ts))
+        .withColumns({ma_col: ma, sd_col: sd})
+        .drop(*_PREFIX_COLS)
+    )
 
-    if minp is None:
-        minp = max(3, math.ceil(window * 0.3))
-    lo, hi = centered_bounds(window)
+
+# running per-series sums behind the prefix-sum windows; they do not
+# depend on the window width, so every wide pass shares one set
+_PREFIX_COLS = ("_anchor", "_cc", "_cs", "_cs2")
+
+
+def _prefix_sums(value: str, keys: Sequence[str], ts: str) -> dict[str, Column]:
+    """The ``_PREFIX_COLS`` expressions over ``value``."""
     w_ord = ordered(keys, ts)
     w_run = w_ord.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     w_all = w_ord.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     v = F.col(value)
     anchor = F.first(v, ignorenulls=True).over(w_run)
     contrib = F.when(v.isNotNull(), v - anchor).otherwise(F.lit(0.0))
-    d = (
-        df.withColumn("_anchor", F.first(v, ignorenulls=True).over(w_all))
-        .withColumn("_cc", F.sum(v.isNotNull().cast("long")).over(w_run))
-        .withColumn("_cs", F.sum(contrib).over(w_run))
-        .withColumn("_cs2", F.sum(contrib * contrib).over(w_run))
-    )
+    return {
+        "_anchor": F.first(v, ignorenulls=True).over(w_all),
+        "_cc": F.sum(v.isNotNull().cast("long")).over(w_run),
+        "_cs": F.sum(contrib).over(w_run),
+        "_cs2": F.sum(contrib * contrib).over(w_run),
+    }
+
+
+def _prefix_mean_std_cols(
+    window: int, keys: Sequence[str], ts: str, minp: int | None = None
+) -> tuple[Column, Column]:
+    """(mean, std) expressions of :func:`rolling_mean_std_prefix`,
+    read from the ``_PREFIX_COLS`` columns."""
+    import math
+
+    if minp is None:
+        minp = max(3, math.ceil(window * 0.3))
+    lo, hi = centered_bounds(window)
+    w_ord = ordered(keys, ts)
+    w_all = w_ord.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
 
     def windowed(cum: str, zero):
         upper = F.coalesce(
@@ -167,9 +205,7 @@ def rolling_mean_std_prefix(
         F.lit(0.0),
     )
     ok = c >= minp
-    return d.withColumn(ma_col, F.when(ok, mean)).withColumn(
-        sd_col, F.when(ok, F.sqrt(var))
-    ).drop("_anchor", "_cc", "_cs", "_cs2")
+    return F.when(ok, mean), F.when(ok, F.sqrt(var))
 
 
 # WindowExec frame scans are O(n·w); beyond this width the prefix-sum
@@ -238,8 +274,14 @@ def tri5_mean_std(
 
     Pure lag/lead tap algebra — one expression tree, no frame scan.
     """
-    from wq_data_pipeline_spark.operators.windows import ordered
+    ma, sd = _tri5_cols(value, keys, ts, min_finite)
+    return df.withColumns({ma_col: ma, sd_col: sd})
 
+
+def _tri5_cols(
+    value: str, keys: Sequence[str], ts: str, min_finite: int = 3
+) -> tuple[Column, Column]:
+    """(mean, std) expressions of :func:`tri5_mean_std`."""
     w = ordered(keys, ts)
     taps = [
         (F.lag(value, 2).over(w), TRI5_WEIGHTS[0]),
@@ -260,9 +302,7 @@ def tri5_mean_std(
     m = sx / wsum
     var = sxx / wsum - m * m
     ok = n_fin >= min_finite
-    return df.withColumn(ma_col, F.when(ok, m)).withColumn(
-        sd_col, F.when(ok, F.sqrt(F.greatest(var, F.lit(0.0))))
-    )
+    return F.when(ok, m), F.when(ok, F.sqrt(F.greatest(var, F.lit(0.0))))
 
 
 def band_columns(
@@ -343,6 +383,50 @@ def flag_reasons(named_flags: dict[str, Column]) -> Column:
     return F.trim(F.concat_ws(" ", *parts))
 
 
+def _with_band_stats(
+    df: DataFrame,
+    passes: Sequence[tuple[str, BandPassCfg]],
+    value: str,
+    keys: Sequence[str],
+    ts: str,
+    fast: bool,
+) -> tuple[DataFrame, list[str]]:
+    """Add each tagged pass's center/std as ``_ma{tag}``/``_sd{tag}``
+    in as few plan steps as the engines allow: one applyInPandas per
+    pandas-engine median, one projection of the prefix sums every
+    wide mean window shares, one projection of all window
+    expressions. Returns the frame and the helper columns to drop.
+
+    ``fast=True`` routes the pipeline hot path to the scale engines:
+    wide MEAN windows (>= PREFIX_WINDOW_THRESHOLD) through the O(n)
+    prefix-sum form, MEDIAN windows (>= MEDIAN_PANDAS_THRESHOLD)
+    through the pandas skiplist engine."""
+    d = df
+    helpers: list[str] = []
+    stats: dict[str, Column] = {}
+    prefix = False
+    for tag, cfg in passes:
+        ma, sd = f"_ma{tag}", f"_sd{tag}"
+        helpers += [ma, sd]
+        if cfg.stat == "tri5":
+            stats[ma], stats[sd] = _tri5_cols(value, keys, ts)
+        elif fast and cfg.stat == "mean" and cfg.window >= PREFIX_WINDOW_THRESHOLD:
+            prefix = True
+            stats[ma], stats[sd] = _prefix_mean_std_cols(cfg.window, keys, ts)
+        elif fast and cfg.stat == "median" and cfg.window >= MEDIAN_PANDAS_THRESHOLD:
+            d = rolling_median_std_pandas(d, value, cfg.window, keys, ts, ma_col=ma, sd_col=sd)
+        else:
+            stats[ma], stats[sd] = _rolling_mean_std_cols(
+                value, cfg.window, keys, ts, stat=cfg.stat
+            )
+    if prefix:
+        d = d.withColumns(_prefix_sums(value, keys, ts))
+        helpers += _PREFIX_COLS
+    if stats:
+        d = d.withColumns(stats)
+    return d, helpers
+
+
 def apply_band_pass(
     df: DataFrame,
     cfg: BandPassCfg,
@@ -356,37 +440,17 @@ def apply_band_pass(
 ) -> DataFrame:
     """One full band pass: center/std -> bands -> overlap flag.
     Optionally materializes the band columns (run 5 exports them,
-    scripts/sentemqc.py:105-111).
-
-    ``fast=True`` routes the pipeline hot path to the scale engines:
-    wide MEAN windows (>= PREFIX_WINDOW_THRESHOLD) through the O(n)
-    prefix-sum form, MEDIAN windows (>= MEDIAN_PANDAS_THRESHOLD)
-    through the pandas skiplist engine. Leave False where results feed
-    a bit-exact cross-engine oracle."""
-    if cfg.stat == "tri5":
-        d = tri5_mean_std(df, value, keys, ts, ma_col="_ma", sd_col="_sd")
-    elif fast and cfg.stat == "mean" and cfg.window >= PREFIX_WINDOW_THRESHOLD:
-        d = rolling_mean_std_prefix(
-            df, value, cfg.window, keys, ts, ma_col="_ma", sd_col="_sd"
-        )
-    elif fast and cfg.stat == "median" and cfg.window >= MEDIAN_PANDAS_THRESHOLD:
-        d = rolling_median_std_pandas(
-            df, value, cfg.window, keys, ts, ma_col="_ma", sd_col="_sd"
-        )
-    else:
-        d = rolling_mean_std(
-            df, value, cfg.window, keys, ts, stat=cfg.stat, ma_col="_ma", sd_col="_sd"
-        )
+    scripts/sentemqc.py:105-111). ``fast`` as in
+    :func:`_with_band_stats`; leave False where results feed a
+    bit-exact cross-engine oracle."""
+    d, helpers = _with_band_stats(df, [("", cfg)], value, keys, ts, fast)
     top, bottom = band_columns("_ma", "_sd", cfg)
-    d = d.withColumn("_top", top).withColumn("_bottom", bottom)
-    d = d.withColumn(
-        flag_col, uncertainty_overlap_flag(value, "_top", "_bottom", cfg)
-    )
+    cols = {flag_col: uncertainty_overlap_flag(value, top, bottom, cfg)}
     if top_col:
-        d = d.withColumn(top_col, F.col("_top"))
+        cols[top_col] = top
     if bottom_col:
-        d = d.withColumn(bottom_col, F.col("_bottom"))
-    return d.drop("_ma", "_sd", "_top", "_bottom")
+        cols[bottom_col] = bottom
+    return d.withColumns(cols).drop(*helpers)
 
 
 def apply_sentemqc(
@@ -403,21 +467,31 @@ def apply_sentemqc(
     combined flag + reasons + masked value. Returns the input plus
     ``flag_run{i}``, ``flag_sensor``, ``flag_global``, ``is_flagged``,
     ``flag_reason``, ``value_masked``. ``fast`` routes wide windows
-    through the scale engines (pipeline hot path)."""
+    through the scale engines (pipeline hot path).
+
+    Every pass reads only the pre-masked value, so all passes' bands
+    are built side by side: one window projection for the centers and
+    stds, one for the per-pass flags, one for the combined columns."""
     d = df.withColumn(value, premask_nonpositive(value))
-    named: dict[str, Column] = {}
-    for i, cfg in enumerate(passes, start=1):
-        d = apply_band_pass(
-            d, cfg, value, keys, ts, flag_col=f"flag_run{i}", fast=fast
+    tagged = [(str(i), cfg) for i, cfg in enumerate(passes, start=1)]
+    d, helpers = _with_band_stats(d, tagged, value, keys, ts, fast)
+    flags = {
+        f"flag_run{tag}": uncertainty_overlap_flag(
+            value, *band_columns(f"_ma{tag}", f"_sd{tag}", cfg), cfg
         )
-        named[f"flag_run{i}"] = F.col(f"flag_run{i}")
+        for tag, cfg in tagged
+    }
     if sensor_code is not None:
-        d = d.withColumn("flag_sensor", sensor_error_flag(value, sensor_code))
-        named["flag_sensor"] = F.col("flag_sensor")
-    d = d.withColumn("flag_global", combine_flags_200(*named.values()))
-    d = d.withColumn("is_flagged", F.col("flag_global") == 200)
-    d = d.withColumn("flag_reason", flag_reasons(named))
-    d = d.withColumn(
-        "value_masked", F.when(F.col("is_flagged"), None).otherwise(F.col(value))
-    )
-    return d
+        flags["flag_sensor"] = sensor_error_flag(value, sensor_code)
+    d = d.withColumns(flags)
+    named = {name: F.col(name) for name in flags}
+    glob = combine_flags_200(*named.values())
+    flagged = glob == 200
+    return d.withColumns(
+        {
+            "flag_global": glob,
+            "is_flagged": flagged,
+            "flag_reason": flag_reasons(named),
+            "value_masked": F.when(flagged, None).otherwise(F.col(value)),
+        }
+    ).drop(*helpers)

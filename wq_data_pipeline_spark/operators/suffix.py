@@ -318,15 +318,16 @@ def global_adjacent_lcp(
     # PARTITIONING, never the output: adjacency within a range is the
     # window's, adjacency across ranges is the boundary stitch, so
     # ANY contiguous bounds give identical pairs (guide §1.2 — don't
-    # compute precision you throw away). Tiny corpora can sample to
-    # nothing; fall back to the full pass there (it's cheap exactly
-    # then).
+    # compute precision you throw away). Tiny or skewed corpora can
+    # sample to a handful of distinct bounds, which would crowd the
+    # window into a few ranges; below n/2 of them, rerun the quantiles
+    # over the full pass (one more scan of the packed seeds only).
     qs = [i / n for i in range(1, n)]
     sampled = suffix_window_keys(docs.sample(0.05, seed=7), id_col, text_col, depth)
     bounds = sorted(
         {int(b) for b in sampled.select("_k0").approxQuantile("_k0", qs, 0.001)}
     )
-    if not bounds:
+    if len(bounds) < n / 2:
         bounds = sorted(
             {int(b) for b in p.select("_k0").approxQuantile("_k0", qs, 0.001)}
         )

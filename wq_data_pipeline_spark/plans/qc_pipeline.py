@@ -1,7 +1,14 @@
 """The full QC pipeline plan — the engine's equivalent of the
 reference's EP1/EP2 lifecycle (run_pipeline -> process_variable,
-scripts/ufz_water_qc_pipeline.py:666-772) as ONE lazy DataFrame
-program over the long readings table.
+scripts/ufz_water_qc_pipeline.py:666-772) over the long readings
+table.
+
+The plan is lazy except for two pins (operators/pinning.py): the
+flagged long table and the events table. Each feeds several sinks and
+figures, and each sits on top of the pipeline's expensive work (the
+pandas robust-z island and the flag chain's window passes; the event
+detectors' window passes), so each is cut once and every consumer
+reads the cut instead of re-running the subtree.
 
 Where the reference loops per variable in Python, this plan handles
 every (station, variable) series in a single pass via window
@@ -27,6 +34,7 @@ from wq_data_pipeline_spark.functions.scalars import sanitize_name
 from wq_data_pipeline_spark.operators import clean as C
 from wq_data_pipeline_spark.operators import detectors as D
 from wq_data_pipeline_spark.operators import stats as S
+from wq_data_pipeline_spark.operators.pinning import pin
 
 KEYS = ["station", "variable"]
 
@@ -150,9 +158,12 @@ def flag_stage(cleaned: DataFrame, cfg: QCConfig) -> DataFrame:
         # unilof: the reference fallback delegates to zscore('24h', 4.0)
         # (:455-457) == the f_z flag already in ``flags`` — OR-idempotent.
     combined = D.merge_flags(*flags)
-    d = d.withColumn("saqc_flag", D.flags_to_code(combined))
-    d = d.withColumn("accepted", F.when(combined, None).otherwise(F.col("value")))
-    d = d.drop("_in_flat", "_isolated_flag")
+    d = d.withColumns(
+        {
+            "saqc_flag": D.flags_to_code(combined),
+            "accepted": F.when(combined, None).otherwise(F.col("value")),
+        }
+    ).drop("_in_flat", "_isolated_flag")
     return d.withColumnRenamed("value", "clean")
 
 
@@ -274,17 +285,37 @@ class QCOutputs:
 
 def run_qc_pipeline(readings: DataFrame, cfg: QCConfig | None = None) -> QCOutputs:
     """The full DAG. ``readings`` is the canonical long table
-    (station, variable, ts, value). The cleaned table feeds ~4
-    downstream branches, so it is cached (reference recomputes nothing
-    because everything lives in RAM; on Spark an uncached plan would
-    re-clean per action — SURVEY §4.1 'Caching / reuse')."""
+    (station, variable, ts, value).
+
+    Two subtrees are pinned, so each runs once however many actions
+    read it (reference recomputes nothing because everything lives in
+    RAM; SURVEY §4.1 'Caching / reuse'):
+
+    - the flagged long table (after ``flag_stage`` and, when enabled,
+      ``sentem_stage``), read by ``widen``'s variable collect, both
+      parquet sinks, every per-series figure and the CLI's WRTDS leg;
+    - the events table, read by the events CSV, the seasonal table
+      (CSV and figure) and the event figures.
+
+    The events and seasonal inputs are the cleaned columns projected
+    back out of the pinned table: the flag stages only add columns,
+    and their flat-run join cannot duplicate rows. (The pandas
+    islands' Arrow round trip turns NaN into NULL, as ingest already
+    does: sources/csv_source.py.) ``meta`` reads ``readings`` because
+    it counts the pre-dedup duplicates.
+
+    Pinning runs the pinned plans' shuffle stages here (AQE plans its
+    stages when the lazy cut is taken). Release the pins with
+    ``operators.pinning.unpin`` after the last sink."""
     cfg = cfg or QCConfig()
-    cleaned = clean_stage(readings, cfg).cache()
+    cleaned = clean_stage(readings, cfg)
     flagged = flag_stage(cleaned, cfg)
     if cfg.apply_sentem:
         flagged = sentem_stage(flagged)
-    events = event_stage(cleaned, cfg)
-    seasonal = seasonal_stage(cleaned, events)
+    flagged = pin(flagged)
+    base = flagged.select(*cleaned.columns)
+    events = pin(event_stage(base, cfg))
+    seasonal = seasonal_stage(base, events)
     meta = meta_stage(readings, cfg)
     wide = widen(flagged)
     return QCOutputs(
