@@ -46,3 +46,12 @@ def test_semdedup_within_short_vector_same_in_both_modes(spark, ansi_mode):
     by_id = {r[0]: r for r in want}
     assert by_id[3][2] is False and by_id[3][3] == 0
     assert by_id[4][2] is True and by_id[4][3] == 2
+
+
+def test_get_spark_session_runs_ansi(spark):
+    """``session.DEFAULT_CONFS`` states ANSI mode explicitly, matching
+    Spark 4's default, and the ``get_spark`` session reports it."""
+    from wq_data_pipeline_spark.session import DEFAULT_CONFS
+
+    assert DEFAULT_CONFS["spark.sql.ansi.enabled"] == "true"
+    assert spark.conf.get("spark.sql.ansi.enabled") == "true"

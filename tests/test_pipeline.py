@@ -146,6 +146,43 @@ def test_multi_consumer_outputs_read_pinned_tables(spark, fixture_csv):
         assert (flatmaps, windows) == (0, 0), (name, flatmaps, windows)
 
 
+def test_flag_chain_is_one_linear_plan(spark, fixture_csv):
+    """clean -> full-suite flags -> SentemQC reads the source once: no
+    per-series statistic is joined back to its rows (each is a window
+    column over the series partition), so the executed plan has one
+    scan, one pandas robust-z island, no join and no broadcast."""
+    from test_plan_budget import _count_op
+
+    from wq_data_pipeline_spark.plans.qc_pipeline import (
+        QCConfig,
+        clean_stage,
+        flag_stage,
+        sentem_stage,
+    )
+    from wq_data_pipeline_spark.sources.csv_source import melt_wide, read_wide_csv
+
+    wide = read_wide_csv(spark, fixture_csv, station_field="station", station_value="stn1")
+    long = melt_wide(wide, ["o2", "ph"], station_col="station")
+    cfg = QCConfig(full_suite=True)
+    flagged = sentem_stage(flag_stage(clean_stage(long, cfg), cfg))
+    plan = flagged._jdf.queryExecution().executedPlan().toString()
+    joins = sum(
+        _count_op(plan, op)
+        for op in (
+            "SortMergeJoin", "BroadcastHashJoin", "ShuffledHashJoin",
+            "BroadcastNestedLoopJoin", "CartesianProduct",
+        )
+    )
+    shape = {
+        "scans": _count_op(plan, "FileScan"),
+        "pandas": _count_op(plan, "FlatMapGroupsInPandas"),
+        "broadcasts": _count_op(plan, "BroadcastExchange"),
+        "joins": joins,
+    }
+    assert shape == {"scans": 1, "pandas": 1, "broadcasts": 0, "joins": 0}, (shape, plan)
+    assert _count_op(plan, "Exchange") <= 3, plan
+
+
 def test_wrtds_matches_reference_numpy(spark):
     """WRTDS applyInPandas vs an independent dense-numpy loop on a
     small synthetic series."""

@@ -96,6 +96,13 @@ BUDGETS = {
     "salted_user_stats": (2, 0, 0),
     "sessionize": (1, 0, 0),
     "w8_robust_z": (2, 0, 0),
+    # the full fallback suite as one linear plan: the dedup agg, the
+    # pandas robust-z island's key shuffle, and one key shuffle for
+    # the window passes over the island's output (new attributes, so
+    # its partitioning is not reused); the flat-run mask and the
+    # isolated groups are window columns, and the final per-type agg
+    # reuses that partitioning (the join-back form measured E=7, B=2)
+    "qc_full_suite": (3, 0, 0),
     "qc_accepted": (2, 0, 0),
     # second batch (recorded at the r4 final state)
     "ccnet_buckets": (5, 2, 3),

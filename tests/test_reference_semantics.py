@@ -234,21 +234,12 @@ def test_rolling_median_pandas_matches_window(spark):
         np.testing.assert_allclose(a["sd"], b["sd"], rtol=1e-12, atol=1e-12, equal_nan=True)
 
 
-def _ref_fallback_masks(s: pd.Series, lo: float, hi: float) -> dict[str, pd.Series]:
-    """Pandas reimplementation of the reference's COMPLETE no-SaQC
-    fallback suite (apply_saqc_suite else-branch,
-    scripts/ufz_water_qc_pipeline.py:566-577) at the reference's
-    parameters converted at 15-min step: range, missing,
-    constants/plateau('2h' flat-run interval mask incl. first row
-    after the run, :392-407), variance('6h'=24pts, 1e-12, :409-413),
-    zscore('24h'=96pts, 4.0, :415-422), jumps(5.0, :424-428),
-    isolated('3h' gap, '30min'=2pts group, :430-453); unilof == the
-    zscore mask (:455-457)."""
-    masks = {}
-    masks["range"] = ((s < lo) | (s > hi)).fillna(False)
-    masks["missing"] = s.isna()
-    # plateau/constants: flat runs >= 2h, mask start..end (end = first
-    # row after the run)
+def _ref_plateau(s: pd.Series) -> pd.Series:
+    """Reference flat-run interval mask (_fallback_flag_plateau /
+    _mask_from_runs, scripts/ufz_water_qc_pipeline.py:392-407): runs of
+    rows equal to their predecessor, lasting >= 2h up to the first row
+    after the run (the run's own last row at series end), masked from
+    run start to that row."""
     vals = s.to_numpy()
     eq = np.zeros(len(s), dtype=bool)
     eq[1:] = (
@@ -269,18 +260,15 @@ def _ref_fallback_masks(s: pd.Series, lo: float, hi: float) -> dict[str, pd.Seri
             i = j + 1
         else:
             i += 1
-    masks["plateau"] = pd.Series(flat, index=s.index)
-    k6, k24 = 24, 96
-    masks["variance"] = (
-        s.rolling(k6, min_periods=max(3, k6 // 3), center=True).var() <= 1e-12
-    ).fillna(False)
-    med = s.rolling(k24, min_periods=max(5, k24 // 3), center=True).median()
-    mad = (s - med).abs().rolling(k24, min_periods=max(5, k24 // 3), center=True).median()
-    z = 0.6745 * (s - med) / mad.replace(0, np.nan)
-    masks["zscore"] = (z.abs() >= 4.0).fillna(False)
-    masks["jumps"] = (s.diff().abs() >= 5.0).fillna(False)
-    # isolated: finite row-groups <= 2 points with > 3h index gap on
-    # BOTH sides
+    return pd.Series(flat, index=s.index)
+
+
+def _ref_isolated(s: pd.Series) -> pd.Series:
+    """Reference isolated-group mask (_fallback_flag_isolated,
+    scripts/ufz_water_qc_pipeline.py:430-453): finite row groups of
+    <= 2 points with a > 3h index gap on BOTH sides; a group at either
+    series edge has no gap on that side."""
+    vals = s.to_numpy()
     finite = np.isfinite(vals)
     t = s.index.view("int64")
     big_gap = np.concatenate(([False], np.diff(t) > int(3 * 3600 * 1e9)))
@@ -298,7 +286,37 @@ def _ref_fallback_masks(s: pd.Series, lo: float, hi: float) -> dict[str, pd.Seri
             i = j + 1
         else:
             i += 1
-    masks["isolated"] = pd.Series(iso, index=s.index)
+    return pd.Series(iso, index=s.index)
+
+
+def _ref_fallback_masks(s: pd.Series, lo: float, hi: float) -> dict[str, pd.Series]:
+    """Pandas reimplementation of the reference's COMPLETE no-SaQC
+    fallback suite (apply_saqc_suite else-branch,
+    scripts/ufz_water_qc_pipeline.py:566-577) at the reference's
+    parameters converted at 15-min step: range, missing,
+    constants/plateau('2h' flat-run interval mask incl. first row
+    after the run, :392-407), variance('6h'=24pts, 1e-12, :409-413),
+    zscore('24h'=96pts, 4.0, :415-422), jumps(5.0, :424-428),
+    isolated('3h' gap, '30min'=2pts group, :430-453); unilof == the
+    zscore mask (:455-457)."""
+    masks = {}
+    masks["range"] = ((s < lo) | (s > hi)).fillna(False)
+    masks["missing"] = s.isna()
+    # plateau/constants: flat runs >= 2h, mask start..end (end = first
+    # row after the run)
+    masks["plateau"] = _ref_plateau(s)
+    k6, k24 = 24, 96
+    masks["variance"] = (
+        s.rolling(k6, min_periods=max(3, k6 // 3), center=True).var() <= 1e-12
+    ).fillna(False)
+    med = s.rolling(k24, min_periods=max(5, k24 // 3), center=True).median()
+    mad = (s - med).abs().rolling(k24, min_periods=max(5, k24 // 3), center=True).median()
+    z = 0.6745 * (s - med) / mad.replace(0, np.nan)
+    masks["zscore"] = (z.abs() >= 4.0).fillna(False)
+    masks["jumps"] = (s.diff().abs() >= 5.0).fillna(False)
+    # isolated: finite row-groups <= 2 points with > 3h index gap on
+    # BOTH sides
+    masks["isolated"] = _ref_isolated(s)
     return masks
 
 
@@ -382,6 +400,130 @@ def test_full_suite_flag_stage_matches_pandas_reference(spark):
     # ...and range must fire on BOTH bounds (the -99 survivor covers lo)
     assert bool(masks["range"][s < 0.0].any()), "range-low never exercised"
     assert bool(masks["range"][s > 40.0].any()), "range-high never exercised"
+
+
+def _series_frame(spark, series: dict[str, list[tuple[pd.Timestamp, float | None]]]):
+    """One (station 's', variable) series per dict entry; ``None``
+    values become SQL NULLs."""
+    rows = [("s", var, t.to_pydatetime(), v) for var, pts in series.items() for t, v in pts]
+    return spark.createDataFrame(rows, "station string, variable string, ts timestamp, value double")
+
+
+def _flags_by_series(df, out: str) -> dict[str, list[bool]]:
+    got: dict[str, list[bool]] = {}
+    for r in df.orderBy("variable", "ts").select("variable", out).collect():
+        got.setdefault(r[0], []).append(r[1])
+    return got
+
+
+def _ref_series(pts) -> pd.Series:
+    return pd.Series(
+        [np.nan if v is None else v for _, v in pts], index=pd.DatetimeIndex([t for t, _ in pts])
+    )
+
+
+def test_flat_run_mask_edge_cases_match_pandas_reference(spark):
+    """flat_run_mask vs the reference's run-interval mask at its edges:
+    a run followed by a NULL row, two adjacent qualifying runs, a run
+    just under ``min_hours`` and a run at the very end of a series
+    (no row after it), plus a run at a series start."""
+    from wq_data_pipeline_spark.operators.detectors import flat_run_mask
+
+    ts = pd.date_range("2024-01-01", periods=80, freq="15min")
+    x = [round(10.0 + 0.37 * i, 2) for i in range(80)]
+    x[5:15] = [3.0] * 10  # eq rows 6..14: 2.25h to the NULL row 15
+    x[15] = None
+    x[20:29] = [4.0] * 9  # eq rows 21..28: exactly 2h to row 29
+    x[29:38] = [5.0] * 9  # eq rows 30..37: 2h; row 29 ends run 4.0
+    x[45:53] = [6.0] * 8  # eq rows 46..52: 1.75h, under min_hours
+    x[70:80] = [7.0] * 10  # eq rows 71..79: 2h to the series' last row
+    y = [round(20.0 - 0.41 * i, 2) for i in range(30)]
+    y[0:10] = [1.0] * 10  # eq rows 1..9: the series' first row is never in a run
+    series = {
+        "x": list(zip(ts, x)),
+        "y": list(zip(ts[:30], y)),
+    }
+    got = _flags_by_series(
+        flat_run_mask(_series_frame(spark, series), "value", KEYS, "ts", 0.0, 2.0, out="f"),
+        "f",
+    )
+    for var, pts in series.items():
+        assert got[var] == _ref_plateau(_ref_series(pts)).tolist(), var
+    want_x = set(range(6, 16)) | set(range(21, 39)) | set(range(71, 80))
+    assert {i for i, f in enumerate(got["x"]) if f} == want_x
+    assert {i for i, f in enumerate(got["y"]) if f} == set(range(1, 11))
+
+
+def test_mask_sentinels_per_series_active_sets(spark):
+    """Each series masks only its own active sentinels: in 'a' -9999 is
+    active by count (5 hits, 2.5% < 5%), in 'b' -9 is active by
+    fraction (2 hits < 5, 5% of 40 rows); the other sentinel of each
+    series stays. The aggregate ``active_sentinels`` (read by the meta
+    table) agrees with the rows that were masked."""
+    from wq_data_pipeline_spark.operators.clean import active_sentinels, mask_sentinels
+
+    ts = pd.date_range("2024-01-01", periods=200, freq="15min")
+    a = [float(i % 17) for i in range(200)]
+    for i in (3, 50, 90, 130, 170):
+        a[i] = -9999.0
+    a[20] = a[21] = -99.0  # 2 hits, 1%: inactive
+    b = [float(i % 11) + 0.5 for i in range(40)]
+    b[4] = b[30] = -9.0
+    b[12] = -9999.0  # 1 hit, 2.5%: inactive
+    series = {"a": list(zip(ts, a)), "b": list(zip(ts[:40], b))}
+    df = _series_frame(spark, series)
+    masked = mask_sentinels(df, KEYS, "value", min_count=5, min_frac=0.05)
+    got: dict[str, list[float | None]] = {}
+    for r in masked.orderBy("variable", "ts").select("variable", "value").collect():
+        got.setdefault(r[0], []).append(r[1])
+    for var, pts in series.items():
+        s = pd.Series([v for _, v in pts])
+        want = s.copy()
+        for sent in (-9.0, -99.0, -999.0, -9999.0):
+            cnt = int((s == sent).sum())
+            if cnt >= 5 or cnt / len(s) >= 0.05:
+                want = want.mask(s == sent)
+        assert got[var] == [None if np.isnan(v) else v for v in want], var
+    assert got["a"].count(None) == 5 and got["a"].count(-99.0) == 2
+    assert got["b"].count(None) == 2 and got["b"].count(-9999.0) == 1
+    active = {
+        r.variable: r._active_sentinels
+        for r in active_sentinels(df, KEYS, "value", min_count=5, min_frac=0.05).collect()
+    }
+    assert active == {"a": [-9999.0], "b": [-9.0]}
+
+
+def test_isolated_groups_edges_and_size_match_pandas_reference(spark):
+    """detect_isolated_groups vs the reference: groups at the series
+    start and end are never flagged (no gap on that side), a group of
+    ``max_group_points + 1`` is not flagged, and 1- and 2-point groups
+    with > 3h gaps on both sides are."""
+    from wq_data_pipeline_spark.operators.detectors import detect_isolated_groups
+
+    t0 = pd.Timestamp("2024-01-01")
+    layout = [  # (hours after t0, finite?)
+        (0.0, True), (0.25, True),  # start-edge group
+        (5.0, False),
+        (9.0, True), (9.25, True),  # 2 points, 4h / 3.75h gaps: isolated
+        (13.0, False),
+        (17.0, True), (17.25, True), (17.5, True),  # 3 = max + 1 points
+        (22.0, False),
+        (27.0, True),  # 1 point, 5h / 4h gaps: isolated
+        (31.0, False),
+        (36.0, True), (36.25, True),  # end-edge group
+    ]
+    pts = [
+        (t0 + pd.Timedelta(hours=h), float(i) if fin else None)
+        for i, (h, fin) in enumerate(layout)
+    ]
+    series = {"x": pts, "y": pts[2:]}  # 'y' opens with a NULL row
+    got = _flags_by_series(
+        detect_isolated_groups(_series_frame(spark, series), "value", KEYS, "ts", 2, 3 * 3600.0),
+        "flag_isolated",
+    )
+    for var, p in series.items():
+        assert got[var] == _ref_isolated(_ref_series(p)).tolist(), var
+    assert {i for i, f in enumerate(got["x"]) if f} == {3, 4, 10}
 
 
 def _ref_quant_step(x, atol=1e-3):
@@ -536,7 +678,7 @@ def _ref_flat_slopes(v, idx, min_hours=2.0, win=25, abs_slope=0.0):
                 j += 1
             endi = j + 1 if j + 1 < n else j
             hours = (idx[endi] - idx[i]).total_seconds() / 3600
-            if hours >= min_hours:
+            if hours >= 2.0:
                 runs.append((idx[i], idx[endi], hours))
             i = j + 1
         else:

@@ -121,3 +121,33 @@ def test_wrtds_figure_path(qc_outputs, tmp_path):
     )
     names = {os.path.basename(p) for p in paths}
     assert "o2__07_wrtds_buster.svg" in names, names
+
+
+def test_qc_figures_per_station_do_not_collide(spark, tmp_path):
+    """Two stations sharing variable names get one figure set each,
+    under ``<out>/<station>/`` with the reference basenames: every
+    returned path is a distinct file on disk."""
+    from wq_data_pipeline_spark.plans.qc_pipeline import QCConfig, run_qc_pipeline
+    from wq_data_pipeline_spark.report import render_qc_figures
+
+    rng = np.random.default_rng(5)
+    ts = pd.date_range("2024-01-01", periods=400, freq="15min")
+    long = spark.createDataFrame(
+        pd.concat(
+            pd.DataFrame(
+                {"station": st, "variable": var, "ts": ts, "value": rng.normal(10, 1, len(ts))}
+            )
+            for st in ("stn A", "stn B")
+            for var in ("o2", "ph")
+        )
+    )
+    out = run_qc_pipeline(long, QCConfig(apply_sentem=False))
+    paths = render_qc_figures(
+        out.timeseries, out.events, out.seasonal, str(tmp_path), max_points=100
+    )
+    assert len(paths) == 32 and len(set(paths)) == 32, paths
+    assert all(os.path.isfile(p) for p in paths)
+    for station in ("stn_A", "stn_B"):
+        names = sorted(os.listdir(tmp_path / station))
+        assert len(names) == 16, names
+        assert "o2__00_raw.svg" in names and "ph__08_accepted.svg" in names, names

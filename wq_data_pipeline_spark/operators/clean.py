@@ -2,21 +2,43 @@
 duplicate-timestamp resolution, sampling-step inference, gap
 classification.
 
-All operate on the long readings table and stay fully lazy; the
-two-pass global stats (sentinel counts, inferred step) are expressed
-as a per-key aggregate joined back (broadcast — the per-key agg is
-tiny), keeping everything in one plan instead of collect()ing.
+All operate on the long readings table and stay fully lazy. The
+two-pass per-series stats stay in one plan instead of collect()ing:
+``mask_sentinels`` reads its sentinel counts from window aggregates
+over the series partition, so the rows are not joined back to a
+per-key aggregate, and ``infer_step``/``active_sentinels`` return one
+row per series.
 """
 
 from __future__ import annotations
 
-from collections.abc import Sequence
+from collections.abc import Callable, Sequence
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from wq_data_pipeline_spark.operators.windows import SERIES_KEYS, ordered, with_ts_delta
 
 DEFAULT_SENTINELS = (-9.0, -99.0, -999.0, -9999.0)
+
+
+def _active_array(
+    total: Callable[[Column], Column],
+    sentinels: Sequence[float],
+    value: str,
+    min_count: int,
+    min_frac: float,
+) -> Column:
+    """Sorted array of the ACTIVE sentinels: count >= min_count OR
+    count/n >= min_frac (reference detect_and_mask_sentinels 'used'
+    set, scripts/ufz_water_qc_pipeline.py:158-167). ``total`` turns a
+    per-row 0/1 column into its per-series sum, as a grouped aggregate
+    or as a window aggregate."""
+    n = total(F.lit(1))
+    active = []
+    for s in sentinels:
+        c = total(F.when(F.col(value) == F.lit(float(s)), 1).otherwise(0))
+        active.append(F.when((c >= min_count) | (c / n >= min_frac), F.lit(float(s))))
+    return F.array_sort(F.array_compact(F.array(*active)))
 
 
 def active_sentinels(
@@ -27,33 +49,11 @@ def active_sentinels(
     min_count: int = 5,
     min_frac: float = 0.001,
 ) -> DataFrame:
-    """Per-series array of ACTIVE sentinels (count >= min_count OR
-    count/n >= min_frac — reference detect_and_mask_sentinels 'used'
-    set, scripts/ufz_water_qc_pipeline.py:158-167). One row per
-    series: (keys..., ``_active_sentinels`` sorted ascending)."""
-    keys = list(keys)
-    cnt_cols = [
-        F.sum(F.when(F.col(value) == F.lit(float(s)), 1).otherwise(0)).alias(f"_sc{i}")
-        for i, s in enumerate(sentinels)
-    ]
-    per_key = df.groupBy(*keys).agg(F.count(F.lit(1)).alias("_n"), *cnt_cols)
-    return per_key.select(
-        *keys,
-        F.array_sort(
-            F.array_compact(
-                F.array(
-                    *[
-                        F.when(
-                            (F.col(f"_sc{i}") >= min_count)
-                            | (F.col(f"_sc{i}") / F.col("_n") >= min_frac),
-                            F.lit(float(s)),
-                        )
-                        for i, s in enumerate(sentinels)
-                    ]
-                )
-            )
-        ).alias("_active_sentinels"),
-    )
+    """Per-series array of ACTIVE sentinels (see :func:`_active_array`).
+    One row per series: (keys..., ``_active_sentinels`` sorted
+    ascending)."""
+    active = _active_array(F.sum, sentinels, value, min_count, min_frac)
+    return df.groupBy(*keys).agg(active.alias("_active_sentinels"))
 
 
 def mask_sentinels(
@@ -70,16 +70,17 @@ def mask_sentinels(
     is *active* when count >= min_count OR count/n >= min_frac
     (reference: detect_and_mask_sentinels,
     scripts/ufz_water_qc_pipeline.py:158-167). Pass 2 masks active
-    sentinel values to NULL. Implemented as agg + broadcast join so the
-    whole thing stays one lazy plan.
+    sentinel values to NULL. The counts are window aggregates over the
+    series partition, so each row carries its series' active set and
+    the input is read once; the plan shuffles by the series keys, the
+    partitioning the rest of the QC chain needs anyway.
     """
-    keys = list(keys)
-    active = active_sentinels(df, keys, value, sentinels, min_count, min_frac)
-    joined = df.join(F.broadcast(active), on=keys, how="left")
-    masked = F.when(
-        F.array_contains(F.col("_active_sentinels"), F.col(value)), None
-    ).otherwise(F.col(value))
-    return joined.withColumn(value, masked).drop("_active_sentinels")
+    w = Window.partitionBy(*keys)
+    active = _active_array(
+        lambda c: F.sum(c).over(w), sentinels, value, min_count, min_frac
+    )
+    masked = F.when(F.array_contains(active, F.col(value)), None).otherwise(F.col(value))
+    return df.withColumn(value, masked)
 
 
 def resolve_duplicates(

@@ -10,7 +10,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from wq_data_pipeline_spark.operators.windows import (
     SERIES_KEYS,
@@ -201,16 +201,25 @@ def _run_span(keys: Sequence[str], event_type: str, *extra: str) -> list[Column]
     """Output columns of a run-event aggregate: ``end`` is the first
     row after the run (falling back to the run's last row at series
     end) and ``hours`` the run's duration."""
-    end = F.coalesce(F.col("_after_ts"), F.col("_last_ts"))
-    hours = (F.unix_micros(end) - F.unix_micros(F.col("start"))) / F.lit(3.6e9)
+    end = _run_end(F.col("_after_ts"), F.col("_last_ts"))
     return [
         *keys,
         F.lit(event_type).alias("type"),
         F.col("start"),
         end.alias("end"),
-        hours.alias("hours"),
+        _hours(F.col("start"), end).alias("hours"),
         *[F.col(c) for c in extra],
     ]
+
+
+def _run_end(after_ts: Column, last_ts: Column) -> Column:
+    """A run ends at the first row after it, or at its own last row
+    when it reaches the end of the series (reference :217)."""
+    return F.coalesce(after_ts, last_ts)
+
+
+def _hours(start: Column, end: Column) -> Column:
+    return (F.unix_micros(end) - F.unix_micros(start)) / F.lit(3.6e9)
 
 
 def detect_flat_runs(
@@ -234,11 +243,7 @@ def detect_flat_runs(
     run from the first row where eq is True, so ``start`` is the
     second point of the constant block; duration end-start uses those.
     """
-    w = ordered(keys, ts)
-    eq = F.coalesce(F.abs(F.col(value) - F.lag(value).over(w)) <= atol, F.lit(False)) & F.col(
-        value
-    ).isNotNull()
-    d = _run_events(df, eq, keys, ts, value)
+    d = _run_events(df, _flat_step(value, keys, ts, atol), keys, ts, value)
     runs = (
         d.filter(F.col("_in_run"))
         .groupBy(*keys, "_island")
@@ -253,6 +258,45 @@ def detect_flat_runs(
         .filter(F.col("hours") >= min_hours)
     )
     return runs
+
+
+def _flat_step(value: str, keys: Sequence[str], ts: str, atol: float) -> Column:
+    """True where a row equals its predecessor within ``atol``: the
+    rows of a flat run. A series' first row and NULL values are never
+    in a run."""
+    w = ordered(keys, ts)
+    eq = F.coalesce(F.abs(F.col(value) - F.lag(value).over(w)) <= atol, F.lit(False))
+    return eq & F.col(value).isNotNull()
+
+
+def flat_run_mask(
+    df: DataFrame,
+    value: str = "value",
+    keys: Sequence[str] = SERIES_KEYS,
+    ts: str = "ts",
+    atol: float = 0.0,
+    min_hours: float = 2.0,
+    out: str = "flag_flat",
+) -> DataFrame:
+    """Per-row flat-run flag (reference _fallback_flag_plateau /
+    _mask_from_runs, scripts/ufz_water_qc_pipeline.py:392-407): True
+    for rows with ``start <= ts <= end`` of a :func:`detect_flat_runs`
+    event, where ``end`` is the first row AFTER the run.
+
+    Computed in the series' own window pass instead of joining the
+    events back: ``q`` marks rows of a run lasting >= ``min_hours``
+    (run bounds from a window over the run's island), and the flag is
+    ``q OR lag(q)``, which adds the one row after each run.
+    """
+    w = ordered(keys, ts)
+    d = _run_events(df, _flat_step(value, keys, ts, atol), keys, ts, value)
+    run = Window.partitionBy(*keys, "_island")
+    start = F.min(ts).over(run)
+    end = _run_end(F.max("_next_ts").over(run), F.max(ts).over(run))
+    d = d.withColumn("_q", F.col("_in_run") & (_hours(start, end) >= min_hours))
+    return d.withColumn(out, F.col("_q") | F.coalesce(F.lag("_q").over(w), F.lit(False))).drop(
+        "_in_run", "_island", "_prev_ts", "_next_ts", "_prev_val", "_next_val", "_q"
+    )
 
 
 def detect_binary_switches(
@@ -385,41 +429,30 @@ def detect_isolated_groups(
     ``a>0 and big_gap[a]`` / ``b+1<len and big_gap[b+1]`` — a run at
     the series start/end has no measurable gap on that side and is
     NEVER flagged; a NULL neighbor timestamp here therefore fails the
-    gap test. Implementation: islands of non-nullness; per-island
-    first/last ts plus the neighboring rows' timestamps across the
-    island boundary, then flag whole islands. Returns the input rows
-    + boolean ``out``.
+    gap test. Implementation: islands of non-nullness; island size,
+    first/last ts and the neighbouring rows' timestamps across the
+    island boundary are window aggregates over the island partition
+    inside the series, so whole islands are flagged without joining
+    back. Returns the input rows + boolean ``out``.
     """
     w = ordered(keys, ts)
     finite = F.col(value).isNotNull()
     d = with_islands(df, finite, keys, ts, out="_isl")
     d = d.withColumns({"_prev_ts": F.lag(ts).over(w), "_next_ts": F.lead(ts).over(w)})
-    isl = (
-        d.filter(finite)
-        .groupBy(*keys, "_isl")
-        .agg(
-            F.count(F.lit(1)).alias("_npts"),
-            F.min(ts).alias("_first_ts"),
-            F.max(ts).alias("_last_ts"),
-            F.min_by("_prev_ts", ts).alias("_before_ts"),
-            F.max_by("_next_ts", ts).alias("_after_ts"),
-        )
+    isl = Window.partitionBy(*keys, "_isl")
+    first_ts, last_ts = F.min(ts).over(isl), F.max(ts).over(isl)
+    before_ts = F.min_by("_prev_ts", ts).over(isl)
+    after_ts = F.max_by("_next_ts", ts).over(isl)
+    gap_before = before_ts.isNotNull() & (
+        (F.unix_micros(first_ts) - F.unix_micros(before_ts)) / 1e6 > min_gap_seconds
     )
-    gap_before = F.col("_before_ts").isNotNull() & (
-        (F.unix_micros("_first_ts") - F.unix_micros("_before_ts")) / 1e6 > min_gap_seconds
+    gap_after = after_ts.isNotNull() & (
+        (F.unix_micros(after_ts) - F.unix_micros(last_ts)) / 1e6 > min_gap_seconds
     )
-    gap_after = F.col("_after_ts").isNotNull() & (
-        (F.unix_micros("_after_ts") - F.unix_micros("_last_ts")) / 1e6 > min_gap_seconds
-    )
-    flagged = isl.select(
-        *keys,
-        "_isl",
-        ((F.col("_npts") <= max_group_points) & gap_before & gap_after).alias("_isolated"),
-    )
-    res = d.join(flagged, on=[*keys, "_isl"], how="left")
-    return res.withColumn(
-        out, F.coalesce(finite & F.col("_isolated"), F.lit(False))
-    ).drop("_isl", "_isolated", "_prev_ts", "_next_ts")
+    small = F.count(F.lit(1)).over(isl) <= max_group_points
+    return d.withColumn(
+        out, F.coalesce(finite & small & gap_before & gap_after, F.lit(False))
+    ).drop("_isl", "_prev_ts", "_next_ts")
 
 
 def merge_flags(*flags: Column) -> Column:

@@ -1255,31 +1255,7 @@ def q_qc_full_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = d.withColumn("f_missing", D.flag_missing("value"))
     d = d.withColumn("f_jump", D.flag_jumps("value", 100.0, key, "ts"))
     d = d.withColumn("f_var", D.flag_variance("value", 24, key, "ts", 1e-12))
-    # pin the flagged frame: the flat-run interval leg and the
-    # isolated-groups leg below otherwise duplicate the whole upstream
-    # subtree (median dedup + the pandas robust-z stage — the r12 plan
-    # audit shows the source scanned 8x). At runtime AQE's shuffle-
-    # stage reuse recovers MOST of that (A/B measured a wash at sf0.1:
-    # ~4.6 s both forms warm), so this pin buys robustness, a smaller
-    # plan, and one guaranteed execution of the Python stage rather
-    # than wall clock — kept because reuse across the broadcast-leg
-    # job boundary is a runtime fortuity, not a plan property.
-    d = d.localCheckpoint(eager=False)
-    runs = D.detect_flat_runs(d, "value", key, "ts", 1.0, 0.75).select(
-        F.col("event_type").alias("_r_et"),
-        F.col("start").alias("_rs"),
-        F.col("end").alias("_re"),
-        F.lit(True).alias("_in_flat"),
-    )
-    d = d.join(
-        F.broadcast(runs),
-        (F.col("event_type") == F.col("_r_et"))
-        & F.col("ts").between(F.col("_rs"), F.col("_re")),
-        "left",
-    ).drop("_r_et", "_rs", "_re")
-    d = d.withColumn("f_flat", F.coalesce(F.col("_in_flat"), F.lit(False))).drop(
-        "_in_flat"
-    )
+    d = D.flat_run_mask(d, "value", key, "ts", 1.0, 0.75, out="f_flat")
     d = D.detect_isolated_groups(d, "value", key, "ts", 2, 1800.0, out="f_iso")
     combined = D.merge_flags(
         F.col("f_z"), F.col("f_range"), F.col("f_missing"), F.col("f_jump"),

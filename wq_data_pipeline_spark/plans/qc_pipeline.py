@@ -117,29 +117,14 @@ def flag_stage(cleaned: DataFrame, cfg: QCConfig) -> DataFrame:
     if cfg.full_suite:
         # constants + plateau ('2h'): both reduce to the flat-run
         # interval mask (_fallback_flag_constants delegates to
-        # _fallback_flag_plateau, :405-407). The reference marks
-        # start <= ts <= end where end is the first row AFTER the run
-        # (_mask_from_runs, :392-397) — a broadcast range join against
-        # the (small) run table reproduces that inclusively. Runs of a
-        # series are disjoint with end_i < start_j, so the left join
-        # cannot duplicate rows.
-        runs = D.detect_flat_runs(
-            d, "value", KEYS, "ts", cfg.flat_atol, cfg.flat_min_hours
-        ).select(
-            *[F.col(k).alias(f"_r_{k}") for k in KEYS],
-            F.col("start").alias("_rs"),
-            F.col("end").alias("_re"),
-            F.lit(True).alias("_in_flat"),
+        # _fallback_flag_plateau, :405-407), marking start <= ts <= end
+        # where end is the first row AFTER the run (_mask_from_runs,
+        # :392-397); flat_run_mask computes it in the series' window
+        # pass, so no run table is joined back
+        d = D.flat_run_mask(
+            d, "value", KEYS, "ts", cfg.flat_atol, cfg.flat_min_hours, out="_in_flat"
         )
-        cond = (
-            (F.col(KEYS[0]) == F.col(f"_r_{KEYS[0]}"))
-            & (F.col(KEYS[1]) == F.col(f"_r_{KEYS[1]}"))
-            & F.col("ts").between(F.col("_rs"), F.col("_re"))
-        )
-        d = d.join(F.broadcast(runs), cond, "left").drop(
-            *[f"_r_{k}" for k in KEYS], "_rs", "_re"
-        )
-        flags.append(F.coalesce(F.col("_in_flat"), F.lit(False)))
+        flags.append(F.col("_in_flat"))
         # variance ('6h', 1e-12)
         flags.append(
             D.flag_variance("value", cfg.var_window_points, KEYS, "ts", cfg.var_tol)
@@ -298,8 +283,9 @@ def run_qc_pipeline(readings: DataFrame, cfg: QCConfig | None = None) -> QCOutpu
       (CSV and figure) and the event figures.
 
     The events and seasonal inputs are the cleaned columns projected
-    back out of the pinned table: the flag stages only add columns,
-    and their flat-run join cannot duplicate rows. (The pandas
+    back out of the pinned table: the flag stages only add columns
+    and keep every row, since each per-series statistic is a window
+    column rather than a join. (The pandas
     islands' Arrow round trip turns NaN into NULL, as ingest already
     does: sources/csv_source.py.) ``meta`` reads ``readings`` because
     it counts the pre-dedup duplicates.

@@ -162,7 +162,10 @@ def render_qc_figures(
     process_variable figure block, scripts/ufz_water_qc_pipeline.py:
     706-728). ``qc`` is the long QC table (station, variable, ts,
     raw, clean, accepted, saqc_flag); ``events``/``seasonal`` the
-    pipeline's aggregate outputs. Returns written paths."""
+    pipeline's aggregate outputs. Each station's set goes under
+    ``out_dir/<sanitized station>/`` with the reference's
+    ``{var}__NN_name`` basenames, so stations sharing a variable name
+    do not overwrite each other. Returns written paths."""
     from wq_data_pipeline_spark.operators.stats import decimal_histogram
 
     os.makedirs(out_dir, exist_ok=True)
@@ -173,7 +176,9 @@ def render_qc_figures(
     ]
     for station, variable in series:
         d = qc.filter((F.col("station") == station) & (F.col("variable") == variable))
-        pre = os.path.join(out_dir, f"{sanitize_name(variable)}__")
+        station_dir = os.path.join(out_dir, sanitize_name(station))
+        os.makedirs(station_dir, exist_ok=True)
+        pre = os.path.join(station_dir, f"{sanitize_name(variable)}__")
 
         # one bucketed pass shared by 00/01/08 + the gaussian figure
         gs = _gaussian_cols(d)

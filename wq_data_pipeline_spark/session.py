@@ -30,6 +30,11 @@ DEFAULT_CONFS = {
     # with the UTC session tz this matches DuckDB's naive-as-UTC view
     # of the same files, so epoch extraction agrees everywhere.
     "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
+    # ANSI SQL semantics, Spark 4's default, stated so the choice does
+    # not depend on the Spark build: overflow and out-of-bounds array
+    # indexes raise instead of returning NULL. A driver session without
+    # these confs gets the same default.
+    "spark.sql.ansi.enabled": "true",
 }
 
 
