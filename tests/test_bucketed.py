@@ -4,9 +4,8 @@ one (sources/bucketed.py)."""
 
 from __future__ import annotations
 
-import re
-
 import pytest
+from test_plan_budget import _count_op
 
 from wq_data_pipeline_spark.sources.bucketed import (
     cobucketed_join,
@@ -14,18 +13,6 @@ from wq_data_pipeline_spark.sources.bucketed import (
     write_bucketed,
 )
 from wq_data_pipeline_spark.sources.testdata import load_table
-
-_OP_PREFIX = re.compile(r"^[\s:+\-*()0-9]*")
-
-
-def _count_op(plan: str, op: str) -> int:
-    n = 0
-    for line in plan.splitlines():
-        body = _OP_PREFIX.sub("", line)
-        if body == op or body.startswith(op + " ") or body.startswith(op + "("):
-            n += 1
-    return n
-
 
 @pytest.fixture(scope="module")
 def bucketed_tables(spark, sf_dir, tmp_path_factory):

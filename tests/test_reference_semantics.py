@@ -201,39 +201,6 @@ def test_robust_z_pandas_engine_matches_window(spark):
     np.testing.assert_allclose(a, b, rtol=1e-12, atol=1e-12, equal_nan=True)
 
 
-def test_rolling_median_pandas_matches_window(spark):
-    """The pandas skiplist median/std engine must match the
-    percentile-over-frame computation to float identity."""
-    import numpy as np
-    import pandas as pd
-
-    from wq_data_pipeline_spark.operators.sentem import (
-        rolling_mean_std,
-        rolling_median_std_pandas,
-    )
-
-    rng = np.random.default_rng(13)
-    n = 3000
-    ts = pd.date_range("2024-01-01", periods=n, freq="15min")
-    v = rng.normal(20.0, 2.0, n)
-    v[100:300] = np.nan
-    v[::71] = np.nan
-    pdf = pd.DataFrame({"station": "s", "variable": "x", "ts": ts, "value": v})
-    df = spark.createDataFrame(pdf)
-    for w in (12, 48):
-        a = (
-            rolling_mean_std(df, "value", w, stat="median", ma_col="ma", sd_col="sd")
-            .orderBy("ts").select("ma", "sd").toPandas()
-        )
-        b = (
-            rolling_median_std_pandas(df, "value", w, ma_col="ma", sd_col="sd")
-            .orderBy("ts").select("ma", "sd").toPandas()
-        )
-        assert a["ma"].isna().equals(b["ma"].isna()), f"minp mask differs at w={w}"
-        np.testing.assert_allclose(a["ma"], b["ma"], rtol=1e-12, atol=1e-12, equal_nan=True)
-        np.testing.assert_allclose(a["sd"], b["sd"], rtol=1e-12, atol=1e-12, equal_nan=True)
-
-
 def _ref_plateau(s: pd.Series) -> pd.Series:
     """Reference flat-run interval mask (_fallback_flag_plateau /
     _mask_from_runs, scripts/ufz_water_qc_pipeline.py:392-407): runs of

@@ -78,11 +78,7 @@ def test_downsample_is_bounded(qc_outputs):
 
 
 def test_sentemqc_combined_figure(spark, tmp_path):
-    from wq_data_pipeline_spark.operators.sentem import (
-        BandPassCfg,
-        apply_band_pass,
-        apply_sentemqc,
-    )
+    from wq_data_pipeline_spark.operators.sentem import apply_sentemqc
     from wq_data_pipeline_spark.report import render_sentemqc_figure
 
     rng = np.random.default_rng(11)
@@ -94,11 +90,8 @@ def test_sentemqc_combined_figure(spark, tmp_path):
         {"station": "stnA", "variable": "nitrate", "ts": ts, "value": v}
     )
     df = spark.createDataFrame(pdf)
+    # apply_sentemqc exports the last pass's qcband_top/qcband_bottom
     sq = apply_sentemqc(df)
-    cfg = BandPassCfg(window=33, scale=3.0, stat="median")
-    sq = apply_band_pass(
-        sq, cfg, "value", top_col="qcband_top", bottom_col="qcband_bottom"
-    )
     p = render_sentemqc_figure(sq, str(tmp_path), "stnA", "nitrate", max_points=250)
     assert os.path.exists(p)
     _assert_valid_svg(p)

@@ -29,18 +29,20 @@ def fixture_long(spark):
     return spark.createDataFrame(pd.concat(frames))
 
 
-@pytest.fixture(scope="module")
-def ep3_out(spark, fixture_long):
-    from wq_data_pipeline_spark.plans.sentem_pipeline import (
-        SentemVar,
-        run_sentemqc_plan,
-    )
+def _ep3_var_map():
+    from wq_data_pipeline_spark.plans.sentem_pipeline import SentemVar
 
-    vm = [
+    return [
         SentemVar("o2", code=400),
         SentemVar("no3", code=2477034, is_nitrate=True),
     ]
-    return run_sentemqc_plan(fixture_long, vm).cache()
+
+
+@pytest.fixture(scope="module")
+def ep3_out(spark, fixture_long):
+    from wq_data_pipeline_spark.plans.sentem_pipeline import run_sentemqc_plan
+
+    return run_sentemqc_plan(fixture_long, _ep3_var_map()).cache()
 
 
 def test_premask_and_masking(ep3_out):
@@ -140,3 +142,104 @@ def test_ep3_figure_renders(ep3_out, tmp_path):
         ep3_out, str(tmp_path), "stn", "no3", value_col="obs_raw", max_points=200
     )
     assert os.path.exists(p) and os.path.getsize(p) > 500
+
+
+def test_ep3_plan_builds_passes_side_by_side(fixture_long):
+    """EP3 runs the five passes through apply_sentemqc: per variable
+    the centers/stds are one window projection (the two wide passes
+    share one prefix-sum set), not one band pass after another."""
+    from test_plan_budget import _count_op
+
+    from wq_data_pipeline_spark.plans.sentem_pipeline import run_sentemqc_plan
+
+    out = run_sentemqc_plan(fixture_long, _ep3_var_map())
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert _count_op(plan, "Window") <= 12, plan
+
+
+@pytest.mark.parametrize(
+    "bounds",
+    [
+        ("2024-05-03 00:00:00", None),
+        (None, "2024-05-03 00:00:00"),
+    ],
+    ids=["start_only", "end_only"],
+)
+def test_lone_time_bound_is_applied(fixture_long, bounds):
+    """Each of start/end bounds the series on its own, inclusively
+    (the reference's d.loc[start:end])."""
+    from wq_data_pipeline_spark.plans.sentem_pipeline import run_sentemqc_plan
+
+    start, end = (F.lit(b).cast("timestamp") if b else None for b in bounds)
+    out = run_sentemqc_plan(fixture_long, _ep3_var_map(), start_time=start, end_time=end)
+    span = out.agg(F.min("ts").alias("lo"), F.max("ts").alias("hi"), F.count("*").alias("n")).first()
+    cut = pd.Timestamp("2024-05-03 00:00:00")
+    per_var_before = int((cut - pd.Timestamp("2024-05-01")) / pd.Timedelta("15min"))
+    if start is not None:
+        assert pd.Timestamp(span.lo) == cut
+        assert span.n == 2 * (600 - per_var_before)
+    else:
+        assert pd.Timestamp(span.hi) == cut
+        assert span.n == 2 * (per_var_before + 1)
+
+
+@pytest.mark.parametrize(
+    "last",
+    [
+        ("tri5", 5),
+        ("mean", 5),
+        ("median", 12),
+        ("mean", 960),
+    ],
+    ids=lambda p: f"{p[0]}_w{p[1]}",
+)
+def test_sentemqc_bands_are_last_pass_bands(spark, last):
+    """apply_sentemqc's qcband_top/qcband_bottom are band_columns over
+    the last pass's center/std, computed here with the direct-frame
+    operators (rolling_mean_std / tri5_mean_std) — including the NULL
+    where the pass's min-periods guard fails (gaps, series edges)."""
+    from wq_data_pipeline_spark.operators.sentem import (
+        DEFAULT_PASSES,
+        BandPassCfg,
+        apply_sentemqc,
+        band_columns,
+        premask_nonpositive,
+        rolling_mean_std,
+        tri5_mean_std,
+    )
+
+    stat, window = last
+    cfg = BandPassCfg(window=window, scale=2.2, top_add=0.3, bottom_sub=0.1, stat=stat)
+    passes = (*DEFAULT_PASSES[:-1], cfg)
+    rng = np.random.default_rng(17)
+    n = 1500
+    ts = pd.date_range("2024-06-01", periods=n, freq="15min")
+    frames = []
+    for var in ("a", "b"):
+        v = rng.normal(12.0, 1.5, n)
+        v[rng.choice(n, 60, replace=False)] = np.nan  # scattered NULLs
+        v[400:420] = np.nan  # a gap wider than every narrow window
+        v[[1, 3, n - 2]] = np.nan  # sparse series edges
+        v[900:903] = -1.0  # non-positive -> pre-masked
+        frames.append(pd.DataFrame({"station": "s", "variable": var, "ts": ts, "value": v}))
+    df = spark.createDataFrame(pd.concat(frames)).withColumn(
+        "value", F.when(~F.isnan("value"), F.col("value"))
+    )
+
+    got = apply_sentemqc(df, passes=passes).select("variable", "ts", "qcband_top", "qcband_bottom")
+    pre = df.withColumn("value", premask_nonpositive("value"))
+    if stat == "tri5":
+        ref = tri5_mean_std(pre, "value")
+    else:
+        ref = rolling_mean_std(pre, "value", window, stat=stat)
+    top, bottom = band_columns("ma", "sd", cfg)
+    ref = ref.select("variable", "ts", top.alias("ref_top"), bottom.alias("ref_bottom"))
+    both = got.join(ref, ["variable", "ts"]).orderBy("variable", "ts").toPandas()
+    assert len(both) == 2 * n
+    for col in ("top", "bottom"):
+        a, b = both[f"qcband_{col}"], both[f"ref_{col}"]
+        assert a.isna().equals(b.isna()), f"{col}: guard differs"
+        assert a.notna().any()
+        if window < 960:
+            assert a.isna().any(), "fixture must exercise the min-periods guard"
+        np.testing.assert_allclose(a, b, rtol=1e-9, atol=1e-9, equal_nan=True)

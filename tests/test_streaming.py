@@ -32,12 +32,12 @@ def stream_dir(spark, tmp_path_factory):
 
 
 def test_tumbling_rollup_stream(spark, stream_dir):
-    from wq_data_pipeline_spark.streaming.stream_qc import read_readings_stream, tumbling_rollup
+    from wq_data_pipeline_spark.streaming.stream_qc import read_readings_stream, sliding_rollup
 
     stream = read_readings_stream(spark, stream_dir)
     assert stream.isStreaming
     q = (
-        tumbling_rollup(stream, "1 hour", "2 hours")
+        sliding_rollup(stream, "1 hour", "1 hour", "2 hours")
         .writeStream.format("memory")
         .queryName("rollup_t")
         .outputMode("append")
@@ -110,7 +110,7 @@ def test_watermark_drops_late_data(spark, tmp_path):
     dropped. Two checkpointed runs make the ordering explicit: run 1
     advances the watermark to 05:00 and emits the hour-0 window; run 2
     (same checkpoint) sees only the late row and must drop it."""
-    from wq_data_pipeline_spark.streaming.stream_qc import read_readings_stream, tumbling_rollup
+    from wq_data_pipeline_spark.streaming.stream_qc import read_readings_stream, sliding_rollup
 
     sdir = tmp_path / "in"
     sdir.mkdir()
@@ -126,7 +126,7 @@ def test_watermark_drops_late_data(spark, tmp_path):
 
     def run_once():
         q = (
-            tumbling_rollup(read_readings_stream(spark, str(sdir)), "1 hour", "1 hour")
+            sliding_rollup(read_readings_stream(spark, str(sdir)), "1 hour", "1 hour", "1 hour")
             .writeStream.format("parquet")
             .option("path", out)
             .option("checkpointLocation", ckpt)

@@ -122,11 +122,13 @@ def test_tumbling_agg_state_bounded_by_watermark(spark, tmp_path):
             str(sdir)
         )
 
-    from wq_data_pipeline_spark.streaming.stream_qc import tumbling_rollup
+    from wq_data_pipeline_spark.streaming.stream_qc import sliding_rollup
 
     q = _run_per_file_batches(
         spark,
-        lambda s: tumbling_rollup(s, window="15 minutes", watermark="30 minutes"),
+        lambda s: sliding_rollup(
+            s, window="15 minutes", slide="15 minutes", watermark="30 minutes"
+        ),
         sdir,
         n_files,
         "state_scale_tumble",

@@ -212,50 +212,6 @@ def _prefix_mean_std_cols(
 # form wins decisively (measured crossover well below 128 at 1M rows)
 PREFIX_WINDOW_THRESHOLD = 128
 
-# percentile-over-frame re-sorts the frame per row (O(n·w·log w)),
-# but the pandas engine pays a full shuffle + Arrow round trip —
-# measured break-even ABOVE w=48 (EP1 1M rows: 23.6 s JVM median@48
-# vs 27.5 s pandas median@48); only wide medians should cross
-MEDIAN_PANDAS_THRESHOLD = 128
-
-
-def rolling_median_std_pandas(
-    df: DataFrame,
-    value: str = "value",
-    window: int = 48,
-    keys: Sequence[str] = SERIES_KEYS,
-    ts: str = "ts",
-    minp: int | None = None,
-    ma_col: str = "ma",
-    sd_col: str = "sd",
-) -> DataFrame:
-    """Rolling MEDIAN center + population std via applyInPandas —
-    the scale engine for the median band passes: pandas' rolling
-    median is a C skiplist (O(n log w)) vs percentile-over-frame's
-    per-row re-sort. Same exact medians and ddof=0 std as
-    :func:`rolling_mean_std` (equivalence-tested); needs memory for
-    per-series Arrow batches like every applyInPandas island."""
-    import math
-
-    from pyspark.sql import types as T
-
-    if minp is None:
-        minp = max(3, math.ceil(window * 0.3))
-    schema = T.StructType(
-        list(df.schema.fields)
-        + [T.StructField(ma_col, T.DoubleType()), T.StructField(sd_col, T.DoubleType())]
-    )
-
-    def fr(pdf):
-        pdf = pdf.sort_values(ts).reset_index(drop=True)
-        s = pdf[value].astype(float)
-        r = s.rolling(window, center=True, min_periods=minp)
-        pdf[ma_col] = r.median()
-        pdf[sd_col] = r.std(ddof=0)
-        return pdf
-
-    return df.groupBy(*list(keys)).applyInPandas(fr, schema)
-
 TRI5_WEIGHTS = (1.0, 2.0, 3.0, 2.0, 1.0)
 
 
@@ -342,19 +298,6 @@ def uncertainty_overlap_flag(
     return F.when(flagged, 200).otherwise(100)
 
 
-def band_support_mask(
-    value: str,
-    window: int,
-    minp: int,
-    keys: Sequence[str] = SERIES_KEYS,
-    ts: str = "ts",
-) -> Column:
-    """W15 (scripts/sentemqc.py:105-107): bands kept only where the
-    rolling count of finite values reaches minp."""
-    frame = centered(window, keys, ts)
-    return F.count(F.col(value)).over(frame) >= minp
-
-
 def sensor_error_flag(value: str | Column, code: int) -> Column:
     """P11 (scripts/sentemqc.py:40-50): per-sensor-code error rules,
     100/200 codes. NULL (non-finite at ingest) is always flagged for
@@ -389,19 +332,12 @@ def _with_band_stats(
     value: str,
     keys: Sequence[str],
     ts: str,
-    fast: bool,
 ) -> tuple[DataFrame, list[str]]:
     """Add each tagged pass's center/std as ``_ma{tag}``/``_sd{tag}``
-    in as few plan steps as the engines allow: one applyInPandas per
-    pandas-engine median, one projection of the prefix sums every
-    wide mean window shares, one projection of all window
-    expressions. Returns the frame and the helper columns to drop.
-
-    ``fast=True`` routes the pipeline hot path to the scale engines:
-    wide MEAN windows (>= PREFIX_WINDOW_THRESHOLD) through the O(n)
-    prefix-sum form, MEDIAN windows (>= MEDIAN_PANDAS_THRESHOLD)
-    through the pandas skiplist engine."""
-    d = df
+    in as few plan steps as possible: one projection of the prefix
+    sums every wide mean window (>= PREFIX_WINDOW_THRESHOLD) shares,
+    one projection of all window expressions. Returns the frame and
+    the helper columns to drop."""
     helpers: list[str] = []
     stats: dict[str, Column] = {}
     prefix = False
@@ -410,47 +346,18 @@ def _with_band_stats(
         helpers += [ma, sd]
         if cfg.stat == "tri5":
             stats[ma], stats[sd] = _tri5_cols(value, keys, ts)
-        elif fast and cfg.stat == "mean" and cfg.window >= PREFIX_WINDOW_THRESHOLD:
+        elif cfg.stat == "mean" and cfg.window >= PREFIX_WINDOW_THRESHOLD:
             prefix = True
             stats[ma], stats[sd] = _prefix_mean_std_cols(cfg.window, keys, ts)
-        elif fast and cfg.stat == "median" and cfg.window >= MEDIAN_PANDAS_THRESHOLD:
-            d = rolling_median_std_pandas(d, value, cfg.window, keys, ts, ma_col=ma, sd_col=sd)
         else:
             stats[ma], stats[sd] = _rolling_mean_std_cols(
                 value, cfg.window, keys, ts, stat=cfg.stat
             )
+    d = df
     if prefix:
         d = d.withColumns(_prefix_sums(value, keys, ts))
         helpers += _PREFIX_COLS
-    if stats:
-        d = d.withColumns(stats)
-    return d, helpers
-
-
-def apply_band_pass(
-    df: DataFrame,
-    cfg: BandPassCfg,
-    value: str = "value",
-    keys: Sequence[str] = SERIES_KEYS,
-    ts: str = "ts",
-    flag_col: str = "flag_band",
-    top_col: str | None = None,
-    bottom_col: str | None = None,
-    fast: bool = False,
-) -> DataFrame:
-    """One full band pass: center/std -> bands -> overlap flag.
-    Optionally materializes the band columns (run 5 exports them,
-    scripts/sentemqc.py:105-111). ``fast`` as in
-    :func:`_with_band_stats`; leave False where results feed a
-    bit-exact cross-engine oracle."""
-    d, helpers = _with_band_stats(df, [("", cfg)], value, keys, ts, fast)
-    top, bottom = band_columns("_ma", "_sd", cfg)
-    cols = {flag_col: uncertainty_overlap_flag(value, top, bottom, cfg)}
-    if top_col:
-        cols[top_col] = top
-    if bottom_col:
-        cols[bottom_col] = bottom
-    return d.withColumns(cols).drop(*helpers)
+    return d.withColumns(stats), helpers
 
 
 def apply_sentemqc(
@@ -460,30 +367,28 @@ def apply_sentemqc(
     ts: str = "ts",
     passes: Sequence[BandPassCfg] = DEFAULT_PASSES,
     sensor_code: int | None = None,
-    fast: bool = False,
 ) -> DataFrame:
     """The reference's apply_sentemqc_to_series pipeline
     (scripts/sentemqc.py:80-114): pre-mask -> per-pass band flags ->
     combined flag + reasons + masked value. Returns the input plus
-    ``flag_run{i}``, ``flag_sensor``, ``flag_global``, ``is_flagged``,
-    ``flag_reason``, ``value_masked``. ``fast`` routes wide windows
-    through the scale engines (pipeline hot path).
+    ``flag_sensor`` (when ``sensor_code`` is given), ``flag_run{i}``,
+    ``qcband_top``/``qcband_bottom`` (the last pass's bands, NULL where
+    its min-periods guard fails — W15), ``flag_global``,
+    ``is_flagged``, ``flag_reason`` and ``value_masked``.
 
     Every pass reads only the pre-masked value, so all passes' bands
     are built side by side: one window projection for the centers and
     stds, one for the per-pass flags, one for the combined columns."""
     d = df.withColumn(value, premask_nonpositive(value))
     tagged = [(str(i), cfg) for i, cfg in enumerate(passes, start=1)]
-    d, helpers = _with_band_stats(d, tagged, value, keys, ts, fast)
-    flags = {
-        f"flag_run{tag}": uncertainty_overlap_flag(
-            value, *band_columns(f"_ma{tag}", f"_sd{tag}", cfg), cfg
-        )
-        for tag, cfg in tagged
-    }
+    d, helpers = _with_band_stats(d, tagged, value, keys, ts)
+    flags: dict[str, Column] = {}
     if sensor_code is not None:
         flags["flag_sensor"] = sensor_error_flag(value, sensor_code)
-    d = d.withColumns(flags)
+    for tag, cfg in tagged:
+        top, bottom = band_columns(f"_ma{tag}", f"_sd{tag}", cfg)
+        flags[f"flag_run{tag}"] = uncertainty_overlap_flag(value, top, bottom, cfg)
+    d = d.withColumns({**flags, "qcband_top": top, "qcband_bottom": bottom})
     named = {name: F.col(name) for name in flags}
     glob = combine_flags_200(*named.values())
     flagged = glob == 200

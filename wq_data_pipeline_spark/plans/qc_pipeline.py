@@ -72,11 +72,6 @@ class QCConfig:
     var_tol: float = 1e-12
     isolated_group_points: int = 2  # '30min' at 15-min step
     isolated_gap_seconds: float = 3 * 3600.0  # '3h'
-    # 'pandas': skiplist rolling median (~38x faster at w=96) via
-    # applyInPandas — needs executor/driver memory sized for Arrow
-    # group batches (a 1 GB local driver OOMs around 1M rows);
-    # 'window': pure-JVM streaming frames, slower but memory-lean
-    z_engine: str = "pandas"
 
 
 def clean_stage(readings: DataFrame, cfg: QCConfig) -> DataFrame:
@@ -99,7 +94,7 @@ def flag_stage(cleaned: DataFrame, cfg: QCConfig) -> DataFrame:
     # oracle-gated catalog queries keep the pure-JVM window engine)
     d = D.flag_robust_z(
         d, "value", cfg.z_window_points, cfg.z_thresh, KEYS, "ts", out="f_z",
-        engine=cfg.z_engine,
+        engine="pandas",
     )
     flags = [F.col("f_z"), D.flag_missing("value")]
     if cfg.range_map:
@@ -217,9 +212,7 @@ def sentem_stage(flagged: DataFrame) -> DataFrame:
     from wq_data_pipeline_spark.operators.sentem import apply_sentemqc
 
     d = flagged.withColumn("_sv", F.col("clean"))
-    # fast=True: 960-point mean windows run O(n) prefix-sum and the
-    # 48-point median pass the pandas skiplist — the pipeline hot path
-    d = apply_sentemqc(d, value="_sv", keys=KEYS, ts="ts", fast=True)
+    d = apply_sentemqc(d, value="_sv", keys=KEYS, ts="ts")
     keep = [c for c in flagged.columns]
     return d.select(
         *keep,
@@ -229,33 +222,44 @@ def sentem_stage(flagged: DataFrame) -> DataFrame:
     )
 
 
-def widen(qc: DataFrame, variables: list[str] | None = None) -> DataFrame:
+def widen(
+    qc: DataFrame,
+    variables: list[str] | None = None,
+    fields: dict[str, str] | None = None,
+) -> DataFrame:
     """P16/J2: long -> wide pivot with the reference's naming
     convention ``{sanitized_var}__{suffix}``.
 
+    ``fields`` maps each long column to its wide suffix; the default is
+    the QC timeseries' ``raw``, ``clean``, ``accepted``, ``saqc_flag``
+    (+ the ``sm_*`` SentemQC columns when present), each kept under
+    its own name.
+
     ONE shuffle total: a single ``groupBy(station, ts).pivot(variable)``
-    aggregating ``first(struct(raw, clean, accepted, saqc_flag))``, then
-    a free (narrow) projection expanding each variable's struct into its
-    four suffix columns. The r1 form (one pivot per suffix + 3
-    full-outer joins) was 4 shuffles over the same key.
+    aggregating ``first(struct(*fields))``, then a free (narrow)
+    projection expanding each variable's struct into its suffix
+    columns. The r1 form (one pivot per suffix + 3 full-outer joins)
+    was 4 shuffles over the same key.
 
     Pass ``variables`` to keep the plan fully lazy; when omitted it is
     discovered with a distinct-collect on the (tiny) variable column.
     """
-    suffixes = ["raw", "clean", "accepted", "saqc_flag"] + [
-        s for s in ("sm_masked", "sm_flagged", "sm_flagreason") if s in qc.columns
-    ]
+    if fields is None:
+        names = ["raw", "clean", "accepted", "saqc_flag"] + [
+            s for s in ("sm_masked", "sm_flagged", "sm_flagreason") if s in qc.columns
+        ]
+        fields = {c: c for c in names}
     if variables is None:
         variables = [r[0] for r in qc.select("variable").distinct().collect()]
     packed = (
         qc.groupBy("station", "ts")
         .pivot("variable", variables)
-        .agg(F.first(F.struct(*suffixes)))
+        .agg(F.first(F.struct(*fields)))
     )
     cols = [F.col("station"), F.col("ts")]
     for v in variables:
-        for suf in suffixes:
-            cols.append(F.col(f"`{v}`.{suf}").alias(f"{sanitize_name(v)}__{suf}"))
+        for src, suffix in fields.items():
+            cols.append(F.col(f"`{v}`.{src}").alias(f"{sanitize_name(v)}__{suffix}"))
     return packed.select(*cols).orderBy("station", "ts")
 
 

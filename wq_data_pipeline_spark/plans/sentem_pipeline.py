@@ -2,8 +2,10 @@
 ``run_sentemqc_on_dataframe``, scripts/sentemqc.py:145-173): per-code
 5-pass band QC over the canonical long table, with calibration
 offsets, nitrate N<->NO3 conversion, sensor-error flags, pass-5 band
-export under the support mask, and the reference's wide export naming
-(``{var}__flag_global`` .. ``{var}__masked``).
+export, and the reference's wide export naming (``{var}__flag_global``
+.. ``{var}__masked``). The band passes themselves are
+:func:`operators.sentem.apply_sentemqc`, the same routine the QC
+pipeline's ``sentem_stage`` runs.
 
 Where the reference loops variables in Python over pandas Series,
 this plan builds one lazy sub-plan per mapped variable (window sizes
@@ -14,25 +16,19 @@ unions them — every series still computes distributed, partitioned by
 
 from __future__ import annotations
 
-import math
 from dataclasses import dataclass
 from typing import Sequence
 
 from pyspark.sql import DataFrame, functions as F
 
-from wq_data_pipeline_spark.functions.scalars import sanitize_name
 from wq_data_pipeline_spark.operators.sentem import (
     NITRATE_NO3_TO_N,
     BandPassCfg,
-    apply_band_pass,
-    band_support_mask,
-    combine_flags_200,
-    flag_reasons,
-    sensor_error_flag,
+    apply_sentemqc,
 )
+from wq_data_pipeline_spark.plans.qc_pipeline import widen
 
 KEYS = ["station", "variable"]
-MINFRAC = 0.3  # reference MINFRAC, scripts/sentemqc.py:24
 
 
 @dataclass(frozen=True)
@@ -102,7 +98,6 @@ def passes_from_code_config(cfg: dict) -> list[BandPassCfg]:
 def run_sentemqc_plan(
     readings: DataFrame,
     var_map: Sequence[SentemVar],
-    config: dict[int, dict] | None = None,
     start_time=None,
     end_time=None,
     ts: str = "ts",
@@ -113,47 +108,35 @@ def run_sentemqc_plan(
     obs_in, obs_raw, value_masked, flag_global, is_flagged,
     flag_reason, qcband_top, qcband_bottom, mask_pre.
 
+    ``start_time`` / ``end_time`` bound the series independently and
+    inclusively, like the reference's ``d.loc[start:end]``.
+
     Flags are computed on the N-converted series for nitrate
     variables; bands are exported back in original NO3 units;
     value_masked masks the PRE-conversion obs_raw — all per the
-    reference flow."""
-    config = config or SENTEMQC_CONFIG
+    reference flow. Pass-5 bands are NULL where fewer than 3 of the 5
+    points are finite (W15): the pass's own min-periods guard."""
     outs = []
     for v in var_map:
-        cfg = config[v.code]
         d = readings.filter(F.col("variable") == v.variable)
-        if start_time is not None and end_time is not None:
-            d = d.filter((F.col(ts) >= start_time) & (F.col(ts) <= end_time))
+        if start_time is not None:
+            d = d.filter(F.col(ts) >= start_time)
+        if end_time is not None:
+            d = d.filter(F.col(ts) <= end_time)
         d = d.withColumn("obs_in", F.col("value") + F.lit(v.calibration_offset))
         mask_pre = F.col("obs_in").isNull() | (F.col("obs_in") <= 0)
         d = d.withColumn("mask_pre", mask_pre)
         d = d.withColumn("obs_raw", F.when(~mask_pre, F.col("obs_in")))
         obs = F.col("obs_raw") * F.lit(NITRATE_NO3_TO_N) if v.is_nitrate else F.col("obs_raw")
         d = d.withColumn("_obs", obs)
-
-        named: dict[str, F.Column] = {"flag_sensor": sensor_error_flag("_obs", v.code)}
-        passes = passes_from_code_config(cfg)
-        for i, p in enumerate(passes, start=1):
-            d = apply_band_pass(
-                d, p, "_obs", KEYS, ts,
-                flag_col=f"flag_run{i}",
-                top_col="qcband_top" if i == 5 else None,
-                bottom_col="qcband_bottom" if i == 5 else None,
-                # wide windows -> scale engines (prefix-sum mean, pandas median)
-                fast=True,
+        passes = passes_from_code_config(SENTEMQC_CONFIG[v.code])
+        d = apply_sentemqc(d, "_obs", KEYS, ts, passes, sensor_code=v.code)
+        if v.is_nitrate:
+            back = F.lit(1.0 / NITRATE_NO3_TO_N)
+            d = d.withColumns(
+                {"qcband_top": F.col("qcband_top") * back,
+                 "qcband_bottom": F.col("qcband_bottom") * back}
             )
-            named[f"flag_run{i}"] = F.col(f"flag_run{i}")
-        # pass-5 bands only where the support reaches minp (W15)
-        minp5 = max(3, math.ceil(cfg["w5"] * MINFRAC))
-        sup = band_support_mask("_obs", cfg["w5"], minp5, KEYS, ts)
-        band_scale = F.lit(1.0 / NITRATE_NO3_TO_N) if v.is_nitrate else F.lit(1.0)
-        d = d.withColumn("qcband_top", F.when(sup, F.col("qcband_top") * band_scale))
-        d = d.withColumn("qcband_bottom", F.when(sup, F.col("qcband_bottom") * band_scale))
-
-        glob = combine_flags_200(*named.values())
-        d = d.withColumn("flag_global", glob)
-        d = d.withColumn("is_flagged", F.col("flag_global") == 200)
-        d = d.withColumn("flag_reason", flag_reasons(named))
         d = d.withColumn(
             "value_masked", F.when(F.col("is_flagged"), None).otherwise(F.col("obs_raw"))
         )
@@ -172,30 +155,21 @@ def run_sentemqc_plan(
     return result
 
 
+# long column -> wide suffix of the reference's EP3 export
+# (run_sentemqc_on_dataframe, scripts/sentemqc.py:159-164)
+SENTEMQC_WIDE_FIELDS = {
+    "flag_global": "flag_global",
+    "is_flagged": "is_flagged",
+    "flag_reason": "flag_reason",
+    "qcband_top": "qcband_top",
+    "qcband_bottom": "qcband_bottom",
+    "value_masked": "masked",
+}
+
+
 def sentemqc_wide(
     out_long: DataFrame, variables: list[str] | None = None
 ) -> DataFrame:
     """The reference's EP3 export columns ``{var}__flag_global`` ..
-    ``{var}__masked`` (run_sentemqc_on_dataframe, scripts/
-    sentemqc.py:159-164) — one struct pivot, one shuffle, like
-    :func:`qc_pipeline.widen`."""
-    fields = [
-        ("flag_global", "flag_global"),
-        ("is_flagged", "is_flagged"),
-        ("flag_reason", "flag_reason"),
-        ("qcband_top", "qcband_top"),
-        ("qcband_bottom", "qcband_bottom"),
-        ("value_masked", "masked"),
-    ]
-    if variables is None:
-        variables = [r[0] for r in out_long.select("variable").distinct().collect()]
-    packed = (
-        out_long.groupBy("station", "ts")
-        .pivot("variable", variables)
-        .agg(F.first(F.struct(*[src for src, _ in fields])))
-    )
-    cols = [F.col("station"), F.col("ts")]
-    for v in variables:
-        for src, suffix in fields:
-            cols.append(F.col(f"`{v}`.{src}").alias(f"{sanitize_name(v)}__{suffix}"))
-    return packed.select(*cols).orderBy("station", "ts")
+    ``{var}__masked``: :func:`qc_pipeline.widen` with the EP3 fields."""
+    return widen(out_long, variables, SENTEMQC_WIDE_FIELDS)

@@ -154,12 +154,12 @@ def _readings(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_stream_tumbling_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """streaming.tumbling_rollup (W17 stream analog) run in batch:
-    per-series hourly window stats. Same plan a watermark + append-mode
-    sink would execute incrementally."""
-    from wq_data_pipeline_spark.streaming.stream_qc import tumbling_rollup
+    """streaming.sliding_rollup with slide == window (the tumbling W17
+    stream analog) run in batch: per-series hourly window stats. Same
+    plan a watermark + append-mode sink would execute incrementally."""
+    from wq_data_pipeline_spark.streaming.stream_qc import sliding_rollup
 
-    out = tumbling_rollup(_readings(spark, sf_dir), window=_TUMBLE)
+    out = sliding_rollup(_readings(spark, sf_dir), _TUMBLE, _TUMBLE)
     return out.select(
         "station",
         "variable",

@@ -43,46 +43,19 @@ def read_readings_stream(
     )
 
 
-def tumbling_rollup(
-    stream: DataFrame,
-    window: str = "1 hour",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Streaming W17 analog: per (station, variable, window) rollup
-    with late-data handling. Median is not incrementally computable —
-    streaming emits mean/min/max/count (exact median stays batch)."""
-    return (
-        stream.withWatermark("ts", watermark)
-        .groupBy("station", "variable", F.window("ts", window).alias("w"))
-        .agg(
-            F.count("value").alias("n"),
-            F.avg("value").alias("mean_value"),
-            F.min("value").alias("min_value"),
-            F.max("value").alias("max_value"),
-        )
-        .select(
-            "station",
-            "variable",
-            F.col("w.start").alias("window_start"),
-            F.col("w.end").alias("window_end"),
-            "n",
-            "mean_value",
-            "min_value",
-            "max_value",
-        )
-    )
-
-
 def sliding_rollup(
     stream: DataFrame,
     window: str = "1 hour",
     slide: str = "30 minutes",
     watermark: str = "2 hours",
 ) -> DataFrame:
-    """Streaming sliding-window rollup (stream twin of the batch
-    ``sliding_rollup`` query): each row lands in window/slide
-    overlapping windows; append mode emits each window once its end
-    passes the watermark."""
+    """Streaming W17 analog: per (station, variable, window) rollup
+    with late-data handling (stream twin of the batch
+    ``sliding_rollup`` query). Each row lands in window/slide
+    overlapping windows; ``slide == window`` is the tumbling rollup.
+    Append mode emits each window once its end passes the watermark.
+    Median is not incrementally computable — streaming emits
+    mean/min/max/count (exact median stays batch)."""
     return (
         stream.withWatermark("ts", watermark)
         .groupBy("station", "variable", F.window("ts", window, slide).alias("w"))
