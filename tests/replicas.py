@@ -82,6 +82,45 @@ def _py_band_sigs(q, bands, planes):
     return out
 
 
+def _py_kmeans(rows, k, iters):
+    """Pure-Python Lloyd reference for similarity.kmeans_centroids.
+    rows: list of (id, vector). Seeds: the k rows with the smallest
+    md5(str(id)), ties by input position, numbered in that order.
+    Each round: argmax of the left-fold dot against the L2-normalized
+    centroids (ties to the lowest centroid id), then exact cluster
+    means (math.fsum: exact for integer-valued vectors); an empty
+    cluster keeps its previous centroid. Returns the k centroids."""
+
+    def md5(i):
+        return hashlib.md5(str(i).encode()).hexdigest()
+
+    order = sorted(range(len(rows)), key=lambda j: (md5(rows[j][0]), j))
+    cents = [[float(x) for x in rows[j][1]] for j in order[:k]]
+    for _ in range(iters):
+        normed = []
+        for c in cents:
+            sq = 0.0
+            for x in c:
+                sq += x * x
+            n = math.sqrt(sq)
+            normed.append([x / n if n > 0 else x * 0.0 for x in c])
+        members = [[] for _ in cents]
+        for _, v in rows:
+            best, best_cid = None, None
+            for cid, c in enumerate(normed):
+                s = 0.0
+                for x, h in zip(v, c):
+                    s += float(x) * h
+                if best is None or s > best:
+                    best, best_cid = s, cid
+            members[best_cid].append(v)
+        cents = [
+            [math.fsum(col) / len(vs) for col in zip(*vs)] if vs else c
+            for c, vs in zip(cents, members)
+        ]
+    return cents
+
+
 def _py_cos(a, b):
     d = sum(x * y for x, y in zip(a, b))
     return d / (

@@ -429,16 +429,15 @@ CONSTRUCTION_JOB_CAPS = {
     # skeleton checkpoint
     "pagerank_purchases": 12,
     "dedup_clusters": 40,  # LSH chain + CC label-propagation rounds
-    "embed_kmeans_ivf": 20,  # Lloyd rounds (centroid-shift early stop)
+    "embed_kmeans_ivf": 20,  # stats + seeds + 4 jobs per Lloyd round (measured 16)
     "sequence_pack": 8,  # distributed prefix sum: per-partition bases
     "pack_assignments": 8,
     "token_budget_fill": 8,  # distributed prefix sum: per-partition bases
-    # r8 size-gated trainer ("auto" -> exact/broadcast at bench k;
-    # banded only past k*dim > 1e6): count + Lloyd-round centroid
-    # localCheckpoints + assignment checkpoint. The final-assignment
-    # joins carry no broadcast hints (AQE decides), so AQE stage jobs
-    # inflate the count vs the r6 hinted form (measured 45-46 / 50-51
-    # across sf0.01/sf0.1 on an idle machine).
+    # count + the Lloyd trainer (stats + seeds + 4 jobs per round)
+    # + assignment checkpoint. The final-assignment joins carry no
+    # broadcast hints (AQE decides), so AQE stage jobs inflate the
+    # count (measured cold at sf0.01: 25 / 27; 38 / 41 with the
+    # earlier crossJoin + max_by trainer rounds).
     "semdedup_trained": 50,
     "semdedup_ann": 55,
     "bpe_train": 24,  # vocab build + per-round top-1 + sparse checkpoints

@@ -131,61 +131,6 @@ def _clustered_vectors(spark, n=128, dim=16, k=2, spread=2):
     return spark.createDataFrame(rows)
 
 
-def test_banded_round_has_no_broadcast_when_autobroadcast_off(spark):
-    """The banded Lloyd round must not FORCE the k-row centroid table
-    onto every executor: with Spark's size-based auto-broadcast
-    disabled, its plan contains zero BroadcastExchange nodes (the
-    exact mode, by contrast, hints broadcast unconditionally)."""
-    from wq_data_pipeline_spark.operators.similarity import (
-        _banded_round_ids,
-        auto_planes_per_band,
-        banded_signatures,
-    )
-
-    emb = _clustered_vectors(spark, n=64, dim=8, k=2)
-    cent = spark.createDataFrame(
-        [
-            Row(centroid_id=0, embedding=[1000.0, -1000.0] * 4),
-            Row(centroid_id=1, embedding=[2000.0, -2000.0] * 4),
-        ]
-    )
-    planes = auto_planes_per_band(2)
-    vsig = banded_signatures(emb, "vec_id", "embedding", 8, planes, 8)
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        ids = _banded_round_ids(
-            emb, cent, vsig, "vec_id", "embedding", 8, planes, 8
-        )
-        plan = ids._jdf.queryExecution().executedPlan().toString()
-        assert "BroadcastExchange" not in plan, plan
-        assert ids.count() > 0
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-
-
-def test_banded_trainer_matches_exact_on_tight_clusters(spark):
-    """On well-separated clusters the banded candidate set always
-    contains the true nearest centroid, so banded and exact training
-    converge to identical centroids (exact integer means)."""
-    from wq_data_pipeline_spark.operators.similarity import kmeans_centroids
-
-    emb = _clustered_vectors(spark, n=128, dim=16, k=2)
-    exact = kmeans_centroids(
-        emb, k=2, iters=3, vec_col="embedding", literal_centroids_max=0
-    ).collect()
-    banded = kmeans_centroids(
-        emb, k=2, iters=3, vec_col="embedding", assignment="banded"
-    ).collect()
-    e = {r["centroid_id"]: r["embedding"] for r in exact}
-    b = {r["centroid_id"]: r["embedding"] for r in banded}
-    assert e.keys() == b.keys()
-    for cid in e:
-        assert all(
-            abs(x - y) < 1e-9 for x, y in zip(e[cid], b[cid])
-        ), f"centroid {cid} diverged"
-
-
 def test_auto_planes_law_and_candidate_coverage(spark):
     """planes = max(1, ceil(log2(k))) — and under that law the banded
     candidate join keeps (a) near-total coverage on a tight-cluster
@@ -282,19 +227,17 @@ def test_seasonal_naive_skips_gap_hours(spark):
 
 
 def test_sql_built_signatures_match_column_form(spark):
-    """r13: banded_signatures / rp_lsh_signature assemble their plane
-    folds as ONE parsed SQL expression (the Column-by-Column form was
-    3-5 s of py4j plan building per call). The parsed tree must be
-    operation-identical — every band/sig bit equal on adversarial
-    values: negatives, exact .5 rounding boundaries, zeros (sign test
-    is strict >0), and magnitudes where double sums are exact."""
-    from pyspark.sql import Row
-    from pyspark.sql import functions as F
-
+    """banded_signatures emits the whole bands x planes signature
+    array as ONE parsed SQL expression. Every band/sig bit must equal
+    a from-scratch Python sign(round(v) · h) over the
+    hyperplane_components planes, on adversarial values: negatives,
+    exact .5 rounding boundaries (half away from zero), zeros (the
+    sign test is strict > 0), and magnitudes where double sums are
+    exact."""
+    from tests.replicas import _round_half_away
     from wq_data_pipeline_spark.operators.similarity import (
         banded_signatures,
         hyperplane_components,
-        rp_lsh_signature,
     )
 
     rows = [
@@ -304,26 +247,23 @@ def test_sql_built_signatures_match_column_form(spark):
         Row(vec_id=4, embedding=[float(i) for i in range(8)]),
     ]
     emb = spark.createDataFrame(rows)
-    new = banded_signatures(emb, "vec_id", "embedding", 8, 4, 8)
-    # legacy Column assembly (what banded_signatures used to emit)
-    vqc = F.transform(F.col("embedding"), lambda x: F.round(x).cast("long"))
-    sigs = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                rp_lsh_signature(vqc, 4, plane_offset=b * 4, dim=None).alias("sig"),
-            )
-            for b in range(8)
-        ]
-    )
-    old = emb.select(F.col("vec_id"), F.explode(sigs).alias("bs")).select(
-        "vec_id", F.col("bs.band").alias("band"), F.col("bs.sig").alias("sig")
-    )
-    assert sorted(map(tuple, new.collect())) == sorted(map(tuple, old.collect()))
-    # the str+dim fast path of rp_lsh_signature matches its Column path
-    q = emb.select("vec_id", vqc.alias("q"))
-    fast = q.select("vec_id", rp_lsh_signature("q", 6, 3, dim=8).alias("s"))
-    slow = q.select("vec_id", rp_lsh_signature(F.col("q"), 6, 3, dim=8).alias("s"))
-    assert sorted(map(tuple, fast.collect())) == sorted(map(tuple, slow.collect()))
-    # sanity: the plane components themselves are deterministic md5 signs
+    bands, planes, dim = 8, 4, 8
+    sigs = banded_signatures(emb, "vec_id", "embedding", bands, planes, dim)
+    got = sorted(map(tuple, sigs.collect()))
+
+    want = []
+    for r in rows:
+        v = [_round_half_away(x) for x in r.embedding]
+        for b in range(bands):
+            sig = 0
+            for j in range(planes):
+                h = hyperplane_components(b * planes + j, dim)
+                if sum(x * c for x, c in zip(v, h)) > 0:
+                    sig |= 1 << j
+            want.append((r.vec_id, b, sig))
+    assert got == sorted(want)
+    # the all-zero vector signs 0 on every plane; the others exercise
+    # both bit values
+    assert {s for i, _, s in got if i == 2} == {0}
+    assert {s for _, _, s in got} != {0}
     assert set(hyperplane_components(0, 8)) <= {1.0, -1.0}

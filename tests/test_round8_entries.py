@@ -1,132 +1,7 @@
-"""Round-8 pins: the size-gated k-means trainer (VERDICT r7 #1).
-
-The `assignment="auto"` gate resolves to the exact/broadcast Lloyd
-rounds while k*dim fits the broadcast budget and to the banded LSH
-rounds only past it. The two semdedup entries now train through the
-gate (exact at every oracle/bench scale), so the banded SQL replay
-(`_kmeans_banded_prefix_sql`) is no longer exercised by the entry
-oracles — the parity test here keeps it validated against the engine's
-banded trainer directly.
-"""
-
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
-
-SF0001 = "/root/testdata/sf0.001"
-
-
-def test_auto_assignment_gate_is_pure_and_sized():
-    from wq_data_pipeline_spark.operators.similarity import (
-        _resolve_auto_assignment,
-    )
-
-    # exact while k*dim fits the broadcast budget, banded past it
-    assert _resolve_auto_assignment(32, 64, 1_000_000) == "exact"
-    assert _resolve_auto_assignment(15_625, 64, 1_000_000) == "exact"
-    assert _resolve_auto_assignment(15_626, 64, 1_000_000) == "banded"
-    assert _resolve_auto_assignment(2_000_000, 1024, 1_000_000) == "banded"
-
-
-def test_auto_mode_matches_exact_below_gate(spark):
-    """Below the gate, auto IS the exact mode — bit-identical
-    centroids on integer-quantized vectors (the property the entry
-    oracles' exact-prefix replay relies on)."""
-    from wq_data_pipeline_spark.operators.similarity import kmeans_centroids
-    from wq_data_pipeline_spark.plans.similarity import _quantized
-    from wq_data_pipeline_spark.sources.testdata import load_table
-
-    emb = (
-        load_table(spark, SF0001, "embeddings")
-        .select("vec_id", _quantized("embedding").alias("q"))
-        .limit(120)
-    )
-    auto = kmeans_centroids(
-        emb, k=4, iters=2, vec_col="q", assignment="auto",
-        literal_centroids_max=0,
-    ).collect()
-    exact = kmeans_centroids(
-        emb, k=4, iters=2, vec_col="q", assignment="exact",
-        literal_centroids_max=0,
-    ).collect()
-    a = {r["centroid_id"]: list(r["q"]) for r in auto}
-    e = {r["centroid_id"]: list(r["q"]) for r in exact}
-    assert a == e
-
-
-def test_auto_mode_resolves_banded_past_gate(spark):
-    """Past the gate, auto routes to the banded trainer: the Lloyd
-    round plan must carry the banded candidate join (a join on the
-    signature columns) rather than the exact crossJoin."""
-    from wq_data_pipeline_spark.operators.similarity import kmeans_centroids
-    from wq_data_pipeline_spark.plans.similarity import _quantized
-    from wq_data_pipeline_spark.sources.testdata import load_table
-
-    emb = (
-        load_table(spark, SF0001, "embeddings")
-        .select("vec_id", _quantized("embedding").alias("q"))
-        .limit(64)
-    )
-    # gate forced tiny so the 64-row corpus trips it
-    banded_via_auto = kmeans_centroids(
-        emb, k=2, iters=1, vec_col="q", assignment="auto",
-        banded_min_kdim=1,
-    ).collect()
-    banded = kmeans_centroids(
-        emb, k=2, iters=1, vec_col="q", assignment="banded"
-    ).collect()
-    a = {r["centroid_id"]: list(r["q"]) for r in banded_via_auto}
-    b = {r["centroid_id"]: list(r["q"]) for r in banded}
-    assert a == b
-
-
-def test_banded_prefix_sql_still_matches_engine(spark):
-    """The banded DuckDB replay (no longer behind any entry oracle)
-    stays bit-exact against the engine: banded trainer + exact final
-    assignment == `SELECT vec_id, bucket FROM av` of
-    `_kmeans_banded_prefix_sql`."""
-    import duckdb
-
-    from tests.oracle_utils import duck_con
-    from wq_data_pipeline_spark.operators.similarity import (
-        cosine,
-        kmeans_centroids,
-    )
-    from wq_data_pipeline_spark.plans.similarity import (
-        _kmeans_banded_prefix_sql,
-        _quantized,
-    )
-    from wq_data_pipeline_spark.sources.testdata import load_table
-
-    k, iters = 8, 3  # iters must equal _KM_ITERS (the prefix unrolls it)
-    emb = (
-        load_table(spark, SF0001, "embeddings")
-        .select("vec_id", _quantized("embedding").alias("q"))
-        .repartition(8)
-    )
-    cent = kmeans_centroids(
-        emb, k=k, iters=iters, vec_col="q", assignment="banded"
-    )
-    c = cent.select(F.col("centroid_id").alias("_cid"), F.col("q").alias("_cv"))
-    got = {
-        r["vec_id"]: r["bucket"]
-        for r in (
-            emb.crossJoin(F.broadcast(c))
-            .select("vec_id", "_cid", cosine("q", "_cv").alias("_cs"))
-            .groupBy("vec_id")
-            .agg(
-                F.max_by(
-                    F.col("_cid"), F.struct(F.col("_cs"), -F.col("_cid"))
-                ).alias("bucket")
-            )
-            .collect()
-        )
-    }
-    con = duck_con(SF0001)
-    sql = _kmeans_banded_prefix_sql(str(k)) + "\nSELECT vec_id, bucket FROM av"
-    want = dict(con.execute(sql).fetchall())
-    assert got == want
 
 
 def test_des_kernel_composition_invariants():

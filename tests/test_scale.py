@@ -157,7 +157,7 @@ def test_lsh_near_dup_subset_and_recall(spark, sf_dir):
 
     emb = load_table(spark, sf_dir, "embeddings")
     exact = {(r.id_a, r.id_b) for r in exact_near_dup_pairs(emb, 0.45).collect()}
-    got = {(r.id_a, r.id_b) for r in near_dup_pairs(emb, 0.45, n_bands=16).collect()}
+    got = {(r.id_a, r.id_b) for r in near_dup_pairs(emb, 0.45, n_bands=16, dim=64).collect()}
     assert exact, "threshold produced a degenerate empty ground truth"
     assert got <= exact
     assert got == exact  # 100% recall at 16 bands on this corpus
@@ -248,29 +248,6 @@ def test_kmeans_descends_and_ivf_recall(spark, sf_dir):
     }
     recall = len(exact & approx) / len(exact)
     assert recall >= 0.5, f"IVF recall {recall:.2f} too low with trained centroids"
-
-
-def test_kmeans_broadcast_assign_matches_literal_form(spark, sf_dir):
-    """Above the literal_centroids_max threshold kmeans_centroids must
-    switch to the broadcast-join argmax assignment and produce the
-    same centroids up to floating-point accumulation noise (the
-    cluster-mean aggregation merges partial double sums in a
-    partitioning-dependent order, so bit-exactness is NOT guaranteed
-    across the two plan shapes) — the plan-size guard for production
-    k×dim (VERDICT r3 nit #2)."""
-    from wq_data_pipeline_spark.operators.similarity import kmeans_centroids
-    from wq_data_pipeline_spark.sources.testdata import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings").limit(400)
-    lit_form = kmeans_centroids(emb, k=6, iters=2)
-    bc_form = kmeans_centroids(emb, k=6, iters=2, literal_centroids_max=0)
-    a = {r.centroid_id: list(r.embedding) for r in lit_form.collect()}
-    b = {r.centroid_id: list(r.embedding) for r in bc_form.collect()}
-    assert a.keys() == b.keys()
-    for cid in a:
-        assert a[cid] == pytest.approx(b[cid], rel=1e-9, abs=1e-9), (
-            f"centroid {cid} diverged beyond accumulation noise"
-        )
 
 
 def test_chunk_documents_invariants(spark, sf_dir):
@@ -780,26 +757,3 @@ def test_minhash_guard_precondition_exact_dedup_upstream(spark):
     # composition: every member of the oversized identical group maps
     # through its canonical to ONE cluster — the group did cluster
     assert len({cluster[canon[i]] for i in range(n_hot)}) == 1
-
-
-def test_kmeans_distributed_shift_tol_early_stop(spark, sf_dir):
-    """Distributed-mode convergence probe (r6 review fix: probe reads
-    the CHECKPOINTED round, not a re-executed plan): a huge shift_tol
-    stops after round 1, matching an iters=1 run exactly; tol=0 runs
-    all rounds and matches the default fixed-iter result."""
-    from wq_data_pipeline_spark.operators.similarity import kmeans_centroids
-    from wq_data_pipeline_spark.plans.similarity import _quantized
-    from wq_data_pipeline_spark.sources.testdata import load_table
-
-    emb = (
-        load_table(spark, sf_dir, "embeddings")
-        .select("vec_id", _quantized("embedding").alias("q"))
-        .limit(120)
-    )
-    early = kmeans_centroids(
-        emb, k=4, iters=3, vec_col="q", literal_centroids_max=0, shift_tol=1e18
-    )
-    one = kmeans_centroids(emb, k=4, iters=1, vec_col="q", literal_centroids_max=0)
-    a = {r.centroid_id: list(r.q) for r in early.collect()}
-    b = {r.centroid_id: list(r.q) for r in one.collect()}
-    assert a == b

@@ -4,14 +4,19 @@
   ``F.zip_with`` + ``F.aggregate`` (a sequential left fold — the same
   association order every engine uses for list reduction, and no
   Python UDF). Query set broadcast; one pass over the corpus.
-- LSH-bucketed ANN: the 100-TB path. Random-hyperplane signatures
-  computed from deterministic pseudo-vectors (hash-derived), bucket
-  join instead of cross join. Recall tunable by bands/bits.
+- LSH-bucketed ANN: the 100-TB path. Random-hyperplane band
+  signatures (md5-derived ±1 planes baked in as literals,
+  :func:`band_sig_array`), bucket join instead of cross join. Recall
+  tunable by bands/bits.
+- Lloyd k-means (:func:`kmeans_centroids`) for IVF / SemDeDup coarse
+  centroids.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
+
+from wq_data_pipeline_spark.operators.pinning import pin
 
 
 def dot(a: str | Column, b: str | Column) -> Column:
@@ -61,23 +66,12 @@ def brute_force_topk(
     )
 
 
-def _pseudo_hyperplane_component(dim_idx: Column, plane: int) -> Column:
-    """Deterministic ±1 hyperplane component from a hash — portable
-    and seedless (no RNG; resume-safe)."""
-    return F.when(
-        F.conv(F.substring(F.md5(F.concat_ws(":", F.lit(plane), dim_idx)), 1, 1), 16, 10)
-        .cast("int")
-        % 2
-        == 0,
-        F.lit(1.0),
-    ).otherwise(F.lit(-1.0))
-
-
 def hyperplane_components(plane: int, dim: int) -> list[float]:
-    """Driver-side precompute of the ±1 hyperplane: identical digests
-    to the JVM path (md5 is md5), but evaluated ONCE instead of per
-    (row, plane, dim) — the components are data-independent
-    constants."""
+    """The ±1 components of random hyperplane ``plane``: component i
+    is +1 when the first hex digit of md5('<plane>:<i>') is even.
+    Seedless and portable (the oracles replay the same digests), and
+    evaluated once on the driver — the components are data-independent
+    constants baked into the plan as literals."""
     import hashlib
 
     return [
@@ -90,19 +84,14 @@ def hyperplane_components(plane: int, dim: int) -> list[float]:
 
 def _rp_sig_sql(vec_sql: str, n_planes: int, plane_offset: int, dim: int) -> str:
     """SQL text of the ``n_planes``-bit signature over the vector
-    expression ``vec_sql`` — the same Catalyst operations
-    :func:`rp_lsh_signature` used to assemble Column-by-Column
-    (zip_with × literal ±1 plane, left-fold aggregate seeded with a
-    double 0.0, CASE per bit), emitted as ONE string for ONE
-    ``F.expr`` parse. Why (r13, guide §1.2 per-task → per-BUILD
-    work): assembling 8 bands × planes folds through the Python
-    Column API is thousands of py4j round-trips — measured 3-5 s of
-    driver-side plan construction per banded_signatures call, the
-    single largest cost of the semdedup_ann/embed entries at bench
-    scale; the parsed form builds in <0.1 s and produces the same
-    expression tree, so every signature bit is unchanged. 0.0D/1.0D
-    suffixes keep the literals DOUBLE (a bare 0.0 parses as
-    DECIMAL)."""
+    expression ``vec_sql``: bit p = sign(v · h) for the literal ±1
+    plane h = hyperplane ``plane_offset + p`` (zip_with, left-fold
+    aggregate seeded with a double 0.0, CASE per bit). Emitted as
+    text so a whole signature array is ONE ``F.expr`` parse —
+    assembling 8 bands × planes folds through the Python Column API
+    is thousands of py4j round-trips (measured 3-5 s of driver-side
+    plan construction per call). 0.0D/1.0D suffixes keep the literals
+    DOUBLE (a bare 0.0 parses as DECIMAL)."""
     terms = []
     for p in range(n_planes):
         comps = hyperplane_components(plane_offset + p, dim)
@@ -115,44 +104,19 @@ def _rp_sig_sql(vec_sql: str, n_planes: int, plane_offset: int, dim: int) -> str
     return "(0 + " + " + ".join(terms) + ")"
 
 
-def rp_lsh_signature(
-    vec_col: str | Column,
-    n_planes: int = 4,
-    plane_offset: int = 0,
-    dim: int | None = None,
-) -> Column:
-    """Random-hyperplane LSH signature: bit p = sign(v · h_p) with
-    h_p ∈ {±1}^d derived from md5. ``plane_offset`` selects an
-    independent plane set per band.
-
-    When ``dim`` (the embedding width) is known, the planes are baked
-    in as literal arrays — the md5 work moves to the driver, executors
-    do pure multiply-adds — and for a plain column name the whole
-    signature is built via :func:`_rp_sig_sql` (one expr parse, not
-    thousands of py4j calls; bit-identical tree). Without ``dim`` the
-    components are derived per element in the JVM (same digests, any
-    width)."""
-    if isinstance(vec_col, str) and dim is not None:
-        return F.expr(_rp_sig_sql(f"`{vec_col}`", n_planes, plane_offset, dim))
-    v = F.col(vec_col) if isinstance(vec_col, str) else vec_col
-    sig = F.lit(0)
-    for p in range(n_planes):
-        if dim is not None:
-            plane = F.array(
-                *[F.lit(c) for c in hyperplane_components(plane_offset + p, dim)]
-            )
-            comp = F.zip_with(v, plane, lambda x, h: x.cast("double") * h)
-        else:
-            idx = F.sequence(F.lit(0), F.size(v) - 1)
-            comp = F.zip_with(
-                v,
-                idx,
-                lambda x, i: x.cast("double")
-                * _pseudo_hyperplane_component(i, plane_offset + p),
-            )
-        s = F.aggregate(comp, F.lit(0.0), lambda a, x: a + x)
-        sig = sig + F.when(s > 0, F.lit(1 << p)).otherwise(0)
-    return sig
+def band_sig_array(vec_sql: str, bands: int, planes: int, dim: int) -> Column:
+    """``array(struct(band, sig))`` of random-hyperplane band
+    signatures over the ``dim``-wide vector SQL expression
+    ``vec_sql``: band b's ``planes`` bits use the global plane indices
+    [b*planes, (b+1)*planes). Pure per-row column algebra, one
+    ``F.expr`` parse (see :func:`_rp_sig_sql`); explode it to get
+    (band, sig) rows for a band join."""
+    structs = ",".join(
+        f"named_struct('band', {b}, 'sig', "
+        f"{_rp_sig_sql(vec_sql, planes, b * planes, dim)})"
+        for b in range(bands)
+    )
+    return F.expr(f"array({structs})")
 
 
 def auto_planes_per_band(k: int) -> int:
@@ -173,41 +137,15 @@ def banded_signatures(
     planes: int,
     dim: int,
 ) -> DataFrame:
-    """(id, band, sig) rows: one random-hyperplane band signature per
-    (row, band), planes bits each, plane set b uses the global plane
-    indices [b*planes, (b+1)*planes). Sign dots are taken over the
+    """(id, band, sig) rows, id taken from the first column of ``df``:
+    the :func:`band_sig_array` signatures of the
     HALF-AWAY-FROM-ZERO-rounded vector (integers), so every bit is
     bit-exact across engines (the q_semdedup_ann portability rule).
-    Pure per-row column algebra — no shuffle. The whole
-    bands × planes signature array is emitted as ONE ``F.expr`` parse
-    (see :func:`_rp_sig_sql` — the Column-by-Column assembly measured
-    3-5 s of py4j plan building per call at 8 bands; the parsed tree
-    is operation-identical, so every bit matches)."""
-    first = df.columns[0]
-    if dim is None:  # width unknown: per-element JVM digests (legacy)
-        vqc = F.transform(F.col(vec_col), lambda x: F.round(x).cast("long"))
-        sigs = F.array(
-            *[
-                F.struct(
-                    F.lit(b).alias("band"),
-                    rp_lsh_signature(
-                        vqc, planes, plane_offset=b * planes, dim=None
-                    ).alias("sig"),
-                )
-                for b in range(bands)
-            ]
-        )
-        return df.select(
-            F.col(first).alias(id_out), F.explode(sigs).alias("bs")
-        ).select(id_out, F.col("bs.band").alias("band"), F.col("bs.sig").alias("sig"))
+    Pure per-row column algebra — no shuffle."""
     vq = f"transform(`{vec_col}`, x -> CAST(round(x) AS BIGINT))"
-    structs = ",".join(
-        f"named_struct('band', {b}, 'sig', "
-        f"{_rp_sig_sql(vq, planes, b * planes, dim)})"
-        for b in range(bands)
-    )
     return df.select(
-        F.col(first).alias(id_out), F.explode(F.expr(f"array({structs})")).alias("bs")
+        F.col(df.columns[0]).alias(id_out),
+        F.explode(band_sig_array(vq, bands, planes, dim)).alias("bs"),
     ).select(id_out, F.col("bs.band").alias("band"), F.col("bs.sig").alias("sig"))
 
 
@@ -280,188 +218,108 @@ def kmeans_centroids(
     iters: int = 5,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    literal_centroids_max: int = 65536,
-    shift_tol: float = 0.0,
-    assignment: str = "exact",
-    banded_min_kdim: int = 1_000_000,
 ) -> DataFrame:
-    """Lloyd k-means trainer for IVF coarse centroids.
+    """Lloyd k-means trainer for IVF / SemDeDup coarse centroids over
+    equal-width vectors; returns a (centroid_id, ``vec_col``)
+    DataFrame ready for :func:`ivf_topk` (an empty one, same schema,
+    for an empty corpus).
 
     Deterministic seedless init: the k corpus vectors with the
     smallest md5(id) (uniform pseudo-random, engine/partition
-    independent). Each round assigns every vector to its nearest
-    centroid MAP-SIDE: the driver holds the k×dim centroids anyway
-    (it collected them), so they are baked into the plan as
-    L2-normalized literal arrays and the argmax over cosine is a
-    per-row ``transform`` + ``array_position`` — no crossJoin, no
-    per-round window shuffle (the r2 crossJoin + row_number form
-    shuffled corpus×k scored rows every round; at 6 jobs that was
-    most of the query's wall time). argmax over dot with normalized
-    centroids == argmax over cosine, ties to the lowest centroid id
-    (array_position returns the first hit). New centroids come from
-    one posexplode + groupBy (the round's only shuffle) and a k×dim
-    COLLECT — the standard Spark k-means driver round-trip (what
-    MLlib does); plans stay flat, no checkpoint needed. Empty
-    clusters keep their previous centroid. The corpus projection is
-    localCheckpoint'ed once so no round re-reads the source.
+    independent; ties by input row order), numbered 0..k-1 in md5 order.
+    Each round assigns every vector to the centroid with the highest
+    dot against the L2-normalized centroids (== highest cosine), ties
+    to the lowest centroid id, then replaces each centroid with its
+    cluster's mean; an empty cluster keeps its previous centroid.
 
-    The literal form only pays while the plan stays small: at
-    production IVF scale (k≈4096, dim≈1024 → 4M literals per round)
-    the PLAN becomes the bottleneck. Above ``literal_centroids_max``
-    k×dim cells the assignment auto-switches to a broadcast-join
-    argmax (crossJoin(broadcast(centroids)) + max_by) whose centroid
-    state stays a DATAFRAME end-to-end — seeds, per-round
-    normalization, the means agg, and the empty-cluster carry-over
-    are all Column algebra over a k-row frame that is
-    localCheckpoint'ed (executor block store) per round and broadcast
-    straight into the next round's join. The driver never holds the
-    k×dim floats, so k ∝ n (the SemDeDup sizing, k = n/64) cannot
-    hit a driver-memory wall: the r5 form rebuilt every centroid as
-    Python lists each Lloyd round (~8 GB at n=1e9, dim=64), which is
-    exactly the bottleneck VERDICT r5 #2 flags. Same per-vector
-    arithmetic as the literal mode (left-to-right fold for norm and
-    dot — IEEE-identical to the driver-side ``math.sqrt(sum(...))``
-    it replaces) and the same lowest-centroid-id tie rule; the
-    cluster-mean aggregation merges partial double sums in a
-    partitioning-dependent order, so the two modes agree bit-exactly
-    on integer-quantized vectors (exact sums) and to 1e-9 relative
-    otherwise. ``id_col`` must be unique: the broadcast mode's
-    groupBy would silently merge duplicate ids. This mirrors
-    ``connected_components``' broadcast_edges_max size switch.
-
-    ``assignment="banded"`` selects the k∝n scale mode: per-round
-    LSH-banded candidate assignment with no broadcast hint anywhere
-    in the Lloyd loop (see :func:`_kmeans_distributed`); results are
-    approximate in the rounds (exactly mirrored by the banded
-    oracle), so entries must pick one mode and keep it.
-
-    ``assignment="auto"`` SIZE-GATES the two (VERDICT r7 #1): the
-    exact/broadcast round is strictly cheaper whenever the k×dim
-    centroid table fits the broadcast budget — banded pays per-round
-    centroid re-signing + a candidate join + singleton fallback, ~5
-    shuffle stages/round vs exact's 1, measured 3–4× slower at every
-    bench scale — so auto resolves to exact while
-    ``k*dim <= banded_min_kdim`` (1M doubles = 8 MB, under the 10 MB
-    ``spark.sql.autoBroadcastJoinThreshold`` default) and to banded
-    only past it (k ∝ n at production scale, where per-round k×dim
-    broadcast is the wall the banded mode exists to remove). Callers
-    whose oracle replays the exact rounds must note the crossover:
-    past the gate the banded rounds diverge from an exact replay.
-
-    Returns a (centroid_id, ``vec_col``) DataFrame ready for
-    :func:`ivf_topk`.
+    Centroid state is a k-row DataFrame, localCheckpoint'ed per round;
+    the driver never holds the k×dim floats. Each round gathers the
+    normalized centroids into one array and broadcasts it, every row
+    takes its argmax in place (``transform`` + ``array_position`` of
+    ``array_max`` — no n×k scored rows, no grouping by id, so
+    duplicate ids are assigned row by row), and one groupBy on the
+    centroid id computes the per-position means and, from the
+    previous centroids unioned in, the carry-over: four Spark jobs
+    per round. Per-round cost is the k×dim broadcast per executor. Norms and dots are left-to-right folds; the means merge
+    partial double sums in a partitioning-dependent order, so results
+    are bit-exact on integer-valued vectors (exact sums — what the
+    catalog oracles replay) and agree to ~1e-9 relative otherwise.
     """
-    import math
-
-    spark = corpus.sparkSession
     from wq_data_pipeline_spark.operators.scale import spread_small_scan
 
-    base = spread_small_scan(
-        corpus.select(id_col, F.col(vec_col).cast("array<double>").alias(vec_col))
+    spark = corpus.sparkSession
+    # the row id only breaks md5 ties between duplicate ids; the lazy
+    # pin is materialized by the stats job
+    base = pin(
+        spread_small_scan(
+            corpus.select(
+                id_col, F.col(vec_col).cast("array<double>").alias(vec_col)
+            ).withColumn("_row", F.monotonically_increasing_id())
+        )
+    )
+    stats = base.agg(
+        F.count(F.lit(1)).alias("n"), F.max(F.size(vec_col)).alias("dim")
+    ).first()
+    if k <= 0 or stats["n"] == 0:
+        # no seeds to train from: the contract schema, empty
+        return spark.createDataFrame([], f"centroid_id INT, {vec_col} ARRAY<DOUBLE>")
+    dim = stats["dim"]
+
+    seeds = (
+        base.withColumn("_h", F.md5(F.col(id_col).cast("string")))
+        .orderBy("_h", "_row")
+        .limit(k)
+    )
+    cent = seeds.select(
+        (F.row_number().over(Window.orderBy("_h", "_row")) - 1)
+        .cast("int")
+        .alias("centroid_id"),
+        F.col(vec_col),
     ).localCheckpoint()
 
-    def cent_df(vectors: list[list[float]]) -> DataFrame:
-        """(centroid_id, vec) frame from driver-held centroid lists;
-        schema-explicit so the empty-corpus case stays well-typed."""
-        return spark.createDataFrame(
-            [(i, [float(x) for x in v]) for i, v in enumerate(vectors)],
-            f"centroid_id INT, {vec_col} ARRAY<DOUBLE>",
-        )
-
-    head = base.select(F.size(vec_col).alias("_d")).first()
-    if head is None or k <= 0:
-        # empty corpus (or degenerate k): no seeds to train from —
-        # empty centroid table with the contract schema instead of a
-        # lambda-type blowup (the k<=0 literal path would otherwise
-        # crash on array_max of an empty centroid array)
-        return cent_df([]).select("centroid_id", vec_col)
-    dim = head["_d"]
-
-    if assignment == "auto":
-        assignment = _resolve_auto_assignment(k, dim, banded_min_kdim)
-    if assignment == "banded":
-        return _kmeans_distributed(
-            base, k, iters, id_col, vec_col, shift_tol, dim=dim, banded=True
-        )
-    if k * dim <= literal_centroids_max:
-        return _kmeans_literal(base, cent_df, k, iters, vec_col, shift_tol)
-    return _kmeans_distributed(base, k, iters, id_col, vec_col, shift_tol, dim=dim)
-
-
-def _resolve_auto_assignment(k: int, dim: int, banded_min_kdim: int) -> str:
-    """The ``assignment="auto"`` gate as a pure function (unit-tested
-    without a Spark job): exact while the per-round k×dim centroid
-    table fits the broadcast budget, banded past it."""
-    return "banded" if k * dim > banded_min_kdim else "exact"
-
-
-def _kmeans_literal(
-    base: DataFrame,
-    cent_df,
-    k: int,
-    iters: int,
-    vec_col: str,
-    shift_tol: float,
-) -> DataFrame:
-    """Literal-array Lloyd mode (small k×dim): centroids live on the
-    driver and are baked into each round's plan — see
-    :func:`kmeans_centroids`."""
-    import math
-
-    seed_rows = (
-        base.withColumn("_h", F.md5(F.col(base.columns[0]).cast("string")))
-        .orderBy("_h")
-        .limit(k)
-        .collect()
+    # centroid ids are 0..k-1 in array order, so the first maximal
+    # position is the lowest tied centroid id
+    sims = F.transform(
+        "_cs",
+        lambda c: F.aggregate(
+            F.zip_with(F.col(vec_col), c, lambda x, h: x * h),
+            F.lit(0.0),
+            lambda a, x: a + x,
+        ),
     )
-    cents: list[list[float]] = [list(r[vec_col]) for r in seed_rows]
-
+    best = (F.array_position(sims, F.array_max(sims)) - 1).cast("int")
+    gather = F.sort_array(
+        F.collect_list(F.struct("centroid_id", _l2_normed(vec_col).alias("v")))
+    )
+    # per-position member means and, from the one previous row per id,
+    # the previous centroid; SQL text, one parse per column instead of
+    # several py4j calls each
+    pos = range(dim)
+    means = [F.count(vec_col).alias("_n")]
+    means += [F.expr(f"avg(get(`{vec_col}`, {i})) AS _m{i}") for i in pos]
+    means += [F.expr(f"max(get(_prev, {i})) AS _p{i}") for i in pos]
+    new_vec = F.expr(
+        f"CASE WHEN _n > 0 THEN array({', '.join(f'_m{i}' for i in pos)}) "
+        f"ELSE array({', '.join(f'_p{i}' for i in pos)}) END"
+    ).alias(vec_col)
     for _ in range(iters):
-        normed = []
-        for v in cents:
-            n = math.sqrt(sum(x * x for x in v))
-            normed.append([x / n if n > 0 else 0.0 for x in v])
-        cent_arr = F.array(*[F.array(*[F.lit(x) for x in v]) for v in normed])
-        sims = F.transform(
-            cent_arr,
-            lambda c: F.aggregate(
-                F.zip_with(F.col(vec_col), c, lambda x, h: x * h),
-                F.lit(0.0),
-                lambda a, x: a + x,
-            ),
+        cs = cent.agg(gather.alias("_cs")).select(
+            F.transform("_cs", lambda s: s["v"]).alias("_cs")
         )
-        best = (F.array_position(sims, F.array_max(sims)) - 1).cast("int")
-        assigned = base.select(best.alias("_cid"), F.col(vec_col))
-        means = (
-            assigned.select("_cid", F.posexplode(vec_col).alias("_pos", "_x"))
-            .groupBy("_cid", "_pos")
-            .agg(F.avg("_x").alias("_m"))
-            .groupBy("_cid")
-            .agg(
-                F.array_sort(
-                    F.collect_list(F.struct("_pos", "_m"))
-                ).alias("_pm")
-            )
-            .select("_cid", F.transform("_pm", lambda s: s["_m"]).alias("_mv"))
-            .collect()
+        members = (
+            base.crossJoin(F.broadcast(cs))
+            .select(best.alias("centroid_id"), vec_col)
+            .where(F.col("centroid_id").isNotNull())  # NULL vector: no dot
         )
-        new_cents = list(cents)  # empty clusters keep previous centroid
-        for r in means:
-            new_cents[r["_cid"]] = list(r["_mv"])
-        # convergence early-stop: the driver holds both rounds' centroids
-        # anyway, so the max coordinate shift is free — at shift <=
-        # shift_tol further rounds are pure job-scheduling cost
-        shift = max(
-            (abs(a - b) for v0, v1 in zip(cents, new_cents) for a, b in zip(v0, v1)),
-            default=0.0,
+        prev = cent.select("centroid_id", F.col(vec_col).alias("_prev"))
+        cent = (
+            members.unionByName(prev, allowMissingColumns=True)
+            .groupBy("centroid_id")
+            .agg(*means)
+            .select("centroid_id", new_vec)
+            .localCheckpoint()
         )
-        cents = new_cents
-        if shift <= shift_tol:
-            break
-    return cent_df(cents).select("centroid_id", vec_col)
-
-
-_TRAIN_BANDS = 8
+    return cent.select("centroid_id", vec_col)
 
 
 def _l2_normed(vec_col: str) -> Column:
@@ -475,196 +333,6 @@ def _l2_normed(vec_col: str) -> Column:
     return F.when(
         nrm > 0, F.transform(F.col(vec_col), lambda x: x / nrm)
     ).otherwise(F.transform(F.col(vec_col), lambda x: x * F.lit(0.0)))
-
-
-def _banded_round_ids(
-    base: DataFrame,
-    cent: DataFrame,
-    vsig: DataFrame,
-    id_col: str,
-    vec_col: str,
-    bands: int,
-    planes: int,
-    dim: int,
-) -> DataFrame:
-    """ONE banded Lloyd round's assignment, as a lazy plan (exposed
-    so tests can assert the plan carries NO BroadcastExchange when
-    auto-broadcast is disabled — i.e. nothing in the loop FORCES the
-    k-row centroid table onto every executor; Spark's size estimate
-    alone decides transport): centroid band signatures from the
-    current round's (rounded) means, candidate equi-join against the
-    precomputed vector signatures, exact dot against the normalized
-    centroid only within candidates, map-side max_by argmax with the
-    (cosine DESC, centroid_id ASC) tie rule."""
-    ncent = cent.select(
-        F.col("centroid_id").alias("_cid"), _l2_normed(vec_col).alias("_cv")
-    )
-    dot = F.aggregate(
-        F.zip_with(F.col(vec_col), F.col("_cv"), lambda x, h: x * h),
-        F.lit(0.0),
-        lambda a, x: a + x,
-    )
-    csig = banded_signatures(
-        cent.select("centroid_id", vec_col), "_cid", vec_col, bands, planes, dim
-    )
-    cand = vsig.join(csig, ["band", "sig"]).select(id_col, "_cid").distinct()
-    scored = (
-        cand.join(ncent, "_cid")
-        .join(base.select(id_col, vec_col), id_col)
-        .select(F.col(id_col), F.col("_cid"), dot.alias("_cs"))
-    )
-    return scored.groupBy(id_col).agg(
-        F.max_by(F.col("_cid"), F.struct(F.col("_cs"), -F.col("_cid"))).alias(
-            "_cid"
-        )
-    )
-
-
-def _kmeans_distributed(
-    base: DataFrame,
-    k: int,
-    iters: int,
-    id_col: str,
-    vec_col: str,
-    shift_tol: float,
-    dim: int | None = None,
-    banded: bool = False,
-) -> DataFrame:
-    """Distributed-state Lloyd mode (large / k∝n): the centroid table
-    never leaves the cluster — see :func:`kmeans_centroids`.
-
-    Seeds: the k smallest-md5(id) vectors, numbered 0..k-1 in md5
-    order. The numbering window sorts only the k seed rows (k ≈ n/64
-    for SemDeDup sizing — 64× smaller than the corpus and spillable);
-    every later round is join + hash-agg only.
-
-    ``banded=True`` (the k∝n scale mode, VERDICT r6 #3): each round's
-    assignment scores a vector only against centroids it shares a
-    random-hyperplane band signature with — vector signatures are
-    computed ONCE before the loop (signs don't move with the
-    centroids), centroid signatures are a k×bands-row job per round,
-    and the candidate/scoring joins are PLAIN equi-joins with no
-    broadcast hint: Spark's own size estimate decides transport, so
-    nothing forces k×dim bytes onto every executor when k∝n. Vectors
-    with no candidate centroid sit out that round's means (the
-    conservative direction; empty clusters keep their previous
-    centroid as always). planes/band follows
-    :func:`auto_planes_per_band`; every signature bit is integer-dot
-    exact, so the oracle replays the rounds bit-for-bit
-    (plans/similarity.py:_kmeans_banded_prefix_sql).
-
-    ``banded=False`` keeps the exact O(n·k) assignment with the
-    per-round k-row broadcast — bit-identical to the literal mode on
-    integer-quantized vectors, which is what lets small-k entries
-    share one mode-independent oracle. Its honest k∝n limit
-    (~k×dim×8 bytes broadcast per executor per round) is exactly
-    what ``banded=True`` removes."""
-    from pyspark.sql import Window
-
-    seeds = (
-        base.withColumn("_h", F.md5(F.col(id_col).cast("string")))
-        .orderBy("_h")
-        .limit(k)
-    )
-    cent = seeds.select(
-        (F.row_number().over(Window.orderBy("_h")) - 1).cast("int").alias(
-            "centroid_id"
-        ),
-        F.col(vec_col),
-    ).localCheckpoint()
-
-    # L2-normalize in-plan: same left-to-right fold order as the
-    # literal mode's driver-side math.sqrt(sum(x*x)) — IEEE-identical
-    normed_vec = _l2_normed(vec_col)
-
-    planes = auto_planes_per_band(k)
-    if banded:
-        # vector band signatures never change across rounds: one
-        # skinny (id, band, sig) table, pinned for the loop
-        vsig = banded_signatures(
-            base.select(id_col, vec_col),
-            id_col,
-            vec_col,
-            _TRAIN_BANDS,
-            planes,
-            dim,
-        ).localCheckpoint()
-
-    for _ in range(iters):
-        # score NARROW rows (id, cid, cs) so the k-way expansion
-        # never duplicates the vector array k times nor carries it
-        # through the max_by buffer (measured: the wide form spent
-        # its time on allocation/GC at k=313, n=20k), then join
-        # the winning cid back to the checkpointed base for the
-        # vectors the means agg needs
-        if banded:
-            ids = _banded_round_ids(
-                base, cent, vsig, id_col, vec_col, _TRAIN_BANDS, planes, dim
-            )
-        else:
-            ncent = cent.select(
-                F.col("centroid_id").alias("_cid"), normed_vec.alias("_cv")
-            )
-            dot = F.aggregate(
-                F.zip_with(F.col(vec_col), F.col("_cv"), lambda x, h: x * h),
-                F.lit(0.0),
-                lambda a, x: a + x,
-            )
-            ids = (
-                base.crossJoin(F.broadcast(ncent))
-                .select(F.col(id_col), F.col("_cid"), dot.alias("_cs"))
-                .groupBy(id_col)
-                .agg(
-                    F.max_by(
-                        F.col("_cid"), F.struct(F.col("_cs"), -F.col("_cid"))
-                    ).alias("_cid")
-                )
-            )
-        assigned = base.join(ids, id_col).select("_cid", vec_col)
-        means = (
-            assigned.select("_cid", F.posexplode(vec_col).alias("_pos", "_x"))
-            .groupBy("_cid", "_pos")
-            .agg(F.avg("_x").alias("_m"))
-            .groupBy("_cid")
-            .agg(F.array_sort(F.collect_list(F.struct("_pos", "_m"))).alias("_pm"))
-            .select(
-                F.col("_cid").cast("int").alias("centroid_id"),
-                F.transform("_pm", lambda s: s["_m"]).alias("_mv"),
-            )
-        )
-        # empty clusters keep their previous centroid (left join +
-        # coalesce — the k-row frame is the build side of everything)
-        new_cent = cent.join(means, "centroid_id", "left").select(
-            "centroid_id",
-            F.coalesce(F.col("_mv"), F.col(vec_col)).alias(vec_col),
-        )
-        prev = cent
-        # checkpoint BEFORE any convergence probe: probing the
-        # un-checkpointed frame would execute the full round plan
-        # (assignment crossJoin + means agg) once for the probe and
-        # again for the checkpoint — doubling every round's cost
-        cent = new_cent.localCheckpoint()
-        if shift_tol > 0.0:
-            # scalar max-shift probe (one tiny agg over the k-row
-            # checkpointed frames); the 0.0 default skips the extra
-            # per-round job — exact convergence at tol=0 is rare in
-            # float space and the fixed-iter contract is what the
-            # oracles replay
-            shift_row = (
-                prev.join(cent.withColumnRenamed(vec_col, "_nv"), "centroid_id")
-                .select(
-                    F.array_max(
-                        F.zip_with(
-                            F.col(vec_col), F.col("_nv"), lambda a, b: F.abs(a - b)
-                        )
-                    ).alias("_s")
-                )
-                .agg(F.max("_s").alias("_s"))
-                .first()
-            )
-            if shift_row["_s"] is not None and shift_row["_s"] <= shift_tol:
-                break
-    return cent.select("centroid_id", vec_col)
 
 
 def kmeans_inertia(
@@ -694,12 +362,14 @@ def near_dup_pairs(
     planes_per_band: int = 4,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    dim: int | None = None,
+    *,
+    dim: int,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate detection (the dedup-family
     member over vectors): candidate pairs from banded random-hyperplane
     LSH self-join, then exact cosine >= threshold. Output one row per
-    unordered pair ``(id_a < id_b, cos_sim)``.
+    unordered pair ``(id_a < id_b, cos_sim)``. ``dim`` is the embedding
+width (the hyperplanes are baked in as literal arrays).
 
     At scale this replaces the O(n^2) all-pairs cross join with ONE
     shuffle of skinny (id, band, sig) rows — bands are unpivoted to
@@ -711,17 +381,7 @@ def near_dup_pairs(
     (true near-dups, p -> 1) are caught with near-certainty; the exact
     all-pairs form (``exact_near_dup_pairs``) is the ground truth the
     tests compare against."""
-    band_sigs = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                rp_lsh_signature(
-                    vec_col, planes_per_band, plane_offset=b * planes_per_band, dim=dim
-                ).alias("sig"),
-            )
-            for b in range(n_bands)
-        ]
-    )
+    band_sigs = band_sig_array(f"`{vec_col}`", n_bands, planes_per_band, dim)
     d = corpus.select(F.col(id_col), F.explode(band_sigs).alias("bs")).select(
         id_col, F.col("bs.band").alias("band"), F.col("bs.sig").alias("sig")
     )
@@ -781,7 +441,6 @@ def semdedup(
     cid_col: str = "centroid_id",
     cvec_col: str = "cq",
     tau: float = 0.97,
-    pin_assignment: bool = False,
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023, arXiv:2303.09540): cluster the
     embedding space coarsely, then inside each cluster mark as
@@ -795,8 +454,7 @@ def semdedup(
     stride sample or trained k-means means (quantized). ``id_col``
     must be UNIQUE: the narrow-argmax assignment joins the winning
     cluster back to ``emb`` by id, so a duplicated id would fan out
-    into phantom within-cluster pairs (same precondition as
-    :func:`kmeans_centroids`'s broadcast mode).
+    into phantom within-cluster pairs.
 
     Returns one row per vector:
     (id, cluster_id, is_dup, n_dup_earlier, max_sim_earlier).
@@ -818,7 +476,7 @@ def semdedup(
     measured exponent 1.56. At scale pass trained fixed-k centroids
     (``kmeans_centroids``) sized k ∝ n/target-cluster-size and swap
     the exact assignment for ANN (``ivf_topk`` buckets or
-    ``rp_lsh_signature``); this function's within-cluster stage is
+    ``banded_signatures``); this function's within-cluster stage is
     unchanged by either assignment source.
     """
     # assignment via NARROW partial-aggregable max_by, not a
@@ -842,11 +500,8 @@ def semdedup(
     )
     assigned = emb.join(ids, id_col).select(id_col, vec_col, "cluster_id")
     # the within stage reads `assigned` twice (a/b join sides), which
-    # re-runs the n x centroid scoring in one plan; pin_assignment
-    # trades an eager materialization (localCheckpoint — swap for
-    # reliable-store checkpoint on a real cluster) for running it once
-    if pin_assignment:
-        assigned = assigned.localCheckpoint()
+    # would re-run the n x centroid scoring once per side: pin it
+    assigned = pin(assigned, eager=True)
     return semdedup_within(assigned, id_col=id_col, vec_col=vec_col, tau=tau)
 
 

@@ -20,7 +20,10 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F
 from wq_data_pipeline_spark.operators.pinning import pin
 from wq_data_pipeline_spark.operators.retrieval import bm25_search
 from wq_data_pipeline_spark.operators.scale import spread_small_scan
-from wq_data_pipeline_spark.operators.similarity import hyperplane_components
+from wq_data_pipeline_spark.operators.similarity import (
+    band_sig_array,
+    hyperplane_components,
+)
 from wq_data_pipeline_spark.operators.text import gram_hash
 from wq_data_pipeline_spark.plans.corpus import SQL_WORDS
 from wq_data_pipeline_spark.sources.testdata import load_table
@@ -211,8 +214,6 @@ def q_embed_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     sets — not just the scores — match bit-for-bit. The O(n^2) exact
     form stays available as ``similarity.exact_near_dup_pairs`` for
     bounded-n validation/recall tests."""
-    from wq_data_pipeline_spark.operators.similarity import rp_lsh_signature
-
     raw = load_table(spark, sf_dir, "embeddings")
     # probe the embedding width once (1-row job) so the hyperplanes
     # are baked in as literals — executors do multiply-adds, no md5
@@ -227,17 +228,7 @@ def q_embed_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # task; spread rows across the cluster first (no-op when the scan
     # already has >= defaultParallelism splits — corpus scale)
     emb = spread_small_scan(emb)
-    band_sigs = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                rp_lsh_signature(
-                    "q", _ND_PLANES, plane_offset=b * _ND_PLANES, dim=dim
-                ).alias("sig"),
-            )
-            for b in range(_ND_BANDS)
-        ]
-    )
+    band_sigs = band_sig_array("`q`", _ND_BANDS, _ND_PLANES, dim)
     # At this threshold (0.45, barely above the background cosine
     # distribution) 4-bit bands collide densely: ~1M candidate pairs
     # from 5k vectors at sf0.1. Carrying the vectors + hoisted norms
@@ -287,7 +278,7 @@ def q_embed_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # Oracle: same md5-derived hyperplanes (parity of the first hex digit
-# of md5('<plane>:<dim>') -> ±1, exactly _pseudo_hyperplane_component),
+# of md5('<plane>:<dim>') -> ±1, exactly similarity.hyperplane_components),
 # same banding, same quantized cosine. Plane dots are BIGINT sums
 # (Spark's double fold over |q_i| <= 1e7 longs is exact), so the
 # sign — and hence every signature bit — matches bit-for-bit.
@@ -354,8 +345,6 @@ def q_embed_lsh_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     shared buckets, top-5 per query. Fully oracled: integer plane
     dots make every signature bit — hence the candidate set — and
     every cosine bit-identical cross-engine (was rows-only in r2)."""
-    from wq_data_pipeline_spark.operators.similarity import rp_lsh_signature
-
     raw = load_table(spark, sf_dir, "embeddings")
     head = raw.select(F.size("embedding")).head()
     if head is None:  # empty table: contract schema, no dim to probe
@@ -371,17 +360,7 @@ def q_embed_lsh_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     nrm = F.aggregate(
         F.transform("q", lambda x: x * x), F.lit(0).cast("long"), lambda s, x: s + x
     )
-    band_sigs = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                rp_lsh_signature(
-                    "q", _ANN_PLANES, plane_offset=b * _ANN_PLANES, dim=dim
-                ).alias("sig"),
-            )
-            for b in range(_ANN_BANDS)
-        ]
-    )
+    band_sigs = band_sig_array("`q`", _ANN_BANDS, _ANN_PLANES, dim)
     # pin the per-vector signatures once: the corpus side and the
     # broadcast query side both derive from d, so without the cut the
     # plane-dot build executes twice (same self-join shape as
@@ -501,7 +480,7 @@ def q_embed_kmeans_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         sf_dir,
         "embeddings",
-        ("kmeans", _KM_K, _KM_ITERS, "exact"),
+        ("kmeans", _KM_K, _KM_ITERS),
         lambda: kmeans_centroids(emb, k=_KM_K, iters=_KM_ITERS, vec_col="q"),
     )
     qs = emb.filter(F.col("vec_id") % 100 == 0)
@@ -582,107 +561,6 @@ c0 AS (
          list_transform(q, x -> CAST(x AS DOUBLE)) AS c
   FROM q ORDER BY md5(CAST(vec_id AS VARCHAR)) LIMIT ({k_sql})
 ),{",".join(rounds)},
-scored_c AS (
-  SELECT v.vec_id, v.q, c.cid,
-         {dots('v.q', 'c.c')} / (sqrt({sq('v.q')}) * sqrt({sq('c.c')})) AS cs
-  FROM q v CROSS JOIN {last} c
-),
-av AS (
-  SELECT vec_id, q, cid AS bucket FROM (
-    SELECT vec_id, q, cid,
-           row_number() OVER (PARTITION BY vec_id ORDER BY cs DESC, cid ASC) AS rn
-    FROM scored_c
-  ) WHERE rn = 1
-)"""
-
-
-def _kmeans_banded_prefix_sql(k_sql: str, bands: int = 8) -> str:
-    """DuckDB WITH-prefix replaying the BANDED distributed trainer
-    (similarity._kmeans_distributed(banded=True)): same quantized
-    corpus / md5 seeds / integer-mean rounds as
-    :func:`_kmeans_prefix_sql`, but each round's assignment scores a
-    vector only against centroids sharing a random-hyperplane band
-    signature — vector signatures once up front, centroid signatures
-    re-derived per round from the ROUNDED means (integer plane dots,
-    so every bit matches the engine), vectors with no candidate sit
-    out that round's means. planes/band =
-    greatest(1, ceil(log2(k))) — the auto_planes_per_band law,
-    evaluated in-SQL so the oracle tracks the engine's runtime k.
-    Ends at ``av`` = every vector's final bucket via EXACT
-    assignment, the same final pass the consuming entries run."""
-    fold, dots, sq = _lr_fold, _lr_dots, _lr_sq
-    pl = "(SELECT pl FROM pp)"
-
-    def sig_cte(src: str, idc: str, vec: str) -> str:
-        return f"""
-  SELECT {idc}, p // {pl} AS band,
-         CAST(sum(CASE WHEN s > 0 THEN 1 << (p % {pl}) ELSE 0 END) AS BIGINT) AS sig
-  FROM (SELECT t.{idc}, pl2.p, sum(t.xi * pl2.h) AS s
-        FROM (SELECT {idc}, i, {vec}[i + 1] AS xi
-              FROM (SELECT {idc}, {vec}, unnest(generate_series(0, len({vec}) - 1)) AS i
-                    FROM {src})) t
-        JOIN planes pl2 ON t.i = pl2.i GROUP BY t.{idc}, pl2.p)
-  GROUP BY {idc}, p // {pl}"""
-
-    rounds = []
-    for r in range(1, _KM_ITERS + 1):
-        prev = f"c{r - 1}"
-        rounds.append(f"""
-cn{r} AS (
-  SELECT cid, list_transform(c, x -> CASE WHEN nn > 0 THEN x / nn ELSE 0.0 END) AS cn
-  FROM (SELECT cid, c, sqrt({sq('c')}) AS nn FROM {prev})
-),
-cq{r} AS (
-  SELECT cid, list_transform(c, x -> CAST(round(x) AS BIGINT)) AS cq FROM {prev}
-),
-csig{r} AS ({sig_cte(f'cq{r}', 'cid', 'cq')}),
-cand{r} AS (
-  SELECT DISTINCT v.vec_id, c.cid
-  FROM vsig v JOIN csig{r} c ON v.band = c.band AND v.sig = c.sig
-),
-a{r} AS (
-  SELECT vec_id, q, cid FROM (
-    SELECT vec_id, q, cid,
-           row_number() OVER (PARTITION BY vec_id ORDER BY cs DESC, cid ASC) AS rn
-    FROM (SELECT v.vec_id, v.q, cn.cid, {dots('v.q', 'cn.cn')} AS cs
-          FROM cand{r} ca JOIN q v ON ca.vec_id = v.vec_id
-          JOIN cn{r} cn ON ca.cid = cn.cid)
-  ) WHERE rn = 1
-),
-m{r} AS (
-  SELECT cid, list(m ORDER BY pos) AS c FROM (
-    SELECT cid, pos, CAST(sum(x) AS DOUBLE) / count(*) AS m
-    FROM (SELECT cid, unnest(generate_series(1, len(q))) AS pos, unnest(q) AS x
-          FROM a{r})
-    GROUP BY cid, pos
-  ) GROUP BY cid
-),
-c{r} AS (
-  SELECT p.cid, coalesce(m{r}.c, p.c) AS c FROM {prev} p LEFT JOIN m{r} USING (cid)
-)""")
-    last = f"c{_KM_ITERS}"
-    return f"""
-WITH q AS (
-  SELECT vec_id, list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * {_Q}) AS BIGINT)) AS q
-  FROM embeddings
-),
-kk AS (SELECT ({k_sql}) AS k),
-pp AS (SELECT greatest(1, CAST(ceil(log2(k)) AS INT)) AS pl FROM kk),
-c0 AS (
-  SELECT row_number() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR))) - 1 AS cid,
-         list_transform(q, x -> CAST(x AS DOUBLE)) AS c
-  FROM q ORDER BY md5(CAST(vec_id AS VARCHAR)) LIMIT (SELECT k FROM kk)
-),
-dims AS (SELECT unnest(generate_series(0, (SELECT max(len(q)) - 1 FROM q))) AS i),
-pls AS (SELECT unnest(generate_series(0, (SELECT {bands} * pl - 1 FROM pp))) AS p),
-planes AS (
-  SELECT pls.p, dims.i,
-         CASE WHEN substr(md5(CAST(pls.p AS VARCHAR) || ':' || CAST(dims.i AS VARCHAR)), 1, 1)
-                   IN ('0','2','4','6','8','a','c','e')
-              THEN 1 ELSE -1 END AS h
-  FROM pls CROSS JOIN dims
-),
-vsig AS ({sig_cte('q', 'vec_id', 'q')}),{",".join(rounds)},
 scored_c AS (
   SELECT v.vec_id, v.q, c.cid,
          {dots('v.q', 'c.c')} / (sqrt({sq('v.q')}) * sqrt({sq('c.c')})) AS cs
@@ -834,9 +712,7 @@ def q_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     cent = emb.filter(F.col("vec_id") % _SD_STRIDE == 0).select(
         F.col("vec_id").alias("centroid_id"), F.col("q").alias("cq")
     )
-    return semdedup(
-        emb, cent, id_col="vec_id", vec_col="q", tau=_SD_TAU, pin_assignment=True
-    )
+    return semdedup(emb, cent, id_col="vec_id", vec_col="q", tau=_SD_TAU)
 
 
 SQL_SEMDEDUP = f"""
@@ -1268,22 +1144,8 @@ def q_semdedup_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     k = max(1, math.ceil(emb.count() / _SDT_TARGET))
-    # SIZE-GATED trainer (VERDICT r7 #1): "auto" resolves to the
-    # exact distributed/broadcast rounds while k×dim fits the
-    # broadcast budget (strictly cheaper — the r7 all-banded form
-    # measured 23.5 s vs 5.3 s at sf0.1) and to the banded LSH
-    # candidate rounds only past it (k ∝ n at production scale,
-    # where per-round k×dim broadcast is the wall banded removes;
-    # the zero-BroadcastExchange plan shape stays pinned by
-    # test_banded_round_has_no_broadcast_when_autobroadcast_off).
-    # literal_centroids_max=0: k grows with the corpus here and the
-    # literal-array plan pays analysis cost per literal per round
-    # (measured at k=32/dim=64: 8.3 s literal vs 3.7 s broadcast).
-    # With integer-quantized vectors the exact modes are
-    # bit-identical, so the oracle replays the exact rounds
-    # (_kmeans_prefix_sql) — valid at every oracle/bench scale; the
-    # banded regime starts at k*dim > 1e6 (n > 64M vectors at
-    # dim=64), far past any scale the DuckDB oracle runs at.
+    # on integer-quantized vectors the trainer is bit-exact, so the
+    # oracle replays its rounds (_kmeans_prefix_sql) at any scale;
     # trained state is deterministic in (input content, params) and
     # tiny (k rows) -> one build per session (operators/stash.py)
     from wq_data_pipeline_spark.operators.stash import session_stash
@@ -1292,15 +1154,8 @@ def q_semdedup_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         sf_dir,
         "embeddings",
-        ("kmeans", k, _KM_ITERS, "auto-nolit"),
-        lambda: kmeans_centroids(
-            emb,
-            k=k,
-            iters=_KM_ITERS,
-            vec_col="q",
-            assignment="auto",
-            literal_centroids_max=0,
-        ),
+        ("kmeans", k, _KM_ITERS),
+        lambda: kmeans_centroids(emb, k=k, iters=_KM_ITERS, vec_col="q"),
     )
     c = cent.select(F.col("centroid_id").alias("_cid"), F.col("q").alias("_cv"))
     # final assignment via NARROW max_by, NOT a per-vector row_number
@@ -1337,9 +1192,7 @@ def _semdedup_trained_sql() -> str:
     ``av`` = final bucket per vector; k is derived IN-SQL as
     ceil(count(*)/target) so the oracle's clustering tracks the
     engine's runtime k at any scale factor — ADVICE r5), then the
-    within-cluster earlier-id pairwise tail of SQL_SEMDEDUP. The
-    engine's "auto" trainer resolves to the bit-identical exact mode
-    at every scale the oracle runs at (crossover k*dim > 1e6)."""
+    within-cluster earlier-id pairwise tail of SQL_SEMDEDUP."""
 
     dot = (
         "CAST(list_sum(list_transform(generate_series(1, len(a.q)), "
@@ -1441,13 +1294,8 @@ def q_semdedup_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).localCheckpoint(eager=False)
     k = max(1, math.ceil(emb.count() / _SDA_TARGET))
     planes = auto_planes_per_band(k)
-    # SIZE-GATED trainer (VERDICT r7 #1): exact distributed/broadcast
-    # rounds while k×dim fits the broadcast budget (the r7 all-banded
-    # trainer measured 34.7 s vs 11.1 s at sf0.1), banded LSH rounds
-    # only past k*dim > 1e6 (n > 64M vectors at dim=64). The entry's
-    # ANN identity — the banded FINAL assignment below, linear in n —
-    # is unchanged; only the trainer's per-round assignment is gated.
-    # literal_centroids_max=0: k ∝ n, keep centroid state a DataFrame.
+    # the trainer's rounds are exact (the oracle replays them); the
+    # entry's ANN identity is the banded FINAL assignment below.
     # trained state is deterministic in (input content, params) and
     # tiny (k rows) -> one build per session (operators/stash.py)
     from wq_data_pipeline_spark.operators.stash import session_stash
@@ -1456,15 +1304,8 @@ def q_semdedup_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         sf_dir,
         "embeddings",
-        ("kmeans", k, _KM_ITERS, "auto-nolit"),
-        lambda: kmeans_centroids(
-            emb,
-            k=k,
-            iters=_KM_ITERS,
-            vec_col="q",
-            assignment="auto",
-            literal_centroids_max=0,
-        ),
+        ("kmeans", k, _KM_ITERS),
+        lambda: kmeans_centroids(emb, k=k, iters=_KM_ITERS, vec_col="q"),
     )
     # banded_signatures signs the half-away-from-zero-ROUNDED vector,
     # so the (double) centroid means sign as integers — every
@@ -1512,9 +1353,7 @@ def q_semdedup_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _semdedup_ann_sql() -> str:
     """DuckDB replay: the shared EXACT dynamic-k Lloyd prefix (final
-    centroids CTE ``c{_KM_ITERS}`` — the engine's "auto" trainer
-    resolves to the bit-identical exact mode at every oracle scale,
-    crossover k*dim > 1e6), then the BANDED final assignment exactly
+    centroids CTE ``c{_KM_ITERS}``), then the BANDED final assignment exactly
     as the engine runs it: the auto-planes law evaluated in-SQL
     (planes/band = greatest(1, ceil(log2(k)))), one md5 ±1 plane
     table shared by both sides, vector signatures over the quantized
@@ -2027,19 +1866,7 @@ def q_embed_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # norm together — eval suites are tiny.
     zero = F.lit(0).cast("long")
     nrm = F.aggregate(F.transform("q", lambda x: x * x), zero, lambda s, x: s + x)
-    from wq_data_pipeline_spark.operators.similarity import rp_lsh_signature
-
-    band_sigs = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                rp_lsh_signature(
-                    "q", _DC_PLANES, plane_offset=b * _DC_PLANES, dim=dim
-                ).alias("sig"),
-            )
-            for b in range(_DC_BANDS)
-        ]
-    )
+    band_sigs = band_sig_array("`q`", _DC_BANDS, _DC_PLANES, dim)
     d_c = (
         corp.withColumn("nc", nrm)
         .select(
@@ -2101,8 +1928,8 @@ def q_embed_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # Oracle: replay the md5 hyperplanes (parity of the first hex digit of
-# md5('<plane>:<dim>') -> ±1, exactly similarity._pseudo_hyperplane_
-# component), band p//PLANES, bit 1 << (p % PLANES); integer plane dots
+# md5('<plane>:<dim>') -> ±1, exactly similarity.hyperplane_components),
+# band p//PLANES, bit 1 << (p % PLANES); integer plane dots
 # make every signature bit — hence the candidate set — bit-identical,
 # and cosines are the established quantized-BIGINT form.
 SQL_EMBED_DECONTAMINATE = f"""
@@ -2324,7 +2151,7 @@ def q_cluster_balanced_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     This is the diversify step of a curation stack (SemDeDup/DCLM):
     near-dup REMOVAL entries prune redundancy; this caps how much any
     single mode of the distribution can contribute. Swap the fixed
-    centroids for ``similarity._kmeans_distributed`` output and the
+    centroids for ``similarity.kmeans_centroids`` output and the
     plan is unchanged (the quality_classifier fixed-weights
     convention: fixed parameters keep the ENTRY oracle-replayable;
     the trained path exists in the same package).
