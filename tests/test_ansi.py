@@ -55,3 +55,32 @@ def test_get_spark_session_runs_ansi(spark):
 
     assert DEFAULT_CONFS["spark.sql.ansi.enabled"] == "true"
     assert spark.conf.get("spark.sql.ansi.enabled") == "true"
+
+
+def test_word_set_pairs_with_two_empty_sets(spark, ansi_mode):
+    """A pair of two empty word sets has an empty union: its Jaccard is
+    NULL (DuckDB's 0.0/0.0), in both modes and on both verify paths,
+    instead of a DIVIDE_BY_ZERO under ANSI; containment drops the pair
+    (empty id_a side) and keeps the other."""
+    from wq_data_pipeline_spark.operators.dedup import (
+        containment_pairs,
+        jaccard_pairs,
+    )
+
+    docs = spark.createDataFrame(
+        [(1, ""), (2, ""), (3, "a b c"), (4, "a b d")], "doc_id BIGINT, text STRING"
+    )
+    pairs = spark.createDataFrame([(1, 2), (3, 4)], "id_a BIGINT, id_b BIGINT")
+    for enabled in (True, False):
+        ansi_mode(enabled)
+        for restrict in (True, False):
+            got = {
+                (r.id_a, r.id_b): r.jaccard
+                for r in jaccard_pairs(docs, pairs, restrict=restrict).collect()
+            }
+            assert got == {(1, 2): None, (3, 4): 0.5}, (enabled, restrict, got)
+            cont = [
+                tuple(r)
+                for r in containment_pairs(docs, pairs, restrict=restrict).collect()
+            ]
+            assert cont == [(3, 4, 2 / 3, 0.5)], (enabled, restrict, cont)

@@ -4,6 +4,7 @@ correctness records; and an oracle canary per family in the fast tier."""
 
 from __future__ import annotations
 
+import hashlib
 import json
 from importlib import import_module
 
@@ -52,6 +53,24 @@ def test_every_entry_in_exactly_one_family():
             assert QUERIES[name] is fn and ORACLES.get(name) == sql
     assert seen == FAMILY
     assert set(FAMILY) == set(QUERIES) and set(ORACLES) <= set(QUERIES)
+
+
+# sha256 of the oracle SQL table and of the entry -> query-function
+# qualname table; a refactor that keeps every name, oracle and
+# function in place leaves both unchanged
+ORACLE_SHA256 = "ea966ddca17863e03315d0084c818f74dedc0945f14e5ffb3b98ef20dba1c3fc"
+QUALNAME_SHA256 = "6815dd0c4b3fe692539704f69fb9db4ce40b562092ef467b7b8f7ca72200364e"
+
+
+def _sha256_json(obj) -> str:
+    return hashlib.sha256(json.dumps(obj, sort_keys=True).encode()).hexdigest()
+
+
+def test_catalog_fingerprints_pinned():
+    assert (len(QUERIES), len(ORACLES)) == (230, 227)
+    assert _sha256_json(ORACLES) == ORACLE_SHA256
+    qualnames = {n: f"{fn.__module__}.{fn.__qualname__}" for n, fn in QUERIES.items()}
+    assert _sha256_json(qualnames) == QUALNAME_SHA256
 
 
 def test_driver_window_is_stalest_green_first():

@@ -6,6 +6,8 @@ paths)."""
 
 from __future__ import annotations
 
+import math
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -770,3 +772,64 @@ def test_decimal_stats_match_reference(spark):
     assert got.mode_cents == ref_dom
     assert got.mode_frac == pytest.approx(round(ref_frac, 4), abs=1e-9)
     assert bool(got.dominant) == (ref_frac >= 0.6)
+
+
+def _ref_gaussian(vals: list[float | None]) -> tuple[list, list]:
+    """Pure-Python smoother: ffill then bfill, then 9 taps with weights
+    exp(-k²/8), renormalized over the taps that exist (non-NULL, inside
+    the series); smooth is NULL when none does."""
+    filled, last = [], None
+    for v in vals:
+        last = v if v is not None else last
+        filled.append(last)
+    nxt = None
+    for i in range(len(vals) - 1, -1, -1):
+        nxt = vals[i] if vals[i] is not None else nxt
+        if filled[i] is None:
+            filled[i] = nxt
+    smooth = []
+    for i in range(len(vals)):
+        num = den = 0.0
+        for k in range(-4, 5):
+            j = i + k
+            if 0 <= j < len(vals) and filled[j] is not None:
+                wt = math.exp(-(k * k) / 8.0)
+                num += wt * filled[j]
+                den += wt
+        smooth.append(num / den if den > 0 else None)
+    return filled, smooth
+
+
+def test_gaussian_smooth_matches_python_reference(spark):
+    """``windows.gaussian_smooth`` (shared by the QC figures and
+    w16_gaussian) against the pure-Python reference to 1e-12: one
+    series with leading and trailing NULL runs and an interior gap, and
+    one all-NULL series (filled, smooth and residual stay NULL)."""
+    from wq_data_pipeline_spark.operators.windows import gaussian_smooth
+
+    t0 = pd.Timestamp("2024-01-01")
+    series = {
+        "a": [None, None, None, 4.0, 7.5, 6.0, None, None, None, 12.25,
+              3.0, 9.5, 8.0, 1.0, 5.5, 6.5, 2.0, None, None],
+        "b": [None] * 5,
+    }
+    rows = [
+        ("s1", var, (t0 + pd.Timedelta(hours=i)).to_pydatetime(), v)
+        for var, vals in series.items()
+        for i, v in enumerate(vals)
+    ]
+    df = spark.createDataFrame(
+        rows, "station STRING, variable STRING, ts TIMESTAMP, clean DOUBLE"
+    )
+    out = gaussian_smooth(df, "clean").orderBy("variable", "ts").collect()
+    for var, vals in series.items():
+        got = [r for r in out if r.variable == var]
+        filled, smooth = _ref_gaussian(vals)
+        assert [r.filled for r in got] == filled, var
+        for r, f, s in zip(got, filled, smooth):
+            if s is None:
+                assert r.smooth is None and r.residual is None, (var, r)
+            else:
+                assert abs(r.smooth - s) <= 1e-12, (var, r, s)
+                assert abs(r.residual - (f - s)) <= 1e-12, (var, r, s)
+    assert all(r.smooth is None for r in out if r.variable == "b")

@@ -446,14 +446,12 @@ def test_compaction_preserves_mor_view(spark, tmp_path):
     assert plan, "seeded stream must flag at least one bucket"
 
     r = LAKEHOUSE._records(spark, sf)
-    latest = LAKEHOUSE._latest(LAKEHOUSE._KEY)
     flagged = (F.col("user_id") % 32).isin(*sorted(plan))
 
     # physical pieces of the PRE-compaction layout
     old_base = (
-        r.filter(F.col("ts_us") <= F.col("_cut_us"))
-        .withColumn("_rn", F.row_number().over(latest))
-        .filter((F.col("_rn") == 1) & (F.col("op") == "U"))
+        LAKEHOUSE._latest(r.filter(F.col("ts_us") <= F.col("_cut_us")))
+        .filter(F.col("op") == "U")
         .select(*LAKEHOUSE._KEY, "ts_us", "event_id", "value", "op")
     )
     old_log = r.filter(F.col("ts_us") > F.col("_cut_us")).select(
@@ -463,8 +461,8 @@ def test_compaction_preserves_mor_view(spark, tmp_path):
     def resolve(base, log):
         m = base.unionByName(log)
         return (
-            m.withColumn("_rn", F.row_number().over(latest))
-            .filter((F.col("_rn") == 1) & (F.col("op") == "U"))
+            LAKEHOUSE._latest(m)
+            .filter(F.col("op") == "U")
             .select(*LAKEHOUSE._KEY, "ts_us", "value")
         )
 

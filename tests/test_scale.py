@@ -182,15 +182,15 @@ def test_minhash_lsh_recall_at_08(spark, sf_dir):
     from pyspark.sql import functions as F
 
     from wq_data_pipeline_spark.operators.dedup import minhash_lsh_candidates
-    from wq_data_pipeline_spark.operators.text import word_shingles
+    from wq_data_pipeline_spark.operators.text import shingles_from_tokens, tokens
     from wq_data_pipeline_spark.sources.testdata import load_table
 
     docs = load_table(spark, sf_dir, "documents")
     # ground truth over the SAME similarity MinHash estimates: Jaccard
     # of the distinct 3-gram shingle sets (word-set Jaccard is a looser
     # measure that MinHash-over-shingles does not approximate)
-    w = docs.select(
-        "doc_id", F.array_distinct(word_shingles("text", 3)).alias("ws")
+    w = docs.select("doc_id", tokens("text").alias("toks")).select(
+        "doc_id", F.array_distinct(shingles_from_tokens(F.col("toks"), 3)).alias("ws")
     )
     a = w.select(F.col("doc_id").alias("id_a"), F.col("ws").alias("wa"))
     b = w.select(F.col("doc_id").alias("id_b"), F.col("ws").alias("wb"))

@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, functions as F
 
 from wq_data_pipeline_spark.operators.pinning import pin
-from wq_data_pipeline_spark.operators.text import distinct_words, doc_fingerprint, word_shingles
+from wq_data_pipeline_spark.operators.text import distinct_words, doc_fingerprint
 
 
 def exact_dedup(
@@ -74,21 +74,6 @@ def shingle_hash(col: str | Column) -> Column:
     return F.conv(F.substring(F.md5(c), 1, 8), 16, 10).cast("long")
 
 
-def minhash_signature(
-    text: str | Column, num_hashes: int = 32, shingle_n: int = 3
-) -> list[Column]:
-    """MinHash signature (per-row array form): min over shingles of
-    (A_i*h + B_i) mod (2^61-1) where h = shingle_hash. One md5 per
-    shingle regardless of k."""
-    sh = word_shingles(text, shingle_n)
-    hashed = F.transform(sh, lambda s: shingle_hash(s))
-    sigs = []
-    for i, (a, b) in enumerate(minhash_coeffs(num_hashes)):
-        perm = F.transform(hashed, lambda h: (F.lit(a) * h + F.lit(b)) % F.lit(_MH_P))
-        sigs.append(F.array_min(perm).alias(f"mh{i}"))
-    return sigs
-
-
 def minhash_signatures_table(
     df: DataFrame,
     text: str = "text",
@@ -98,13 +83,12 @@ def minhash_signatures_table(
 ) -> DataFrame:
     """MinHash signatures via explode + groupBy — the scale form.
 
-    The per-row array formulation (:func:`minhash_signature`) rebuilds
-    the shingle array once per signature column; exploding shingles to
-    rows computes them once and the per-seed minima come from one
-    partial-aggregated groupBy (map-side combine, one shuffle on id).
-    ``explode_outer`` keeps shingle-less docs (NULL signature), like
-    the per-row form. One md5 per shingle row; the k permutations are
-    integer multiply-add-mod (cheap JVM codegen, no string churn).
+    Exploding shingles to rows computes them once per document, and
+    the per-seed minima come from one partial-aggregated groupBy
+    (map-side combine, one shuffle on id). ``explode_outer`` keeps
+    shingle-less docs (NULL signature). One md5 per shingle row; the k
+    permutations are integer multiply-add-mod (cheap JVM codegen, no
+    string churn).
     The token array is materialized as a column BEFORE the shingle
     transform so the tokenize runs once per document — an inline
     ``tokens(text)`` expression re-evaluates per gram position inside
@@ -668,26 +652,16 @@ def _pair_restricted_words(
     return pairs, w
 
 
-def jaccard_pairs(
-    df: DataFrame,
-    pairs: DataFrame,
-    text: str = "text",
-    id_col: str = "doc_id",
-    restrict: bool = True,
+def _word_set_pairs(
+    df: DataFrame, pairs: DataFrame, text: str, id_col: str, restrict: bool
 ) -> DataFrame:
-    """Verify candidate pairs with exact word-set Jaccard. ``pairs``
-    has (id_a, id_b); the doc table is joined twice (broadcast when
-    small).
-
-    ``restrict`` routes through :func:`_pair_restricted_words` —
-    tokenize only pair-participating docs; right when |pairs| is far
-    below the corpus (LSH candidates). NOTE (ADVICE r12 #2): restrict
-    executes the FULL candidate plan at construction time (one
-    pin+count job) — callers whose pair set spans most of the corpus
-    by construction (the anchors-vs-next-25 entries) pass False and
-    keep the original one-read lazy shape, where the semi leg would
-    only add stages and the construction-time materialization is an
-    unbounded cost."""
+    """The ONE word-set verify join behind :func:`jaccard_pairs` and
+    :func:`containment_pairs`: (id_a, id_b, ws_a, inter, jaccard) per
+    candidate pair whose ids both exist, with inter = |A∩B| and
+    jaccard = |A∩B| / |A∪B| — NULL when both word sets are empty (the
+    union is empty; DuckDB's 0.0/0.0 is NULL too, and under ANSI the
+    division would raise). ``restrict`` routes through
+    :func:`_pair_restricted_words`."""
     if restrict:
         pairs, w = _pair_restricted_words(df, pairs, text, id_col)
     else:
@@ -700,7 +674,36 @@ def jaccard_pairs(
     return j.select(
         "id_a",
         "id_b",
-        (inter.cast("double") / union.cast("double")).alias("jaccard"),
+        "ws_a",
+        inter.alias("inter"),
+        F.when(union > 0, inter.cast("double") / union.cast("double")).alias(
+            "jaccard"
+        ),
+    )
+
+
+def jaccard_pairs(
+    df: DataFrame,
+    pairs: DataFrame,
+    text: str = "text",
+    id_col: str = "doc_id",
+    restrict: bool = True,
+) -> DataFrame:
+    """Verify candidate pairs with exact word-set Jaccard (NULL for a
+    pair of two empty word sets). ``pairs`` has (id_a, id_b); the doc
+    table is joined twice (broadcast when small).
+
+    ``restrict`` routes through :func:`_pair_restricted_words` —
+    tokenize only pair-participating docs; right when |pairs| is far
+    below the corpus (LSH candidates). NOTE (ADVICE r12 #2): restrict
+    executes the FULL candidate plan at construction time (one
+    pin+count job) — callers whose pair set spans most of the corpus
+    by construction (the anchors-vs-next-25 entries) pass False and
+    keep the original one-read lazy shape, where the semi leg would
+    only add stages and the construction-time materialization is an
+    unbounded cost."""
+    return _word_set_pairs(df, pairs, text, id_col, restrict).select(
+        "id_a", "id_b", "jaccard"
     )
 
 
@@ -724,22 +727,14 @@ def containment_pairs(
     :func:`jaccard_pairs` (identical output; tokenize cost bounded by
     the candidate set when ``restrict`` — and same construction-time
     pin+count of the full candidate plan, see there)."""
-    if restrict:
-        pairs, w = _pair_restricted_words(df, pairs, text, id_col)
-    else:
-        w = df.select(F.col(id_col), distinct_words(text).alias("ws"))
-    a = w.select(F.col(id_col).alias("id_a"), F.col("ws").alias("ws_a"))
-    b = w.select(F.col(id_col).alias("id_b"), F.col("ws").alias("ws_b"))
-    j = pairs.join(a, "id_a").join(b, "id_b").filter(F.size("ws_a") > 0)
-    inter = F.size(F.array_intersect("ws_a", "ws_b"))
-    union = F.size(F.array_union("ws_a", "ws_b"))
-    return j.select(
+    j = _word_set_pairs(df, pairs, text, id_col, restrict)
+    return j.filter(F.size("ws_a") > 0).select(
         "id_a",
         "id_b",
-        (inter.cast("double") / F.size("ws_a").cast("double")).alias(
+        (F.col("inter").cast("double") / F.size("ws_a").cast("double")).alias(
             "containment"
         ),
-        (inter.cast("double") / union.cast("double")).alias("jaccard"),
+        "jaccard",
     )
 
 

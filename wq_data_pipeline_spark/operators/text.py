@@ -132,11 +132,6 @@ def shingles_from_tokens(toks: Column, n: int) -> Column:
     ).otherwise(F.array().cast("array<string>"))
 
 
-def word_shingles(text: str | Column, n: int = 3) -> Column:
-    """Word n-gram shingles as an array<string> (for MinHash/Jaccard)."""
-    return shingles_from_tokens(tokens(text), n)
-
-
 def repetition_features(
     df: DataFrame,
     text: str = "text",

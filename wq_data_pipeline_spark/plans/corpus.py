@@ -9,8 +9,10 @@ Portability: md5 hex digests are the cross-engine hash primitive;
 (``_TRAIN_LT``/``_VAL_LT``, ``_split_of``/``_sql_split_case``) has one
 definition used by every split-aware entry.
 
-The logistic trainers (quality_train*, lang_id_*) are
-oracle-replayable: all shared state is integer. Weights live in micro
+One logistic-GD trainer (``_train_traj_build``, one-vs-rest; the
+binary quality model is its one-class case) serves quality_train* and
+lang_id_*, and it is oracle-replayable: all shared state is integer.
+Weights live in micro
 units (BIGINT); per-doc logits are exact BIGINT dots; the sigmoid is
 quantized per doc (per doc and class for lang ID) BEFORE summation
 (round((p - y) * 1e6)), so gradient sums are order-free and each
@@ -2470,8 +2472,9 @@ def _bucket_counts(df: DataFrame, extra_cols: list[str]) -> DataFrame:
 def _doc_scores(
     bucketed: DataFrame, w: DataFrame, extra_cols: list[str]
 ) -> DataFrame:
-    """Per-doc exact BIGINT logit: broadcast the 64-row weight table
-    onto the bucket counts, sum cnt·w per doc. The ONE scoring rule."""
+    """Per-doc exact BIGINT logit: broadcast the (classes ×) buckets
+    weight table onto the bucket counts, sum cnt·w per doc (and class).
+    The ONE scoring rule."""
     return (
         bucketed.join(F.broadcast(w), "b")
         .groupBy("doc_id", *extra_cols)
@@ -2494,15 +2497,16 @@ def _train_traj(
     feats: Callable[[DataFrame, list[str]], DataFrame] | None = None,
     n_buckets: int = _QT_B,
 ) -> list[DataFrame]:
-    """The shared trainer loop behind quality_train (trajectory),
-    quality_train_apply (final weights), quality_train_eval, and the
-    r11 hashed-bigram variant: _QT_ROUNDS rounds of full-batch
-    logistic GD, returning the per-round n_buckets-row checkpointed
-    weight frames (b, w). ``feats`` is the featurizer (default: the
-    unigram _bucket_counts). The session stash keys on the
-    featurizer's qualified name + n_buckets — derived from what was
-    actually passed, so a caller can never be served another model
-    family's weights by mislabeling (r11 review)."""
+    """The binary quality model's trajectory, behind quality_train
+    (trajectory), quality_train_apply (final weights),
+    quality_train_eval, and the r11 hashed-bigram variant: the
+    one-vs-rest trainer ``_train_traj_build`` with class set {1} and
+    label y, returning the per-round n_buckets-row checkpointed weight
+    frames (b, w). ``feats`` is the featurizer (default: the unigram
+    _bucket_counts). The session stash keys on the featurizer's
+    qualified name + n_buckets — derived from what was actually
+    passed, so a caller can never be served another model family's
+    weights by mislabeling (r11 review)."""
     from wq_data_pipeline_spark.operators.stash import session_stash
 
     feats = feats or _bucket_counts
@@ -2510,63 +2514,87 @@ def _train_traj(
         f"{getattr(feats, '__module__', '')}."
         f"{getattr(feats, '__qualname__', repr(feats))}:{n_buckets}"
     )
-    return session_stash(
-        spark,
-        sf_dir,
-        "documents",
-        ("quality-traj", tag),
-        lambda: _train_traj_build(spark, sf_dir, feats, n_buckets),
-    )
+
+    def build() -> list[DataFrame]:
+        tr = (
+            _docs_parallel(spark, sf_dir)
+            .filter((F.col("doc_id") % _QT_HOLD_MOD) != _QT_HOLD_RES)
+            .select("doc_id", tokens("text").alias("toks"))
+            .select("doc_id", "toks", _teacher_y())
+        )
+        classes = spark.range(1).select(F.lit(1).alias("cand"))
+        traj = _train_traj_build(
+            spark, feats(tr, ["y"]), "y", classes, n_buckets, _QT_ROUNDS, _QT_LR
+        )
+        return [w.select("b", "w") for w in traj]
+
+    return session_stash(spark, sf_dir, "documents", ("quality-traj", tag), build)
 
 
 def _train_traj_build(
     spark: SparkSession,
-    sf_dir: str,
-    feats: Callable[[DataFrame, list[str]], DataFrame],
+    feats: DataFrame,
+    label: str,
+    classes: DataFrame,
     n_buckets: int,
+    rounds: int,
+    lr: float,
 ) -> list[DataFrame]:
+    """The ONE logistic-GD trainer: ``rounds`` rounds of full-batch
+    one-vs-rest gradient descent over the (cand, b, w) weight state,
+    returning each round's checkpointed weight frame. ``feats`` is
+    (doc_id, label, b, cnt) — the true label rides through the
+    feature table; ``classes`` holds the candidate classes in column
+    ``cand``, and a doc's target for candidate c is (label == c). The
+    binary model is the one-class case (class set {1}, label y).
 
-    d = _docs_parallel(spark, sf_dir)
-    tr = d.filter(
-        (F.col("doc_id") % _QT_HOLD_MOD) != _QT_HOLD_RES
-    ).select("doc_id", tokens("text").alias("toks")).select(
-        "doc_id", "toks", _teacher_y()
-    )
-    x = feats(tr, ["y"]).localCheckpoint()
+    Integer discipline: logits are exact BIGINT dots of counts ×
+    micro-weights, the sigmoid is quantized per (doc, cand) before
+    summation, and the update w' = w - round(lr * g / n) is one double
+    op on exact integers — every round's weights are
+    order-independent."""
+    x = feats.localCheckpoint()
     # a global (non-grouped) agg always yields exactly one row
     n_train = int(x.agg(F.countDistinct("doc_id").alias("n")).first()["n"])
-    w = spark.range(n_buckets).select(
-        F.col("id").cast("long").alias("b"), F.lit(0).cast("long").alias("w")
-    )
+    w = classes.crossJoin(
+        spark.range(n_buckets).select(F.col("id").cast("long").alias("b"))
+    ).select("cand", "b", F.lit(0).cast("long").alias("w"))
     if n_train == 0:  # no trainable docs: weights stay at the zero init
-        return [w] * _QT_ROUNDS
+        return [w.localCheckpoint()] * rounds
 
     traj = []
-    for _ in range(_QT_ROUNDS):
-        z = _doc_scores(x, w, ["y"])
+    for _ in range(rounds):
+        # logits for EVERY (doc, class) in one broadcast join: the
+        # K x n_buckets model fans each (doc, b) row out to K
+        # candidates, then the per-(doc, cand) sum is map-side
+        # combinable
+        z = _doc_scores(x, w, [label, "cand"])
         p = F.lit(1.0) / (
             F.lit(1.0)
             + F.exp(-(F.col("z_micro").cast("double") / F.lit(1000000.0)))
         )
+        y = (F.col(label) == F.col("cand")).cast("int")
         e = z.select(
             "doc_id",
-            F.round((p - F.col("y").cast("double")) * F.lit(1000000.0))
+            "cand",
+            F.round((p - y.cast("double")) * F.lit(1000000.0))
             .cast("long")
             .alias("e"),
         )
         g = (
             x.join(e, "doc_id")
-            .groupBy("b")
+            .groupBy("cand", "b")
             .agg(F.sum(F.col("cnt") * F.col("e")).alias("g"))
         )
         w = (
-            w.join(g, "b", "left")
+            w.join(g, ["cand", "b"], "left")
             .select(
+                "cand",
                 "b",
                 (
                     F.col("w")
                     - F.round(
-                        F.lit(_QT_LR)
+                        F.lit(lr)
                         * F.coalesce(F.col("g"), F.lit(0))
                         / F.lit(n_train)
                     ).cast("long")
@@ -2576,6 +2604,28 @@ def _train_traj_build(
         )
         traj.append(w)
     return traj
+
+
+def _traj_wide(traj: list[DataFrame], keys: dict[str, str]) -> DataFrame:
+    """A trainer trajectory as one wide frame: ``keys`` (weight-frame
+    column -> output name) plus w_micro_r1..r{len(traj)}, ordered by
+    the keys."""
+    names = list(keys.values())
+    frames = [
+        t.select(
+            *[F.col(c).alias(o) for c, o in keys.items()],
+            F.col("w").alias(f"w_micro_r{r}"),
+        )
+        for r, t in enumerate(traj, 1)
+    ]
+    out = frames[0]
+    for f in frames[1:]:
+        # weight frames are (classes × buckets) rows BY CONSTRUCTION
+        # (config constants), but arrive RDD-backed from the stash
+        # with no stats, so the planner falls back to sort-merge — pin
+        # the broadcast (guide §3.1)
+        out = out.join(F.broadcast(f), names)
+    return out.orderBy(*names)
 
 
 def q_quality_train(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2606,20 +2656,7 @@ def q_quality_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     64-group gradient, both map-side combinable) plus a broadcast of
     the 64-row weight table. No per-round driver collect; the single
     bounded action is n_train (one scalar)."""
-    traj = _train_traj(spark, sf_dir)
-    out = traj[0].select("b", F.col("w").alias("w_micro_r1"))
-    for r in range(2, _QT_ROUNDS + 1):
-        # weight frames are n_buckets rows BY CONSTRUCTION (a config
-        # constant), but arrive RDD-backed from the stash with no
-        # stats, so the planner falls back to sort-merge — pin the
-        # broadcast (guide §3.1; same reasoning at any corpus scale)
-        out = out.join(
-            F.broadcast(
-                traj[r - 1].select("b", F.col("w").alias(f"w_micro_r{r}"))
-            ),
-            "b",
-        )
-    return out.orderBy("b")
+    return _traj_wide(_train_traj(spark, sf_dir), {"b": "b"})
 
 
 def q_quality_train_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3083,10 +3120,31 @@ def _li_features(d: DataFrame, extra_cols: list[str]) -> DataFrame:
 
 def _li_traj(spark: SparkSession, sf_dir: str) -> list[DataFrame]:
     """Session-stashed trainer trajectory: _LI_ROUNDS checkpointed
-    (lang, b, w) frames. Params carry every non-input degree of
-    freedom (buckets, snippet, rounds, lr, split) so the stash can
-    never serve a differently-configured model."""
+    (cand, b, w) frames from ``_train_traj_build`` over the snippet
+    trigram features, one class per observed training language. Params carry
+    every non-input degree of freedom (buckets, snippet, rounds, lr,
+    split) so the stash can never serve a differently-configured
+    model."""
     from wq_data_pipeline_spark.operators.stash import session_stash
+
+    def build() -> list[DataFrame]:
+        tr = _docs_parallel(spark, sf_dir).filter(
+            ((F.col("doc_id") % _LI_HOLD_MOD) != _LI_HOLD_RES)
+            & F.col("lang").isNotNull()
+            & F.col("text").isNotNull()
+        )
+        classes = (
+            tr.select(F.col("lang").alias("cand")).distinct().localCheckpoint()
+        )
+        return _train_traj_build(
+            spark,
+            _li_features(tr, ["lang"]),
+            "lang",
+            classes,
+            _LI_B,
+            _LI_ROUNDS,
+            _LI_LR,
+        )
 
     return session_stash(
         spark,
@@ -3101,102 +3159,15 @@ def _li_traj(spark: SparkSession, sf_dir: str) -> list[DataFrame]:
             _LI_HOLD_MOD,
             _LI_HOLD_RES,
         ),
-        lambda: _li_traj_build(spark, sf_dir),
+        build,
     )
-
-
-def _li_traj_build(spark: SparkSession, sf_dir: str) -> list[DataFrame]:
-
-    tr = _docs_parallel(spark, sf_dir).filter(
-        ((F.col("doc_id") % _LI_HOLD_MOD) != _LI_HOLD_RES)
-        & F.col("lang").isNotNull()
-        & F.col("text").isNotNull()
-    )
-    # x carries the true label through the feature table (the binary
-    # trainer's extra_cols=['y'] trick, lifted to the class string)
-    x = _li_features(tr, ["lang"]).localCheckpoint()
-    classes = (
-        tr.select(F.col("lang").alias("cand")).distinct().localCheckpoint()
-    )
-    n_train = int(x.agg(F.countDistinct("doc_id").alias("n")).first()["n"])
-    w = classes.crossJoin(
-        spark.range(_LI_B).select(F.col("id").cast("long").alias("b"))
-    ).select("cand", "b", F.lit(0).cast("long").alias("w"))
-    if n_train == 0:  # no featurizable docs: weights stay at zero init
-        w = w.localCheckpoint()
-        return [w] * _LI_ROUNDS
-
-    traj = []
-    for _ in range(_LI_ROUNDS):
-        # one-vs-rest logits for EVERY (doc, class) in one broadcast
-        # join: the K x _LI_B model fans each (doc, b) row out to K
-        # candidates, then the per-(doc, cand) sum is map-side
-        # combinable
-        z = (
-            x.join(F.broadcast(w), "b")
-            .groupBy("doc_id", "lang", "cand")
-            .agg(F.sum(F.col("cnt") * F.col("w")).alias("z_micro"))
-        )
-        p = F.lit(1.0) / (
-            F.lit(1.0)
-            + F.exp(-(F.col("z_micro").cast("double") / F.lit(1000000.0)))
-        )
-        y = (F.col("lang") == F.col("cand")).cast("int")
-        e = z.select(
-            "doc_id",
-            "cand",
-            F.round((p - y.cast("double")) * F.lit(1000000.0))
-            .cast("long")
-            .alias("e"),
-        )
-        g = (
-            x.join(e, "doc_id")
-            .groupBy("cand", "b")
-            .agg(F.sum(F.col("cnt") * F.col("e")).alias("g"))
-        )
-        w = (
-            w.join(g, ["cand", "b"], "left")
-            .select(
-                "cand",
-                "b",
-                (
-                    F.col("w")
-                    - F.round(
-                        F.lit(_LI_LR)
-                        * F.coalesce(F.col("g"), F.lit(0))
-                        / F.lit(n_train)
-                    ).cast("long")
-                ).alias("w"),
-            )
-            .localCheckpoint()
-        )
-        traj.append(w)
-    return traj
 
 
 def q_lang_id_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     """See the lang-ID notes in the module docstring — trajectory output (lang, b,
     w_micro_r1..r{_LI_ROUNDS}), one row per (class, bucket), pinning
     every round of the joint one-vs-rest optimization."""
-    traj = _li_traj(spark, sf_dir)
-    out = traj[0].select(
-        F.col("cand").alias("lang"), "b", F.col("w").alias("w_micro_r1")
-    )
-    for r in range(2, _LI_ROUNDS + 1):
-        # (n_langs × n_buckets)-row weight frames, RDD-backed (no
-        # stats) — pin the broadcast instead of the planner's
-        # sort-merge fallback (guide §3.1; size is a config constant)
-        out = out.join(
-            F.broadcast(
-                traj[r - 1].select(
-                    F.col("cand").alias("lang"),
-                    "b",
-                    F.col("w").alias(f"w_micro_r{r}"),
-                )
-            ),
-            ["lang", "b"],
-        )
-    return out.orderBy("lang", "b")
+    return _traj_wide(_li_traj(spark, sf_dir), {"cand": "lang", "b": "b"})
 
 
 def q_lang_id_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3212,12 +3183,7 @@ def q_lang_id_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _docs_parallel(spark, sf_dir).filter(
         F.col("lang").isNotNull() & F.col("text").isNotNull()
     )
-    z = (
-        _li_features(d, ["lang"])
-        .join(F.broadcast(w_final), "b")
-        .groupBy("doc_id", "lang", "cand")
-        .agg(F.sum(F.col("cnt") * F.col("w")).alias("z_micro"))
-    )
+    z = _doc_scores(_li_features(d, ["lang"]), w_final, ["lang", "cand"])
     rn = F.row_number().over(
         Window.partitionBy("doc_id").orderBy(
             F.col("z_micro").desc(), F.col("cand").asc()
@@ -3255,12 +3221,7 @@ def q_lang_id_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         & F.col("lang").isNotNull()
         & F.col("text").isNotNull()
     )
-    z = (
-        _li_features(held, ["lang"])
-        .join(F.broadcast(w_final), "b")
-        .groupBy("doc_id", "lang", "cand")
-        .agg(F.sum(F.col("cnt") * F.col("w")).alias("z_micro"))
-    )
+    z = _doc_scores(_li_features(held, ["lang"]), w_final, ["lang", "cand"])
     rn = F.row_number().over(
         Window.partitionBy("doc_id").orderBy(
             F.col("z_micro").desc(), F.col("cand").asc()

@@ -262,15 +262,15 @@ d AS (SELECT doc_id, list_distinct(toks) AS ws FROM w)
 SELECT doc_id, {_simhash_sql_bits(16)} AS simhash FROM d"""
 
 
-def q_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """n-gram (word-set) Jaccard over a bounded candidate set:
-    anchors doc_id%5==0 vs the next 25 ids; report pairs >= 0.8."""
-    d = load_table(spark, sf_dir, "documents")
+def _anchor_pairs(d: DataFrame) -> DataFrame:
+    """The bounded candidate set of jaccard_pairs and
+    containment_pairs: (id_b, id_a) for anchors doc_id % 5 == 0 vs
+    the next 25 existing ids. Equi-join formulation of the bounded
+    range: explode the offset set so the candidate join is a hash
+    join, not a nested loop (a 'id_b BETWEEN id_a+1 AND id_a+25'
+    predicate plans as BroadcastNestedLoopJoin, which dies at
+    scale)."""
     ids = d.select("doc_id")
-    # equi-join formulation of the bounded range: explode the offset
-    # set so the candidate join is a hash join, not a nested loop
-    # (a 'id_b BETWEEN id_a+1 AND id_a+25' predicate plans as
-    # BroadcastNestedLoopJoin, which dies at scale)
     a = (
         ids.filter(F.col("doc_id") % 5 == 0)
         .select(
@@ -280,8 +280,14 @@ def q_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("id_a", (F.col("id_a") + F.col("_off")).alias("id_b"))
     )
     b = ids.select(F.col("doc_id").alias("id_b"))
-    pairs = a.join(b, on="id_b")  # keeps only existing ids
-    j = DD.jaccard_pairs(d, pairs, "text", "doc_id", restrict=False)
+    return a.join(b, on="id_b")  # keeps only existing ids
+
+
+def q_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """n-gram (word-set) Jaccard over a bounded candidate set:
+    anchors doc_id%5==0 vs the next 25 ids; report pairs >= 0.8."""
+    d = load_table(spark, sf_dir, "documents")
+    j = DD.jaccard_pairs(d, _anchor_pairs(d), "text", "doc_id", restrict=False)
     return j.filter(F.col("jaccard") >= 0.8)
 
 
@@ -470,45 +476,106 @@ FROM j GROUP BY doc_id"""
 _SPAN_N = 8  # token n-gram width; two docs sharing >= 8 consecutive tokens hit
 
 
-def q_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact-substring duplicate spans: positions whose word 8-gram
-    occurs in >= 2 documents, merged into maximal per-doc token spans.
-    Gram sharing counted with an exact distinct (swap to HLL++
-    approx_count_distinct at 100 TB — documented trade, the join shape
-    is unchanged). Covered intervals [pos, pos+7] merge when the next
-    duplicated position starts within 8 tokens of the previous."""
-    d = _docs_parallel(spark, sf_dir)  # md5-heavy explode: spread the 1-file scan
-    g = d.select(
+def _dup_gram_hits(d: DataFrame) -> DataFrame:
+    """The ONE gram-hit build of the dup-span chain: (doc_id, pos, nd,
+    keeper_doc) for every token position whose word _SPAN_N-gram
+    occurs in >= 2 documents; nd = how many docs share the gram,
+    keeper_doc = the lowest of them.
+
+    The token array is materialized into a column first: an inline
+    ``tokens("text")`` inside the shingle transform re-tokenizes per
+    gram position (r12). One gram build (r13): a (h, doc) partial agg
+    (map-side combinable — positions of one gram in one doc collect
+    locally), then nd = count of DOC rows per gram via a window over h
+    (countDistinct(doc) ≡ count(*) at the (h, doc) grain) and the
+    positions re-explode; a groupBy(h) + join-back would read the
+    grams twice and run the tokenize+md5 explode twice. Gram sharing
+    is an exact distinct (swap to HLL++ approx_count_distinct at
+    100 TB — documented trade, the shape is unchanged)."""
+    g = d.select("doc_id", tokens("text").alias("_toks")).select(
         "doc_id",
-        F.posexplode(shingles_from_tokens(tokens("text"), _SPAN_N)).alias("pos", "g"),
+        F.posexplode(shingles_from_tokens(F.col("_toks"), _SPAN_N)).alias(
+            "pos", "g"
+        ),
     ).select("doc_id", "pos", gram_hash(F.col("g")).alias("h"))
-    # ONE gram build (r13, guide §2.4 / VERDICT r12 #4): the old
-    # groupBy(h)+join-back read `g` twice, so the tokenize+md5 explode
-    # executed twice (plan: 2 Generates). Two-level instead: (h, doc)
-    # partial agg (map-side combinable — positions of one gram in one
-    # doc collect locally), then nd = count of DOC rows per gram via a
-    # window over h (countDistinct(doc) ≡ count(*) at the (h, doc)
-    # grain), and the positions re-explode. Same rows, same nd.
     g2 = g.groupBy("h", "doc_id").agg(F.collect_list("pos").alias("_ps"))
     wh = Window.partitionBy("h")
-    hits = (
+    return (
         g2.withColumn("nd", F.count(F.lit(1)).over(wh))
+        .withColumn("keeper_doc", F.min("doc_id").over(wh))
         .filter(F.col("nd") >= 2)
-        .select("doc_id", F.explode("_ps").alias("pos"), "nd")
+        .select("doc_id", F.explode("_ps").alias("pos"), "nd", "keeper_doc")
     )
+
+
+def _dup_islands(hits: DataFrame) -> DataFrame:
+    """The ONE island aggregation: hit positions merge into maximal
+    per-doc spans when the next hit starts within _SPAN_N tokens of the
+    previous. One row per island: (doc_id, s0, s1) token range
+    [s0, s1], n_dup_grams, max_docs_sharing, and the keeper_doc of the
+    island's FIRST gram. Columns a caller does not read are pruned
+    from the plan."""
     w = Window.partitionBy("doc_id").orderBy("pos")
     brk = F.when(F.col("pos") - F.lag("pos").over(w) > _SPAN_N, 1).otherwise(0)
-    isl = hits.withColumn("island", F.sum(brk).over(w))
     return (
-        isl.groupBy("doc_id", "island")
+        hits.withColumn("island", F.sum(brk).over(w))
+        .groupBy("doc_id", "island")
         .agg(
-            F.min("pos").alias("span_start"),
-            (F.max("pos") + F.lit(_SPAN_N - 1)).alias("span_end"),
-            (F.max("pos") - F.min("pos") + F.lit(_SPAN_N)).alias("span_len"),
+            F.min("pos").alias("s0"),
+            (F.max("pos") + F.lit(_SPAN_N - 1)).alias("s1"),
             F.count(F.lit(1)).alias("n_dup_grams"),
             F.max("nd").alias("max_docs_sharing"),
+            F.min(F.struct("pos", "keeper_doc"))["keeper_doc"].alias("keeper_doc"),
         )
         .drop("island")
+    )
+
+
+def _rewrite_report(d: DataFrame, removed: DataFrame) -> DataFrame:
+    """The ONE per-doc rewrite: drop the token ranges [s0, s1] of
+    ``removed`` (r_doc, s0, s1) from each doc and report (doc_id,
+    n_tokens, n_removed, text_md5) — an md5 of the reassembled cleaned
+    text, hash-exact evidence the reconstruction matches without
+    shipping the corpus through the compare. One per-doc equi-join
+    (doc_id, range residual) between the token stream and that doc's
+    few removed spans, then one hash agg with an in-group sort bounded
+    by document length."""
+    toks = d.select("doc_id", F.posexplode(tokens("text")).alias("tpos", "tok"))
+    j = toks.join(
+        removed,
+        (toks.doc_id == removed.r_doc) & toks.tpos.between(removed.s0, removed.s1),
+        "left",
+    )
+    keep = F.col("s0").isNull()
+    kept_struct = F.when(keep, F.struct("tpos", "tok"))
+    return j.groupBy("doc_id").agg(
+        F.count(F.lit(1)).alias("n_tokens"),
+        F.sum((~keep).cast("long")).alias("n_removed"),
+        F.md5(
+            F.concat_ws(
+                " ",
+                F.transform(
+                    F.array_sort(F.collect_list(kept_struct)), lambda x: x.tok
+                ),
+            )
+        ).alias("text_md5"),
+    )
+
+
+def q_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Exact-substring duplicate spans: positions whose word 8-gram
+    occurs in >= 2 documents (``_dup_gram_hits``), merged into maximal
+    per-doc token spans (``_dup_islands``): covered intervals
+    [pos, pos+7] merge when the next duplicated position starts within
+    8 tokens of the previous."""
+    d = _docs_parallel(spark, sf_dir)  # md5-heavy explode: spread the 1-file scan
+    return _dup_islands(_dup_gram_hits(d)).select(
+        "doc_id",
+        F.col("s0").alias("span_start"),
+        F.col("s1").alias("span_end"),
+        (F.col("s1") - F.col("s0") + F.lit(1)).alias("span_len"),
+        "n_dup_grams",
+        "max_docs_sharing",
     )
 
 
@@ -578,62 +645,15 @@ def q_dup_span_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``test_dup_span_removal_merged_island_over_removes`` plants the
     chained-island case pinning this behavior.
 
-    Scale shape: the detect chain is dup_spans'; the rewrite adds one
-    per-doc equi-join (doc_id, range residual) between the token
-    stream and that doc's few removed spans, then one hash agg with an
-    in-group sort bounded by document length."""
+    Scale shape: dup_spans' detect chain (``_dup_gram_hits``,
+    ``_dup_islands``) plus the shared per-doc rewrite
+    (``_rewrite_report``)."""
     d = _docs_parallel(spark, sf_dir)  # md5-heavy explode: spread the 1-file scan
-    toks = d.select("doc_id", F.posexplode(tokens("text")).alias("tpos", "tok"))
-    g = d.select(
-        "doc_id",
-        F.posexplode(shingles_from_tokens(tokens("text"), _SPAN_N)).alias("pos", "g"),
-    ).select("doc_id", "pos", gram_hash(F.col("g")).alias("h"))
-    # ONE gram build via the (h, doc) two-level agg + h-window — the
-    # same rewrite as q_dup_spans above (nd ≡ countDistinct(doc) at
-    # the (h, doc) grain; keeper ≡ min(doc) over the gram's rows)
-    g2 = g.groupBy("h", "doc_id").agg(F.collect_list("pos").alias("_ps"))
-    wh = Window.partitionBy("h")
-    hits = (
-        g2.withColumn("nd", F.count(F.lit(1)).over(wh))
-        .withColumn("keeper_doc", F.min("doc_id").over(wh))
-        .filter(F.col("nd") >= 2)
-        .select("doc_id", F.explode("_ps").alias("pos"), "keeper_doc")
-    )
-    w = Window.partitionBy("doc_id").orderBy("pos")
-    brk = F.when(F.col("pos") - F.lag("pos").over(w) > _SPAN_N, 1).otherwise(0)
-    isl = hits.withColumn("island", F.sum(brk).over(w))
-    spans = (
-        isl.groupBy("doc_id", "island")
-        .agg(
-            F.min("pos").alias("s0"),
-            (F.max("pos") + F.lit(_SPAN_N - 1)).alias("s1"),
-            F.min(F.struct("pos", "keeper_doc")).alias("fk"),
-        )
-        .select("doc_id", "s0", "s1", F.col("fk.keeper_doc").alias("keeper_doc"))
-    )
+    spans = _dup_islands(_dup_gram_hits(d))
     removed = spans.filter(F.col("doc_id") != F.col("keeper_doc")).select(
         F.col("doc_id").alias("r_doc"), "s0", "s1"
     )
-    j = toks.join(
-        removed,
-        (toks.doc_id == removed.r_doc)
-        & toks.tpos.between(removed.s0, removed.s1),
-        "left",
-    )
-    keep = F.col("s0").isNull()
-    kept_struct = F.when(keep, F.struct("tpos", "tok"))
-    return j.groupBy("doc_id").agg(
-        F.count(F.lit(1)).alias("n_tokens"),
-        F.sum((~keep).cast("long")).alias("n_removed"),
-        F.md5(
-            F.concat_ws(
-                " ",
-                F.transform(
-                    F.array_sort(F.collect_list(kept_struct)), lambda x: x.tok
-                ),
-            )
-        ).alias("text_md5"),
-    )
+    return _rewrite_report(d, removed)
 
 
 SQL_DUP_SPAN_REMOVAL = f"""
@@ -948,44 +968,14 @@ def q_dup_span_removal_keepone(spark: SparkSession, sf_dir: str) -> DataFrame:
     common case) dedup exactly as before. True maximal-match keep-one
     still requires suffix-array semantics (Lee et al. 2022 §3).
 
-    Scale shape: dup_spans' detect chain (gram hash agg + island
-    windows), plus ONE doc_id equi-join of the span list against the
-    token arrays to md5 each island's text, a row_number window over
-    text groups (tiny partitions), and the same per-doc rewrite join.
+    Scale shape: dup_spans' detect chain (``_dup_gram_hits``,
+    ``_dup_islands``), plus ONE doc_id equi-join of the span list
+    against the token arrays to md5 each island's text, a row_number
+    window over text groups (tiny partitions), and the shared per-doc
+    rewrite (``_rewrite_report``).
     """
-    from wq_data_pipeline_spark.operators.text import (
-        gram_hash,
-        shingles_from_tokens,
-        tokens,
-    )
-
     d = _docs_parallel(spark, sf_dir)
-    toks = d.select("doc_id", F.posexplode(tokens("text")).alias("tpos", "tok"))
-    # token array materialized first: an inline tokens("text") inside
-    # the shingle transform re-tokenizes per gram position (r12)
-    g = d.select("doc_id", tokens("text").alias("_toks")).select(
-        "doc_id",
-        F.posexplode(shingles_from_tokens(F.col("_toks"), _SPAN_N)).alias(
-            "pos", "g"
-        ),
-    ).select("doc_id", "pos", gram_hash(F.col("g")).alias("h"))
-    # ONE gram build via the (h, doc) two-level agg + h-window — the
-    # same r13 rewrite as q_dup_spans (nd ≡ countDistinct(doc) at the
-    # (h, doc) grain); the old groupBy+join-back executed the
-    # tokenize+shingle explode twice
-    g2 = g.groupBy("h", "doc_id").agg(F.collect_list("pos").alias("_ps"))
-    hits = (
-        g2.withColumn("nd", F.count(F.lit(1)).over(Window.partitionBy("h")))
-        .filter(F.col("nd") >= 2)
-        .select("doc_id", F.explode("_ps").alias("pos"))
-    )
-    w = Window.partitionBy("doc_id").orderBy("pos")
-    brk = F.when(F.col("pos") - F.lag("pos").over(w) > _SPAN_N, 1).otherwise(0)
-    isl = hits.withColumn("island", F.sum(brk).over(w))
-    spans = isl.groupBy("doc_id", "island").agg(
-        F.min("pos").alias("s0"),
-        (F.max("pos") + F.lit(_SPAN_N - 1)).alias("s1"),
-    )
+    spans = _dup_islands(_dup_gram_hits(d))
     ta = d.select("doc_id", tokens("text").alias("toks"))
     keyed = spans.join(ta, "doc_id").select(
         "doc_id",
@@ -1008,25 +998,7 @@ def q_dup_span_removal_keepone(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("occ") >= 2)
         .select(F.col("doc_id").alias("r_doc"), "s0", "s1")
     )
-    j = toks.join(
-        removed,
-        (toks.doc_id == removed.r_doc) & toks.tpos.between(removed.s0, removed.s1),
-        "left",
-    )
-    keep = F.col("s0").isNull()
-    kept_struct = F.when(keep, F.struct("tpos", "tok"))
-    return j.groupBy("doc_id").agg(
-        F.count(F.lit(1)).alias("n_tokens"),
-        F.sum((~keep).cast("long")).alias("n_removed"),
-        F.md5(
-            F.concat_ws(
-                " ",
-                F.transform(
-                    F.array_sort(F.collect_list(kept_struct)), lambda x: x.tok
-                ),
-            )
-        ).alias("text_md5"),
-    )
+    return _rewrite_report(d, removed)
 
 
 SQL_DUP_SPAN_REMOVAL_KEEPONE = f"""
@@ -1706,18 +1678,7 @@ def q_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     any dedup threshold; dedup pipelines report both for exactly this
     case (Lee et al. 2022 §4)."""
     d = load_table(spark, sf_dir, "documents")
-    ids = d.select("doc_id")
-    a = (
-        ids.filter(F.col("doc_id") % 5 == 0)
-        .select(
-            F.col("doc_id").alias("id_a"),
-            F.explode(F.sequence(F.lit(1), F.lit(25))).alias("_off"),
-        )
-        .select("id_a", (F.col("id_a") + F.col("_off")).alias("id_b"))
-    )
-    b = ids.select(F.col("doc_id").alias("id_b"))
-    pairs = a.join(b, on="id_b")
-    c = DD.containment_pairs(d, pairs, "text", "doc_id", restrict=False)
+    c = DD.containment_pairs(d, _anchor_pairs(d), "text", "doc_id", restrict=False)
     return c.filter(F.col("containment") >= _CONT_T)
 
 

@@ -18,7 +18,7 @@ raw rows shuffle once on the key; nothing quadratic, nothing collected."""
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F
 
 from wq_data_pipeline_spark.plans.qc import _DAY_US, _events
 from wq_data_pipeline_spark.sources.testdata import load_table
@@ -524,11 +524,27 @@ _CUT_NUM = 7
 _LO_NUM = 4
 _DEN = 10
 
+# cdc_time_travel's as-of version cut, in hundredths of the observed
+# µs span: strictly between the batch-27 base cut (4/10 = 40/100) and
+# log head (7/10), so the read replays a strict PREFIX of the change log
+_TT_NUM = 55
+_TT_DEN = 100
+
+# the read cuts of every CDC entry: incremental lo (4/10), the
+# base/log head (7/10) and the time-travel as-of (55/100); an entry's
+# plan keeps only the cut columns it reads (column pruning)
+_CUTS = {
+    "_lo_us": (_LO_NUM, _DEN),
+    "_cut_us": (_CUT_NUM, _DEN),
+    "_asof_us": (_TT_NUM, _TT_DEN),
+}
+
 
 def _records(spark: SparkSession, sf_dir: str) -> DataFrame:
     """events as CDC records: key (user_id, event_type), sequence
-    (ts_us, event_id), op ('D' delete marker / 'U' upsert), plus the
-    span cut points broadcast onto every row (1-row agg cross-join —
+    (ts_us, event_id), op ('D' delete marker / 'U' upsert), plus one
+    µs cut column per ``_CUTS`` entry (name -> (num, den): num/den of
+    the observed span) broadcast onto every row (1-row agg cross-join —
     stays one lazy plan, no driver round-trip)."""
     ev = load_table(spark, sf_dir, "events").select(
         "user_id",
@@ -546,12 +562,10 @@ def _records(spark: SparkSession, sf_dir: str) -> DataFrame:
     span = ev.agg(
         F.min("ts_us").alias("_t0"), F.max("ts_us").alias("_t1")
     ).select(
-        F.expr(
-            f"_t0 + (_t1 - _t0) * {_CUT_NUM} DIV {_DEN}"
-        ).alias("_cut_us"),
-        F.expr(
-            f"_t0 + (_t1 - _t0) * {_LO_NUM} DIV {_DEN}"
-        ).alias("_lo_us"),
+        *[
+            F.expr(f"_t0 + (_t1 - _t0) * {num} DIV {den}").alias(name)
+            for name, (num, den) in _CUTS.items()
+        ]
     )
     return ev.join(F.broadcast(span))
 
@@ -559,9 +573,19 @@ def _records(spark: SparkSession, sf_dir: str) -> DataFrame:
 _KEY = ["user_id", "event_type"]
 
 
-def _latest(w_cols: list[str]) -> Window:
-    return Window.partitionBy(*w_cols).orderBy(
-        F.desc("ts_us"), F.desc("event_id")
+def _latest(df: DataFrame, **per_key: Column) -> DataFrame:
+    """The latest record per _KEY by (ts_us, event_id) — the resolved
+    state as of whatever cut ``df`` was filtered to — plus each
+    ``per_key`` aggregate taken over all of the key's rows. Delete
+    markers can win; callers that read live rows filter op == 'U'
+    after."""
+    k = Window.partitionBy(*_KEY)
+    w = k.orderBy(F.desc("ts_us"), F.desc("event_id"))
+    return (
+        df.withColumn("_rn", F.row_number().over(w))
+        .withColumns({name: agg.over(k) for name, agg in per_key.items()})
+        .filter(F.col("_rn") == 1)
+        .drop("_rn")
     )
 
 
@@ -583,9 +607,7 @@ def q_cdc_merge_on_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     and why ``compaction_plan`` watches the ratio."""
     r = _records(spark, sf_dir)
     base = (
-        r.filter(F.col("ts_us") <= F.col("_cut_us"))
-        .withColumn("_rn", F.row_number().over(_latest(_KEY)))
-        .filter(F.col("_rn") == 1)
+        _latest(r.filter(F.col("ts_us") <= F.col("_cut_us")))
         # the base file is a resolved snapshot: delete markers that
         # "won" at compaction time simply left no row behind
         .filter(F.col("op") == "U")
@@ -598,13 +620,9 @@ def q_cdc_merge_on_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("from_log", F.lit(True))
     )
     merged = base.unionByName(log)
-    kw = Window.partitionBy(*_KEY)
     return (
-        merged.withColumn("_rn", F.row_number().over(_latest(_KEY)))
-        .withColumn(
-            "n_log_records", F.sum(F.col("from_log").cast("long")).over(kw)
-        )
-        .filter((F.col("_rn") == 1) & (F.col("op") == "U"))
+        _latest(merged, n_log_records=F.sum(F.col("from_log").cast("long")))
+        .filter(F.col("op") == "U")
         .select(
             "user_id",
             "event_type",
@@ -667,28 +685,19 @@ def q_cdc_changes_between(spark: SparkSession, sf_dir: str) -> DataFrame:
     equi-join of two already-aggregated (one row per key) sides."""
     r = _records(spark, sf_dir)
     pre = (
-        r.filter(F.col("ts_us") <= F.col("_lo_us"))
-        .withColumn("_rn", F.row_number().over(_latest(_KEY)))
-        .filter((F.col("_rn") == 1) & (F.col("op") == "U"))
+        _latest(r.filter(F.col("ts_us") <= F.col("_lo_us")))
+        .filter(F.col("op") == "U")
         .select(*_KEY, F.col("value").alias("pre_value"))
     )
     win = r.filter(
         (F.col("ts_us") > F.col("_lo_us")) & (F.col("ts_us") <= F.col("_cut_us"))
     )
-    post = (
-        win.withColumn("_rn", F.row_number().over(_latest(_KEY)))
-        .withColumn(
-            "n_changes",
-            F.count(F.lit(1)).over(Window.partitionBy(*_KEY)),
-        )
-        .filter(F.col("_rn") == 1)
-        .select(
-            *_KEY,
-            F.col("ts_us").alias("post_ts_us"),
-            F.col("value").alias("post_raw"),
-            "op",
-            "n_changes",
-        )
+    post = _latest(win, n_changes=F.count(F.lit(1))).select(
+        *_KEY,
+        F.col("ts_us").alias("post_ts_us"),
+        F.col("value").alias("post_raw"),
+        "op",
+        "n_changes",
     )
     j = post.join(pre, _KEY, "left")
     deleted = F.col("op") == "D"
@@ -771,9 +780,8 @@ def q_compaction_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     combinable rollup to 32 rows."""
     r = _records(spark, sf_dir)
     base_rows = (
-        r.filter(F.col("ts_us") <= F.col("_cut_us"))
-        .withColumn("_rn", F.row_number().over(_latest(_KEY)))
-        .filter((F.col("_rn") == 1) & (F.col("op") == "U"))
+        _latest(r.filter(F.col("ts_us") <= F.col("_cut_us")))
+        .filter(F.col("op") == "U")
         .groupBy((F.col("user_id") % _N_BUCKETS).alias("bucket"))
         .agg(F.count(F.lit(1)).alias("base_rows"))
     )
@@ -1012,40 +1020,6 @@ FROM g GROUP BY 1 ORDER BY 1"""
 
 # --- cdc_time_travel --------------------------------------------------------
 
-# as-of version cut, in hundredths of the observed µs span: strictly
-# between the batch-27 base cut (4/10 = 40/100) and log head (7/10),
-# so the read replays a strict PREFIX of the change log
-_TT_NUM = 55
-_TT_DEN = 100
-
-
-def _tt_records(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batch-27 CDC framing of events (key (user_id, event_type),
-    sequence (ts_us, event_id), op = D on event_id%5==0) with the base
-    cut (4/10 of span) and the as-of cut (55/100) broadcast onto every
-    row — same 1-row-agg cross-join scalar pattern as
-    ``_records``, integer DIV for both cuts."""
-    ev = load_table(spark, sf_dir, "events").select(
-        "user_id",
-        "event_type",
-        F.unix_micros("ts").alias("ts_us"),
-        "event_id",
-        "value",
-        F.when(F.col("event_id") % 5 == 0, F.lit("D"))
-        .otherwise(F.lit("U"))
-        .alias("op"),
-    )
-    span = ev.agg(
-        F.min("ts_us").alias("_t0"), F.max("ts_us").alias("_t1")
-    ).select(
-        F.expr(f"_t0 + (_t1 - _t0) * {_LO_NUM} DIV {_DEN}").alias("_lo_us"),
-        F.expr(f"_t0 + (_t1 - _t0) * {_TT_NUM} DIV {_TT_DEN}").alias(
-            "_asof_us"
-        ),
-    )
-    return ev.join(F.broadcast(span))
-
-
 def q_cdc_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Time travel (``VERSION AS OF``) over the merge-on-read layout:
     reconstruct the table as of a PAST version cut (55/100 of the ts
@@ -1065,11 +1039,10 @@ def q_cdc_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: base and log prefix are filters of ONE scan; resolution is
     the same single key-window shuffle ``cdc_merge_on_read`` pays —
     time travel costs no more than the current-version read."""
-    r = _tt_records(spark, sf_dir)
+    r = _records(spark, sf_dir)
     base = (
-        r.filter(F.col("ts_us") <= F.col("_lo_us"))
-        .withColumn("_rn", F.row_number().over(_latest(_KEY)))
-        .filter((F.col("_rn") == 1) & (F.col("op") == "U"))
+        _latest(r.filter(F.col("ts_us") <= F.col("_lo_us")))
+        .filter(F.col("op") == "U")
         .select(*_KEY, "ts_us", "event_id", "value", "op")
         .withColumn("from_log", F.lit(False))
     )
@@ -1083,8 +1056,8 @@ def q_cdc_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     merged = base.unionByName(log)
     return (
-        merged.withColumn("_rn", F.row_number().over(_latest(_KEY)))
-        .filter((F.col("_rn") == 1) & (F.col("op") == "U"))
+        _latest(merged)
+        .filter(F.col("op") == "U")
         .select("user_id", "event_type", "ts_us", "value", "from_log")
     )
 
@@ -1150,10 +1123,8 @@ def q_incremental_agg_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame
 
     r = _records(spark, sf_dir)
     cents = lambda c: F.round(F.col(c) * 100).cast("long")
-    view_lo = (
-        r.filter(F.col("ts_us") <= F.col("_lo_us"))
-        .withColumn("_rn", F.row_number().over(_latest(_KEY)))
-        .filter((F.col("_rn") == 1) & (F.col("op") == "U"))
+    view_lo = _latest(r.filter(F.col("ts_us") <= F.col("_lo_us"))).filter(
+        F.col("op") == "U"
     )
     agg_lo = view_lo.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_lo"),
@@ -1231,8 +1202,8 @@ def q_vacuum_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one key-window shuffle (the winner rank at the horizon) +
     one map-side-combinable rollup to 32 bucket rows — the same
     shape family as ``compaction_plan``."""
-    r = _records_vac(spark, sf_dir)
-    horizon = F.col("ts_us") <= F.col("_h_us")
+    r = _records(spark, sf_dir)
+    horizon = F.col("ts_us") <= F.col("_cut_us")
     w = Window.partitionBy(*_KEY, "_pre").orderBy(
         F.desc("ts_us"), F.desc("event_id")
     )
@@ -1263,23 +1234,6 @@ def q_vacuum_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("bucket")
     )
-
-
-def _records_vac(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CDC records with the retention horizon (7/10 cut) broadcast on."""
-    ev = load_table(spark, sf_dir, "events").select(
-        "user_id",
-        "event_type",
-        F.unix_micros("ts").alias("ts_us"),
-        "event_id",
-        F.when(F.col("event_id") % 5 == 0, F.lit("D"))
-        .otherwise(F.lit("U"))
-        .alias("op"),
-    )
-    span = ev.agg(
-        F.min("ts_us").alias("_t0"), F.max("ts_us").alias("_t1")
-    ).select(F.expr(f"_t0 + (_t1 - _t0) * 7 DIV {_DEN}").alias("_h_us"))
-    return ev.join(F.broadcast(span))
 
 
 SQL_VACUUM_PLAN = f"""

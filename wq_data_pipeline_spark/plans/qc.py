@@ -36,7 +36,6 @@ from wq_data_pipeline_spark.operators import sentem as SM
 from wq_data_pipeline_spark.operators import stats as S
 from wq_data_pipeline_spark.operators import windows as W
 from wq_data_pipeline_spark.operators.asof import asof_join_backward
-from wq_data_pipeline_spark.operators.windows import ordered
 from wq_data_pipeline_spark.sources.testdata import load_table
 
 
@@ -287,22 +286,8 @@ def q_a6_diff_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     score of the median cents-diff candidate (share of positive diffs
     that are integer multiples, atol 1e-3) — reference
     quant_step_estimate, scripts/ufz_water_qc_pipeline.py:129-142."""
-    d = _events_clean(spark, sf_dir)
-    q = S.diff_quantiles(d, KEY, "ts", "value")
-    c = d.withColumn("_c", F.round(F.col("value") * 100).cast("long"))
-    w = W.ordered(KEY, "ts")
-    c = c.withColumn("_dc", F.abs(F.col("_c") - F.lag("_c").over(w)))
-    pos = c.filter(F.col("_dc") > 0)
-    med = pos.groupBy(*KEY).agg(
-        F.percentile(F.col("_dc"), F.lit(0.5)).alias("cand_cents")
-    )
-    j = pos.join(F.broadcast(med), on=KEY)
-    ratio = F.col("_dc") / F.col("cand_cents")
-    hit = (F.abs(ratio - F.round(ratio)) < 1e-3).cast("double")
-    step = j.groupBy("event_type", "cand_cents").agg(
-        F.round(F.avg(hit), 4).alias("step_score"),
-        F.count(F.lit(1)).alias("n_diffs"),
-    )
+    q = S.diff_quantiles(_events_clean(spark, sf_dir), KEY, "ts", "value")
+    step = q_a6_quant_step(spark, sf_dir).withColumnRenamed("score", "step_score")
     return q.join(step, "event_type")
 
 
@@ -898,61 +883,31 @@ FROM l ASOF LEFT JOIN r ON l.user_id = r.user_id AND l.ts >= r.ts"""
 
 # --- W16: Gaussian smooth + residual ---------------------------------------
 
-_SIGMA = 2.0
-_TAPS = 4  # +-4 taps (~2 sigma; reference truncates at 4 sigma)
-_GW = [math.exp(-(k * k) / (2.0 * _SIGMA * _SIGMA)) for k in range(-_TAPS, _TAPS + 1)]
-
-
 def q_w16_gaussian(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W16: sparsify (value<5 -> NULL), forward/back-fill, Gaussian
     kernel smooth (sigma=2 pts, +-4 taps, renormalized over non-null
-    taps), residual = filled - smooth. Explicit tap expression tree ->
-    bit-deterministic (reference plot_gaussian_compare,
+    taps), residual = filled - smooth — ``windows.gaussian_smooth``,
+    the operator the QC figures use (reference plot_gaussian_compare,
     scripts/ufz_water_qc_pipeline.py:371-389)."""
     d = _events_clean(spark, sf_dir)
     d = d.withColumn("v", F.when(F.col("value") >= 5.0, F.col("value")))
-    wts = ordered(KEY, "ts")
-    ff = F.last("v", ignorenulls=True).over(
-        wts.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    # bfill as a REVERSED ffill: Spark evaluates ignore-nulls first()
-    # over an unbounded-FOLLOWING frame by rescanning per row (O(n²)
-    # per partition — 46 s at sf0.1); the descending-order running
-    # last() is a single O(n) pass (one extra sort).
-    wdesc = Window.partitionBy(*KEY).orderBy(F.desc("ts")).rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    bf = F.last("v", ignorenulls=True).over(wdesc)
-    d = d.withColumn("filled", F.coalesce(ff, bf))
-    w = ordered(KEY, "ts")
-    num = F.lit(0.0)
-    den = F.lit(0.0)
-    for k in range(-_TAPS, _TAPS + 1):
-        wt = _GW[k + _TAPS]
-        tap = (
-            F.col("filled")
-            if k == 0
-            else (F.lag("filled", -k).over(w) if k < 0 else F.lead("filled", k).over(w))
-        )
-        num = num + F.coalesce(tap, F.lit(0.0)) * F.lit(wt)
-        den = den + F.when(tap.isNotNull(), F.lit(wt)).otherwise(F.lit(0.0))
-    smooth = F.when(den > 0, num / den)
+    g = W.gaussian_smooth(d, "v", KEY)
     # round to 6 decimals (data resolution 0.01; cross-engine tap
     # accumulation differs by ~1 ulp at 1e-14 relative — 6-decimal
     # rounding absorbs it with 1e8 margin)
-    return d.select(
+    return g.select(
         "event_type",
         F.unix_micros("ts").alias("ts_us"),
         "filled",
-        F.round(smooth, 6).alias("smooth"),
-        F.round(F.col("filled") - smooth, 6).alias("residual"),
+        F.round("smooth", 6).alias("smooth"),
+        F.round("residual", 6).alias("residual"),
     )
 
 
 def _w16_sql() -> str:
     num_terms, den_terms = [], []
-    for k in range(-_TAPS, _TAPS + 1):
-        wt = repr(_GW[k + _TAPS])
+    for k in range(-W.GAUSS_TAPS, W.GAUSS_TAPS + 1):
+        wt = repr(W.GAUSS_WEIGHTS[k + W.GAUSS_TAPS])
         tap = (
             "filled"
             if k == 0

@@ -23,6 +23,7 @@ from wq_data_pipeline_spark.operators.scale import spread_small_scan
 from wq_data_pipeline_spark.operators.similarity import (
     band_sig_array,
     hyperplane_components,
+    quantized_cosine,
 )
 from wq_data_pipeline_spark.operators.text import gram_hash
 from wq_data_pipeline_spark.plans.corpus import SQL_WORDS
@@ -56,13 +57,11 @@ def q_embed_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     j = spread_small_scan(emb).crossJoin(F.broadcast(qs)).filter(
         F.col("vec_id") != F.col("query_id")
     )
-    dotq = F.aggregate(
-        F.zip_with("q", "qq", lambda a, b: a * b), F.lit(0).cast("long"), lambda s, x: s + x
+    scored = j.select(
+        "query_id",
+        F.col("vec_id").alias("neighbor_id"),
+        quantized_cosine("q", "qq").alias("cos_sim"),
     )
-    n1 = F.aggregate(F.transform("q", lambda a: a * a), F.lit(0).cast("long"), lambda s, x: s + x)
-    n2 = F.aggregate(F.transform("qq", lambda a: a * a), F.lit(0).cast("long"), lambda s, x: s + x)
-    cos = dotq.cast("double") / (F.sqrt(n1.cast("double")) * F.sqrt(n2.cast("double")))
-    scored = j.select("query_id", F.col("vec_id").alias("neighbor_id"), cos.alias("cos_sim"))
     w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
     return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= 5)
 
@@ -103,12 +102,6 @@ def q_embed_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("centroid_id"), F.col("q").alias("cq")
     )
 
-    def qcos(a, b):
-        dot = F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0).cast("long"), lambda s, x: s + x)
-        n1 = F.aggregate(F.transform(a, lambda x: x * x), F.lit(0).cast("long"), lambda s, x: s + x)
-        n2 = F.aggregate(F.transform(b, lambda x: x * x), F.lit(0).cast("long"), lambda s, x: s + x)
-        return dot.cast("double") / (F.sqrt(n1.cast("double")) * F.sqrt(n2.cast("double")))
-
     emb = spread_small_scan(emb)
     # corpus assignment via NARROW partial-aggregable max_by, not a
     # row_number window over the corpus x centroid expansion (the
@@ -120,7 +113,7 @@ def q_embed_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "vec_id",
             "centroid_id",
-            qcos(F.col("q"), F.col("cq")).alias("cs"),
+            quantized_cosine("q", "cq").alias("cs"),
         )
         .groupBy("vec_id")
         .agg(
@@ -136,7 +129,7 @@ def q_embed_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     probes = (
         emb.filter(F.col("vec_id") % 100 == 0)
         .crossJoin(F.broadcast(cent))
-        .withColumn("cs", qcos(F.col("q"), F.col("cq")))
+        .withColumn("cs", quantized_cosine("q", "cq"))
         .withColumn("rn", F.row_number().over(w_assign))
         .filter(F.col("rn") <= 2)
         .select(F.col("vec_id").alias("query_id"), F.col("q").alias("qq"), F.col("centroid_id").alias("bucket"))
@@ -145,7 +138,9 @@ def q_embed_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id") != F.col("query_id")
     )
     scored = cand.select(
-        "query_id", F.col("vec_id").alias("neighbor_id"), qcos(F.col("q"), F.col("qq")).alias("cos_sim")
+        "query_id",
+        F.col("vec_id").alias("neighbor_id"),
+        quantized_cosine("q", "qq").alias("cos_sim"),
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
     return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= 5)
@@ -686,7 +681,6 @@ SELECT doc_id, score, rank FROM bm25"""
 _SD_TAU = 0.44  # stress threshold for the synthetic embeddings (real
 # corpora use ~0.97); at 0.44 the sf0.01/sf0.1 tables yield 9/42 dups
 _SD_STRIDE = 64
-_SD_Q = 10_000_000
 
 
 def q_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -699,10 +693,7 @@ def q_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from wq_data_pipeline_spark.operators.similarity import semdedup
 
     emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id",
-        F.transform(
-            "embedding", lambda x: F.round(x.cast("double") * _SD_Q).cast("long")
-        ).alias("q"),
+        "vec_id", _quantized("embedding").alias("q")
     )
     # single-file scan -> one input split: spread rows before the
     # centroid-count-wide scoring fan-out (r1 single-file-scan rule)
@@ -717,7 +708,7 @@ def q_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 SQL_SEMDEDUP = f"""
 WITH q AS (
-  SELECT vec_id, list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * {_SD_Q}) AS BIGINT)) AS q
+  SELECT vec_id, list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * {_Q}) AS BIGINT)) AS q
   FROM embeddings
 ),
 cent AS (SELECT vec_id AS centroid_id, q AS cq FROM q WHERE vec_id % {_SD_STRIDE} = 0),
@@ -758,20 +749,13 @@ FROM assigned a LEFT JOIN dup d USING (vec_id)"""
 _PQ_M = 4  # subspaces
 _PQ_DSUB = 16  # dims per subspace (4 x 16 = the 64-dim embedding)
 _PQ_K = 16  # centroids per subspace codebook
-_PQ_Q = 10_000_000  # float -> BIGINT quantization (same scale as LSH ANN)
-
-
-def _pq_quantized(vec: str) -> F.Column:
-    return F.transform(
-        F.col(vec), lambda x: F.round(x.cast("double") * _PQ_Q).cast("long")
-    )
 
 
 def _pq_subvectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(vec_id, s, sub): each embedding quantized to BIGINT and split
     into _PQ_M subspace slices."""
     raw = load_table(spark, sf_dir, "embeddings")
-    q = raw.select("vec_id", _pq_quantized("embedding").alias("q"))
+    q = raw.select("vec_id", _quantized("embedding").alias("q"))
     return q.select(
         "vec_id",
         F.explode(
@@ -841,7 +825,7 @@ def q_pq_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
 SQL_PQ_ENCODE = f"""
 WITH q AS (
   SELECT vec_id,
-         list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * {_PQ_Q}) AS BIGINT)) AS q
+         list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * {_Q}) AS BIGINT)) AS q
   FROM embeddings
 ),
 sub AS (
@@ -916,7 +900,7 @@ def q_pq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 SQL_PQ_SEARCH = f"""
 WITH q AS (
   SELECT vec_id,
-         list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * {_PQ_Q}) AS BIGINT)) AS q
+         list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * {_Q}) AS BIGINT)) AS q
   FROM embeddings
 ),
 sub AS (
@@ -976,7 +960,7 @@ def q_ivf_pq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     raw = load_table(spark, sf_dir, "embeddings").repartition(
         spark.sparkContext.defaultParallelism
     )
-    q = raw.select("vec_id", _pq_quantized("embedding").alias("q"))
+    q = raw.select("vec_id", _quantized("embedding").alias("q"))
     coarse = q.filter(
         (F.col("vec_id") >= _IVF_C_LO) & (F.col("vec_id") < _IVF_C_HI)
     ).select(F.col("vec_id").alias("cid"), F.col("q").alias("cq"))
@@ -1039,7 +1023,7 @@ def q_ivf_pq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 SQL_IVF_PQ_SEARCH = f"""
 WITH q AS (
   SELECT vec_id,
-         list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * {_PQ_Q}) AS BIGINT)) AS q
+         list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * {_Q}) AS BIGINT)) AS q
   FROM embeddings
 ),
 sub AS (
@@ -1997,17 +1981,6 @@ _RRF_K = 60  # the standard RRF smoothing constant (SIGIR 2009)
 _RRF_TOPN = 20  # fused list length (= both input list lengths)
 
 
-def _qcos(a, b) -> "F.Column":
-    """Quantized-integer cosine (the embed_ivf_topk rule): exact
-    BIGINT dot + norms, ONE double division at the end — identical
-    FP sequence in both engines."""
-    zero = F.lit(0).cast("long")
-    dot = F.aggregate(F.zip_with(a, b, lambda x, y: x * y), zero, lambda s, x: s + x)
-    n1 = F.aggregate(F.transform(a, lambda x: x * x), zero, lambda s, x: s + x)
-    n2 = F.aggregate(F.transform(b, lambda x: x * x), zero, lambda s, x: s + x)
-    return dot.cast("double") / (F.sqrt(n1.cast("double")) * F.sqrt(n2.cast("double")))
-
-
 def _rrf_micro(rank: "F.Column") -> "F.Column":
     """Integer-micro RRF contribution: round(1e6/(k+rank)) as BIGINT,
     0 when the doc is absent from that list — the fused score is an
@@ -2074,7 +2047,7 @@ def q_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = (
         emb.crossJoin(F.broadcast(qvec))
         .filter(F.col("vec_id") != F.col("anchor_id"))
-        .select("vec_id", _qcos(F.col("q"), F.col("qq")).alias("cos_sim"))
+        .select("vec_id", quantized_cosine("q", "qq").alias("cos_sim"))
     )
     # global sort + limit plans as TakeOrderedAndProject (the
     # bm25_search precedent); the rank window then runs over only the

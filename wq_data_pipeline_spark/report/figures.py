@@ -18,13 +18,13 @@ The figure content is identical; only the rasterizer differs.
 
 from __future__ import annotations
 
-import math
 import os
 from typing import Sequence
 
 from pyspark.sql import DataFrame, Window, functions as F
 
 from wq_data_pipeline_spark.functions.scalars import sanitize_name
+from wq_data_pipeline_spark.operators.windows import gaussian_smooth
 from wq_data_pipeline_spark.report import svgplot as SP
 from wq_data_pipeline_spark.report.svgplot import (
     COLOR_BLUE,
@@ -181,7 +181,7 @@ def render_qc_figures(
         pre = os.path.join(station_dir, f"{sanitize_name(variable)}__")
 
         # one bucketed pass shared by 00/01/08 + the gaussian figure
-        gs = _gaussian_cols(d)
+        gs = gaussian_smooth(d, "clean", KEYS).drop("filled")
         rows = downsample_series(
             gs, ["raw", "clean", "accepted", "smooth", "residual"], max_points=max_points
         )
@@ -294,36 +294,6 @@ def render_qc_figures(
         f8 = _series_fig(rows, "accepted", f"{variable} Accepted mask", variable)
         written.append(save_figure(f8, pre + "08_accepted"))
     return written
-
-
-def _gaussian_cols(d: DataFrame, sigma_pts: float = 2.0, taps: int = 4) -> DataFrame:
-    """clean -> ffill/bfill -> renormalized gaussian taps -> smooth,
-    residual (reference plot_gaussian_compare semantics,
-    scripts/ufz_water_qc_pipeline.py:371-389) — all window algebra,
-    one sort key."""
-    w = Window.partitionBy(*KEYS).orderBy("ts")
-    ff = F.last("clean", ignorenulls=True).over(
-        w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    wdesc = Window.partitionBy(*KEYS).orderBy(F.desc("ts")).rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    bf = F.last("clean", ignorenulls=True).over(wdesc)
-    d = d.withColumn("_filled", F.coalesce(ff, bf))
-    num, den = F.lit(0.0), F.lit(0.0)
-    for k in range(-taps, taps + 1):
-        wt = math.exp(-(k * k) / (2.0 * sigma_pts * sigma_pts))
-        tap = (
-            F.col("_filled")
-            if k == 0
-            else (F.lag("_filled", -k).over(w) if k < 0 else F.lead("_filled", k).over(w))
-        )
-        num = num + F.coalesce(tap, F.lit(0.0)) * F.lit(wt)
-        den = den + F.when(tap.isNotNull(), F.lit(wt)).otherwise(F.lit(0.0))
-    smooth = F.when(den > 0, num / den)
-    return d.withColumn("smooth", smooth).withColumn(
-        "residual", F.col("_filled") - F.col("smooth")
-    ).drop("_filled")
 
 
 def _render_wrtds_fig(d: DataFrame, base: str, max_points: int) -> str:
