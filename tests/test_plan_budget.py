@@ -208,9 +208,9 @@ BUDGETS = {
     "value_percentiles": (1, 0, 0),
     # span agg + slot agg; the Generate is the per-group grid sequence
     "time_grid_ffill": (2, 1, 1),
-    # CC ran at construction; final = size agg + join over the pinned
-    # component labels
-    "embed_dup_clusters": (2, 2, 0),
+    # CC ran at construction; final = broadcast join of the driver
+    # label frame + one cluster-size window
+    "embed_dup_clusters": (1, 1, 0),
     # three chained min-aggs + two left joins (AQE broadcasts at
     # small SF); shuffles carry only (user, ts)
     "event_funnel": (5, 5, 0),
@@ -416,7 +416,7 @@ BUDGETS = {
 # TPC-H joins) — EXCEPT the documented iterative operators, which run
 # driver-side rounds at build time. A cap breach means either a new
 # eager corpus action (the heavy_hitters count() class of bug) or an
-# iteration-count regression (CC rounds doubling).
+# iteration-count regression (trainer rounds doubling).
 CONSTRUCTION_JOB_CAPS = {
     # r12 restricted-verify entries: eager candidate-pairs checkpoint +
     # the broadcast-gate count add 2 bounded construction jobs each
@@ -425,10 +425,12 @@ CONSTRUCTION_JOB_CAPS = {
     "dup_source_matrix": 10,
     "incremental_dedup": 10,
     "para_dedup": 11,
-    # r12: degree-table pin + broadcast-gate count on top of the edge
-    # skeleton checkpoint
-    "pagerank_purchases": 12,
-    "dedup_clusters": 40,  # LSH chain + CC label-propagation rounds
+    # footer reads + the pairs pin/gate count (AQE stage jobs) + the
+    # collect the driver finish runs on (measured 7 cold)
+    "pagerank_purchases": 9,
+    # LSH chain + the edge pin/gate count + the collect that the
+    # driver union-find runs on (measured 8 cold)
+    "dedup_clusters": 10,
     "embed_kmeans_ivf": 20,  # stats + seeds + 4 jobs per Lloyd round (measured 16)
     "sequence_pack": 8,  # distributed prefix sum: per-partition bases
     "pack_assignments": 8,
@@ -448,7 +450,9 @@ CONSTRUCTION_JOB_CAPS = {
     "mix_report": 16,  # distributed prefix sum over the survivors
     "corpus_shuffle": 8,  # distributed prefix sum: per-partition bases
     "quality_deciles": 8,  # distributed prefix sum: per-partition bases
-    "embed_dup_clusters": 44,  # near-dup pair chain + CC label rounds
+    # near-dup pair chain + the edge pin/gate count + the collect
+    # (measured 9 cold)
+    "embed_dup_clusters": 11,
     # Q8 is the one SEVEN-table join in the catalog (lineitem, part,
     # orders, customer, supplier, nation, region): one footer/schema
     # job per table read, all metadata-only (measured 7, stable).

@@ -20,8 +20,14 @@ Scale design (the point of these at 100 TB):
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql.types import StructField, StructType
 
-from wq_data_pipeline_spark.operators.pinning import pin
+from wq_data_pipeline_spark.operators.pinning import (
+    collect_if_small,
+    driver_frame,
+    pin,
+    unpin,
+)
 from wq_data_pipeline_spark.operators.text import distinct_words, doc_fingerprint
 
 
@@ -474,18 +480,89 @@ def simhash_hamming_pairs(
     )
 
 
-# connected_components round schedule: at most _CC_MAX_ITERS
-# propagation steps, _CC_STEPS_PER_ROUND per checkpoint, no fixpoint
-# scan for the first _CC_SKIP_CHECK_ROUNDS rounds; round joins are
-# broadcast-hinted up to _CC_BROADCAST_EDGES_MAX edges
-_CC_MAX_ITERS = 20
-_CC_STEPS_PER_ROUND = 2
-_CC_SKIP_CHECK_ROUNDS = 1
-# byte math (r12-VERDICT #2): what actually broadcasts each round is
-# the NODE-sized (node, label) frame (≤ n_edges rows of two longs
-# ≈ 16 B) — 4M rows ≈ 64 MB raw, matching the session's 64 MB
-# autoBroadcast intent
-_CC_BROADCAST_EDGES_MAX = 4_000_000
+# Distributed connected_components: round cap of the large-star /
+# small-star loop. The loop stops at a fixpoint, which the rounds
+# reach in about log2(n) + 2 rounds in practice (9 for a 1000-node
+# chain with shuffled ids, 18 for a 100k-node sorted chain); the cap
+# only turns a loop that would not end into a named error.
+_CC_MAX_ROUNDS = 64
+
+
+def _min_labels(a: list, b: list) -> tuple[list, list]:
+    """Union-find over the pairs ``zip(a, b)``: returns (nodes, labels)
+    for every node that occurs, each label the minimum id of the
+    node's component. Union links the larger root under the smaller,
+    so every root is its set's minimum."""
+    parent: dict = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]  # path halving
+            x = parent[x]
+        return x
+
+    for x, y in zip(a, b):
+        rx, ry = find(x), find(y)
+        if rx != ry:
+            if ry < rx:
+                rx, ry = ry, rx
+            parent[ry] = rx
+    nodes = list(parent)
+    return nodes, [find(x) for x in nodes]
+
+
+def _large_star(e: DataFrame) -> DataFrame:
+    """Large-star: every node u links each larger neighbor to the
+    minimum of u and its neighbors. Output edges (a, b) have a > b."""
+    both = e.unionByName(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
+    m = both.groupBy("a").agg(F.least(F.col("a"), F.min("b")).alias("m"))
+    return (
+        both.join(m, "a")
+        .where(F.col("b") > F.col("a"))
+        .select(F.col("b").alias("a"), F.col("m").alias("b"))
+        .distinct()
+    )
+
+
+def _small_star(e: DataFrame) -> DataFrame:
+    """Small-star over edges with a > b: every node a links itself and
+    each of its smaller neighbors to the minimum of those neighbors."""
+    m = e.groupBy("a").agg(F.min("b").alias("m"))
+    leaves = (
+        e.join(m, "a")
+        .select(F.col("b").alias("a"), F.col("m").alias("b"))
+        .where(F.col("a") != F.col("b"))
+    )
+    return leaves.unionByName(m.select("a", F.col("m").alias("b"))).distinct()
+
+
+def _star_labels(e: DataFrame) -> DataFrame:
+    """(node, label) by alternating large-star and small-star rounds
+    (Kiveris et al., SoCC 2014) over the pinned edges ``e`` (a > b) to
+    a fixpoint. At the fixpoint every component is a star whose
+    center is its minimum id, so each edge (a, b) reads "a's label is
+    b"; centers carry no edge and keep their own id downstream. Each
+    round is pinned, checked against the previous round by one
+    full-scan action (which also materializes the pin), and the
+    previous round is released."""
+    for _ in range(_CC_MAX_ROUNDS):
+        nxt = pin(_small_star(_large_star(e)))
+        changed = (
+            nxt.withColumn("_n", F.lit(True))
+            .join(e.withColumn("_o", F.lit(True)), ["a", "b"], "full_outer")
+            .where(F.col("_n").isNull() | F.col("_o").isNull())
+            .count()
+        )
+        unpin(e)
+        e = nxt
+        if not changed:
+            return e.select(F.col("a").alias("node"), F.col("b").alias("label"))
+    unpin(e)
+    raise RuntimeError(
+        f"connected_components: no fixpoint after {_CC_MAX_ROUNDS} "
+        "large-star/small-star rounds"
+    )
 
 
 def connected_components(
@@ -495,116 +572,43 @@ def connected_components(
     src: str = "src",
     dst: str = "dst",
 ) -> DataFrame:
-    """Connected components by iterative min-label propagation — the
-    final stage of near-dup clustering (candidate pairs -> clusters).
+    """Connected components — the final stage of near-dup clustering
+    (candidate pairs -> clusters). Returns (``id_col``, cluster_id)
+    for every row of ``nodes``; cluster_id is the minimum id in the
+    node's component (what min-label propagation and the
+    recursive-CTE oracles compute), and nodes that touch no edge are
+    their own cluster.
 
-    Each node's label converges to the minimum id in its component.
-    Each step = neighbor-min propagation + pointer jump
-    (label <- min(label, label[label])), so convergence takes
-    O(log diameter) steps, not diameter steps — the shape that holds
-    when a 100-TB near-dup graph contains long chains.
+    The edges are normalized to (larger, smaller) pairs without
+    self-loops or NULL ends, pinned and counted once:
 
-    Scale mechanics:
-
-    - Only nodes that touch an edge iterate; untouched nodes are
-      singleton clusters and rejoin at the end (a 100-TB near-dup
-      graph is sparse — iterating all nodes, as r2 did, drags the
-      full corpus through every round for labels that cannot change).
-    - The edge skeleton and label frames are
-      ``localCheckpoint(eager=True)``ed. The checkpoint is not
-      optional lineage hygiene — each step references the previous
-      labels THREE times (neighbor-min build, the propagation join,
-      the pointer-jump self-join), so an uncheckpointed plan TRIPLES
-      per step: exponential analysis cost (StackOverflow in plan
-      handling by step ~6 at sf0.1). Batching ``_CC_STEPS_PER_ROUND``
-      steps per checkpoint and skipping the fixpoint scan for the
-      first ``_CC_SKIP_CHECK_ROUNDS`` rounds halves the materialization +
-      action count (the r2 one-step-per-round form spent 8s at sf0.1
-      on ~12 rounds of driver-side job scheduling, not on data).
-    - Checkpointed RDD-backed frames report no stats, so AQE can
-      never see that the skeleton is tiny and every round would run
-      32-partition sort-merge joins. The driver *knows* the edge
-      count (it materializes the skeleton anyway), so below
-      ``_CC_BROADCAST_EDGES_MAX`` edges it pins broadcast-hash joins for
-      the round joins — the exact decision AQE would make with
-      accurate stats. Above the threshold (the true 100-TB path) the
-      shuffling sort-merge rounds run unchanged.
-    - On a multi-executor cluster swap localCheckpoint for
-      reliable-store ``checkpoint()`` (localCheckpoint dies with an
-      executor).
+    - At or under ``_DRIVER_FINISH_ROWS`` edges (pinning.py) they are
+      collected, union-find labels them on the driver, and the labels
+      come back as one broadcast Arrow frame: one count and one
+      collect, whatever the graph's diameter.
+    - Above it, :func:`_star_labels` runs large-star/small-star
+      rounds to a fixpoint, about log2(n) rounds of a few shuffles
+      each, and raises a RuntimeError naming this operator if the
+      round cap is reached — it never returns unconverged labels.
     """
-    both = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).unionByName(
-        edges.select(F.col(dst).alias("a"), F.col(src).alias("b"))
-    ).distinct()
-    # the edge list joins into EVERY round — materialize once so no
-    # iteration re-runs the upstream plan (e.g. the full MinHash-LSH
-    # candidate generation) from the source.
-    both = both.localCheckpoint()
-    n_edges = both.count()
-    small = n_edges <= _CC_BROADCAST_EDGES_MAX
-    hint = F.broadcast if small else (lambda d: d)
-
-    lab = (
-        both.select(F.col("a").alias("node"))
-        .distinct()
-        .select("node", F.col("node").alias("label"))
-        .localCheckpoint()
+    spark = nodes.sparkSession
+    id_type = nodes.schema[id_col].dataType
+    a, b = F.col(src), F.col(dst)
+    und = edges.where(a.isNotNull() & b.isNotNull() & (a != b)).select(
+        F.greatest(a, b).alias("a"), F.least(a, b).alias("b")
     )
-
-    def _step(f: DataFrame) -> DataFrame:
-        # f: (node, _l0, label); one neighbor-min propagation followed
-        # by one pointer jump
-        neighbor_min = (
-            both.join(
-                hint(f.select(F.col("node").alias("_n"), F.col("label").alias("_nl"))),
-                both.b == F.col("_n"),
-            )
-            .groupBy("a")
-            .agg(F.min("_nl").alias("nlabel"))
-        )
-        prop = f.join(hint(neighbor_min), f.node == neighbor_min.a, "left").select(
-            "node",
-            "_l0",
-            F.least(F.col("label"), F.coalesce(F.col("nlabel"), F.col("label"))).alias("label"),
-        )
-        parents = prop.select(F.col("node").alias("_pn"), F.col("label").alias("_pl"))
-        return prop.join(hint(parents), prop.label == F.col("_pn"), "left").select(
-            "node",
-            "_l0",
-            F.least(F.col("label"), F.coalesce(F.col("_pl"), F.col("label"))).alias("label"),
-        )
-
-    n_rounds = (_CC_MAX_ITERS + _CC_STEPS_PER_ROUND - 1) // _CC_STEPS_PER_ROUND
-    for r in range(n_rounds):
-        f = lab.select("node", F.col("label").alias("_l0"), "label")
-        for _ in range(_CC_STEPS_PER_ROUND):
-            f = _step(f)
-        f = f.select("node", "label", (F.col("label") != F.col("_l0")).alias("_chg"))
-        # LAZY checkpoint + ONE full-scan action per round (r13): the
-        # action below computes every partition, which is what
-        # materializes the checkpoint — the r12 form paid an eager
-        # checkpoint job AND a separate fixpoint job per checked
-        # round. A full count (never limit(1)) is load-bearing: a
-        # short-circuiting action would materialize only some
-        # partitions and leave the rest to recompute the whole round
-        # plan from lineage on the next round's first read.
-        new_lab = f.localCheckpoint(eager=False)
-        lab = new_lab.drop("_chg")
-        # skip the fixpoint READ while convergence is certain to be
-        # incomplete: rounds 0.._CC_SKIP_CHECK_ROUNDS-1 cover only
-        # distance (r+1)*_CC_STEPS_PER_ROUND, so the first check fires
-        # at r == _CC_SKIP_CHECK_ROUNDS
-        if r >= _CC_SKIP_CHECK_ROUNDS:
-            if new_lab.filter("_chg").count() == 0:
-                break
-        else:
-            new_lab.count()  # materialize-only round
-    # untouched nodes are their own clusters
+    pinned, small = collect_if_small(und)
+    if small is not None:
+        node, label = _min_labels(small.column("a").to_pylist(), small.column("b").to_pylist())
+        schema = StructType([StructField("node", id_type), StructField("label", id_type)])
+        lab = F.broadcast(driver_frame(spark, {"node": node, "label": label}, schema))
+    else:
+        lab = _star_labels(pinned)
     return nodes.select(F.col(id_col)).join(
-        hint(lab.withColumnRenamed("node", id_col)), id_col, "left"
+        lab.withColumnRenamed("node", id_col), id_col, "left"
     ).select(
         F.col(id_col),
-        F.coalesce(F.col("label"), F.col(id_col)).alias("cluster_id"),
+        F.coalesce(F.col("label").cast(id_type), F.col(id_col)).alias("cluster_id"),
     )
 
 
@@ -640,7 +644,8 @@ def _pair_restricted_words(
     executor at the boundary."""
     pairs = pin(pairs, eager=False)
     hint = F.broadcast if pairs.count() <= 1_000_000 else (lambda d: d)
-    pairs = hint(pairs)
+    # ids come from the unhinted pin: a hint under the Union is not a
+    # join input, so Spark drops it with a warning per call
     ids = (
         pairs.select(F.col("id_a").alias(id_col))
         .unionByName(pairs.select(F.col("id_b").alias(id_col)))
@@ -649,7 +654,7 @@ def _pair_restricted_words(
     w = df.join(hint(ids), id_col, "leftsemi").select(
         F.col(id_col), distinct_words(text).alias("ws")
     )
-    return pairs, w
+    return hint(pairs), w
 
 
 def _word_set_pairs(

@@ -28,11 +28,24 @@ count() on the persisted frame on clusters).
 persisted blocks on a cluster, and does nothing locally, where
 ContextCleaner frees localCheckpoint blocks once the pinned frame is
 no longer referenced.
+
+Iterative graph operators finish on the driver when their input is
+small: :func:`collect_if_small` pins and counts the input and collects
+it only at or under ``_DRIVER_FINISH_ROWS`` rows, and
+:func:`driver_frame` ships the driver-computed result back as Arrow.
+Above the gate the caller runs its distributed rounds from the
+returned pin.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from typing import TYPE_CHECKING
+
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
+
+if TYPE_CHECKING:
+    import pyarrow as pa
 
 
 def is_local_master(master: str | None) -> bool:
@@ -63,3 +76,40 @@ def unpin(df: DataFrame) -> None:
     docstring)."""
     if not is_local_master(df.sparkSession.sparkContext.master):
         df.unpersist(blocking=False)
+
+
+# Driver-finish gate (rows). Byte math: a collected row is two longs
+# (16 B in Arrow; PageRank's two short node strings, about 40 B), so
+# the collect is at most ~16-40 MB, and a result frame of at most 2M
+# (node, label) longs is ~32 MB, inside the session's 64 MB broadcast
+# intent. Cost at exactly 1M edges (connected_components on a random
+# graph of 1.33M nodes, 4-core VM): 7.3 s to build (1.1 s Arrow to
+# Python lists, 1.9 s union-find), 6.2 s for the first read of the
+# 1.5M-row result, Python driver peak RSS 313 MB (138 MB before).
+_DRIVER_FINISH_ROWS = 1_000_000
+
+
+def collect_if_small(df: DataFrame) -> tuple[DataFrame, pa.Table | None]:
+    """Pin ``df`` and count it (the count materializes the pin). At or
+    under ``_DRIVER_FINISH_ROWS`` rows, also collect the pin as an
+    Arrow table (one more job, reading the pin) and release it; above
+    the gate the table is None and the caller continues from the
+    pin."""
+    pinned = pin(df)
+    if pinned.count() > _DRIVER_FINISH_ROWS:
+        return pinned, None
+    small = pinned.toArrow()
+    unpin(pinned)
+    return pinned, small
+
+
+def driver_frame(
+    spark: SparkSession, columns: dict[str, list], schema: StructType
+) -> DataFrame:
+    """A frame of driver-computed ``columns`` cast to ``schema``. It is
+    built from an Arrow table, which the JVM decodes itself whatever
+    the session's Arrow conf: a frame built from a Python list is a
+    Python RDD, and every job that reads it starts Python workers."""
+    import pyarrow as pa
+
+    return spark.createDataFrame(pa.table(columns), schema)

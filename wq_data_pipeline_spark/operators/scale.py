@@ -228,8 +228,7 @@ def distributed_prefix_sum(
     # localCheckpoint pins the range partitioning: the per-partition
     # totals action and the final join must see the SAME boundaries
     # (repartitionByRange re-samples per action otherwise). On a real
-    # cluster swap for reliable-store checkpoint(), as in
-    # connected_components.
+    # cluster swap for reliable-store checkpoint().
     d = (
         df.repartitionByRange(n, F.col(order_col))
         .withColumn("_pid", F.spark_partition_id())

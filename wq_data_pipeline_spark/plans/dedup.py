@@ -201,8 +201,10 @@ FROM pairs JOIN ws a ON pairs.id_a = a.doc_id JOIN ws b ON pairs.id_b = b.doc_id
 
 def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup clustering end-to-end: MinHash-LSH candidate pairs ->
-    connected components (iterative min-label propagation) -> cluster
-    assignments. The oracle replays the pairs with a recursive CTE."""
+    connected components (operators/dedup.py: union-find on the
+    driver below the gate, large-star/small-star rounds above it) ->
+    cluster assignments. The oracle replays the pairs with a recursive
+    CTE."""
     d = _docs_parallel(spark, sf_dir)
     pairs = DD.minhash_lsh_candidates(
         d, "text", "doc_id", num_hashes=_MH_K, rows_per_band=_MH_R, max_df=_MH_MAXDF

@@ -17,8 +17,10 @@ every computed column is aliased identically in both dialects."""
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from wq_data_pipeline_spark.operators import dq
+from wq_data_pipeline_spark.operators.pinning import collect_if_small, driver_frame, pin
 from wq_data_pipeline_spark.operators.text import gram_hash
 from wq_data_pipeline_spark.plans.qc import _DAY_US, _HOUR_US, _events, _events_raw
 from wq_data_pipeline_spark.sources.testdata import load_table
@@ -1096,6 +1098,44 @@ FROM r WHERE sample_rank <= {_WS_K}"""
 _PR_ITERS = 3
 
 
+def _pagerank_on_driver(spark: SparkSession, pairs) -> DataFrame:
+    """The ``_PR_ITERS`` integer PageRank rounds in Python over the
+    collected distinct (c, s) pairs (an Arrow table). Same arithmetic
+    as the distributed rounds — ``(85*r) // (100*deg)`` on
+    non-negative ints, summed per destination — so ranks are
+    bit-identical."""
+    nbrs: dict[str, list[str]] = {}
+    for c, s in zip(pairs.column("c").to_pylist(), pairs.column("s").to_pylist()):
+        nbrs.setdefault(c, []).append(s)
+        nbrs.setdefault(s, []).append(c)
+    ranks = dict.fromkeys(nbrs, 1_000_000)
+    for _ in range(_PR_ITERS):
+        nxt: dict[str, int] = {}
+        for node, r in ranks.items():
+            u = (85 * r) // (100 * len(nbrs[node]))
+            for dst in nbrs[node]:
+                nxt[dst] = nxt.get(dst, 150_000) + u
+        ranks = nxt
+    nodes = list(ranks)
+    return driver_frame(
+        spark,
+        {
+            "node": nodes,
+            "node_type": [n[:1] for n in nodes],
+            "deg": [len(nbrs[n]) for n in nodes],
+            "rank_micro": [ranks[n] for n in nodes],
+        },
+        StructType(
+            [
+                StructField("node", StringType()),
+                StructField("node_type", StringType()),
+                StructField("deg", LongType(), nullable=False),
+                StructField("rank_micro", LongType()),
+            ]
+        ),
+    )
+
+
 def q_pagerank_purchases(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PageRank over the customer-supplier purchase graph (edge when
     a customer ever bought from a supplier), {_PR_ITERS} fixed
@@ -1105,13 +1145,18 @@ def q_pagerank_purchases(spark: SparkSession, sf_dir: str) -> DataFrame:
     Exact integer arithmetic end-to-end: ranks live in micro-units,
     each neighbor contribution is the BIGINT integral division
     (85·r) div (100·deg), so the per-iteration sums are order-free
-    under any partitioning and the oracle unrolls the same rounds as
-    CTEs. The edge skeleton (one distinct pair per relationship) is
-    pinned once and reused by degree + every iteration; each round
-    is one join + one hash agg — the standard distributed-PR shape."""
+    and the oracle unrolls the same rounds as CTEs.
+
+    The distinct (c, s) pairs are pinned and counted once. At or under
+    ``_DRIVER_FINISH_ROWS`` pairs (operators/pinning.py) they are
+    collected and the rounds run on the driver
+    (:func:`_pagerank_on_driver`): one count and one collect. Above it the
+    rounds run distributed: the symmetric edge skeleton and the degree
+    table are pinned, and each round is one join + one hash agg — the
+    standard distributed-PR shape."""
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
     orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    pairs = (
+    pairs, small = collect_if_small(
         li.join(orders, li.l_orderkey == orders.o_orderkey)
         .select(
             F.concat(F.lit("c:"), F.col("o_custkey").cast("string")).alias("c"),
@@ -1119,26 +1164,24 @@ def q_pagerank_purchases(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    edges = (
+    if small is not None:
+        return _pagerank_on_driver(spark, small)
+    edges = pin(
         pairs.select(F.col("c").alias("src"), F.col("s").alias("dst"))
         .unionAll(pairs.select(F.col("s").alias("src"), F.col("c").alias("dst")))
         # degree + 3 iterations all read this skeleton — pin it once,
         # ALREADY hash-partitioned on src so every iteration's join
         # shuffles only the node-sized rank table, never the edges
-        .repartition(spark.sparkContext.defaultParallelism, "src")
-        .localCheckpoint()
+        .repartition(spark.sparkContext.defaultParallelism, "src"),
+        eager=True,
     )
     # the degree table joins into every round AND the final select —
     # pin it once (it is node-sized); count it while materializing so
-    # the round joins can be broadcast-pinned below the same gate the
-    # connected-components operator uses (checkpointed RDD frames
-    # carry no stats, so AQE would otherwise run every round as a
-    # sort-merge join that re-sorts the EDGE skeleton — 14 SMJs in
-    # the r12 initial-plan audit). Above the gate (the true 100-TB
-    # node count) the shuffling joins run unchanged.
-    deg = edges.groupBy("src").agg(
-        F.count(F.lit(1)).alias("deg")
-    ).localCheckpoint()
+    # the round joins can be broadcast-pinned (pinned frames carry no
+    # stats, so AQE would otherwise run every round as a sort-merge
+    # join that re-sorts the EDGE skeleton). Above the node gate below
+    # the shuffling joins run unchanged.
+    deg = pin(edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg")), eager=True)
     n_nodes = deg.count()
     # byte-aware gate (r12-VERDICT #2): a broadcast (node, u) row is a
     # ~10-char node string + one long ≈ 40 B framed, so 1.5M nodes ≈
@@ -1869,7 +1912,7 @@ def cooccurrence_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The shared user co-occurrence graph: distinct (ua < ub) pairs
     of users acting in the same (event_type, hour) bucket, with
     buckets over the hot cap dropped BEFORE the pair self-join.
-    Returned PINNED (localCheckpoint) because every consumer fans
+    Returned PINNED (operators/pinning.py) because every consumer fans
     out over it multiple times."""
     ev = _events_raw(spark, sf_dir)
     bucket_users = (
@@ -1885,12 +1928,12 @@ def cooccurrence_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).filter(F.col("_bn") <= _TRI_BUCKET_CAP)
     a = sized.select("event_type", "h", F.col("user_id").alias("ua"))
     b = sized.select("event_type", "h", F.col("user_id").alias("ub"))
-    return (
+    return pin(
         a.join(b, ["event_type", "h"])
         .filter(F.col("ua") < F.col("ub"))
         .select("ua", "ub")
-        .distinct()
-        .localCheckpoint()
+        .distinct(),
+        eager=True,
     )
 
 
@@ -1907,7 +1950,7 @@ def q_triangle_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Plan shape at scale: bucket agg (one shuffle) -> bounded
     per-bucket pair explosion -> edge distinct (shuffle on the pair
-    key), then the edge set is PINNED (localCheckpoint) because five
+    key), then the edge set is PINNED (operators/pinning.py) because five
     downstream branches read it (e1/e2/the closing semi-join/both
     degree sides) — unpinned, Catalyst recomputes the whole edge
     subtree per branch (measured E=30 vs E<=8 pinned). The two-hop
@@ -2588,17 +2631,17 @@ def q_khop_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
     The iterative-traversal pattern at scale: per round, the
     frontier joins the pinned edge set (keyed join), new nodes are
     anti-joined against the reached set, and the reached set is
-    localCheckpoint'ed so plans stay flat across rounds — the same
-    discipline as dedup_clusters' label propagation. Rounds are
-    bounded (3), so construction cost is fixed.
+    pinned (operators/pinning.py) so plans stay flat across rounds.
+    Rounds are bounded (3), so construction cost is fixed.
 
     Oracle: a DuckDB RECURSIVE CTE replays the identical BFS with
     min-distance semantics."""
 
     edges = cooccurrence_edges(spark, sf_dir)
-    undir = edges.unionAll(
-        edges.select(F.col("ub").alias("ua"), F.col("ua").alias("ub"))
-    ).localCheckpoint()
+    undir = pin(
+        edges.unionAll(edges.select(F.col("ub").alias("ua"), F.col("ua").alias("ub"))),
+        eager=True,
+    )
     deg = undir.groupBy("ua").agg(F.count(F.lit(1)).alias("degree"))
     mx = deg.agg(F.max("degree").alias("mxd"))
     seed = (
@@ -2607,7 +2650,7 @@ def q_khop_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.min("ua").alias("user_id"))
         .select("user_id", F.lit(0).cast("long").alias("dist"))
     )
-    reached = seed.localCheckpoint()
+    reached = pin(seed, eager=True)
     for hop in range(1, 4):
         frontier = reached.filter(F.col("dist") == hop - 1).select(
             F.col("user_id").alias("ua")
@@ -2619,7 +2662,7 @@ def q_khop_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
             .join(reached.select("user_id"), "user_id", "left_anti")
             .select("user_id", F.lit(hop).cast("long").alias("dist"))
         )
-        reached = reached.unionAll(new).localCheckpoint()
+        reached = pin(reached.unionAll(new), eager=True)
     return reached.groupBy(F.col("dist").alias("hop")).agg(
         F.count(F.lit(1)).alias("n_users")
     )

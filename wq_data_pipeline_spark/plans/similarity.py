@@ -1441,22 +1441,23 @@ SQL_SEMDEDUP_ANN = _semdedup_ann_sql()
 def q_embed_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding near-dup CLUSTERING end-to-end: banded-LSH candidate
     pairs at cosine >= 0.45 (the embed_near_dup plan) -> connected
-    components (min-label propagation, O(log n) rounds) -> cluster
-    assignment per vector + cluster size. The embedding-space twin of
-    ``dedup_clusters`` (MinHash pairs over documents): together they
-    cover both modalities of the pairs->components dedup composition.
-    The oracle replays the identical md5-hyperplane pair generation
-    and closes components with a recursive CTE."""
+    components (operators/dedup.py) -> cluster assignment per vector
+    + cluster size. The embedding-space twin of ``dedup_clusters``
+    (MinHash pairs over documents): together they cover both
+    modalities of the pairs->components dedup composition. The size
+    is a window count over the cluster, so the component frame is
+    read once (a size agg joined back reads it twice). The oracle
+    replays the identical md5-hyperplane pair generation and closes
+    components with a recursive CTE."""
     from wq_data_pipeline_spark.operators.dedup import connected_components
 
     pairs = q_embed_near_dup(spark, sf_dir).select("id_a", "id_b")
     nodes = load_table(spark, sf_dir, "embeddings").select("vec_id")
     comps = connected_components(nodes, pairs, "vec_id", "id_a", "id_b")
-    sizes = comps.groupBy("cluster_id").agg(F.count(F.lit(1)).alias("cluster_size"))
-    return comps.join(sizes, "cluster_id").select(
+    return comps.select(
         "vec_id",
         "cluster_id",
-        "cluster_size",
+        F.count(F.lit(1)).over(Window.partitionBy("cluster_id")).alias("cluster_size"),
         (F.col("vec_id") == F.col("cluster_id")).alias("is_canonical"),
     )
 
