@@ -38,46 +38,44 @@ from wq_data_pipeline_spark.operators.pinning import pin
 
 KEYS = ["station", "variable"]
 
+# Detector parameters: the reference's exact fallback-suite values,
+# durations converted at its 15-min default step (_to_points, :144-147).
+SENTINELS = C.DEFAULT_SENTINELS
+FLAT_ATOL = 0.0
+FLAT_MIN_HOURS = 2.0  # constants/plateau '2h'
+Z_WINDOW_POINTS = 96  # zscore '24h'
+JUMP_THRESH = 5.0  # reference flagJumps default (:565)
+SLOPE_WINDOW_POINTS = 25
+SLOPE_ABS = 1e-10
+VAR_WINDOW_POINTS = 24  # variance '6h'
+VAR_TOL = 1e-12
+ISOLATED_GROUP_POINTS = 2  # isolated '30min' group
+ISOLATED_GAP_SECONDS = 3 * 3600.0  # isolated '3h' gap
+
 
 @dataclass
 class QCConfig:
     """Per-run config (reference EP2 hardcoded config, :775-800)."""
 
     range_map: dict[str, tuple[float, float]] = field(default_factory=dict)
-    sentinels: tuple[float, ...] = C.DEFAULT_SENTINELS
     max_gap_seconds: float = 7200.0
-    flat_atol: float = 0.0
-    flat_min_hours: float = 2.0
-    z_window_points: int = 96
     z_thresh: float = 4.0
-    jump_thresh: float | None = None
-    slope_window_points: int = 25
-    slope_abs: float = 1e-10
     # reference default: process_variable(apply_sentem=True) attaches
     # __sm_masked/__sm_flagged/__sm_flagreason to the wide output
     # (scripts/ufz_water_qc_pipeline.py:740-744)
     apply_sentem: bool = True
     # full_suite=True runs the reference's COMPLETE no-SaQC fallback
     # detector set (apply_saqc_suite else-branch,
-    # scripts/ufz_water_qc_pipeline.py:566-577) with the reference's
-    # exact parameters: range + missing + constants('2h') +
-    # plateau('2h') + variance('6h', 1e-12) + zscore('24h', 4.0) +
-    # jumps(5.0) + isolated('3h', '30min') + unilof(= zscore, so
-    # OR-idempotent). The parameters below are the reference durations
-    # converted at its 15-min default step (_to_points, :144-147).
-    # full_suite=False keeps the r1-r3 lean set (z + missing + range
-    # [+ jumps]) that the oracled catalog queries pin.
+    # scripts/ufz_water_qc_pipeline.py:566-577) with the parameters
+    # above; full_suite=False keeps the lean set (z + missing + range)
+    # that the oracled catalog queries pin.
     full_suite: bool = False
-    var_window_points: int = 24  # '6h' at 15-min step
-    var_tol: float = 1e-12
-    isolated_group_points: int = 2  # '30min' at 15-min step
-    isolated_gap_seconds: float = 3 * 3600.0  # '3h'
 
 
 def clean_stage(readings: DataFrame, cfg: QCConfig) -> DataFrame:
     """Sentinels -> dup-resolve -> gap-null: the ``__clean`` series.
     Keeps ``raw`` (pre-gap-null, post-dedup) alongside."""
-    d = C.mask_sentinels(readings, KEYS, "value", cfg.sentinels)
+    d = C.mask_sentinels(readings, KEYS, "value", SENTINELS)
     d = C.resolve_duplicates(d, KEYS, "ts", "value")
     d = d.withColumn("raw", F.col("value"))
     d = C.classify_gaps(d, KEYS, "ts", cfg.max_gap_seconds)
@@ -87,13 +85,14 @@ def clean_stage(readings: DataFrame, cfg: QCConfig) -> DataFrame:
 
 def flag_stage(cleaned: DataFrame, cfg: QCConfig) -> DataFrame:
     """Fallback flag suite (apply_saqc_suite semantics, :459-589):
-    range + missing + robust-z (+ jumps) OR-combined to 0/255."""
+    range + missing + robust-z (+ the full suite's detectors)
+    OR-combined to 0/255."""
     d = cleaned.withColumnRenamed("clean", "value")
     # engine='pandas': skiplist rolling median beats WindowExec's
     # per-row frame scan ~38x at w=96 (pipeline hot path; the
     # oracle-gated catalog queries keep the pure-JVM window engine)
     d = D.flag_robust_z(
-        d, "value", cfg.z_window_points, cfg.z_thresh, KEYS, "ts", out="f_z",
+        d, "value", Z_WINDOW_POINTS, cfg.z_thresh, KEYS, "ts", out="f_z",
         engine="pandas",
     )
     flags = [F.col("f_z"), D.flag_missing("value")]
@@ -104,12 +103,8 @@ def flag_stage(cleaned: DataFrame, cfg: QCConfig) -> DataFrame:
                 F.col("variable") == var, D.flag_range("value", lo, hi)
             ).otherwise(range_expr)
         flags.append(range_expr)
-    jump_thresh = cfg.jump_thresh
-    if cfg.full_suite and jump_thresh is None:
-        jump_thresh = 5.0  # reference flagJumps default (:565)
-    if jump_thresh is not None:
-        flags.append(D.flag_jumps("value", jump_thresh, KEYS, "ts"))
     if cfg.full_suite:
+        flags.append(D.flag_jumps("value", JUMP_THRESH, KEYS, "ts"))
         # constants + plateau ('2h'): both reduce to the flat-run
         # interval mask (_fallback_flag_constants delegates to
         # _fallback_flag_plateau, :405-407), marking start <= ts <= end
@@ -117,12 +112,12 @@ def flag_stage(cleaned: DataFrame, cfg: QCConfig) -> DataFrame:
         # :392-397); flat_run_mask computes it in the series' window
         # pass, so no run table is joined back
         d = D.flat_run_mask(
-            d, "value", KEYS, "ts", cfg.flat_atol, cfg.flat_min_hours, out="_in_flat"
+            d, "value", KEYS, "ts", FLAT_ATOL, FLAT_MIN_HOURS, out="_in_flat"
         )
         flags.append(F.col("_in_flat"))
         # variance ('6h', 1e-12)
         flags.append(
-            D.flag_variance("value", cfg.var_window_points, KEYS, "ts", cfg.var_tol)
+            D.flag_variance("value", VAR_WINDOW_POINTS, KEYS, "ts", VAR_TOL)
         )
         # isolated ('3h' gap both sides, '30min' group)
         d = D.detect_isolated_groups(
@@ -130,8 +125,8 @@ def flag_stage(cleaned: DataFrame, cfg: QCConfig) -> DataFrame:
             "value",
             KEYS,
             "ts",
-            cfg.isolated_group_points,
-            cfg.isolated_gap_seconds,
+            ISOLATED_GROUP_POINTS,
+            ISOLATED_GAP_SECONDS,
             out="_isolated_flag",
         )
         flags.append(F.col("_isolated_flag"))
@@ -147,14 +142,14 @@ def flag_stage(cleaned: DataFrame, cfg: QCConfig) -> DataFrame:
     return d.withColumnRenamed("value", "clean")
 
 
-def event_stage(cleaned: DataFrame, cfg: QCConfig) -> DataFrame:
+def event_stage(cleaned: DataFrame) -> DataFrame:
     """Detector event tables, unioned (J4) with NaN-padded columns
     like the golden ``__events_all.csv``."""
     d = cleaned.withColumnRenamed("clean", "value")
-    flat = D.detect_flat_runs(d, "value", KEYS, "ts", cfg.flat_atol, cfg.flat_min_hours)
+    flat = D.detect_flat_runs(d, "value", KEYS, "ts", FLAT_ATOL, FLAT_MIN_HOURS)
     switches = D.detect_binary_switches(d, "value", KEYS, "ts")
     slopes = D.detect_flat_slopes(
-        d, "value", KEYS, "ts", cfg.slope_window_points, cfg.slope_abs, cfg.flat_min_hours
+        d, "value", KEYS, "ts", SLOPE_WINDOW_POINTS, SLOPE_ABS, FLAT_MIN_HOURS
     )
     return (
         flat.unionByName(switches, allowMissingColumns=True)
@@ -180,12 +175,11 @@ def seasonal_stage(cleaned: DataFrame, events: DataFrame, step_seconds: float = 
     return out.fillna(0, subset=[c for c in ("flat_values_events", "flat_slopes_events") if c in out.columns])
 
 
-def meta_stage(readings: DataFrame, cfg: QCConfig | None = None) -> DataFrame:
+def meta_stage(readings: DataFrame) -> DataFrame:
     """Per-series meta: inferred step, duplicate count, and the
     ACTIVE sentinel set (reference meta dict
     ``{station, col, step, sentinel_used, duplicates}``,
     scripts/ufz_water_qc_pipeline.py:738)."""
-    cfg = cfg or QCConfig()
     step = C.infer_step(readings, KEYS, "ts")
     dups = (
         readings.groupBy(*KEYS, "ts")
@@ -193,7 +187,7 @@ def meta_stage(readings: DataFrame, cfg: QCConfig | None = None) -> DataFrame:
         .groupBy(*KEYS)
         .agg(F.sum(F.col("_n") - 1).alias("duplicates"))
     )
-    used = C.active_sentinels(readings, KEYS, "value", cfg.sentinels).select(
+    used = C.active_sentinels(readings, KEYS, "value", SENTINELS).select(
         *KEYS,
         # JSON-ish string (the reference stores the sorted list) so the
         # CSV meta sink can carry it
@@ -282,7 +276,7 @@ def run_qc_pipeline(readings: DataFrame, cfg: QCConfig | None = None) -> QCOutpu
 
     - the flagged long table (after ``flag_stage`` and, when enabled,
       ``sentem_stage``), read by ``widen``'s variable collect, both
-      parquet sinks, every per-series figure and the CLI's WRTDS leg;
+      parquet sinks, every figure input and the CLI's WRTDS leg;
     - the events table, read by the events CSV, the seasonal table
       (CSV and figure) and the event figures.
 
@@ -304,9 +298,9 @@ def run_qc_pipeline(readings: DataFrame, cfg: QCConfig | None = None) -> QCOutpu
         flagged = sentem_stage(flagged)
     flagged = pin(flagged)
     base = flagged.select(*cleaned.columns)
-    events = pin(event_stage(base, cfg))
+    events = pin(event_stage(base))
     seasonal = seasonal_stage(base, events)
-    meta = meta_stage(readings, cfg)
+    meta = meta_stage(readings)
     wide = widen(flagged)
     return QCOutputs(
         timeseries=flagged,

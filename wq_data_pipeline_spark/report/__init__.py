@@ -3,10 +3,12 @@
 plot (scripts/sentemqc.py:117-142). This package renders the same
 figure set from the engine's aggregate DataFrames.
 
-Scale design: figures are rendered DRIVER-SIDE from already-small
-frames — every series is downsampled on the cluster (time-bucket
-aggregation bounded by the pixel width) before collect, so the bytes
-crossing the driver boundary are O(pixels), never O(rows).
+Scale design: each figure input is one grouped collect over ALL
+series (a time-bucketed aggregate bounded by the pixel width, per-series
+histograms, the newest events, the seasonal table), so the job count
+does not grow with the number of series and the bytes crossing the
+driver boundary are O(pixels) per series, never O(rows). Figures are
+then drawn driver-side from those collected dicts.
 
 Backend: matplotlib when importable (PNG, like the reference);
 otherwise a dependency-free deterministic SVG writer (this container

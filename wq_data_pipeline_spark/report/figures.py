@@ -3,13 +3,14 @@
 ``{var}__08_accepted``) and the sentemqc combined log plot
 (scripts/sentemqc.py:117-142, emitted by run_sentemqc_on_dataframe).
 
-Scale contract: every collect here is bounded —
-- series plots collect a time-BUCKETED aggregate (<= ``max_points``
-  rows per series, computed cluster-side), never the raw series;
-- the histogram / seasonal / availability inputs are already per-key
-  aggregates (10 bins, 4 seasons, 1 row);
-- event spans are capped at ``max_spans`` newest events.
-At 100 TB the driver still only ever sees O(pixels) rows per figure.
+Grouped contract: each figure input is ONE collect over all
+(station, variable) series, so a report fires as many Spark jobs for 1
+series as for 1,000; the per-series loop only draws from driver-side
+dicts. Every collect is bounded per series: a time-BUCKETED aggregate
+(<= ``max_points`` rows), 10 histogram bins, 4 seasons, the
+``max_spans`` newest events and the 2000 largest WRTDS spikes (both
+``row_number`` windows). At 100 TB the driver still only ever sees
+O(pixels) rows per figure.
 
 Backend: matplotlib when importable (PNG, like the reference), else
 the stdlib SVG kit in :mod:`wq_data_pipeline_spark.report.svgplot`.
@@ -24,7 +25,7 @@ from typing import Sequence
 from pyspark.sql import DataFrame, Window, functions as F
 
 from wq_data_pipeline_spark.functions.scalars import sanitize_name
-from wq_data_pipeline_spark.operators.windows import gaussian_smooth
+from wq_data_pipeline_spark.operators.windows import gaussian_smooth, ordered
 from wq_data_pipeline_spark.report import svgplot as SP
 from wq_data_pipeline_spark.report.svgplot import (
     COLOR_BLUE,
@@ -46,35 +47,54 @@ except ImportError:
 
 KEYS = ["station", "variable"]
 SEASON_ORDER = ["DJF", "MAM", "JJA", "SON"]
+# the directory a NULL station gets from the parquet sinks'
+# partitionBy("station"); its figures go under the same name
+NULL_STATION_DIR = "__HIVE_DEFAULT_PARTITION__"
 
 
-# ---------------------------------------------------------------- downsample
-def downsample_series(
-    df: DataFrame,
-    value_cols: Sequence[str],
-    ts: str = "ts",
-    max_points: int = 1100,
-) -> list:
-    """Cluster-side time-bucket downsample of ONE series: bucket the
-    time span into <= max_points buckets, avg each value col per
-    bucket. The collect returns O(max_points) rows whatever the input
-    size — the scale contract of every series figure."""
-    bounds = df.agg(
-        F.min(F.unix_micros(ts)).alias("lo"), F.max(F.unix_micros(ts)).alias("hi")
-    ).first()
-    if bounds.lo is None:
-        return []
-    lo, hi = bounds.lo, max(bounds.hi, bounds.lo + 1)
-    step = max(1, (hi - lo) // max_points + 1)
-    b = ((F.unix_micros(ts) - F.lit(lo)) / F.lit(step)).cast("long")
+# ---------------------------------------------------------------- grouped inputs
+def bucketed_series(df: DataFrame, value_cols: Sequence[str], max_points: int = 1100) -> dict:
+    """Cluster-side time-bucket downsample of EVERY (station, variable)
+    series in one collect: each series' span [lo, hi] (a per-series
+    window in the same plan) is cut into <= max_points buckets of
+    ``(hi - lo) div max_points + 1`` µs; each value col is averaged,
+    and counted as ``n_<col>``, per bucket. Returns ``{(station,
+    variable): rows ordered by ts_us}`` — O(max_points) rows per series
+    whatever its size, the scale contract of every series figure."""
+    us = F.unix_micros("ts")
+    w = Window.partitionBy(*KEYS)
+    d = df.withColumns({"_us": us, "_lo": F.min(us).over(w), "_hi": F.max(us).over(w)})
+    d = d.withColumn(
+        "_step", F.expr(f"(greatest(_hi, _lo + 1) - _lo) div {int(max_points)} + 1")
+    )
+    b = ((F.col("_us") - F.col("_lo")) / F.col("_step")).cast("long")
     aggs = [F.avg(c).alias(c) for c in value_cols]
-    return (
-        df.groupBy(b.alias("_b"))
+    aggs += [F.count(c).alias(f"n_{c}") for c in value_cols]
+    rows = (
+        d.groupBy(*KEYS, "_lo", "_step", b.alias("_b"))
         .agg(*aggs)
-        .select((F.col("_b") * step + lo).alias("ts_us"), *value_cols)
-        .orderBy("ts_us")
+        .withColumn("ts_us", F.col("_b") * F.col("_step") + F.col("_lo"))
         .collect()
     )
+    return _by_series(rows, "ts_us")
+
+
+def _by_series(rows, order: str) -> dict:
+    """Rows grouped per (station, variable), each sorted by ``order``, NULL first."""
+    out: dict = {}
+    for r in rows:
+        out.setdefault((r.station, r.variable), []).append(r)
+    for rs in out.values():
+        rs.sort(key=lambda r: (r[order] is not None, r[order]))
+    return out
+
+
+def _top_per_series(df: DataFrame, k: int, *order) -> dict:
+    """The first ``k`` rows of each (station, variable) series under
+    ``order``, in one collect (a ``row_number`` window)."""
+    w = Window.partitionBy(*KEYS).orderBy(*order)
+    rows = df.withColumn("_n", F.row_number().over(w)).filter(F.col("_n") <= k).collect()
+    return _by_series(rows, "_n")
 
 
 def _xy(rows, col):
@@ -89,10 +109,7 @@ def save_figure(fig: Figure, base: str) -> str:
     Replays the Figure's recorded layers into matplotlib when present,
     so both backends draw the same content."""
     if not HAVE_MPL:
-        path = base + ".svg"
-        with open(path, "w") as f:
-            f.write(fig.to_svg())
-        return path
+        return _save_svg_str(fig.to_svg(), base)
     path = base + ".png"
     mfig = plt.figure(figsize=(fig.width / 80, fig.height / 80))
     ax = plt.gca()
@@ -142,10 +159,9 @@ def _save_svg_str(svg: str, base: str) -> str:
 
 
 # ---------------------------------------------------------------- figure set
-def _series_fig(rows, col, title, ylabel, color=COLOR_RAW, label=None) -> Figure:
+def _series_fig(rows, col, title, ylabel) -> Figure:
     fig = Figure(title=title, ylabel=ylabel, xlabel="Time")
-    xs, ys = _xy(rows, col)
-    fig.line(xs, ys, color=color, lw=0.8, label=label)
+    fig.line(*_xy(rows, col), color=COLOR_RAW, lw=0.8)
     return fig
 
 
@@ -163,44 +179,72 @@ def render_qc_figures(
     706-728). ``qc`` is the long QC table (station, variable, ts,
     raw, clean, accepted, saqc_flag); ``events``/``seasonal`` the
     pipeline's aggregate outputs. Each station's set goes under
-    ``out_dir/<sanitized station>/`` with the reference's
-    ``{var}__NN_name`` basenames, so stations sharing a variable name
-    do not overwrite each other. Returns written paths."""
+    ``out_dir/<sanitized station>/`` (a NULL station under
+    :data:`NULL_STATION_DIR`) with the reference's ``{var}__NN_name``
+    basenames, so stations sharing a variable name do not overwrite
+    each other. Every input is one grouped collect over all series
+    (module docstring); series are drawn in (station, variable) order,
+    NULL station first. Returns written paths."""
+    from wq_data_pipeline_spark.operators.pinning import pin, unpin
     from wq_data_pipeline_spark.operators.stats import decimal_histogram
+    from wq_data_pipeline_spark.operators.wrtds import wrtds_buster, wrtds_residuals
 
-    os.makedirs(out_dir, exist_ok=True)
+    # one bucketed pass shared by 00/01/03/04/05/08: 01's counts and
+    # 03's |successive diff| ride along in the same plan
+    gs = gaussian_smooth(qc, "clean", KEYS).withColumn(
+        "adiff", F.abs(F.col("clean") - F.lag("clean").over(ordered(KEYS)))
+    )
+    buckets = bucketed_series(
+        gs, ["raw", "clean", "accepted", "smooth", "residual", "adiff"], max_points
+    )
+    hist = {
+        (r.station, r.variable, r.bin): r.bin_count
+        for r in decimal_histogram(qc, KEYS, "clean").collect()
+    }
+    # newest spans first; (start, end, type) makes the order total
+    spans = _top_per_series(
+        events.select(
+            *KEYS, "type", F.unix_micros("start").alias("s"), F.unix_micros("end").alias("e")
+        ),
+        max_spans,
+        F.desc("s"), F.desc("e"), "type",
+    )
+    cov = {
+        (r.station, r.variable, r.season): r.coverage_pct
+        for r in seasonal.select(*KEYS, "season", "coverage_pct").collect()
+    }
+    if include_wrtds:
+        # 07's inputs: bucketed fit and the 2000 largest |robust z|
+        # spikes per series (ties by ts); the fit is pinned so both
+        # collects read it once
+        res = pin(wrtds_residuals(qc.select(*KEYS, "ts", F.col("clean").alias("value")), KEYS))
+        wrtds = bucketed_series(res, ["value", "residual"], max_points)
+        spikes = _top_per_series(
+            wrtds_buster(res, KEYS).withColumn("ts_us", F.unix_micros("ts")),
+            2000,
+            F.desc(F.abs("robust_z")), "ts",
+        )
+        unpin(res)
+
     written: list[str] = []
-    series = [
-        (r.station, r.variable)
-        for r in qc.select(*KEYS).distinct().orderBy(*KEYS).collect()
-    ]
-    for station, variable in series:
-        d = qc.filter((F.col("station") == station) & (F.col("variable") == variable))
-        station_dir = os.path.join(out_dir, sanitize_name(station))
+    for station, variable in sorted(buckets, key=lambda k: (k[0] is not None, k)):
+        rows = buckets[(station, variable)]
+        station_dir = os.path.join(
+            out_dir, NULL_STATION_DIR if station is None else sanitize_name(station)
+        )
         os.makedirs(station_dir, exist_ok=True)
         pre = os.path.join(station_dir, f"{sanitize_name(variable)}__")
-
-        # one bucketed pass shared by 00/01/08 + the gaussian figure
-        gs = gaussian_smooth(d, "clean", KEYS).drop("filled")
-        rows = downsample_series(
-            gs, ["raw", "clean", "accepted", "smooth", "residual"], max_points=max_points
-        )
 
         f0 = _series_fig(rows, "raw", f"{variable} Raw", variable)
         written.append(save_figure(f0, pre + "00_raw"))
 
         f1 = _series_fig(rows, "clean", f"{variable} After sentinels+gaps", variable)
-        n_tot, n_clean = d.agg(
-            F.count("raw").alias("a"), F.count("clean").alias("b")
-        ).first()
+        n_tot = sum(r.n_raw for r in rows)
+        n_clean = sum(r.n_clean for r in rows)
         f1.annotate(f"raw n={n_tot}  clean n={n_clean}  nulled={n_tot - n_clean}")
         written.append(save_figure(f1, pre + "01_clean"))
 
-        # 02: decimal histogram (A4 operator — 10-row collect)
-        hist = {
-            r.bin: r.bin_count
-            for r in decimal_histogram(d, KEYS, "clean").collect()
-        }
+        # 02: decimal histogram (A4 operator)
         f2 = Figure(
             title="Decimal distribution",
             xlabel="Fractional part [0..1)",
@@ -211,15 +255,12 @@ def render_qc_figures(
         )
         f2.bars(
             [(b + 0.5) / 10 for b in range(10)],
-            [float(hist.get(b, 0)) for b in range(10)],
+            [float(hist.get((station, variable, b), 0)) for b in range(10)],
             width=0.1,
         )
         written.append(save_figure(f2, pre + "02_decimal_hist"))
 
         # 03: |successive diff| (computed cluster-side, then bucketed)
-        w = Window.partitionBy(*KEYS).orderBy("ts")
-        dd = d.withColumn("adiff", F.abs(F.col("clean") - F.lag("clean").over(w)))
-        drows = downsample_series(dd, ["adiff"], max_points=max_points)
         f3 = Figure(
             title="Absolute successive differences",
             xlabel="Time",
@@ -227,19 +268,11 @@ def render_qc_figures(
             width=560,
             height=240,
         )
-        f3.line(*_xy(drows, "adiff"), color=COLOR_BLUE, lw=0.6)
+        f3.line(*_xy(rows, "adiff"), color=COLOR_BLUE, lw=0.6)
         written.append(save_figure(f3, pre + "03_quant_diffs"))
 
-        # 04: flat events — raw + span overlays (bounded collect)
-        ev = (
-            events.filter(
-                (F.col("station") == station) & (F.col("variable") == variable)
-            )
-            .select("type", F.unix_micros("start").alias("s"), F.unix_micros("end").alias("e"))
-            .orderBy(F.desc("s"))
-            .limit(max_spans)
-            .collect()
-        )
+        # 04: flat events — raw + span overlays
+        ev = spans.get((station, variable), [])
         f4 = Figure(
             title="Flat values (orange) and flat slopes (blue)",
             xlabel="Time",
@@ -266,63 +299,31 @@ def render_qc_figures(
                 )
             )
 
-        # 06: seasonal coverage heatmap (4-row collect of A7 output)
-        cov = {
-            r.season: r.coverage_pct
-            for r in seasonal.filter(
-                (F.col("station") == station) & (F.col("variable") == variable)
-            )
-            .select("season", "coverage_pct")
-            .collect()
-        }
+        # 06: seasonal coverage heatmap (A7 output)
         svg = SP.heatmap_svg(
             SEASON_ORDER,
-            [float(cov.get(s, 0.0) or 0.0) for s in SEASON_ORDER],
+            [float(cov.get((station, variable, s), 0.0) or 0.0) for s in SEASON_ORDER],
             f"{station} — {variable} coverage [%]",
             "all years",
         )
         written.append(_save_svg_str(svg, pre + "06_seasonal_coverage"))
 
-        # 07: WRTDS buster (opt-in: the fit is the pipeline's one
-        # heavy pandas-UDF stage; reference gates it the same way)
+        # 07: WRTDS residuals + robust-z anomalies (reference
+        # wrtds_buster plot, :624-639). Opt-in: the fit is the
+        # pipeline's one heavy pandas-UDF stage; reference gates it the
+        # same way
         if include_wrtds:
-            written.append(
-                _render_wrtds_fig(d, pre + "07_wrtds_buster", max_points)
-            )
+            wrows, sp = wrtds.get((station, variable), []), spikes.get((station, variable), [])
+            f7 = Figure(title="WRTDS-proxy residuals and anomalies", xlabel="Time", height=400)
+            f7.line(*_xy(wrows, "value"), color=COLOR_RAW, lw=0.6, label="Raw")
+            f7.line(*_xy(wrows, "residual"), color=COLOR_BLUE, lw=0.8, label="Residual")
+            f7.markers(*_xy(sp, "residual"), color=COLOR_ORANGE, size=2.0, label="Anomaly")
+            written.append(save_figure(f7, pre + "07_wrtds_buster"))
 
         # 08: accepted mask
         f8 = _series_fig(rows, "accepted", f"{variable} Accepted mask", variable)
         written.append(save_figure(f8, pre + "08_accepted"))
     return written
-
-
-def _render_wrtds_fig(d: DataFrame, base: str, max_points: int) -> str:
-    """WRTDS residuals + robust-z anomalies (reference wrtds_buster
-    plot, scripts/ufz_water_qc_pipeline.py:624-639)."""
-    from wq_data_pipeline_spark.operators.wrtds import wrtds_buster, wrtds_residuals
-
-    res = wrtds_residuals(d.select(*KEYS, "ts", F.col("clean").alias("value")), KEYS)
-    rows = downsample_series(res, ["value", "residual"], max_points=max_points)
-    spikes = (
-        wrtds_buster(res, KEYS)
-        .orderBy(F.desc(F.abs("robust_z")))
-        .limit(2000)
-        .select(F.unix_micros("ts").alias("ts_us"), "residual")
-        .collect()
-    )
-    fig = Figure(
-        title="WRTDS-proxy residuals and anomalies", xlabel="Time", height=400
-    )
-    fig.line(*_xy(rows, "value"), color=COLOR_RAW, lw=0.6, label="Raw")
-    fig.line(*_xy(rows, "residual"), color=COLOR_BLUE, lw=0.8, label="Residual")
-    fig.markers(
-        [r.ts_us for r in spikes],
-        [r.residual for r in spikes],
-        color=COLOR_ORANGE,
-        size=2.0,
-        label="Anomaly",
-    )
-    return save_figure(fig, base)
 
 
 def render_sentemqc_figure(
@@ -353,7 +354,7 @@ def render_sentemqc_figure(
     cols = ["value", "_acc", "_flg"] + [
         c for c in (top_col, bottom_col) if c in sq.columns
     ]
-    rows = downsample_series(d, cols, max_points=max_points)
+    rows = bucketed_series(d, cols, max_points).get((station, variable), [])
     pct = d.agg(
         F.round(F.avg(F.col("value").isNotNull().cast("double")) * 100, 1).alias("avail"),
         F.round(F.avg((F.col("value") <= 0).cast("double")) * 100, 1).alias("masked"),
@@ -376,7 +377,4 @@ def render_sentemqc_figure(
         f"Availability: {pct.avail or 0.0:.1f}%   Masked≤0: {pct.masked or 0.0:.1f}%   "
         f"Flagged: {pct.flagged or 0.0:.1f}%"
     )
-    base = os.path.join(
-        out_dir, f"{sanitize_name(variable)}__sentemqc_combined"
-    )
-    return save_figure(fig, base)
+    return save_figure(fig, os.path.join(out_dir, f"{sanitize_name(variable)}__sentemqc_combined"))
