@@ -114,9 +114,12 @@ def test_tri5_matches_reference_numpy(spark, series_df):
 
 
 def test_full_sentemqc_pipeline(spark):
-    """apply_sentemqc end-to-end on a fixture: flags fire on injected
-    excursions; bands/masks/reasons are internally consistent."""
+    """SentemQC end-to-end on a fixture, through ``apply_sentemqc``
+    (with a sensor code) and through the QC pipeline's ``sm_*``
+    columns: flags fire on injected excursions; masks and reasons are
+    internally consistent."""
     from wq_data_pipeline_spark.operators.sentem import apply_sentemqc
+    from wq_data_pipeline_spark.plans.qc_pipeline import QCConfig, run_qc_pipeline
 
     rng = np.random.default_rng(5)
     n = 2000
@@ -125,21 +128,32 @@ def test_full_sentemqc_pipeline(spark):
     v[700] = 30.0  # hard spike: outside every band
     v[900:905] = -2.0  # non-positive -> pre-masked
     pdf = pd.DataFrame({"station": "s", "variable": "o2", "ts": ts, "value": v})
-    out = apply_sentemqc(
-        spark.createDataFrame(pdf), sensor_code=400
-    ).orderBy("ts").collect()
-
-    spike = out[700]
-    assert spike.flag_global == 200 and spike.value_masked is None
-    assert "flag_run" in spike.flag_reason or "flag_sensor" in spike.flag_reason
+    df = spark.createDataFrame(pdf)
+    out = apply_sentemqc(df, sensor_code=400).orderBy("ts").collect()
+    pipeline = (
+        run_qc_pipeline(df, QCConfig())
+        .timeseries.orderBy("ts")
+        .select(
+            F.col("sm_flagged").alias("is_flagged"),
+            F.col("sm_masked").alias("value_masked"),
+            F.col("sm_flagreason").alias("flag_reason"),
+        )
+        .collect()
+    )
     for r in out[900:905]:
         assert r.value is None  # pre-mask turned them into NULL
-    flagged = [r for r in out if r.is_flagged]
-    ok = [r for r in out if not r.is_flagged]
-    assert all(r.value_masked is None for r in flagged)
-    assert all(r.flag_reason == "" for r in ok)
-    # the bulk of a clean series must survive
-    assert len(ok) > 0.9 * n
+    for rows in (out, pipeline):
+        spike = rows[700]
+        assert spike.is_flagged and spike.value_masked is None
+        assert "flag_run" in spike.flag_reason or "flag_sensor" in spike.flag_reason
+        assert all(r.value_masked is None for r in rows[900:905])
+        flagged = [r for r in rows if r.is_flagged]
+        ok = [r for r in rows if not r.is_flagged]
+        assert all(r.value_masked is None for r in flagged)
+        assert all(r.flag_reason == "" for r in ok)
+        # the bulk of a clean series must survive
+        assert len(ok) > 0.9 * n
+    assert out[700].flag_global == 200
 
 
 def test_flags_monotone_property(spark, series_df):

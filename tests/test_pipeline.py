@@ -127,10 +127,10 @@ def test_write_outputs(outputs, tmp_path):
 
 
 def test_multi_consumer_outputs_read_pinned_tables(spark, fixture_csv):
-    """The flag chain and the event detectors run once per pipeline:
-    the outputs that several sinks and figures read must start from
-    the pinned tables, so no pandas island and no window pass is left
-    in their plans to re-run per action."""
+    """The per-series kernel and the event detectors run once per
+    pipeline: the outputs that several sinks and figures read must
+    start from the pinned tables, so no Python-worker node and no
+    window pass is left in their plans to re-run per action."""
     import re
 
     from wq_data_pipeline_spark.plans.qc_pipeline import QCConfig, run_qc_pipeline
@@ -141,46 +141,200 @@ def test_multi_consumer_outputs_read_pinned_tables(spark, fixture_csv):
     out = run_qc_pipeline(long, QCConfig(full_suite=True))
     for name in ("timeseries", "timeseries_wide", "events", "seasonal"):
         plan = getattr(out, name)._jdf.queryExecution().optimizedPlan().toString()
-        flatmaps = len(re.findall(r"\bFlatMapGroupsInPandas\b", plan))
+        python = len(re.findall(r"\bFlatMapGroupsIn(?:Arrow|Pandas)\b", plan))
         windows = len(re.findall(r"\bWindow\b", plan))
-        assert (flatmaps, windows) == (0, 0), (name, flatmaps, windows)
+        assert (python, windows) == (0, 0), (name, python, windows)
 
 
 def test_flag_chain_is_one_linear_plan(spark, fixture_csv):
-    """clean -> full-suite flags -> SentemQC reads the source once: no
-    per-series statistic is joined back to its rows (each is a window
-    column over the series partition), so the executed plan has one
-    scan, one pandas robust-z island, no join and no broadcast."""
+    """clean -> full-suite flags -> SentemQC is one grouped-Arrow pass
+    over the source: the long table's executed plan has one scan, one
+    FlatMapGroupsInArrow node, no window pass, no join and no
+    broadcast."""
     from test_plan_budget import _count_op
 
-    from wq_data_pipeline_spark.plans.qc_pipeline import (
-        QCConfig,
-        clean_stage,
-        flag_stage,
-        sentem_stage,
-    )
+    from wq_data_pipeline_spark.plans.qc_pipeline import QCConfig, qc_long
     from wq_data_pipeline_spark.sources.csv_source import melt_wide, read_wide_csv
 
     wide = read_wide_csv(spark, fixture_csv, station_field="station", station_value="stn1")
     long = melt_wide(wide, ["o2", "ph"], station_col="station")
-    cfg = QCConfig(full_suite=True)
-    flagged = sentem_stage(flag_stage(clean_stage(long, cfg), cfg))
-    plan = flagged._jdf.queryExecution().executedPlan().toString()
-    joins = sum(
+    plan = qc_long(long, QCConfig(full_suite=True))._jdf.queryExecution().executedPlan().toString()
+    shape = {
+        "scans": _count_op(plan, "FileScan"),
+        "arrow": _count_op(plan, "FlatMapGroupsInArrow"),
+        "windows": _count_op(plan, "Window"),
+        "broadcasts": _count_op(plan, "BroadcastExchange"),
+        "joins": _joins(plan),
+    }
+    assert shape == {"scans": 1, "arrow": 1, "windows": 0, "broadcasts": 0, "joins": 0}, (
+        shape, plan,
+    )
+
+
+def _joins(plan: str) -> int:
+    from test_plan_budget import _count_op
+
+    return sum(
         _count_op(plan, op)
         for op in (
             "SortMergeJoin", "BroadcastHashJoin", "ShuffledHashJoin",
             "BroadcastNestedLoopJoin", "CartesianProduct",
         )
     )
-    shape = {
-        "scans": _count_op(plan, "FileScan"),
-        "pandas": _count_op(plan, "FlatMapGroupsInPandas"),
-        "broadcasts": _count_op(plan, "BroadcastExchange"),
-        "joins": joins,
+
+
+def test_report_tables_hold_no_join(spark, fixture_csv):
+    """The seasonal table counts its events in its own aggregate and the
+    meta table is one window plus one aggregate: neither plan joins or
+    broadcasts."""
+    from test_plan_budget import _count_op
+
+    from wq_data_pipeline_spark.plans.qc_pipeline import (
+        QCConfig,
+        meta_stage,
+        run_qc_pipeline,
+        seasonal_stage,
+    )
+    from wq_data_pipeline_spark.sources.csv_source import melt_wide, read_wide_csv
+
+    wide = read_wide_csv(spark, fixture_csv, station_field="station", station_value="stn1")
+    long = melt_wide(wide, ["o2", "ph"], station_col="station")
+    out = run_qc_pipeline(long, QCConfig(full_suite=True))
+    seasonal = seasonal_stage(out.timeseries.select("station", "variable", "ts", "clean"), out.events)
+    for name, df, windows in (("seasonal", seasonal, 0), ("meta", meta_stage(long), 1)):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        shape = (_joins(plan), _count_op(plan, "BroadcastExchange"), _count_op(plan, "Window"))
+        assert shape == (0, 0, windows), (name, shape, plan)
+
+
+def test_seasonal_marks_equal_a_left_join(spark):
+    """``seasonal_stats(marks=)`` gives the readings' summary with the
+    mark counts left-joined on (keys, season), 0-filled: a mark in a
+    season without readings adds no row, and a kind not asked for is
+    not counted."""
+    from pyspark.sql import functions as F
+
+    from wq_data_pipeline_spark.operators.stats import seasonal_stats
+
+    ts = pd.date_range("2024-02-20", periods=1500, freq="15min")  # DJF into MAM
+    v = np.random.default_rng(5).normal(5, 1, len(ts))
+    v[::13] = np.nan
+    readings = spark.createDataFrame(
+        pd.DataFrame({"station": "s", "variable": "x", "ts": ts, "value": v})
+    )
+    marks = spark.createDataFrame(
+        pd.DataFrame(
+            {
+                "station": "s",
+                "variable": "x",
+                "ts": pd.to_datetime(["2024-02-21", "2024-02-22", "2024-03-02", "2024-07-01", "2024-03-03"]),
+                "kind": ["a", "a", "b", "a", "c"],
+            }
+        )
+    )
+    keys = ["station", "variable"]
+    got = seasonal_stats(
+        readings, keys, marks=(marks, "kind", {"a": "a_n", "b": "b_n"})
+    ).toPandas()
+    counts = (
+        marks.groupBy(*keys, F.when(F.month("ts").isin(12, 1, 2), "DJF")
+                      .when(F.month("ts").isin(3, 4, 5), "MAM")
+                      .when(F.month("ts").isin(6, 7, 8), "JJA")
+                      .otherwise("SON").alias("season"))
+        .pivot("kind", ["a", "b"]).count()
+        .withColumnRenamed("a", "a_n").withColumnRenamed("b", "b_n")
+    )
+    exp = (
+        seasonal_stats(readings, keys)
+        .join(counts, [*keys, "season"], "left")
+        .fillna(0, subset=["a_n", "b_n"])
+        .toPandas()
+    )
+    assert list(got.columns) == list(exp.columns)
+    got, exp = (d.sort_values("season").reset_index(drop=True) for d in (got, exp))
+    pd.testing.assert_frame_equal(got, exp, check_dtype=False)
+    assert got.set_index("season")[["a_n", "b_n"]].to_dict("index") == {
+        "DJF": {"a_n": 2, "b_n": 0}, "MAM": {"a_n": 0, "b_n": 1},
     }
-    assert shape == {"scans": 1, "pandas": 1, "broadcasts": 0, "joins": 0}, (shape, plan)
-    assert _count_op(plan, "Exchange") <= 3, plan
+
+
+def test_meta_matches_pandas_reference(spark):
+    """Meta step, duplicates and sentinels against pandas on a series
+    with repeated timestamps and NULL-ts rows, and a 2-row series (the
+    15-min default step)."""
+    import datetime as dt
+    import json
+
+    from wq_data_pipeline_spark.plans.qc_pipeline import meta_stage
+
+    t0 = dt.datetime(2024, 5, 1)
+    ts = [t0 + dt.timedelta(minutes=10 * i) for i in range(200)]
+    v = np.random.default_rng(9).normal(3, 1, 200)
+    v[20:27] = -999.0
+    rows = [("a", "x", t, float(x)) for t, x in zip(ts, v)]
+    rows += [("a", "x", ts[3], 1.0), ("a", "x", ts[3], 2.0), ("a", "x", ts[8], 4.0)]
+    rows += [("a", "x", None, 1.0), ("a", "x", None, 5.0)]
+    rows += [("a", "y", ts[0], 1.0), ("a", "y", ts[1], -9999.0)]
+    got = {
+        r.variable: r
+        for r in meta_stage(
+            spark.createDataFrame(rows, "station string, variable string, ts timestamp, value double")
+        ).collect()
+    }
+    pdf = pd.DataFrame(rows, columns=["station", "variable", "ts", "value"])
+    for var, g in pdf.groupby("variable"):
+        diffs = g["ts"].dropna().sort_values().diff().dt.total_seconds()
+        pos = diffs[diffs > 0]
+        step = float(pos.median()) if len(g) >= 3 and len(pos) else 900.0
+        dups = int(g["ts"].value_counts(dropna=False).sub(1).sum())
+        assert got[var].step_seconds == step, var
+        assert got[var].duplicates == dups, var
+    assert (got["x"].duplicates, got["y"].duplicates) == (4, 0)
+    assert json.loads(got["x"].sentinel_used) == [-999.0]
+    assert json.loads(got["y"].sentinel_used) == [-9999.0]  # 1 of 2 rows >= 0.1%
+
+
+def test_null_station_is_a_series_like_any_other(spark):
+    """Two identical series, station NULL and station 'stnA', get equal
+    seasonal, meta and global-robust-z spike rows: every join on the
+    series keys is NULL-safe."""
+    from pyspark.sql import functions as F
+
+    from wq_data_pipeline_spark.operators.stats import global_robust_z
+    from wq_data_pipeline_spark.plans.qc_pipeline import QCConfig, run_qc_pipeline
+
+    rng = np.random.default_rng(4)
+    ts = pd.date_range("2024-01-01", periods=400, freq="15min")
+    v = rng.normal(10, 1, len(ts))
+    v[100:130] = 7.25  # flat run
+    v[250] = 40.0  # spike
+    v[300:306] = -9999.0  # active sentinel
+    long = spark.createDataFrame(
+        pd.concat(
+            pd.DataFrame({"station": st, "variable": "o2", "ts": ts, "value": v})
+            for st in (None, "stnA")
+        ),
+        "station string, variable string, ts timestamp, value double",
+    )
+    out = run_qc_pipeline(long, QCConfig(apply_sentem=False))
+    spikes = global_robust_z(
+        out.timeseries.select("station", "variable", "ts", F.col("clean").alias("value"))
+    )
+
+    def by_station(df):
+        rows = {}
+        for r in df.collect():
+            d = r.asDict()
+            rows.setdefault(d.pop("station"), []).append(tuple(sorted(d.items())))
+        return {k: sorted(v, key=repr) for k, v in rows.items()}
+
+    for name, df in (("seasonal", out.seasonal), ("meta", out.meta), ("spikes", spikes)):
+        got = by_station(df)
+        assert set(got) == {None, "stnA"}, (name, got)
+        assert got[None] == got["stnA"], (name, got)
+    assert {r.flat_values_events for r in out.seasonal.collect()} == {1}
+    assert {r.duplicates for r in out.meta.collect()} == {0}
+    assert spikes.count() == 2
 
 
 def test_wrtds_matches_reference_numpy(spark):

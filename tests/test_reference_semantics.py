@@ -1,8 +1,8 @@
-"""Golden-replication tests (SURVEY §5.2 item 2): run the engine's
-pipeline stages against an independent pandas reimplementation of the
-reference's semantics on the same fixture — covers the pieces the
-DuckDB oracle can't see (full DAG composition, nitrate/calibration
-paths)."""
+"""Golden-replication tests (SURVEY §5.2 item 2): run the engine's QC
+pipeline and Column-algebra detectors against an independent pandas
+reimplementation of the reference's semantics on the same fixture —
+covers the pieces the DuckDB oracle can't see (full DAG composition,
+nitrate/calibration paths)."""
 
 from __future__ import annotations
 
@@ -52,15 +52,16 @@ def _pandas_reference_clean(pdf: pd.DataFrame) -> pd.Series:
     return s
 
 
-def test_clean_stage_matches_pandas_reference(spark, qc_fixture):
-    from wq_data_pipeline_spark.plans.qc_pipeline import QCConfig, clean_stage
+@pytest.fixture(scope="module")
+def qc_fixture_outputs(spark, qc_fixture):
+    """The QC pipeline (default config) over ``qc_fixture``."""
+    from wq_data_pipeline_spark.plans.qc_pipeline import QCConfig, run_qc_pipeline
 
-    got = (
-        clean_stage(spark.createDataFrame(qc_fixture), QCConfig())
-        .orderBy("ts")
-        .select("ts", "clean")
-        .toPandas()
-    )
+    return run_qc_pipeline(spark.createDataFrame(qc_fixture), QCConfig())
+
+
+def test_clean_stage_matches_pandas_reference(qc_fixture, qc_fixture_outputs):
+    got = qc_fixture_outputs.timeseries.orderBy("ts").select("ts", "clean").toPandas()
     exp = _pandas_reference_clean(qc_fixture)
     assert len(got) == len(exp)
     assert np.allclose(
@@ -70,17 +71,10 @@ def test_clean_stage_matches_pandas_reference(spark, qc_fixture):
     assert (got["clean"] == -99.0).sum() == 2
 
 
-def test_flat_run_matches_pandas_reference(spark, qc_fixture):
-    """Flat-run events vs the reference convention: eq = isclose to
-    predecessor, end = first row after the run (:217)."""
-    from wq_data_pipeline_spark.operators.detectors import detect_flat_runs
-    from wq_data_pipeline_spark.plans.qc_pipeline import QCConfig, clean_stage
-
-    cleaned = clean_stage(spark.createDataFrame(qc_fixture), QCConfig())
-    ev = detect_flat_runs(
-        cleaned.withColumnRenamed("clean", "value"), "value", KEYS, "ts",
-        atol=0.0, min_hours=2.0,
-    ).collect()
+def test_flat_run_matches_pandas_reference(qc_fixture, qc_fixture_outputs):
+    """The pipeline's flat-run events vs the reference convention: eq =
+    isclose to predecessor, end = first row after the run (:217)."""
+    ev = qc_fixture_outputs.events.filter("type = 'flat_values'").collect()
 
     s = _pandas_reference_clean(qc_fixture)
     eq = np.zeros(len(s), dtype=bool)
@@ -290,9 +284,10 @@ def _ref_fallback_masks(s: pd.Series, lo: float, hi: float) -> dict[str, pd.Seri
 
 
 def test_full_suite_flag_stage_matches_pandas_reference(spark):
-    """flag_stage(full_suite=True) must reproduce the reference's
-    complete 9-detector fallback OR (0/255 codes) row-for-row on a
-    fixture that exercises every detector.
+    """The pipeline's full-suite flags (``QCConfig(full_suite=True)``)
+    must reproduce the reference's complete 9-detector fallback OR
+    (0/255 codes) row-for-row on a fixture that exercises every
+    detector.
 
     The gap-null threshold is raised to 6h: under the default 2h any
     index gap large enough for the isolated detector (>3h) has already
@@ -300,11 +295,7 @@ def test_full_suite_flag_stage_matches_pandas_reference(spark):
     the reference's own composition (gap-null at :673-675 precedes
     apply_saqc_suite at :687) and verified here by using 4h gaps that
     null nothing at the 6h setting."""
-    from wq_data_pipeline_spark.plans.qc_pipeline import (
-        QCConfig,
-        clean_stage,
-        flag_stage,
-    )
+    from wq_data_pipeline_spark.plans.qc_pipeline import QCConfig, run_qc_pipeline
 
     rng = np.random.default_rng(77)
     n = 2000
@@ -334,10 +325,9 @@ def test_full_suite_flag_stage_matches_pandas_reference(spark):
     cfg = QCConfig(
         range_map={"x": (0.0, 40.0)}, full_suite=True, max_gap_seconds=6 * 3600.0
     )
-    cleaned = clean_stage(spark.createDataFrame(pdf), cfg)
     got = (
-        flag_stage(cleaned, cfg)
-        .orderBy("ts")
+        run_qc_pipeline(spark.createDataFrame(pdf), cfg)
+        .timeseries.orderBy("ts")
         .select("ts", "saqc_flag")
         .toPandas()
     )
@@ -427,9 +417,9 @@ def test_mask_sentinels_per_series_active_sets(spark):
     """Each series masks only its own active sentinels: in 'a' -9999 is
     active by count (5 hits, 2.5% < 5%), in 'b' -9 is active by
     fraction (2 hits < 5, 5% of 40 rows); the other sentinel of each
-    series stays. The aggregate ``active_sentinels`` (read by the meta
-    table) agrees with the rows that were masked."""
-    from wq_data_pipeline_spark.operators.clean import active_sentinels, mask_sentinels
+    series stays. The aggregate ``active_sentinel_array`` (the meta
+    table's) agrees with the rows that were masked."""
+    from wq_data_pipeline_spark.operators.clean import active_sentinel_array, mask_sentinels
 
     ts = pd.date_range("2024-01-01", periods=200, freq="15min")
     a = [float(i % 17) for i in range(200)]
@@ -457,7 +447,9 @@ def test_mask_sentinels_per_series_active_sets(spark):
     assert got["b"].count(None) == 2 and got["b"].count(-9999.0) == 1
     active = {
         r.variable: r._active_sentinels
-        for r in active_sentinels(df, KEYS, "value", min_count=5, min_frac=0.05).collect()
+        for r in df.groupBy(*KEYS)
+        .agg(active_sentinel_array(value="value", min_count=5, min_frac=0.05).alias("_active_sentinels"))
+        .collect()
     }
     assert active == {"a": [-9999.0], "b": [-9.0]}
 
@@ -589,8 +581,17 @@ def _ref_binary_switches(v, idx, zero_tol=1e-12):
     return events
 
 
+def _pipeline_events(df, event_type: str):
+    """The QC pipeline's events of one type over ``df``."""
+    from wq_data_pipeline_spark.plans.qc_pipeline import QCConfig, run_qc_pipeline
+
+    events = run_qc_pipeline(df, QCConfig(apply_sentem=False)).events
+    return events.filter(F.col("type") == event_type)
+
+
 def test_binary_switches_match_reference(spark):
-    """W4 events vs the reference row-for-row, covering the edge
+    """W4 events vs the reference row-for-row, from both the catalog's
+    Column-algebra detector and the QC pipeline, covering the edge
     conventions: run at the series start (clamped pre = own endpoint),
     run at the end, NaN neighbor suppression, and an all-zero
     neighborhood (no event: pre==post==0)."""
@@ -607,17 +608,15 @@ def test_binary_switches_match_reference(spark):
     v[204] = np.nan        # NaN post-neighbor -> suppressed
     v[n - 3:] = 0.0        # run at series end -> post clamps to v[-1]=0
     pdf = pd.DataFrame({"station": "s", "variable": "x", "ts": ts, "value": v})
-    got = (
-        detect_binary_switches(spark.createDataFrame(pdf))
-        .orderBy("start")
-        .collect()
-    )
+    df = spark.createDataFrame(pdf)
     exp = _ref_binary_switches(v, ts)
-    assert len(got) == len(exp), (len(got), len(exp))
-    for g, e in zip(got, exp):
-        assert pd.Timestamp(g.start) == e[0] and pd.Timestamp(g.end) == e[1]
-        assert pd.Timestamp(g.pre) == e[2] and pd.Timestamp(g.post) == e[3]
-        assert g.pre_val == pytest.approx(e[4]) and g.post_val == pytest.approx(e[5])
+    for events in (detect_binary_switches(df), _pipeline_events(df, "binary_switch")):
+        got = events.orderBy("start").collect()
+        assert len(got) == len(exp), (len(got), len(exp))
+        for g, e in zip(got, exp):
+            assert pd.Timestamp(g.start) == e[0] and pd.Timestamp(g.end) == e[1]
+            assert pd.Timestamp(g.pre) == e[2] and pd.Timestamp(g.post) == e[3]
+            assert g.pre_val == pytest.approx(e[4]) and g.post_val == pytest.approx(e[5])
 
 
 def _ref_flat_slopes(v, idx, min_hours=2.0, win=25, abs_slope=0.0):
@@ -656,7 +655,8 @@ def _ref_flat_slopes(v, idx, min_hours=2.0, win=25, abs_slope=0.0):
 
 
 def test_flat_slopes_match_reference(spark):
-    """W6 events row-for-row vs the reference numpy reimplementation:
+    """W6 events row-for-row vs the reference numpy reimplementation,
+    from both the Column-algebra detector and the QC pipeline:
     constant plateaus (slope ~1e-17, far inside the 1e-10 threshold)
     between clearly-sloped ramps (~1e-3 s^-1, far outside) — slopes
     from the closed-form window algebra and numpy lstsq agree on
@@ -672,19 +672,17 @@ def test_flat_slopes_match_reference(spark):
     v[400:408] = v[400]   # short plateau: slope window still sees ramp
     v[120] = np.nan       # a null inside a plateau
     pdf = pd.DataFrame({"station": "s", "variable": "x", "ts": ts, "value": v})
-    got = (
-        detect_flat_slopes(
-            spark.createDataFrame(pdf), "value", KEYS, "ts",
-            window_points=25, abs_slope=1e-10, min_hours=2.0,
-        )
-        .orderBy("start")
-        .collect()
-    )
+    df = spark.createDataFrame(pdf)
     exp = _ref_flat_slopes(v, ts, min_hours=2.0, win=25, abs_slope=1e-10)
-    assert len(got) == len(exp) > 0, (len(got), len(exp))
-    for g, e in zip(got, exp):
-        assert pd.Timestamp(g.start) == e[0] and pd.Timestamp(g.end) == e[1]
-        assert abs(g.hours - e[2]) < 1e-9
+    column = detect_flat_slopes(
+        df, "value", KEYS, "ts", window_points=25, abs_slope=1e-10, min_hours=2.0
+    )
+    for events in (column, _pipeline_events(df, "flat_slopes")):
+        got = events.orderBy("start").collect()
+        assert len(got) == len(exp) > 0, (len(got), len(exp))
+        for g, e in zip(got, exp):
+            assert pd.Timestamp(g.start) == e[0] and pd.Timestamp(g.end) == e[1]
+            assert abs(g.hours - e[2]) < 1e-9
 
 
 def test_seasonal_stats_match_reference_on_irregular_cadence(spark):

@@ -6,8 +6,10 @@ All operate on the long readings table and stay fully lazy. The
 two-pass per-series stats stay in one plan instead of collect()ing:
 ``mask_sentinels`` reads its sentinel counts from window aggregates
 over the series partition, so the rows are not joined back to a
-per-key aggregate, and ``infer_step``/``active_sentinels`` return one
-row per series.
+per-key aggregate. ``infer_step`` returns one row per series; its
+aggregate :func:`step_seconds` and the active-sentinel aggregate
+:func:`active_sentinel_array` fold into a caller's own per-series
+aggregate.
 """
 
 from __future__ import annotations
@@ -41,19 +43,15 @@ def _active_array(
     return F.array_sort(F.array_compact(F.array(*active)))
 
 
-def active_sentinels(
-    df: DataFrame,
-    keys: Sequence[str] = SERIES_KEYS,
-    value: str = "value",
+def active_sentinel_array(
     sentinels: Sequence[float] = DEFAULT_SENTINELS,
+    value: str = "value",
     min_count: int = 5,
     min_frac: float = 0.001,
-) -> DataFrame:
-    """Per-series array of ACTIVE sentinels (see :func:`_active_array`).
-    One row per series: (keys..., ``_active_sentinels`` sorted
-    ascending)."""
-    active = _active_array(F.sum, sentinels, value, min_count, min_frac)
-    return df.groupBy(*keys).agg(active.alias("_active_sentinels"))
+) -> Column:
+    """Aggregate: the group's ACTIVE sentinels, sorted ascending (see
+    :func:`_active_array`)."""
+    return _active_array(F.sum, sentinels, value, min_count, min_frac)
 
 
 def mask_sentinels(
@@ -114,6 +112,17 @@ def resolve_duplicates(
     )
 
 
+def step_seconds(dt: str, default_seconds: float = 900.0) -> Column:
+    """Aggregate: a series' sampling step from its successive ts diffs
+    ``dt`` (seconds) — the median of the positive ones, or
+    ``default_seconds`` when the series has < 3 rows or none is
+    positive (A3)."""
+    med = F.median(F.when(F.col(dt) > 0, F.col(dt)))
+    return F.when((F.count(F.lit(1)) >= 3) & med.isNotNull(), med).otherwise(
+        F.lit(default_seconds)
+    )
+
+
 def infer_step(
     df: DataFrame,
     keys: Sequence[str] = SERIES_KEYS,
@@ -128,19 +137,7 @@ def infer_step(
     """
     keys = list(keys)
     d = with_ts_delta(df.select(*keys, ts), keys, ts, out="_dt")
-    return (
-        d.groupBy(*keys)
-        .agg(
-            F.median(F.when(F.col("_dt") > 0, F.col("_dt"))).alias("_med"),
-            F.count(F.lit(1)).alias("_n"),
-        )
-        .select(
-            *keys,
-            F.when((F.col("_n") >= 3) & F.col("_med").isNotNull(), F.col("_med"))
-            .otherwise(F.lit(default_seconds))
-            .alias("step_seconds"),
-        )
-    )
+    return d.groupBy(*keys).agg(step_seconds("_dt", default_seconds).alias("step_seconds"))
 
 
 def classify_gaps(

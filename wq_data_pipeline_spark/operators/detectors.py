@@ -4,6 +4,13 @@ Each detector is a lazy transformation producing either per-row flag
 columns or small event tables (gaps-and-islands aggregation). No UDFs:
 everything is Column algebra + window aggregates, so the whole suite
 codegens and collapses onto one sort per series.
+
+Callers are the catalog (plans/qc.py and the other families, whose
+DuckDB oracles mirror this JVM arithmetic) and the EP3 runner. The QC
+pipeline (plans/qc_pipeline.py) runs the same detectors as numpy in
+its per-series kernel, operators/series_qc.py; tests/test_series_qc.py
+holds the two engines equal and tests/test_reference_semantics.py ties
+both to the pandas references.
 """
 
 from __future__ import annotations
@@ -137,23 +144,18 @@ def _robust_z_pandas(
     ts: str,
     out: str,
 ) -> DataFrame:
-    """applyInPandas engine for :func:`with_robust_z` (per-series
-    Arrow batch; pandas C skiplist rolling median)."""
+    """applyInPandas engine for :func:`with_robust_z`: the per-series
+    ``series_qc.robust_z`` (pandas C skiplist rolling median) on each
+    series' Arrow batch."""
     from pyspark.sql import types as T
 
-    minp = max(5, window_points // 3)
+    from wq_data_pipeline_spark.operators.series_qc import robust_z
+
     schema = T.StructType(list(df.schema.fields) + [T.StructField(out, T.DoubleType())])
 
     def fz(pdf):
-        import numpy as np
-
         pdf = pdf.sort_values(ts).reset_index(drop=True)
-        s = pdf[value].astype(float)
-        med = s.rolling(window_points, center=True, min_periods=minp).median()
-        mad = (s - med).abs().rolling(window_points, center=True, min_periods=minp).median()
-        z = 0.6745 * (s - med) / mad
-        z[~(mad > 0)] = np.nan  # MAD==0 (or NaN) -> NULL, like the window path
-        pdf[out] = z
+        pdf[out] = robust_z(pdf[value].to_numpy(dtype=float), window_points)
         return pdf
 
     return df.groupBy(*list(keys)).applyInPandas(fz, schema)

@@ -1,0 +1,532 @@
+"""Per-series QC kernel: the QC pipeline's clean stage, fallback flag
+suite, SentemQC passes and event detectors as numpy functions over
+ONE series.
+
+A series is given sorted by ``ts`` (int64 epoch microseconds, unique
+after the clean stage) with float64 values, NaN standing for NULL.
+``plans/qc_pipeline.py`` runs :func:`qc_table` once per (station,
+variable) group through ``applyInArrow``, and :func:`events_table`
+over the pinned result, so the pipeline's whole chain is one
+Python-worker pass per series instead of a chain of Spark window
+passes.
+
+Each function reproduces the Spark Column algebra of the same name in
+``operators/clean.py``, ``operators/detectors.py`` and
+``operators/sentem.py``, which the catalog and the EP3 runner still
+run. The arithmetic follows Spark's, so both engines give the same
+floats:
+
+- a frame aggregate folds its rows in row order, as WindowExec does:
+  sums from 0.0 (``sum``/``avg``), Welford updates (``var_samp``,
+  ``stddev_pop``);
+- exact medians interpolate the middle pair (Spark ``percentile`` and
+  pandas' rolling median agree);
+- the wide SentemQC means use the same anchored prefix sums.
+
+The arrays hold NaN for NULL; :func:`qc_table` and :func:`events_table`
+turn every float column back into Arrow with a null mask, so NaN never
+leaves the kernel.
+"""
+
+from __future__ import annotations
+
+import math
+
+import numpy as np
+import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
+
+from wq_data_pipeline_spark.operators.clean import DEFAULT_SENTINELS
+from wq_data_pipeline_spark.operators.sentem import (
+    DEFAULT_PASSES,
+    PREFIX_WINDOW_THRESHOLD,
+    TRI5_WEIGHTS,
+    BandPassCfg,
+)
+from wq_data_pipeline_spark.operators.windows import centered_bounds
+
+# Detector parameters: the reference's exact fallback-suite values,
+# durations converted at its 15-min default step (_to_points, :144-147).
+SENTINELS = DEFAULT_SENTINELS
+SENTINEL_MIN_COUNT = 5
+SENTINEL_MIN_FRAC = 0.001
+FLAT_ATOL = 0.0
+FLAT_MIN_HOURS = 2.0  # constants/plateau '2h'
+Z_WINDOW_POINTS = 96  # zscore '24h'
+JUMP_THRESH = 5.0  # reference flagJumps default (:565)
+SLOPE_WINDOW_POINTS = 25
+SLOPE_ABS = 1e-10
+SLOPE_T_ORIGIN_S = 1.7e9  # see windows.rolling_ols_slope
+ZERO_TOL = 1e-12  # binary-switch zero band
+VAR_WINDOW_POINTS = 24  # variance '6h'
+VAR_TOL = 1e-12
+ISOLATED_GROUP_POINTS = 2  # isolated '30min' group
+ISOLATED_GAP_SECONDS = 3 * 3600.0  # isolated '3h' gap
+
+_US_PER_S = 1e6
+_US_PER_HOUR = 3.6e9
+
+
+# ------------------------------------------------------------------ frames
+def _shift(x: np.ndarray, k: int) -> np.ndarray:
+    """``x[i + k]`` for every row i; NaN where i + k is outside the series."""
+    n = len(x)
+    out = np.full(n, np.nan)
+    if abs(k) < n:
+        if k >= 0:
+            out[: n - k] = x[k:]
+        else:
+            out[-k:] = x[: n + k]
+    return out
+
+
+def _frame_sum(x: np.ndarray, lo: int, hi: int) -> tuple[np.ndarray, np.ndarray]:
+    """Sum and count of the non-NaN values in each row's frame
+    ``[i + lo, i + hi]``, added in row order from 0.0."""
+    s = np.zeros(len(x))
+    c = np.zeros(len(x), np.int64)
+    for k in range(lo, hi + 1):
+        t = _shift(x, k)
+        ok = ~np.isnan(t)
+        s = np.where(ok, s + t, s)
+        c += ok
+    return s, c
+
+
+def _frame_moments(x: np.ndarray, lo: int, hi: int) -> tuple[np.ndarray, np.ndarray]:
+    """Count and centred sum of squares (n, m2) of the non-NaN values in
+    each row's frame, folded in row order with Spark's central-moment
+    update."""
+    n, avg, m2 = np.zeros(len(x)), np.zeros(len(x)), np.zeros(len(x))
+    for k in range(lo, hi + 1):
+        t = _shift(x, k)
+        ok = ~np.isnan(t)
+        n1 = n + 1.0
+        delta = t - avg
+        delta_n = delta / n1
+        avg = np.where(ok, avg + delta_n, avg)
+        m2 = np.where(ok, m2 + delta * (delta - delta_n), m2)
+        n = np.where(ok, n1, n)
+    return n, m2
+
+
+def _rolling_median(x: np.ndarray, window: int, minp: int) -> np.ndarray:
+    """Centred rolling median (pandas even-window alignment, see
+    ``windows.centered_bounds``), NaN under ``minp`` values."""
+    rolled = pd.Series(x, dtype=float).rolling(window, center=True, min_periods=minp)
+    return rolled.median().to_numpy()
+
+
+def robust_z(x: np.ndarray, window_points: int) -> np.ndarray:
+    """Rolling robust z (W8) of one series: 0.6745·(x − med) / MAD over
+    a centred window, min_periods max(5, w//3); NaN where the MAD is 0
+    or undefined. pandas' rolling median is a C skiplist, O(n·log w).
+
+    Reference _fallback_flag_zscore, scripts/ufz_water_qc_pipeline.py:415-422."""
+    minp = max(5, window_points // 3)
+    med = _rolling_median(x, window_points, minp)
+    mad = _rolling_median(np.abs(x - med), window_points, minp)
+    with np.errstate(invalid="ignore", divide="ignore"):
+        return np.where(mad > 0, 0.6745 * (x - med) / mad, np.nan)
+
+
+def _runs(mask: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """First and last row index of each maximal run of True."""
+    d = np.diff(np.concatenate(([0], mask.astype(np.int8), [0])))
+    return np.flatnonzero(d == 1), np.flatnonzero(d == -1) - 1
+
+
+def _run_ends(ts: np.ndarray, first: np.ndarray, last: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Each run's end row (the first row after it, or its own last row
+    at the series end, reference :217) and its duration in hours."""
+    end = np.minimum(last + 1, len(ts) - 1)
+    return end, (ts[end] - ts[first]) / _US_PER_HOUR
+
+
+def _span_mask(n: int, first: np.ndarray, last: np.ndarray) -> np.ndarray:
+    """True on the rows ``first[j]..last[j]`` of every (disjoint) run j."""
+    d = np.zeros(n + 1, np.int64)
+    d[first] += 1
+    d[last + 1] -= 1
+    return np.cumsum(d[:n]) > 0
+
+
+# ------------------------------------------------------------------ clean
+def _median(g: np.ndarray) -> float:
+    """Exact median of the non-NaN values, Spark ``percentile``'s
+    interpolation; NaN when there is none."""
+    v = np.sort(g[~np.isnan(g)])
+    if not len(v):
+        return np.nan
+    pos = 0.5 * (len(v) - 1)
+    lo, hi = math.floor(pos), math.ceil(pos)
+    if lo == hi:
+        return float(v[lo])
+    return (hi - pos) * v[lo] + (pos - lo) * v[hi]
+
+
+def clean_series(
+    ts: np.ndarray, value: np.ndarray, max_gap_seconds: float
+) -> dict[str, np.ndarray]:
+    """Sentinels -> duplicate median -> gap-null (``clean.mask_sentinels``,
+    ``resolve_duplicates``, ``classify_gaps``, ``null_gap_values``) over
+    one series sorted by ``ts``. Returns one row per distinct ts:
+    ``ts``, ``raw`` (post-dedup, pre-gap-null), ``clean``,
+    ``dup_count``, ``gap_seconds`` (NaN at the series start),
+    ``is_gap`` and ``row`` (the first input row of each ts)."""
+    n = len(value)
+    active = [
+        s for s in SENTINELS
+        if (c := np.count_nonzero(value == s)) >= SENTINEL_MIN_COUNT or c / n >= SENTINEL_MIN_FRAC
+    ]
+    v = np.where(np.isin(value, active), np.nan, value)
+    uts, row, dup_count = np.unique(ts, return_index=True, return_counts=True)
+    raw = v[row]
+    for i in np.flatnonzero(dup_count > 1):
+        raw[i] = _median(v[row[i] : row[i] + dup_count[i]])
+    gap = np.full(len(uts), np.nan)
+    gap[1:] = np.diff(uts) / _US_PER_S
+    is_gap = gap > max_gap_seconds
+    return {
+        "ts": uts,
+        "raw": raw,
+        "clean": np.where(is_gap, np.nan, raw),
+        "dup_count": dup_count.astype(np.int64),
+        "gap_seconds": gap,
+        "is_gap": is_gap,
+        "row": row,
+    }
+
+
+# ------------------------------------------------------------------ flags
+def _flat_steps(x: np.ndarray) -> np.ndarray:
+    """True where a row equals its predecessor within FLAT_ATOL; the
+    first row and NaN rows never are."""
+    eq = np.zeros(len(x), bool)
+    eq[1:] = np.abs(np.diff(x)) <= FLAT_ATOL
+    return eq
+
+
+def flat_run_mask(ts: np.ndarray, x: np.ndarray) -> np.ndarray:
+    """Rows from a flat run's start to the first row after it, for runs
+    lasting >= FLAT_MIN_HOURS (``detectors.flat_run_mask``)."""
+    first, last = _runs(_flat_steps(x))
+    _, hours = _run_ends(ts, first, last)
+    keep = hours >= FLAT_MIN_HOURS
+    q = _span_mask(len(x), first[keep], last[keep])
+    q[1:] |= q[:-1]
+    return q
+
+
+def variance_flag(x: np.ndarray) -> np.ndarray:
+    """Centred rolling sample variance <= VAR_TOL (``detectors.flag_variance``)."""
+    lo, hi = centered_bounds(VAR_WINDOW_POINTS)
+    n, m2 = _frame_moments(x, lo, hi)
+    ok = n >= max(3, VAR_WINDOW_POINTS // 3)
+    return ok & (m2 / np.where(ok, n - 1.0, 1.0) <= VAR_TOL)
+
+
+def isolated_flag(ts: np.ndarray, x: np.ndarray) -> np.ndarray:
+    """Finite groups of <= ISOLATED_GROUP_POINTS rows with a measured
+    gap > ISOLATED_GAP_SECONDS on both sides
+    (``detectors.detect_isolated_groups``)."""
+    first, last = _runs(~np.isnan(x))
+    n = len(x)
+    before = np.zeros(len(first), bool)
+    after = np.zeros(len(first), bool)
+    has_before, has_after = first > 0, last < n - 1
+    before[has_before] = (
+        ts[first[has_before]] - ts[first[has_before] - 1]
+    ) / _US_PER_S > ISOLATED_GAP_SECONDS
+    after[has_after] = (
+        ts[last[has_after] + 1] - ts[last[has_after]]
+    ) / _US_PER_S > ISOLATED_GAP_SECONDS
+    keep = (last - first + 1 <= ISOLATED_GROUP_POINTS) & before & after
+    return _span_mask(n, first[keep], last[keep])
+
+
+def flag_series(
+    ts: np.ndarray,
+    x: np.ndarray,
+    z_thresh: float,
+    value_range: tuple[float, float] | None,
+    full_suite: bool,
+) -> tuple[np.ndarray, np.ndarray]:
+    """Fallback flag suite (apply_saqc_suite semantics, :459-589) over
+    the clean series: ``(f_z, flagged)``, where ``flagged`` ORs
+    robust z, missing and the range (when given), plus jumps, the
+    flat-run mask (constants and plateau), variance and isolated
+    groups under the full suite. uniLOF is the robust-z flag
+    (reference :455-457), already in the OR."""
+    f_z = np.abs(robust_z(x, Z_WINDOW_POINTS)) >= z_thresh
+    flagged = f_z | np.isnan(x)
+    if value_range is not None:
+        lo, hi = value_range
+        flagged |= (x < lo) | (x > hi)
+    if full_suite:
+        flagged[1:] |= np.abs(np.diff(x)) >= JUMP_THRESH
+        flagged |= flat_run_mask(ts, x) | variance_flag(x) | isolated_flag(ts, x)
+    return f_z, flagged
+
+
+# ------------------------------------------------------------------ SentemQC
+def _prefix_sums(v: np.ndarray) -> dict[str, np.ndarray | float]:
+    """Running count, sum and sum of squares of the values centred on
+    the series' first value (``sentem._prefix_sums``)."""
+    ok = ~np.isnan(v)
+    anchor = v[ok][0] if ok.any() else np.nan
+    contrib = np.where(ok, v - anchor, 0.0)
+    return {
+        "anchor": anchor,
+        "cc": np.cumsum(ok.astype(np.int64)),
+        "cs": np.cumsum(contrib),
+        "cs2": np.cumsum(contrib * contrib),
+    }
+
+
+def _prefix_mean_std(p: dict, window: int, minp: int) -> tuple[np.ndarray, np.ndarray]:
+    """Rolling mean and population std telescoped out of the prefix
+    sums (``sentem._prefix_mean_std_cols``)."""
+    lo, hi = centered_bounds(window)
+    n = len(p["cc"])
+    rows = np.arange(n)
+    upper = np.minimum(rows + hi, n - 1)
+    lower = rows - (1 - lo)
+    has_lower = lower >= 0
+
+    def windowed(cum):
+        below = np.where(has_lower, cum[np.maximum(lower, 0)], 0)
+        return cum[upper] - below
+
+    c = windowed(p["cc"]).astype(float)
+    s, s2 = windowed(p["cs"]), windowed(p["cs2"])
+    mean = p["anchor"] + s / c
+    var = np.maximum(s2 / c - (s / c) * (s / c), 0.0)
+    ok = c >= minp
+    return np.where(ok, mean, np.nan), np.where(ok, np.sqrt(var), np.nan)
+
+
+def _tri5_mean_std(v: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Triangular 5-point mean and std over the finite taps, >= 3 of them
+    (``sentem._tri5_cols``)."""
+    n_fin = np.zeros(len(v), np.int64)
+    wsum, sx, sxx = np.zeros(len(v)), np.zeros(len(v)), np.zeros(len(v))
+    for k, wt in zip(range(-2, 3), TRI5_WEIGHTS):
+        t = _shift(v, k)
+        ok = ~np.isnan(t)
+        t0 = np.where(ok, t, 0.0)
+        n_fin += ok
+        wsum = wsum + np.where(ok, wt, 0.0)
+        sx = sx + t0 * wt
+        sxx = sxx + t0 * t0 * wt
+    m = sx / wsum
+    var = sxx / wsum - m * m
+    ok = n_fin >= 3
+    return np.where(ok, m, np.nan), np.where(ok, np.sqrt(np.maximum(var, 0.0)), np.nan)
+
+
+def _band_stats(v: np.ndarray, cfg: BandPassCfg, prefix: dict) -> tuple[np.ndarray, np.ndarray]:
+    """Centre and std of one band pass (``sentem._with_band_stats``);
+    ``prefix`` is :func:`_prefix_sums` of ``v``."""
+    if cfg.stat == "tri5":
+        return _tri5_mean_std(v)
+    minp = max(3, math.ceil(cfg.window * 0.3))
+    if cfg.stat == "mean" and cfg.window >= PREFIX_WINDOW_THRESHOLD:
+        return _prefix_mean_std(prefix, cfg.window, minp)
+    lo, hi = centered_bounds(cfg.window)
+    n, m2 = _frame_moments(v, lo, hi)
+    if cfg.stat == "median":
+        center = _rolling_median(v, cfg.window, minp)
+    else:
+        s, c = _frame_sum(v, lo, hi)
+        center = s / c
+    ok = n >= minp
+    return np.where(ok, center, np.nan), np.where(ok, np.sqrt(m2 / n), np.nan)
+
+
+def _overlap_flag(
+    v: np.ndarray, top: np.ndarray, bottom: np.ndarray, cfg: BandPassCfg
+) -> np.ndarray:
+    """The value's relative uncertainty envelope (every DEFAULT_PASSES
+    pass uses ``unc_pct``) lies wholly above the top band or wholly
+    below the bottom band (``sentem.uncertainty_overlap_flag``)."""
+    hi, lo = v * (1.0 + cfg.unc_pct), v * (1.0 - cfg.unc_pct)
+    return ((hi > top) & (lo > top)) | ((hi < bottom) & (lo < bottom))
+
+
+def sentemqc_series(x: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """The five SentemQC band passes (DEFAULT_PASSES) over one series
+    (``sentem.apply_sentemqc`` without a sensor code):
+    ``(value_masked, is_flagged, flag_reason)``."""
+    v = np.where(x > 0, x, np.nan)  # premask: non-positive / NULL
+    prefix = _prefix_sums(v)
+    code = np.zeros(len(v), np.int64)
+    for i, cfg in enumerate(DEFAULT_PASSES):
+        ma, sd = _band_stats(v, cfg, prefix)
+        top = (ma + cfg.top_add) + cfg.scale * sd
+        bottom = (ma - cfg.bottom_sub) - cfg.scale * sd
+        code |= _overlap_flag(v, top, bottom, cfg).astype(np.int64) << i
+    names = [f"flag_run{i}" for i in range(1, len(DEFAULT_PASSES) + 1)]
+    codes, inverse = np.unique(code, return_inverse=True)
+    reasons = np.array(
+        [" ".join(nm for i, nm in enumerate(names) if c >> i & 1) for c in codes], dtype=object
+    )
+    flagged = code > 0
+    return np.where(flagged, np.nan, v), flagged, reasons[inverse]
+
+
+# ------------------------------------------------------------------ events
+def rolling_slope(ts: np.ndarray, x: np.ndarray, window: int) -> np.ndarray:
+    """Centred rolling OLS slope of x against time in seconds, NaN under
+    max(5, w//3) finite points or a zero denominator
+    (``windows.rolling_ols_slope``)."""
+    lo, hi = centered_bounds(window)
+    t = ts.astype(float) / _US_PER_S - SLOPE_T_ORIGIN_S
+    t_obs = np.where(np.isnan(x), np.nan, t)
+    st, c = _frame_sum(t_obs, lo, hi)
+    sy, _ = _frame_sum(x, lo, hi)
+    sty, _ = _frame_sum(t_obs * x, lo, hi)
+    stt, _ = _frame_sum(t_obs * t_obs, lo, hi)
+    n = c.astype(float)
+    denom = n * stt - st * st
+    ok = (n >= max(5, window // 3)) & (denom != 0)
+    return np.where(ok, (n * sty - st * sy) / np.where(ok, denom, 1.0), np.nan)
+
+
+def flat_value_events(ts: np.ndarray, x: np.ndarray) -> dict[str, np.ndarray]:
+    """Flat-value runs lasting >= FLAT_MIN_HOURS (``detectors.detect_flat_runs``)."""
+    first, last = _runs(_flat_steps(x))
+    end, hours = _run_ends(ts, first, last)
+    k = hours >= FLAT_MIN_HOURS
+    return {
+        "start": ts[first[k]], "end": ts[end[k]], "hours": hours[k],
+        "value": x[first[k]], "n_points": (last - first + 1)[k],
+    }
+
+
+def binary_switch_events(ts: np.ndarray, x: np.ndarray) -> dict[str, np.ndarray]:
+    """Zero runs whose clamped neighbours are both finite and not both
+    zero (``detectors.detect_binary_switches``)."""
+    first, last = _runs(~np.isnan(x) & (np.abs(x) <= ZERO_TOL))
+    pre, post = np.maximum(first - 1, 0), np.minimum(last + 1, len(x) - 1)
+    pre_val, post_val = x[pre], x[post]
+    k = (
+        ~np.isnan(pre_val) & ~np.isnan(post_val)
+        & ((np.abs(pre_val) > ZERO_TOL) | (np.abs(post_val) > ZERO_TOL))
+    )
+    return {
+        "start": ts[first[k]], "end": ts[last[k]], "pre": ts[pre[k]], "post": ts[post[k]],
+        "pre_val": pre_val[k], "post_val": post_val[k], "n_points": (last - first + 1)[k],
+    }
+
+
+def flat_slope_events(ts: np.ndarray, x: np.ndarray) -> dict[str, np.ndarray]:
+    """Runs of |slope| <= SLOPE_ABS lasting >= FLAT_MIN_HOURS
+    (``detectors.detect_flat_slopes``)."""
+    slope = rolling_slope(ts, x, SLOPE_WINDOW_POINTS)
+    first, last = _runs(np.abs(slope) <= SLOPE_ABS)
+    end, hours = _run_ends(ts, first, last)
+    k = hours >= FLAT_MIN_HOURS
+    return {
+        "start": ts[first[k]], "end": ts[end[k]], "hours": hours[k],
+        "n_points": (last - first + 1)[k],
+    }
+
+
+EVENT_DETECTORS = {
+    "flat_values": flat_value_events,
+    "binary_switch": binary_switch_events,
+    "flat_slopes": flat_slope_events,
+}
+
+
+# ------------------------------------------------------------------ Arrow
+def _sorted_series(table: pa.Table, value: str) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """(order, ts µs, values) of one group, sorted by ts; NULL and NaN
+    values both become NaN."""
+    ts = pc.cast(table.column("ts"), pa.int64()).to_numpy()
+    x = table.column(value).to_numpy().astype(float, copy=False)
+    order = np.argsort(ts, kind="stable")
+    return order, ts[order], x[order]
+
+
+def _f64(x: np.ndarray) -> pa.Array:
+    return pa.array(x, type=pa.float64(), mask=np.isnan(x))
+
+
+def qc_table(
+    table: pa.Table,
+    *,
+    max_gap_seconds: float,
+    z_thresh: float,
+    value_range: tuple[float, float] | None,
+    full_suite: bool,
+    sentem: bool,
+) -> pa.Table:
+    """One series' QC long table from its (station, variable, ts,
+    value) Arrow rows: station, variable, ts, clean, dup_count, raw,
+    gap_seconds, is_gap, f_z, saqc_flag, accepted and, with ``sentem``,
+    sm_masked, sm_flagged, sm_flagreason."""
+    with np.errstate(invalid="ignore", divide="ignore"):
+        order, ts, x = _sorted_series(table, "value")
+        c = clean_series(ts, x, max_gap_seconds)
+        f_z, flagged = flag_series(c["ts"], c["clean"], z_thresh, value_range, full_suite)
+        rows = pa.array(order[c["row"]])
+        cols = {
+            "station": table.column("station").take(rows),
+            "variable": table.column("variable").take(rows),
+            "ts": pa.array(c["ts"]).cast(table.schema.field("ts").type),
+            "clean": _f64(c["clean"]),
+            "dup_count": pa.array(c["dup_count"]),
+            "raw": _f64(c["raw"]),
+            "gap_seconds": _f64(c["gap_seconds"]),
+            "is_gap": pa.array(c["is_gap"]),
+            "f_z": pa.array(f_z),
+            "saqc_flag": pa.array(np.where(flagged, 255, 0).astype(np.int32)),
+            "accepted": _f64(np.where(flagged, np.nan, c["clean"])),
+        }
+        if sentem:
+            masked, sm_flagged, reason = sentemqc_series(c["clean"])
+            cols["sm_masked"] = _f64(masked)
+            cols["sm_flagged"] = pa.array(sm_flagged)
+            cols["sm_flagreason"] = pa.array(reason, type=pa.string())
+    return pa.table(cols)
+
+
+def events_table(table: pa.Table) -> pa.Table:
+    """One series' events from its (station, variable, ts, clean) Arrow
+    rows: station, variable, type, start, end, hours, value, n_points,
+    pre, post, pre_val, post_val; each detector fills its own columns
+    and leaves the others NULL (the J4 union)."""
+    with np.errstate(invalid="ignore", divide="ignore"):
+        _, ts, x = _sorted_series(table, "clean")
+        found = {name: fn(ts, x) for name, fn in EVENT_DETECTORS.items()}
+    sizes = [len(ev["start"]) for ev in found.values()]
+    ts_type = table.schema.field("ts").type
+
+    def column(name, fill, dtype):
+        parts = [ev.get(name, np.full(k, fill, dtype)) for ev, k in zip(found.values(), sizes)]
+        return np.concatenate(parts).astype(dtype)
+
+    def ts_column(name):
+        present = np.concatenate([np.full(k, name in ev) for ev, k in zip(found.values(), sizes)])
+        return pa.array(column(name, 0, np.int64), mask=~present).cast(ts_type)
+
+    first = pa.array(np.zeros(sum(sizes), np.int64))
+    return pa.table(
+        {
+            "station": table.column("station").take(first),
+            "variable": table.column("variable").take(first),
+            "type": pa.array(np.repeat(list(found), sizes).astype(object), type=pa.string()),
+            "start": ts_column("start"),
+            "end": ts_column("end"),
+            "hours": _f64(column("hours", np.nan, float)),
+            "value": _f64(column("value", np.nan, float)),
+            "n_points": pa.array(column("n_points", 0, np.int64)),
+            "pre": ts_column("pre"),
+            "post": ts_column("post"),
+            "pre_val": _f64(column("pre_val", np.nan, float)),
+            "post_val": _f64(column("post_val", np.nan, float)),
+        }
+    )

@@ -7,12 +7,12 @@ O(bins), not O(rows).
 
 from __future__ import annotations
 
-from collections.abc import Sequence
+from collections.abc import Mapping, Sequence
 
 from pyspark.sql import DataFrame, functions as F
 
 from wq_data_pipeline_spark.functions.scalars import frac_part, season_expr
-from wq_data_pipeline_spark.operators.windows import SERIES_KEYS, ordered, with_diff
+from wq_data_pipeline_spark.operators.windows import SERIES_KEYS, join_on_keys, ordered, with_diff
 
 
 def seasonal_stats(
@@ -21,6 +21,7 @@ def seasonal_stats(
     ts: str = "ts",
     value: str = "value",
     step_seconds: float = 900.0,
+    marks: tuple[DataFrame, str, Mapping[str, str]] | None = None,
 ) -> DataFrame:
     """Per-season coverage/nan summary (A7; reference seasonal_stats,
     scripts/ufz_water_qc_pipeline.py:277-290).
@@ -33,18 +34,37 @@ def seasonal_stats(
     irregular — round() changes the denominator. Rounding of exact .5
     halves differs (Python banker's vs SQL half-up); measure-zero at
     µs timestamp resolution. nan_pct = null share of observed rows.
+
+    ``marks = (frame, kind, {kind value: output column})`` also counts
+    point marks (e.g. events by their start) per season, in the same
+    aggregate instead of a join: ``frame`` holds (keys..., ts, kind)
+    rows, each counted in the season of its ``ts``. The counts follow
+    ``nan_pct``, 0 where a season has no mark of that kind. Marks add
+    no row, no span and no season of their own: the result is the
+    readings' summary with the counts left-joined on (keys, season).
     """
     keys = list(keys)
     season = season_expr(ts).alias("season")
-    return (
-        df.groupBy(*keys, season)
-        .agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.count(value).alias("n_obs"),
-            F.min(ts).alias("_min_ts"),
-            F.max(ts).alias("_max_ts"),
+    stamp, rows, counts = F.col(ts), F.count(F.lit(1)), {}
+    if marks is not None:
+        frame, kind, counts = marks
+        blank = F.lit(None).cast(df.schema[value].dataType)
+        df = df.select(*keys, ts, value, F.lit(None).cast("string").alias("_mark")).unionByName(
+            frame.select(*keys, ts, blank.alias(value), F.col(kind).alias("_mark"))
         )
-        .withColumn(
+        is_row = F.col("_mark").isNull()
+        stamp, rows = F.when(is_row, F.col(ts)), F.count_if(is_row)
+    out = df.groupBy(*keys, season).agg(
+        rows.alias("n_rows"),
+        F.count(value).alias("n_obs"),
+        F.min(stamp).alias("_min_ts"),
+        F.max(stamp).alias("_max_ts"),
+        *[F.count_if(F.col("_mark") == k).alias(name) for k, name in counts.items()],
+    )
+    if marks is not None:
+        out = out.filter(F.col("n_rows") > 0)
+    return (
+        out.withColumn(
             "expected_points",
             F.greatest(
                 F.lit(1).cast("long"),
@@ -65,6 +85,7 @@ def seasonal_stats(
             F.round(
                 (F.col("n_rows") - F.col("n_obs")) / F.col("n_rows") * 100.0, 4
             ).alias("nan_pct"),
+            *counts.values(),
         )
     )
 
@@ -243,17 +264,18 @@ def global_robust_z(
     scripts/ufz_water_qc_pipeline.py:624-639):
     z = (x − median) / (1.4826 · MAD); rows with |z| >= thresh.
 
-    Two per-key aggregates broadcast back — stays one lazy plan.
+    Two per-key aggregates broadcast back (NULL-safe on the keys) —
+    stays one lazy plan.
     """
     keys = list(keys)
     med = df.groupBy(*keys).agg(F.median(value).alias("_med"))
-    d1 = df.join(F.broadcast(med), on=keys)
+    d1 = join_on_keys(df, med, keys, broadcast=True)
     mad = (
         d1.withColumn("_dev", F.abs(F.col(value) - F.col("_med")))
         .groupBy(*keys)
         .agg(F.median("_dev").alias("_mad"))
     )
-    d2 = d1.join(F.broadcast(mad), on=keys)
+    d2 = join_on_keys(d1, mad, keys, broadcast=True)
     z = F.when(
         F.col("_mad") > 0,
         (F.col(value) - F.col("_med")) / (F.lit(1.4826) * F.col("_mad")),

@@ -1,6 +1,7 @@
 """Window primitives (SURVEY.md §2.4 W1-W3): ordered per-series
 windows, pandas-exact centered rows frames, min_periods guards, lag
-diffs, and gaps-and-islands ids.
+diffs, and gaps-and-islands ids; plus the NULL-safe join on series
+keys.
 
 Scale notes:
 - All windows share the same (partitionBy, orderBy) so Catalyst
@@ -28,6 +29,30 @@ GAUSS_WEIGHTS = [
     math.exp(-(k * k) / (2.0 * GAUSS_SIGMA * GAUSS_SIGMA))
     for k in range(-GAUSS_TAPS, GAUSS_TAPS + 1)
 ]
+
+
+def join_on_keys(
+    left: DataFrame,
+    right: DataFrame,
+    keys: Sequence[str] = SERIES_KEYS,
+    how: str = "inner",
+    broadcast: bool = False,
+) -> DataFrame:
+    """``left.join(right, on=keys, how=how)`` with NULL keys equal
+    (``<=>``): a NULL station is a series like any other (the CSV
+    reader gives an empty station cell NULL), and a USING equi-join
+    would drop it. Same columns as the USING join: ``keys``, then
+    left's other columns, then right's. ``broadcast`` hints the right
+    side."""
+    keys = list(keys)
+    renamed = {k: f"_right_{k}" for k in keys}
+    r = right.select(*[F.col(c).alias(renamed.get(c, c)) for c in right.columns])
+    if broadcast:
+        r = F.broadcast(r)
+    cond = [F.col(k).eqNullSafe(F.col(renamed[k])) for k in keys]
+    rest = [c for c in left.columns if c not in keys]
+    rest += [c for c in right.columns if c not in keys]
+    return left.join(r, cond, how).select(*keys, *rest)
 
 
 def ordered(keys: Sequence[str] = SERIES_KEYS, ts: str = "ts") -> WindowSpec:

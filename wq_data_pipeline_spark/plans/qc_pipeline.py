@@ -3,17 +3,27 @@ reference's EP1/EP2 lifecycle (run_pipeline -> process_variable,
 scripts/ufz_water_qc_pipeline.py:666-772) over the long readings
 table.
 
-The plan is lazy except for two pins (operators/pinning.py): the
-flagged long table and the events table. Each feeds several sinks and
-figures, and each sits on top of the pipeline's expensive work (the
-pandas robust-z island and the flag chain's window passes; the event
-detectors' window passes), so each is cut once and every consumer
-reads the cut instead of re-running the subtree.
+Where the reference loops over variables in pandas, this plan sends
+each whole (station, variable) series to one Python worker, once:
+``qc_long`` runs the per-series kernel (operators/series_qc.py:
+clean stage, fallback flag suite, SentemQC) through one
+``groupBy(station, variable).applyInArrow``. The kernel is numpy over
+a sorted series, so the chain costs no Spark window pass, no plan of
+a few hundred expressions to build, and no per-stage codegen.
 
-Where the reference loops per variable in Python, this plan handles
-every (station, variable) series in a single pass via window
-partitioning; the per-variable Python loop exists only at plan-build
-time (to apply per-variable config expressions).
+The plan is lazy except for three pins (operators/pinning.py), each
+read by several sinks and figures, so the work behind each runs once:
+- the long table (the kernel's output);
+- the events table, from the long table's clean column through the
+  kernel's event detectors (a second grouped-Arrow pass over the pin;
+  the pin reports no partitioning, so that pass shuffles it by series
+  once more);
+- the seasonal table, one aggregate over the long table and the event
+  starts, read by its CSV and figure 06.
+
+The report tables hold no join: the seasonal table counts the event
+starts in its own aggregate, and the meta table is one window and one
+aggregate over the readings, so each costs one shuffle.
 
 Outputs mirror the reference's artifacts:
 - wide QC timeseries parquet: ``{var}__raw/__clean/__accepted/
@@ -28,34 +38,24 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F, types as T
 
 from wq_data_pipeline_spark.functions.scalars import sanitize_name
 from wq_data_pipeline_spark.operators import clean as C
-from wq_data_pipeline_spark.operators import detectors as D
+from wq_data_pipeline_spark.operators import series_qc as Q
 from wq_data_pipeline_spark.operators import stats as S
 from wq_data_pipeline_spark.operators.pinning import pin
+from wq_data_pipeline_spark.operators.windows import with_ts_delta
+from wq_data_pipeline_spark.session import ship_package
 
 KEYS = ["station", "variable"]
-
-# Detector parameters: the reference's exact fallback-suite values,
-# durations converted at its 15-min default step (_to_points, :144-147).
-SENTINELS = C.DEFAULT_SENTINELS
-FLAT_ATOL = 0.0
-FLAT_MIN_HOURS = 2.0  # constants/plateau '2h'
-Z_WINDOW_POINTS = 96  # zscore '24h'
-JUMP_THRESH = 5.0  # reference flagJumps default (:565)
-SLOPE_WINDOW_POINTS = 25
-SLOPE_ABS = 1e-10
-VAR_WINDOW_POINTS = 24  # variance '6h'
-VAR_TOL = 1e-12
-ISOLATED_GROUP_POINTS = 2  # isolated '30min' group
-ISOLATED_GAP_SECONDS = 3 * 3600.0  # isolated '3h' gap
 
 
 @dataclass
 class QCConfig:
-    """Per-run config (reference EP2 hardcoded config, :775-800)."""
+    """Per-run config (reference EP2 hardcoded config, :775-800). The
+    detectors' window lengths, tolerances and the sentinel set are the
+    reference's values, module constants of ``operators/series_qc.py``."""
 
     range_map: dict[str, tuple[float, float]] = field(default_factory=dict)
     max_gap_seconds: float = 7200.0
@@ -66,153 +66,110 @@ class QCConfig:
     apply_sentem: bool = True
     # full_suite=True runs the reference's COMPLETE no-SaQC fallback
     # detector set (apply_saqc_suite else-branch,
-    # scripts/ufz_water_qc_pipeline.py:566-577) with the parameters
-    # above; full_suite=False keeps the lean set (z + missing + range)
-    # that the oracled catalog queries pin.
+    # scripts/ufz_water_qc_pipeline.py:566-577); full_suite=False
+    # keeps the lean set (z + missing + range) that the oracled
+    # catalog queries pin.
     full_suite: bool = False
 
 
-def clean_stage(readings: DataFrame, cfg: QCConfig) -> DataFrame:
-    """Sentinels -> dup-resolve -> gap-null: the ``__clean`` series.
-    Keeps ``raw`` (pre-gap-null, post-dedup) alongside."""
-    d = C.mask_sentinels(readings, KEYS, "value", SENTINELS)
-    d = C.resolve_duplicates(d, KEYS, "ts", "value")
-    d = d.withColumn("raw", F.col("value"))
-    d = C.classify_gaps(d, KEYS, "ts", cfg.max_gap_seconds)
-    d = C.null_gap_values(d, "value")
-    return d.withColumnRenamed("value", "clean")
+_LONG_FIELDS = [
+    T.StructField("station", T.StringType()),
+    T.StructField("variable", T.StringType()),
+    T.StructField("ts", T.TimestampType()),
+    T.StructField("clean", T.DoubleType()),
+    T.StructField("dup_count", T.LongType(), False),
+    T.StructField("raw", T.DoubleType()),
+    T.StructField("gap_seconds", T.DoubleType()),
+    T.StructField("is_gap", T.BooleanType(), False),
+    T.StructField("f_z", T.BooleanType(), False),
+    T.StructField("saqc_flag", T.IntegerType(), False),
+    T.StructField("accepted", T.DoubleType()),
+]
+_SENTEM_FIELDS = [
+    T.StructField("sm_masked", T.DoubleType()),
+    T.StructField("sm_flagged", T.BooleanType(), False),
+    T.StructField("sm_flagreason", T.StringType(), False),
+]
+EVENTS_SCHEMA = T.StructType(
+    [
+        T.StructField("station", T.StringType()),
+        T.StructField("variable", T.StringType()),
+        T.StructField("type", T.StringType(), False),
+        T.StructField("start", T.TimestampType()),
+        T.StructField("end", T.TimestampType()),
+        T.StructField("hours", T.DoubleType()),
+        T.StructField("value", T.DoubleType()),
+        T.StructField("n_points", T.LongType(), False),
+        T.StructField("pre", T.TimestampType()),
+        T.StructField("post", T.TimestampType()),
+        T.StructField("pre_val", T.DoubleType()),
+        T.StructField("post_val", T.DoubleType()),
+    ]
+)
 
 
-def flag_stage(cleaned: DataFrame, cfg: QCConfig) -> DataFrame:
-    """Fallback flag suite (apply_saqc_suite semantics, :459-589):
-    range + missing + robust-z (+ the full suite's detectors)
-    OR-combined to 0/255."""
-    d = cleaned.withColumnRenamed("clean", "value")
-    # engine='pandas': skiplist rolling median beats WindowExec's
-    # per-row frame scan ~38x at w=96 (pipeline hot path; the
-    # oracle-gated catalog queries keep the pure-JVM window engine)
-    d = D.flag_robust_z(
-        d, "value", Z_WINDOW_POINTS, cfg.z_thresh, KEYS, "ts", out="f_z",
-        engine="pandas",
-    )
-    flags = [F.col("f_z"), D.flag_missing("value")]
-    if cfg.range_map:
-        range_expr = F.lit(False)
-        for var, (lo, hi) in cfg.range_map.items():
-            range_expr = F.when(
-                F.col("variable") == var, D.flag_range("value", lo, hi)
-            ).otherwise(range_expr)
-        flags.append(range_expr)
-    if cfg.full_suite:
-        flags.append(D.flag_jumps("value", JUMP_THRESH, KEYS, "ts"))
-        # constants + plateau ('2h'): both reduce to the flat-run
-        # interval mask (_fallback_flag_constants delegates to
-        # _fallback_flag_plateau, :405-407), marking start <= ts <= end
-        # where end is the first row AFTER the run (_mask_from_runs,
-        # :392-397); flat_run_mask computes it in the series' window
-        # pass, so no run table is joined back
-        d = D.flat_run_mask(
-            d, "value", KEYS, "ts", FLAT_ATOL, FLAT_MIN_HOURS, out="_in_flat"
+def qc_long(readings: DataFrame, cfg: QCConfig) -> DataFrame:
+    """Clean, flag and (with ``cfg.apply_sentem``) SentemQC every series
+    in ONE Python-worker pass: ``groupBy(station, variable)
+    .applyInArrow`` runs :func:`series_qc.qc_table` on each whole
+    series. Columns: station, variable, ts, clean, dup_count, raw,
+    gap_seconds, is_gap, f_z, saqc_flag, accepted (+ sm_masked,
+    sm_flagged, sm_flagreason). Rows with a NULL ts are dropped first,
+    as ingest does (reference ensure_time_index). The workers import
+    the kernel by module reference, so the package is shipped first."""
+    ship_package(readings.sparkSession)
+
+    def per_series(key, table):
+        return Q.qc_table(
+            table,
+            max_gap_seconds=cfg.max_gap_seconds,
+            z_thresh=cfg.z_thresh,
+            value_range=cfg.range_map.get(key[1].as_py()),
+            full_suite=cfg.full_suite,
+            sentem=cfg.apply_sentem,
         )
-        flags.append(F.col("_in_flat"))
-        # variance ('6h', 1e-12)
-        flags.append(
-            D.flag_variance("value", VAR_WINDOW_POINTS, KEYS, "ts", VAR_TOL)
-        )
-        # isolated ('3h' gap both sides, '30min' group)
-        d = D.detect_isolated_groups(
-            d,
-            "value",
-            KEYS,
-            "ts",
-            ISOLATED_GROUP_POINTS,
-            ISOLATED_GAP_SECONDS,
-            out="_isolated_flag",
-        )
-        flags.append(F.col("_isolated_flag"))
-        # unilof: the reference fallback delegates to zscore('24h', 4.0)
-        # (:455-457) == the f_z flag already in ``flags`` — OR-idempotent.
-    combined = D.merge_flags(*flags)
-    d = d.withColumns(
-        {
-            "saqc_flag": D.flags_to_code(combined),
-            "accepted": F.when(combined, None).otherwise(F.col("value")),
-        }
-    ).drop("_in_flat", "_isolated_flag")
-    return d.withColumnRenamed("value", "clean")
 
-
-def event_stage(cleaned: DataFrame) -> DataFrame:
-    """Detector event tables, unioned (J4) with NaN-padded columns
-    like the golden ``__events_all.csv``."""
-    d = cleaned.withColumnRenamed("clean", "value")
-    flat = D.detect_flat_runs(d, "value", KEYS, "ts", FLAT_ATOL, FLAT_MIN_HOURS)
-    switches = D.detect_binary_switches(d, "value", KEYS, "ts")
-    slopes = D.detect_flat_slopes(
-        d, "value", KEYS, "ts", SLOPE_WINDOW_POINTS, SLOPE_ABS, FLAT_MIN_HOURS
-    )
+    fields = _LONG_FIELDS + (_SENTEM_FIELDS if cfg.apply_sentem else [])
     return (
-        flat.unionByName(switches, allowMissingColumns=True)
-        .unionByName(slopes, allowMissingColumns=True)
+        readings.select(*KEYS, "ts", "value")
+        .filter(F.col("ts").isNotNull())
+        .groupBy(*KEYS)
+        .applyInArrow(per_series, T.StructType(fields))
     )
 
 
 def seasonal_stage(cleaned: DataFrame, events: DataFrame, step_seconds: float = 900.0) -> DataFrame:
-    """A7 + per-season event counts joined in."""
-    from wq_data_pipeline_spark.functions.scalars import season_expr
-
+    """A7 + per-season ``flat_values``/``flat_slopes`` event counts, in
+    one aggregate over the readings and the events' starts (no pivot,
+    no join; see ``stats.seasonal_stats(marks=)``)."""
     d = cleaned.withColumnRenamed("clean", "value")
-    seas = S.seasonal_stats(d, KEYS, "ts", "value", step_seconds)
-    ev_counts = (
-        events.withColumn("season", season_expr("start"))
-        .groupBy(*KEYS, "season")
-        .pivot("type", ["flat_values", "flat_slopes"])
-        .count()
-        .withColumnRenamed("flat_values", "flat_values_events")
-        .withColumnRenamed("flat_slopes", "flat_slopes_events")
-    )
-    out = seas.join(ev_counts, on=[*KEYS, "season"], how="left")
-    return out.fillna(0, subset=[c for c in ("flat_values_events", "flat_slopes_events") if c in out.columns])
+    starts = events.select(*KEYS, F.col("start").alias("ts"), "type")
+    counts = {"flat_values": "flat_values_events", "flat_slopes": "flat_slopes_events"}
+    return S.seasonal_stats(d, KEYS, "ts", "value", step_seconds, marks=(starts, "type", counts))
 
 
 def meta_stage(readings: DataFrame) -> DataFrame:
     """Per-series meta: inferred step, duplicate count, and the
     ACTIVE sentinel set (reference meta dict
     ``{station, col, step, sentinel_used, duplicates}``,
-    scripts/ufz_water_qc_pipeline.py:738)."""
-    step = C.infer_step(readings, KEYS, "ts")
-    dups = (
-        readings.groupBy(*KEYS, "ts")
-        .agg(F.count(F.lit(1)).alias("_n"))
-        .groupBy(*KEYS)
-        .agg(F.sum(F.col("_n") - 1).alias("duplicates"))
+    scripts/ufz_water_qc_pipeline.py:738).
+
+    One window (successive ts diffs) and one aggregate, no join. Rows
+    sharing a ts are sorted next to each other, so every one of them
+    but the first has a diff of 0: ``duplicates`` counts those, plus
+    all NULL-ts rows but one (a ``groupBy(ts)`` puts them in one
+    group)."""
+    d = with_ts_delta(readings.select(*KEYS, "ts", "value"), KEYS, "ts", out="_dt")
+    null_ts = F.count_if(F.col("ts").isNull())
+    active = C.active_sentinel_array(
+        Q.SENTINELS, "value", Q.SENTINEL_MIN_COUNT, Q.SENTINEL_MIN_FRAC
     )
-    used = C.active_sentinels(readings, KEYS, "value", SENTINELS).select(
-        *KEYS,
+    return d.groupBy(*KEYS).agg(
+        C.step_seconds("_dt").alias("step_seconds"),
+        (F.count_if(F.col("_dt") == 0) + F.greatest(null_ts - 1, F.lit(0))).alias("duplicates"),
         # JSON-ish string (the reference stores the sorted list) so the
         # CSV meta sink can carry it
-        F.to_json(F.col("_active_sentinels")).alias("sentinel_used"),
-    )
-    return step.join(dups, on=KEYS, how="left").join(used, on=KEYS, how="left")
-
-
-def sentem_stage(flagged: DataFrame) -> DataFrame:
-    """SentemQC columns on the QC long table (reference sm_df inside
-    process_variable, scripts/ufz_water_qc_pipeline.py:697-701,
-    740-744): 5-pass band flags over the clean series ->
-    ``sm_masked`` / ``sm_flagged`` / ``sm_flagreason``. Runs on a
-    copy column so the pre-mask does not clobber ``clean``; the band
-    windows share the pipeline's (station, variable) × ts sort key."""
-    from wq_data_pipeline_spark.operators.sentem import apply_sentemqc
-
-    d = flagged.withColumn("_sv", F.col("clean"))
-    d = apply_sentemqc(d, value="_sv", keys=KEYS, ts="ts")
-    keep = [c for c in flagged.columns]
-    return d.select(
-        *keep,
-        F.col("value_masked").alias("sm_masked"),
-        F.col("is_flagged").alias("sm_flagged"),
-        F.col("flag_reason").alias("sm_flagreason"),
+        F.to_json(active).alias("sentinel_used"),
     )
 
 
@@ -270,44 +227,32 @@ def run_qc_pipeline(readings: DataFrame, cfg: QCConfig | None = None) -> QCOutpu
     """The full DAG. ``readings`` is the canonical long table
     (station, variable, ts, value).
 
-    Two subtrees are pinned, so each runs once however many actions
+    Three subtrees are pinned, so each runs once however many actions
     read it (reference recomputes nothing because everything lives in
     RAM; SURVEY §4.1 'Caching / reuse'):
 
-    - the flagged long table (after ``flag_stage`` and, when enabled,
-      ``sentem_stage``), read by ``widen``'s variable collect, both
-      parquet sinks, every figure input and the CLI's WRTDS leg;
+    - the long table (:func:`qc_long`), read by ``widen``'s variable
+      collect, both parquet sinks, the events pass, the seasonal
+      table, every figure input and the CLI's WRTDS leg;
     - the events table, read by the events CSV, the seasonal table
-      (CSV and figure) and the event figures.
+      and the event figures;
+    - the seasonal table, read by its CSV and the coverage figure.
 
-    The events and seasonal inputs are the cleaned columns projected
-    back out of the pinned table: the flag stages only add columns
-    and keep every row, since each per-series statistic is a window
-    column rather than a join. (The pandas
-    islands' Arrow round trip turns NaN into NULL, as ingest already
-    does: sources/csv_source.py.) ``meta`` reads ``readings`` because
-    it counts the pre-dedup duplicates.
-
-    Pinning runs the pinned plans' shuffle stages here (AQE plans its
-    stages when the lazy cut is taken). Release the pins with
-    ``operators.pinning.unpin`` after the last sink."""
+    ``meta`` reads ``readings`` because it counts the pre-dedup
+    duplicates. Release the pins with ``operators.pinning.unpin``
+    after the last sink."""
     cfg = cfg or QCConfig()
-    cleaned = clean_stage(readings, cfg)
-    flagged = flag_stage(cleaned, cfg)
-    if cfg.apply_sentem:
-        flagged = sentem_stage(flagged)
-    flagged = pin(flagged)
-    base = flagged.select(*cleaned.columns)
-    events = pin(event_stage(base))
-    seasonal = seasonal_stage(base, events)
-    meta = meta_stage(readings)
-    wide = widen(flagged)
+    qc = pin(qc_long(readings, cfg))
+    cleaned = qc.select(*KEYS, "ts", "clean")
+    events = pin(
+        cleaned.groupBy(*KEYS).applyInArrow(Q.events_table, EVENTS_SCHEMA)
+    )
     return QCOutputs(
-        timeseries=flagged,
-        timeseries_wide=wide,
+        timeseries=qc,
+        timeseries_wide=widen(qc),
         events=events,
-        seasonal=seasonal,
-        meta=meta,
+        seasonal=pin(seasonal_stage(cleaned, events)),
+        meta=meta_stage(readings),
     )
 
 

@@ -4,8 +4,10 @@
 offsets, nitrate N<->NO3 conversion, sensor-error flags, pass-5 band
 export, and the reference's wide export naming (``{var}__flag_global``
 .. ``{var}__masked``). The band passes themselves are
-:func:`operators.sentem.apply_sentemqc`, the same routine the QC
-pipeline's ``sentem_stage`` runs.
+:func:`operators.sentem.apply_sentemqc`; the QC pipeline runs the
+same five passes in its per-series kernel
+(``operators.series_qc.sentemqc_series``), and
+tests/test_series_qc.py holds the two equal.
 
 Where the reference loops variables in Python over pandas Series,
 this plan builds one lazy sub-plan per mapped variable (window sizes

@@ -175,17 +175,20 @@ def run_microbatch_qc(
     checkpoint_dir: str,
     cfg=None,
 ):
-    """foreachBatch bridge: run the full batch detector suite on each
-    micro-batch (ordered history within the batch). Returns the
-    StreamingQuery; caller awaits/stops it."""
-    from wq_data_pipeline_spark.plans.qc_pipeline import QCConfig, flag_stage, clean_stage
+    """foreachBatch bridge: run the batch pipeline's per-series kernel
+    (clean + flags, SentemQC off) on each micro-batch (ordered history
+    within the batch). Returns the StreamingQuery; caller awaits/stops
+    it."""
+    from dataclasses import replace
 
-    cfg = cfg or QCConfig()
+    from wq_data_pipeline_spark.plans.qc_pipeline import QCConfig, qc_long
+
+    cfg = replace(cfg or QCConfig(), apply_sentem=False)
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        out = flag_stage(clean_stage(batch_df, cfg), cfg)
+        out = qc_long(batch_df, cfg)
         out.write.mode("append").parquet(output_dir)
 
     return (
