@@ -136,3 +136,28 @@ def test_sentem_cli_end_to_end(tmp_path):
     assert "o2" in df.columns and len(df) == n
     assert set(df["o2__flag_global"].unique()) <= {100, 200}
     assert (df["o2__flag_global"] == 200).any(), "planted outlier never flagged"
+
+
+@pytest.mark.parametrize(
+    "extra, message",
+    [
+        (["--var", "o2", "999"], "unknown sensor code 999 (known codes: 400, 410, 157787"),
+        (["--var", "o2", "four"], "CODE 'four' is not an integer"),
+        (["--var", "o2", "400", "--calibration", "o2", "abc"], "OFFSET 'abc' is not a number"),
+        (["--var", "o2", "400", "--nitrate", "no3"], "--nitrate no3: no --var names 'no3'"),
+        (["--var", "o2", "400", "--calibration", "ph", "0.1"], "--calibration ph: no --var names"),
+        (["--var", "o2", "400", "--var", "o2", "410"], "--var o2 is given twice"),
+    ],
+    ids=["unknown_code", "non_integer_code", "non_float_offset", "unmapped_nitrate",
+         "unmapped_calibration", "repeated_var"],
+)
+def test_sentem_cli_rejects_bad_input(tmp_path, capsys, extra, message):
+    """Each bad EP3 argument is a usage error (exit 2) naming the known
+    codes or the unknown name, raised before any CSV is read."""
+    from wq_data_pipeline_spark import sentem_cli
+
+    argv = ["--csv", str(tmp_path / "missing.csv"), "--out", str(tmp_path / "out"), *extra]
+    with pytest.raises(SystemExit) as exc:
+        sentem_cli.main(argv)
+    assert exc.value.code == 2
+    assert message in capsys.readouterr().err

@@ -24,25 +24,27 @@ def series_df(spark):
     return spark.createDataFrame(pdf), pdf
 
 
-@pytest.mark.parametrize("w", [5, 12, 48])  # odd + both even cases
-def test_centered_mean_matches_pandas(spark, series_df, w):
-    from wq_data_pipeline_spark.operators.sentem import rolling_mean_std
-
-    sdf, pdf = series_df
-    out = (
-        rolling_mean_std(sdf, "value", w, KEYS, "ts")
-        .orderBy("ts")
-        .select("ma", "sd")
-        .toPandas()
-    )
+# odd + both even cases on direct frames, 960 on the prefix-sum path
+@pytest.mark.parametrize("w", [5, 12, 48, 960])
+def test_centered_mean_matches_pandas(series_df, w):
+    """The SentemQC kernel's band-pass mean and population std."""
     import math
 
+    from wq_data_pipeline_spark.operators import series_qc as Q
+
+    _, pdf = series_df
+    v = pdf["value"].to_numpy()
+    cfg = Q.BandPassCfg(window=w, scale=1.0)
+    assert (w >= Q.PREFIX_WINDOW_THRESHOLD) == (w == 960)
+    with np.errstate(invalid="ignore"):
+        ma, sd = Q.band_stats(v, cfg, Q._prefix_sums(v))
     minp = max(3, math.ceil(w * 0.3))
     r = pdf["value"].rolling(w, center=True, min_periods=minp)
     exp_ma = r.mean().to_numpy()
     exp_sd = r.std(ddof=0).to_numpy()
-    assert np.allclose(out["ma"].to_numpy(), exp_ma, equal_nan=True, rtol=1e-12)
-    assert np.allclose(out["sd"].to_numpy(), exp_sd, equal_nan=True, rtol=1e-9)
+    assert not np.isnan(ma).all()
+    assert np.allclose(ma, exp_ma, equal_nan=True, rtol=1e-12)
+    assert np.allclose(sd, exp_sd, equal_nan=True, rtol=1e-9)
 
 
 @pytest.mark.parametrize("w", [11, 24])
@@ -83,6 +85,7 @@ def test_var_samp_matches_pandas_ddof1(spark, series_df):
 def test_tri5_matches_reference_numpy(spark, series_df):
     """tri5 vs a direct numpy transcription of the reference's
     weighted mean/std semantics (scripts/sentemqc.py:31-39)."""
+    from wq_data_pipeline_spark.operators import series_qc as Q
     from wq_data_pipeline_spark.operators.sentem import TRI5_WEIGHTS, tri5_mean_std
 
     sdf, pdf = series_df
@@ -93,6 +96,9 @@ def test_tri5_matches_reference_numpy(spark, series_df):
         .toPandas()
     )
     v = pdf["value"].to_numpy()
+    cfg = Q.BandPassCfg(window=5, scale=1.0, stat="tri5")
+    with np.errstate(invalid="ignore"):
+        kernel_ma, kernel_sd = Q.band_stats(v, cfg, Q._prefix_sums(v))
     n = len(v)
     exp_ma = np.full(n, np.nan)
     exp_sd = np.full(n, np.nan)
@@ -109,17 +115,19 @@ def test_tri5_matches_reference_numpy(spark, series_df):
         m = (vals * wts).sum() / wts.sum()
         exp_ma[i] = m
         exp_sd[i] = np.sqrt((wts * (vals - m) ** 2).sum() / wts.sum())
-    assert np.allclose(out["ma"].to_numpy(), exp_ma, equal_nan=True, rtol=1e-12)
-    assert np.allclose(out["sd"].to_numpy(), exp_sd, equal_nan=True, rtol=1e-9)
+    for ma, sd in ((out["ma"].to_numpy(), out["sd"].to_numpy()), (kernel_ma, kernel_sd)):
+        assert np.allclose(ma, exp_ma, equal_nan=True, rtol=1e-12)
+        assert np.allclose(sd, exp_sd, equal_nan=True, rtol=1e-9)
 
 
 def test_full_sentemqc_pipeline(spark):
-    """SentemQC end-to-end on a fixture, through ``apply_sentemqc``
-    (with a sensor code) and through the QC pipeline's ``sm_*``
-    columns: flags fire on injected excursions; masks and reasons are
-    internally consistent."""
-    from wq_data_pipeline_spark.operators.sentem import apply_sentemqc
+    """SentemQC end-to-end on a fixture, through the EP3 runner (code
+    400's passes and sensor rules) and through the QC pipeline's
+    ``sm_*`` columns: flags fire on injected excursions; masks and
+    reasons are internally consistent. EP3 keeps the pre-masked value
+    as ``obs_raw`` (NULL where the input was <= 0, ``mask_pre`` set)."""
     from wq_data_pipeline_spark.plans.qc_pipeline import QCConfig, run_qc_pipeline
+    from wq_data_pipeline_spark.plans.sentem_pipeline import SentemVar, run_sentemqc_plan
 
     rng = np.random.default_rng(5)
     n = 2000
@@ -129,7 +137,7 @@ def test_full_sentemqc_pipeline(spark):
     v[900:905] = -2.0  # non-positive -> pre-masked
     pdf = pd.DataFrame({"station": "s", "variable": "o2", "ts": ts, "value": v})
     df = spark.createDataFrame(pdf)
-    out = apply_sentemqc(df, sensor_code=400).orderBy("ts").collect()
+    out = run_sentemqc_plan(df, [SentemVar("o2", code=400)]).orderBy("ts").collect()
     pipeline = (
         run_qc_pipeline(df, QCConfig())
         .timeseries.orderBy("ts")
@@ -141,7 +149,7 @@ def test_full_sentemqc_pipeline(spark):
         .collect()
     )
     for r in out[900:905]:
-        assert r.value is None  # pre-mask turned them into NULL
+        assert r.obs_raw is None and r.mask_pre  # pre-mask turned them into NULL
     for rows in (out, pipeline):
         spike = rows[700]
         assert spike.is_flagged and spike.value_masked is None

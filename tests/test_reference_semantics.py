@@ -104,15 +104,14 @@ def test_flat_run_matches_pandas_reference(qc_fixture, qc_fixture_outputs):
 
 
 def test_sentem_nitrate_and_calibration_path(spark):
-    """P4 calibration + P5 nitrate conversion through apply_sentemqc:
-    NO3 input is converted to N (×14/62) before banding; the output
-    masked values are in N units."""
-    from wq_data_pipeline_spark.operators.sentem import (
-        apply_sentemqc,
-        calibration_offset,
-        nitrate_to_n,
-        NITRATE_NO3_TO_N,
-    )
+    """P4 calibration + P5 nitrate conversion through the EP3 runner:
+    NO3 input gets its offset, then is converted to N (×14/62) before
+    banding. On the EP3 output ``obs_in`` and ``value_masked`` are in
+    input (NO3) units and the bands come back in NO3 units, so on
+    average they sit either side of the accepted values. Code 157787's passes accept
+    the bulk of a clean Gaussian series (2477034's run-4 band, sf 0.3,
+    flags about a quarter of one)."""
+    from wq_data_pipeline_spark.plans.sentem_pipeline import SentemVar, run_sentemqc_plan
 
     rng = np.random.default_rng(8)
     n = 1200
@@ -120,50 +119,46 @@ def test_sentem_nitrate_and_calibration_path(spark):
     no3 = rng.normal(20, 1.0, n)
     pdf = pd.DataFrame({"station": "s", "variable": "no3", "ts": ts, "value": no3})
     sdf = spark.createDataFrame(pdf)
-    sdf = sdf.withColumn("value", calibration_offset("value", 0.5))
-    sdf = sdf.withColumn("value", nitrate_to_n("value"))
-    out = apply_sentemqc(sdf).orderBy("ts").collect()
-    exp0 = (no3[0] + 0.5) * NITRATE_NO3_TO_N
-    assert abs(out[0].value - exp0) < 1e-12
+    var = SentemVar("no3", code=157787, is_nitrate=True, calibration_offset=0.5)
+    out = run_sentemqc_plan(sdf, [var]).orderBy("ts").collect()
+    assert abs(out[0].obs_in - (no3[0] + 0.5)) < 1e-12
     ok = [r for r in out if not r.is_flagged]
     assert len(ok) > 0.9 * n
-    # N units (~4.6 ± 0.23), not NO3 (~20.5): ±4σ bound
-    assert all(3.5 < r.value_masked < 7.0 for r in ok)
+    # NO3 units (~20.5 ± 1.0), not N (~4.6): ±4σ bound
+    assert all(16.5 < r.value_masked < 24.5 for r in ok)
+    banded = [r for r in ok if r.qcband_top is not None]
+    assert len(banded) > 0.9 * len(ok)
+    cols = ("qcband_bottom", "value_masked", "qcband_top")
+    mean = {c: np.mean([r[c] for r in banded]) for c in cols}
+    assert mean["qcband_bottom"] < mean["value_masked"] < mean["qcband_top"], mean
 
 
-def test_prefix_rolling_matches_direct(spark):
-    """O(n) prefix-sum rolling mean/std must agree with the direct
-    frame computation to float precision (incl. null gaps, series
-    edges, the even-window left-heavy frame, and min_periods)."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import functions as F
-
-    from wq_data_pipeline_spark.operators.sentem import (
-        rolling_mean_std,
-        rolling_mean_std_prefix,
-    )
+def test_prefix_rolling_matches_direct():
+    """The SentemQC kernel's O(n) prefix-sum rolling mean/std must agree
+    with its direct frame sums to float precision (incl. null gaps,
+    series edges, the even-window left-heavy frame, and min_periods)."""
+    from wq_data_pipeline_spark.operators import series_qc as Q
+    from wq_data_pipeline_spark.operators.windows import centered_bounds
 
     rng = np.random.default_rng(5)
     n = 4000
-    ts = pd.date_range("2024-01-01", periods=n, freq="15min")
     v = rng.normal(1000.0, 3.0, n)  # large offset stresses cancellation
     v[500:700] = np.nan  # a long null gap
     v[::97] = np.nan  # scattered nulls
-    pdf = pd.DataFrame({"station": "s", "variable": "x", "ts": ts, "value": v})
-    df = spark.createDataFrame(pdf)
     for w in (48, 960):
-        a = (
-            rolling_mean_std(df, "value", w, ma_col="ma", sd_col="sd")
-            .orderBy("ts").select("ma", "sd").toPandas()
-        )
-        b = (
-            rolling_mean_std_prefix(df, "value", w, ma_col="ma", sd_col="sd")
-            .orderBy("ts").select("ma", "sd").toPandas()
-        )
-        assert a["ma"].isna().equals(b["ma"].isna()), f"minp mask differs at w={w}"
-        np.testing.assert_allclose(a["ma"], b["ma"], rtol=1e-9, atol=1e-9, equal_nan=True)
-        np.testing.assert_allclose(a["sd"], b["sd"], rtol=1e-7, atol=1e-9, equal_nan=True)
+        minp = max(3, math.ceil(w * 0.3))
+        lo, hi = centered_bounds(w)
+        with np.errstate(invalid="ignore", divide="ignore"):
+            s, _ = Q._frame_sum(v, lo, hi)
+            c, m2 = Q._frame_moments(v, lo, hi)
+            ok = c >= minp
+            a_ma = np.where(ok, s / c, np.nan)
+            a_sd = np.where(ok, np.sqrt(m2 / c), np.nan)
+            b_ma, b_sd = Q._prefix_mean_std(Q._prefix_sums(v), w, minp)
+        assert np.array_equal(np.isnan(a_ma), np.isnan(b_ma)), f"minp mask differs at w={w}"
+        assert not np.isnan(a_ma).all()
+        np.testing.assert_allclose(a_ma, b_ma, rtol=1e-9, atol=1e-9, equal_nan=True)
+        np.testing.assert_allclose(a_sd, b_sd, rtol=1e-7, atol=1e-9, equal_nan=True)
 
 
 def test_robust_z_pandas_engine_matches_window(spark):

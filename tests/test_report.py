@@ -79,7 +79,7 @@ def test_downsample_is_bounded(qc_outputs):
 
 
 def test_sentemqc_combined_figure(spark, tmp_path):
-    from wq_data_pipeline_spark.operators.sentem import apply_sentemqc
+    from wq_data_pipeline_spark.plans.sentem_pipeline import SentemVar, run_sentemqc_plan
     from wq_data_pipeline_spark.report import render_sentemqc_figure
 
     rng = np.random.default_rng(11)
@@ -91,8 +91,8 @@ def test_sentemqc_combined_figure(spark, tmp_path):
         {"station": "stnA", "variable": "nitrate", "ts": ts, "value": v}
     )
     df = spark.createDataFrame(pdf)
-    # apply_sentemqc exports the last pass's qcband_top/qcband_bottom
-    sq = apply_sentemqc(df)
+    # the EP3 output carries the last pass's qcband_top/qcband_bottom
+    sq = run_sentemqc_plan(df, [SentemVar("nitrate", code=2477034, is_nitrate=True)])
     p = render_sentemqc_figure(sq, str(tmp_path), "stnA", "nitrate", max_points=250)
     assert os.path.exists(p)
     _assert_valid_svg(p)

@@ -131,6 +131,32 @@ def test_matches_pandas_reference_flow(spark, fixture_long, ep3_out):
     assert mismatches == 0, f"{mismatches} run-4 flag mismatches vs pandas"
 
 
+def test_absolute_envelope_matches_pandas():
+    """Code 410 sets an absolute uncertainty envelope (value ± 0.1,
+    ``uncertainty_con``) instead of a relative one: the kernel's run-4
+    flags (mean window 5) match a pandas replication row for row."""
+    from wq_data_pipeline_spark.operators.series_qc import sentemqc_series
+    from wq_data_pipeline_spark.plans.sentem_pipeline import (
+        SENTEMQC_CONFIG,
+        passes_from_code_config,
+    )
+
+    rng = np.random.default_rng(6)
+    v = rng.normal(7.5, 0.3, 800)
+    v[[50, 300, 301]] = [12.0, 3.0, 2.9]
+    passes = passes_from_code_config(SENTEMQC_CONFIG[410])
+    assert passes[3].unc_const == 0.1 and passes[3].unc_pct is None
+    flags, _, _ = sentemqc_series(v, passes)
+    s = pd.Series(v)
+    r = s.rolling(5, center=True, min_periods=3)
+    ma, sd = r.mean(), r.std(ddof=0)
+    top, bot = ma + 0.05 + 1.3 * sd, ma - 0.05 - 1.3 * sd
+    hi, lo = s + 0.1, s - 0.1
+    want = (((hi > top) & (lo > top)) | ((hi < bot) & (lo < bot))).to_numpy()
+    assert want.sum() > 3
+    assert np.array_equal(flags[3], want)
+
+
 def test_ep3_figure_renders(ep3_out, tmp_path):
     """EP3 output feeds the sentemqc combined plot directly
     (reference run_sentemqc_on_dataframe plot_dir path)."""
@@ -138,23 +164,69 @@ def test_ep3_figure_renders(ep3_out, tmp_path):
 
     from wq_data_pipeline_spark.report import render_sentemqc_figure
 
-    p = render_sentemqc_figure(
-        ep3_out, str(tmp_path), "stn", "no3", value_col="obs_raw", max_points=200
-    )
+    p = render_sentemqc_figure(ep3_out, str(tmp_path), "stn", "no3", max_points=200)
     assert os.path.exists(p) and os.path.getsize(p) > 500
 
 
-def test_ep3_plan_builds_passes_side_by_side(fixture_long):
-    """EP3 runs the five passes through apply_sentemqc: per variable
-    the centers/stds are one window projection (the two wide passes
-    share one prefix-sum set), not one band pass after another."""
+def test_ep3_figure_counts_non_positive_inputs(ep3_out, tmp_path):
+    """The figure's "Masked≤0" share is read before the pre-mask: the
+    o2 series has 4 of 600 readings at -1.0."""
+    from wq_data_pipeline_spark.report import render_sentemqc_figure
+
+    p = render_sentemqc_figure(ep3_out, str(tmp_path), "stn", "o2", max_points=200)
+    with open(p) as f:
+        svg = f.read()
+    assert "Masked≤0: 0.7%" in svg
+
+
+def test_ep3_plan_builds_passes_side_by_side(spark):
+    """EP3 sends each series to the band kernel once, which builds the
+    five passes side by side: one grouped-Arrow pass and its one
+    shuffle for 2 and for 3 mapped variables (no window pass, no
+    per-variable sub-plan to union)."""
     from test_plan_budget import _count_op
 
-    from wq_data_pipeline_spark.plans.sentem_pipeline import run_sentemqc_plan
+    from wq_data_pipeline_spark.plans.sentem_pipeline import SentemVar, run_sentemqc_plan
 
-    out = run_sentemqc_plan(fixture_long, _ep3_var_map())
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert _count_op(plan, "Window") <= 12, plan
+    rng = np.random.default_rng(4)
+    ts = pd.date_range("2024-05-01", periods=200, freq="15min")
+    for n_vars in (2, 3):
+        var_map = [*_ep3_var_map(), SentemVar("ph", code=410)][:n_vars]
+        pdf = pd.concat(
+            [
+                pd.DataFrame({"station": "stn", "variable": v.variable, "ts": ts,
+                              "value": rng.normal(8.0, 0.5, len(ts))})
+                for v in var_map
+            ]
+        )
+        out = run_sentemqc_plan(spark.createDataFrame(pdf), var_map)
+        assert out.count() == n_vars * len(ts)
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        ops = ("FlatMapGroupsInArrow", "Window", "Union", "Exchange")
+        counts = {op: _count_op(plan, op) for op in ops}
+        want = {"FlatMapGroupsInArrow": 1, "Window": 0, "Union": 0, "Exchange": 1}
+        assert counts == want, plan
+
+
+# sha256 of the EP3 output on ``fixture_long``: every non-float column
+# and every float column's NULL positions, rows sorted by (station,
+# variable, ts). Taken from the Spark window engine the kernel replaced,
+# so a change to the kernel's flags shows here.
+EP3_FIXTURE_DIGEST = "6af08ea8cd2f01774d1cd89d4a16ee7b51fa459a507230f6dfaf49bf1506d91f"
+
+
+def test_ep3_flags_are_pinned(ep3_out):
+    import hashlib
+
+    floats = ["obs_in", "obs_raw", "value_masked", "qcband_top", "qcband_bottom"]
+    cols = [
+        "variable", "flag_global", "is_flagged", "flag_reason",
+        *[f"flag_run{i}" for i in range(1, 6)], "mask_pre",
+        *[F.col(c).isNull().alias(f"{c}_null") for c in floats],
+    ]
+    rows = ep3_out.orderBy("station", "variable", "ts").select(*cols).collect()
+    text = "\n".join(repr(tuple(r)) for r in rows)
+    assert hashlib.sha256(text.encode()).hexdigest() == EP3_FIXTURE_DIGEST
 
 
 @pytest.mark.parametrize(
@@ -193,53 +265,60 @@ def test_lone_time_bound_is_applied(fixture_long, bounds):
     ],
     ids=lambda p: f"{p[0]}_w{p[1]}",
 )
-def test_sentemqc_bands_are_last_pass_bands(spark, last):
-    """apply_sentemqc's qcband_top/qcband_bottom are band_columns over
-    the last pass's center/std, computed here with the direct-frame
-    operators (rolling_mean_std / tri5_mean_std) — including the NULL
-    where the pass's min-periods guard fails (gaps, series edges)."""
-    from wq_data_pipeline_spark.operators.sentem import (
+def test_sentemqc_bands_are_last_pass_bands(last):
+    """The kernel's bands are the band formula over the last pass's
+    centre/std: pandas' centred rolling mean/median and std(ddof=0)
+    (tri5: a numpy transcription of the reference's weighted taps) —
+    including the NULL where the pass's min-periods guard fails (gaps,
+    series edges, pre-masked values)."""
+    from wq_data_pipeline_spark.operators.series_qc import (
         DEFAULT_PASSES,
         BandPassCfg,
-        apply_sentemqc,
-        band_columns,
-        premask_nonpositive,
-        rolling_mean_std,
-        tri5_mean_std,
+        sentemqc_series,
     )
+    from wq_data_pipeline_spark.operators.sentem import TRI5_WEIGHTS
 
     stat, window = last
     cfg = BandPassCfg(window=window, scale=2.2, top_add=0.3, bottom_sub=0.1, stat=stat)
     passes = (*DEFAULT_PASSES[:-1], cfg)
     rng = np.random.default_rng(17)
     n = 1500
-    ts = pd.date_range("2024-06-01", periods=n, freq="15min")
-    frames = []
-    for var in ("a", "b"):
-        v = rng.normal(12.0, 1.5, n)
-        v[rng.choice(n, 60, replace=False)] = np.nan  # scattered NULLs
-        v[400:420] = np.nan  # a gap wider than every narrow window
-        v[[1, 3, n - 2]] = np.nan  # sparse series edges
-        v[900:903] = -1.0  # non-positive -> pre-masked
-        frames.append(pd.DataFrame({"station": "s", "variable": var, "ts": ts, "value": v}))
-    df = spark.createDataFrame(pd.concat(frames)).withColumn(
-        "value", F.when(~F.isnan("value"), F.col("value"))
-    )
+    v = rng.normal(12.0, 1.5, n)
+    v[rng.choice(n, 60, replace=False)] = np.nan  # scattered NULLs
+    v[400:420] = np.nan  # a gap wider than every narrow window
+    v[[1, 3, n - 2]] = np.nan  # sparse series edges
+    v[900:903] = -1.0  # non-positive -> pre-masked
 
-    got = apply_sentemqc(df, passes=passes).select("variable", "ts", "qcband_top", "qcband_bottom")
-    pre = df.withColumn("value", premask_nonpositive("value"))
+    with np.errstate(invalid="ignore"):
+        _, top, bottom = sentemqc_series(v, passes)
+    s = pd.Series(v).where(lambda x: x > 0)
     if stat == "tri5":
-        ref = tri5_mean_std(pre, "value")
+        ma, sd = _tri5_reference(s.to_numpy(), TRI5_WEIGHTS)
     else:
-        ref = rolling_mean_std(pre, "value", window, stat=stat)
-    top, bottom = band_columns("ma", "sd", cfg)
-    ref = ref.select("variable", "ts", top.alias("ref_top"), bottom.alias("ref_bottom"))
-    both = got.join(ref, ["variable", "ts"]).orderBy("variable", "ts").toPandas()
-    assert len(both) == 2 * n
-    for col in ("top", "bottom"):
-        a, b = both[f"qcband_{col}"], both[f"ref_{col}"]
-        assert a.isna().equals(b.isna()), f"{col}: guard differs"
-        assert a.notna().any()
+        r = s.rolling(window, center=True, min_periods=max(3, math.ceil(window * 0.3)))
+        ma = (r.median() if stat == "median" else r.mean()).to_numpy()
+        sd = r.std(ddof=0).to_numpy()
+    ref_top = ma + cfg.top_add + cfg.scale * sd
+    ref_bottom = ma - cfg.bottom_sub - cfg.scale * sd
+    for got, ref in ((top, ref_top), (bottom, ref_bottom)):
+        assert np.array_equal(np.isnan(got), np.isnan(ref)), "guard differs"
+        assert not np.isnan(got).all()
         if window < 960:
-            assert a.isna().any(), "fixture must exercise the min-periods guard"
-        np.testing.assert_allclose(a, b, rtol=1e-9, atol=1e-9, equal_nan=True)
+            assert np.isnan(got).any(), "fixture must exercise the min-periods guard"
+        np.testing.assert_allclose(got, ref, rtol=1e-9, atol=1e-9, equal_nan=True)
+
+
+def _tri5_reference(v, weights):
+    """The reference's triangular 5-point mean and population std
+    (scripts/sentemqc.py:31-39): weighted over the finite taps, NaN
+    under 3 of them."""
+    n = len(v)
+    ma, sd = np.full(n, np.nan), np.full(n, np.nan)
+    for i in range(n):
+        taps = [(v[j], weights[j - i + 2]) for j in range(i - 2, i + 3) if 0 <= j < n]
+        vals = np.array([x for x, _ in taps if np.isfinite(x)])
+        wts = np.array([w for x, w in taps if np.isfinite(x)])
+        if len(vals) >= 3:
+            ma[i] = (vals * wts).sum() / wts.sum()
+            sd[i] = np.sqrt((wts * (vals - ma[i]) ** 2).sum() / wts.sum())
+    return ma, sd

@@ -1,9 +1,9 @@
 """The QC pipeline's per-series kernel (operators/series_qc.py) against
 the Column-algebra operators it replaced in the pipeline
-(operators/clean.py, detectors.py, sentem.py), which the catalog still
-runs: on edge-case series and on a fixture with every anomaly, the
-pipeline's long table and events must equal the same chain composed
-from the Column-algebra operators.
+(operators/clean.py, detectors.py), which the catalog still runs, and
+against a pandas transcription of the five SentemQC band passes: on
+edge-case series and on a fixture with every anomaly, the pipeline's
+long table and events must equal the same chain composed from those.
 
 NaN in the input is NULL to both engines, as it is at ingest
 (sources/csv_source.py): the Column chain gets it as NULL, the kernel
@@ -32,11 +32,48 @@ EVENT_COLUMNS = [
 def _column_algebra_qc(readings, cfg):
     """The pipeline's chain composed from the Column-algebra operators:
     clean -> fallback flags (robust z on the window engine) ->
-    SentemQC, and the three event detectors over the clean series."""
+    SentemQC (pandas rolling calls per series), and the three event
+    detectors over the clean series."""
+    from pyspark.sql import types as T
+
     from wq_data_pipeline_spark.operators import clean as C
     from wq_data_pipeline_spark.operators import detectors as D
     from wq_data_pipeline_spark.operators import series_qc as Q
-    from wq_data_pipeline_spark.operators.sentem import apply_sentemqc
+    from wq_data_pipeline_spark.operators.sentem import TRI5_WEIGHTS
+
+    def pandas_sentemqc(pdf):
+        """The five DEFAULT_PASSES band passes over one series
+        (scripts/sentemqc.py:80-114): centred rolling mean/median and
+        std(ddof=0), tri5 over the finite taps, 10% envelope."""
+        pdf = pdf.sort_values("ts", ignore_index=True)
+        s = pdf["clean"].where(pdf["clean"] > 0)  # pre-mask
+        flags = []
+        for p in Q.DEFAULT_PASSES:
+            if p.stat == "tri5":
+                taps = [(s.shift(-k), wt) for k, wt in zip(range(-2, 3), TRI5_WEIGHTS)]
+                wsum = sum(t.notna() * wt for t, wt in taps)
+                ma = sum(t.fillna(0.0) * wt for t, wt in taps) / wsum
+                var = sum(((t - ma) ** 2).fillna(0.0) * wt for t, wt in taps) / wsum
+                enough = sum(t.notna().astype(int) for t, _ in taps) >= 3
+                ma, sd = ma.where(enough), np.sqrt(var).where(enough)
+            else:
+                minp = max(3, math.ceil(p.window * 0.3))
+                r = s.rolling(p.window, center=True, min_periods=minp)
+                ma = r.median() if p.stat == "median" else r.mean()
+                sd = r.std(ddof=0)
+            top = ma + p.top_add + p.scale * sd
+            bottom = ma - p.bottom_sub - p.scale * sd
+            hi, lo = s * (1.0 + p.unc_pct), s * (1.0 - p.unc_pct)
+            flags.append(((hi > top) & (lo > top)) | ((hi < bottom) & (lo < bottom)))
+        flagged = pd.concat(flags, axis=1).any(axis=1)
+        return pdf.assign(
+            sm_masked=s.where(~flagged),
+            sm_flagged=flagged,
+            sm_flagreason=[
+                " ".join(f"flag_run{i}" for i, f in enumerate(row, start=1) if f)
+                for row in zip(*flags)
+            ],
+        )
 
     d = readings.withColumn("value", F.when(~F.isnan("value"), F.col("value")))
     d = C.mask_sentinels(d, KEYS, "value", Q.SENTINELS)
@@ -63,16 +100,17 @@ def _column_algebra_qc(readings, cfg):
         {
             "saqc_flag": D.flags_to_code(combined),
             "accepted": F.when(combined, None).otherwise(F.col("value")),
-            "_sv": F.col("value"),
         }
     )
-    d = apply_sentemqc(d, value="_sv", keys=KEYS, ts="ts").select(
-        "*",
-        F.col("value_masked").alias("sm_masked"),
-        F.col("is_flagged").alias("sm_flagged"),
-        F.col("flag_reason").alias("sm_flagreason"),
+    d = d.withColumnRenamed("value", "clean").select(*LONG_COLUMNS[:-3])
+    sentem_fields = [
+        T.StructField("sm_masked", T.DoubleType()),
+        T.StructField("sm_flagged", T.BooleanType()),
+        T.StructField("sm_flagreason", T.StringType()),
+    ]
+    long = d.groupBy(*KEYS).applyInPandas(
+        pandas_sentemqc, T.StructType(d.schema.fields + sentem_fields)
     )
-    long = d.withColumnRenamed("value", "clean").select(*LONG_COLUMNS)
 
     flat = D.detect_flat_runs(cleaned, "value", KEYS, "ts", Q.FLAT_ATOL, Q.FLAT_MIN_HOURS)
     switches = D.detect_binary_switches(cleaned, "value", KEYS, "ts", Q.ZERO_TOL)

@@ -8,29 +8,35 @@ after the clean stage) with float64 values, NaN standing for NULL.
 variable) group through ``applyInArrow``, and :func:`events_table`
 over the pinned result, so the pipeline's whole chain is one
 Python-worker pass per series instead of a chain of Spark window
-passes.
+passes. The EP3 runner (``plans/sentem_pipeline.py``) runs
+:func:`sentemqc_table` the same way, with each sensor code's passes.
 
-Each function reproduces the Spark Column algebra of the same name in
-``operators/clean.py``, ``operators/detectors.py`` and
-``operators/sentem.py``, which the catalog and the EP3 runner still
-run. The arithmetic follows Spark's, so both engines give the same
-floats:
+The clean stage and the detectors reproduce the Spark Column algebra
+of the same name in ``operators/clean.py`` and
+``operators/detectors.py``, which the catalog still runs, and follow
+Spark's arithmetic, so both engines give the same floats:
 
 - a frame aggregate folds its rows in row order, as WindowExec does:
   sums from 0.0 (``sum``/``avg``), Welford updates (``var_samp``,
   ``stddev_pop``);
 - exact medians interpolate the middle pair (Spark ``percentile`` and
-  pandas' rolling median agree);
-- the wide SentemQC means use the same anchored prefix sums.
+  pandas' rolling median agree).
 
-The arrays hold NaN for NULL; :func:`qc_table` and :func:`events_table`
-turn every float column back into Arrow with a null mask, so NaN never
-leaves the kernel.
+The SentemQC band passes (:func:`sentemqc_series`) have no Column
+twin; the tests hold them to pandas' centred rolling mean, median and
+population std and to a numpy transcription of the reference's
+triangular 5-point pass.
+
+The arrays hold NaN for NULL; the ``*_table`` functions turn every
+float column back into Arrow with a null mask, so NaN never leaves
+the kernel.
 """
 
 from __future__ import annotations
 
 import math
+from collections.abc import Sequence
+from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
@@ -38,12 +44,7 @@ import pyarrow as pa
 import pyarrow.compute as pc
 
 from wq_data_pipeline_spark.operators.clean import DEFAULT_SENTINELS
-from wq_data_pipeline_spark.operators.sentem import (
-    DEFAULT_PASSES,
-    PREFIX_WINDOW_THRESHOLD,
-    TRI5_WEIGHTS,
-    BandPassCfg,
-)
+from wq_data_pipeline_spark.operators.sentem import TRI5_WEIGHTS
 from wq_data_pipeline_spark.operators.windows import centered_bounds
 
 # Detector parameters: the reference's exact fallback-suite values,
@@ -271,9 +272,47 @@ def flag_series(
 
 
 # ------------------------------------------------------------------ SentemQC
+@dataclass(frozen=True)
+class BandPassCfg:
+    """One QC-band pass (reference SENTEMQC_CONFIG, scripts/sentemqc.py:75):
+    window w, scale factor sf, additive offsets ta (top) / bs (bottom),
+    center statistic, and the uncertainty envelope."""
+
+    window: int
+    scale: float
+    top_add: float = 0.0
+    bottom_sub: float = 0.0
+    stat: str = "mean"  # 'mean' | 'median' | 'tri5'
+    unc_pct: float | None = 0.1  # relative uncertainty envelope
+    unc_const: float | None = None  # absolute envelope (overrides pct)
+
+
+# A faithful analog of the reference's five passes (long/long/medium-
+# median/short/tri5 — scripts/sentemqc.py:89-108); window sizes are in
+# points and map 1:1 at the reference's 15-min cadence.
+DEFAULT_PASSES: tuple[BandPassCfg, ...] = (
+    BandPassCfg(window=960, scale=4.0),
+    BandPassCfg(window=960, scale=3.0),
+    BandPassCfg(window=48, scale=3.0, stat="median"),
+    BandPassCfg(window=5, scale=2.5),
+    BandPassCfg(window=5, scale=2.0, stat="tri5"),
+)
+
+# Mean windows at least this wide come from prefix sums, O(n) whatever
+# the width; narrower ones add their frame directly, O(n·w) but without
+# the prefix difference's cancellation error (~1e-12 relative).
+PREFIX_WINDOW_THRESHOLD = 128
+
+
+def _premask(x: np.ndarray) -> np.ndarray:
+    """P6: non-positive and NULL values -> NaN (scripts/sentemqc.py:82-83)."""
+    return np.where(x > 0, x, np.nan)
+
+
 def _prefix_sums(v: np.ndarray) -> dict[str, np.ndarray | float]:
     """Running count, sum and sum of squares of the values centred on
-    the series' first value (``sentem._prefix_sums``)."""
+    the series' first value, so the prefix differences cancel
+    near-zero partial sums."""
     ok = ~np.isnan(v)
     anchor = v[ok][0] if ok.any() else np.nan
     contrib = np.where(ok, v - anchor, 0.0)
@@ -286,8 +325,8 @@ def _prefix_sums(v: np.ndarray) -> dict[str, np.ndarray | float]:
 
 
 def _prefix_mean_std(p: dict, window: int, minp: int) -> tuple[np.ndarray, np.ndarray]:
-    """Rolling mean and population std telescoped out of the prefix
-    sums (``sentem._prefix_mean_std_cols``)."""
+    """Centred rolling mean and population std telescoped out of the
+    prefix sums :func:`_prefix_sums`."""
     lo, hi = centered_bounds(window)
     n = len(p["cc"])
     rows = np.arange(n)
@@ -309,7 +348,8 @@ def _prefix_mean_std(p: dict, window: int, minp: int) -> tuple[np.ndarray, np.nd
 
 def _tri5_mean_std(v: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     """Triangular 5-point mean and std over the finite taps, >= 3 of them
-    (``sentem._tri5_cols``)."""
+    (reference rolling_mean_std_tri5, scripts/sentemqc.py:31-39; the
+    catalog's ``sentem.tri5_mean_std`` adds the taps in the same order)."""
     n_fin = np.zeros(len(v), np.int64)
     wsum, sx, sxx = np.zeros(len(v)), np.zeros(len(v)), np.zeros(len(v))
     for k, wt in zip(range(-2, 3), TRI5_WEIGHTS):
@@ -326,9 +366,11 @@ def _tri5_mean_std(v: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     return np.where(ok, m, np.nan), np.where(ok, np.sqrt(np.maximum(var, 0.0)), np.nan)
 
 
-def _band_stats(v: np.ndarray, cfg: BandPassCfg, prefix: dict) -> tuple[np.ndarray, np.ndarray]:
-    """Centre and std of one band pass (``sentem._with_band_stats``);
-    ``prefix`` is :func:`_prefix_sums` of ``v``."""
+def band_stats(v: np.ndarray, cfg: BandPassCfg, prefix: dict) -> tuple[np.ndarray, np.ndarray]:
+    """Centre and population std of one band pass (W12/W13: centred
+    window, pandas even-window alignment, NaN under
+    max(3, ceil(0.3·w)) values); ``prefix`` is :func:`_prefix_sums` of
+    ``v``."""
     if cfg.stat == "tri5":
         return _tri5_mean_std(v)
     minp = max(3, math.ceil(cfg.window * 0.3))
@@ -348,32 +390,47 @@ def _band_stats(v: np.ndarray, cfg: BandPassCfg, prefix: dict) -> tuple[np.ndarr
 def _overlap_flag(
     v: np.ndarray, top: np.ndarray, bottom: np.ndarray, cfg: BandPassCfg
 ) -> np.ndarray:
-    """The value's relative uncertainty envelope (every DEFAULT_PASSES
-    pass uses ``unc_pct``) lies wholly above the top band or wholly
-    below the bottom band (``sentem.uncertainty_overlap_flag``)."""
-    hi, lo = v * (1.0 + cfg.unc_pct), v * (1.0 - cfg.unc_pct)
+    """W14 (scripts/sentemqc.py:94-102): the value's uncertainty
+    envelope, absolute (``unc_const``) or relative (``unc_pct``), lies
+    wholly above the top band or wholly below the bottom band."""
+    if cfg.unc_const is not None:
+        hi, lo = v + cfg.unc_const, v - cfg.unc_const
+    else:
+        p = cfg.unc_pct if cfg.unc_pct is not None else 0.0
+        hi, lo = v * (1.0 + p), v * (1.0 - p)
     return ((hi > top) & (lo > top)) | ((hi < bottom) & (lo < bottom))
 
 
-def sentemqc_series(x: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """The five SentemQC band passes (DEFAULT_PASSES) over one series
-    (``sentem.apply_sentemqc`` without a sensor code):
-    ``(value_masked, is_flagged, flag_reason)``."""
-    v = np.where(x > 0, x, np.nan)  # premask: non-positive / NULL
+def sentemqc_series(
+    x: np.ndarray, passes: Sequence[BandPassCfg] = DEFAULT_PASSES
+) -> tuple[list[np.ndarray], np.ndarray, np.ndarray]:
+    """The SentemQC band passes over one series (the reference's
+    apply_sentemqc_to_series, scripts/sentemqc.py:80-114, without the
+    sensor rules): every pass reads the pre-masked value. Returns each
+    pass's flag and the last pass's ``(top, bottom)`` bands, NaN where
+    its min-periods guard fails (W15)."""
+    v = _premask(x)
     prefix = _prefix_sums(v)
-    code = np.zeros(len(v), np.int64)
-    for i, cfg in enumerate(DEFAULT_PASSES):
-        ma, sd = _band_stats(v, cfg, prefix)
+    flags = []
+    for cfg in passes:
+        ma, sd = band_stats(v, cfg, prefix)
         top = (ma + cfg.top_add) + cfg.scale * sd
         bottom = (ma - cfg.bottom_sub) - cfg.scale * sd
-        code |= _overlap_flag(v, top, bottom, cfg).astype(np.int64) << i
-    names = [f"flag_run{i}" for i in range(1, len(DEFAULT_PASSES) + 1)]
+        flags.append(_overlap_flag(v, top, bottom, cfg))
+    return flags, top, bottom
+
+
+def _flag_reasons(flags: list[np.ndarray]) -> tuple[np.ndarray, np.ndarray]:
+    """(any flag, space-joined ``flag_run{i}`` names of the flags set)."""
+    code = np.zeros(len(flags[0]), np.int64)
+    for i, f in enumerate(flags):
+        code |= f.astype(np.int64) << i
+    names = [f"flag_run{i}" for i in range(1, len(flags) + 1)]
     codes, inverse = np.unique(code, return_inverse=True)
     reasons = np.array(
         [" ".join(nm for i, nm in enumerate(names) if c >> i & 1) for c in codes], dtype=object
     )
-    flagged = code > 0
-    return np.where(flagged, np.nan, v), flagged, reasons[inverse]
+    return code > 0, reasons[inverse]
 
 
 # ------------------------------------------------------------------ events
@@ -445,7 +502,9 @@ EVENT_DETECTORS = {
 def _sorted_series(table: pa.Table, value: str) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """(order, ts µs, values) of one group, sorted by ts; NULL and NaN
     values both become NaN."""
-    ts = pc.cast(table.column("ts"), pa.int64()).to_numpy()
+    # NULL ts sorts first, as in an ascending Spark window
+    ts = pc.fill_null(pc.cast(table.column("ts"), pa.int64()), np.iinfo(np.int64).min)
+    ts = ts.to_numpy()
     x = table.column(value).to_numpy().astype(float, copy=False)
     order = np.argsort(ts, kind="stable")
     return order, ts[order], x[order]
@@ -487,11 +546,25 @@ def qc_table(
             "accepted": _f64(np.where(flagged, np.nan, c["clean"])),
         }
         if sentem:
-            masked, sm_flagged, reason = sentemqc_series(c["clean"])
-            cols["sm_masked"] = _f64(masked)
+            sm_flagged, reason = _flag_reasons(sentemqc_series(c["clean"])[0])
+            cols["sm_masked"] = _f64(np.where(sm_flagged, np.nan, _premask(c["clean"])))
             cols["sm_flagged"] = pa.array(sm_flagged)
             cols["sm_flagreason"] = pa.array(reason, type=pa.string())
     return pa.table(cols)
+
+
+def sentemqc_table(table: pa.Table, passes: Sequence[BandPassCfg]) -> pa.Table:
+    """One EP3 series: its Arrow rows sorted by ts, followed by
+    ``flag_run{i}`` (100 OK / 200 flagged) for each pass and the last
+    pass's ``qcband_top``/``qcband_bottom``, all from the ``obs``
+    column (the pre-masked observation, in N units for nitrate)."""
+    with np.errstate(invalid="ignore", divide="ignore"):
+        order, _, x = _sorted_series(table, "obs")
+        flags, top, bottom = sentemqc_series(x, passes)
+    out = table.take(pa.array(order))
+    for i, f in enumerate(flags, start=1):
+        out = out.append_column(f"flag_run{i}", pa.array(np.where(f, 200, 100).astype(np.int32)))
+    return out.append_column("qcband_top", _f64(top)).append_column("qcband_bottom", _f64(bottom))
 
 
 def events_table(table: pa.Table) -> pa.Table:

@@ -3,17 +3,17 @@
 5-pass band QC over the canonical long table, with calibration
 offsets, nitrate N<->NO3 conversion, sensor-error flags, pass-5 band
 export, and the reference's wide export naming (``{var}__flag_global``
-.. ``{var}__masked``). The band passes themselves are
-:func:`operators.sentem.apply_sentemqc`; the QC pipeline runs the
-same five passes in its per-series kernel
-(``operators.series_qc.sentemqc_series``), and
-tests/test_series_qc.py holds the two equal.
+.. ``{var}__masked``).
 
 Where the reference loops variables in Python over pandas Series,
-this plan builds one lazy sub-plan per mapped variable (window sizes
-differ per sensor code, so the band frames genuinely differ) and
-unions them — every series still computes distributed, partitioned by
-(station, variable).
+this plan sends each (station, variable) series to one Python worker,
+once: one ``groupBy(station, variable).applyInArrow`` runs the
+per-series band kernel (``operators/series_qc.sentemqc_table``) with
+the passes of that variable's sensor code. The QC pipeline runs the
+same kernel with ``DEFAULT_PASSES``. The row-local steps stay Column
+expressions: the time bounds, the calibration offset, the pre-mask,
+the nitrate factor and the sensor rules before the pass; the band
+export in NO3 units and the combined flags after it.
 """
 
 from __future__ import annotations
@@ -21,16 +21,22 @@ from __future__ import annotations
 from dataclasses import dataclass
 from typing import Sequence
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F, types as T
 
+from wq_data_pipeline_spark.operators import series_qc as Q
 from wq_data_pipeline_spark.operators.sentem import (
-    NITRATE_NO3_TO_N,
-    BandPassCfg,
-    apply_sentemqc,
+    combine_flags_200,
+    flag_reasons,
+    sensor_error_flag,
 )
+from wq_data_pipeline_spark.operators.series_qc import BandPassCfg
 from wq_data_pipeline_spark.plans.qc_pipeline import widen
+from wq_data_pipeline_spark.session import ship_package
 
 KEYS = ["station", "variable"]
+
+# P5: NO3 -> N (scripts/sentemqc.py:85)
+NITRATE_NO3_TO_N = 14.0 / 62.0
 
 
 @dataclass(frozen=True)
@@ -39,8 +45,6 @@ class SentemVar:
 
     variable: str
     code: int
-    label: str = ""
-    unit: str = ""
     is_nitrate: bool = False
     calibration_offset: float = 0.0
 
@@ -97,18 +101,36 @@ def passes_from_code_config(cfg: dict) -> list[BandPassCfg]:
     return passes
 
 
+def _by_variable(values: dict[str, Column]) -> Column:
+    """``CASE variable WHEN name THEN expr ... END`` over ``values``."""
+    case = None
+    for name, expr in values.items():
+        cond = F.col("variable") == name
+        case = F.when(cond, expr) if case is None else case.when(cond, expr)
+    return case
+
+
+_RUN_FLAGS = [f"flag_run{i}" for i in range(1, 6)]
+_BAND_FIELDS = [
+    *[T.StructField(name, T.IntegerType(), False) for name in _RUN_FLAGS],
+    T.StructField("qcband_top", T.DoubleType()),
+    T.StructField("qcband_bottom", T.DoubleType()),
+]
+
+
 def run_sentemqc_plan(
     readings: DataFrame,
     var_map: Sequence[SentemVar],
     start_time=None,
     end_time=None,
-    ts: str = "ts",
 ) -> DataFrame:
-    """The EP3 lifecycle over the long table. Output one row per
-    (station, variable, ts) with the reference's result columns
+    """The EP3 lifecycle over the long table. Output one row per input
+    reading of a mapped variable with the reference's result columns
     (apply_sentemqc_to_series return, scripts/sentemqc.py:80-114):
-    obs_in, obs_raw, value_masked, flag_global, is_flagged,
-    flag_reason, qcband_top, qcband_bottom, mask_pre.
+    station, variable, ts, obs_in, obs_raw, value_masked, flag_global,
+    is_flagged, flag_reason, qcband_top, qcband_bottom, mask_pre, and
+    the per-pass flag_run1..5 (the reference drops them; they cost
+    nothing and make audits direct).
 
     ``start_time`` / ``end_time`` bound the series independently and
     inclusively, like the reference's ``d.loc[start:end]``.
@@ -116,45 +138,55 @@ def run_sentemqc_plan(
     Flags are computed on the N-converted series for nitrate
     variables; bands are exported back in original NO3 units;
     value_masked masks the PRE-conversion obs_raw — all per the
-    reference flow. Pass-5 bands are NULL where fewer than 3 of the 5
-    points are finite (W15): the pass's own min-periods guard."""
-    outs = []
-    for v in var_map:
-        d = readings.filter(F.col("variable") == v.variable)
-        if start_time is not None:
-            d = d.filter(F.col(ts) >= start_time)
-        if end_time is not None:
-            d = d.filter(F.col(ts) <= end_time)
-        d = d.withColumn("obs_in", F.col("value") + F.lit(v.calibration_offset))
-        mask_pre = F.col("obs_in").isNull() | (F.col("obs_in") <= 0)
-        d = d.withColumn("mask_pre", mask_pre)
-        d = d.withColumn("obs_raw", F.when(~mask_pre, F.col("obs_in")))
-        obs = F.col("obs_raw") * F.lit(NITRATE_NO3_TO_N) if v.is_nitrate else F.col("obs_raw")
-        d = d.withColumn("_obs", obs)
-        passes = passes_from_code_config(SENTEMQC_CONFIG[v.code])
-        d = apply_sentemqc(d, "_obs", KEYS, ts, passes, sensor_code=v.code)
-        if v.is_nitrate:
-            back = F.lit(1.0 / NITRATE_NO3_TO_N)
-            d = d.withColumns(
-                {"qcband_top": F.col("qcband_top") * back,
-                 "qcband_bottom": F.col("qcband_bottom") * back}
-            )
-        d = d.withColumn(
-            "value_masked", F.when(F.col("is_flagged"), None).otherwise(F.col("obs_raw"))
+    reference flow. Pass-5 bands are NULL where the pass's own
+    min-periods guard fails (W15)."""
+    by_var = {v.variable: v for v in var_map}
+    if len(by_var) != len(var_map):
+        raise ValueError(f"variables mapped twice: {[v.variable for v in var_map]}")
+    passes = {
+        name: passes_from_code_config(SENTEMQC_CONFIG[v.code]) for name, v in by_var.items()
+    }
+    ship_package(readings.sparkSession)
+
+    d = readings.filter(F.col("variable").isin(list(by_var)))
+    if start_time is not None:
+        d = d.filter(F.col("ts") >= start_time)
+    if end_time is not None:
+        d = d.filter(F.col("ts") <= end_time)
+    offset = _by_variable({name: F.lit(v.calibration_offset) for name, v in by_var.items()})
+    d = d.withColumn("obs_in", F.col("value") + offset)
+    mask_pre = F.col("obs_in").isNull() | (F.col("obs_in") <= 0)
+    d = d.withColumns({"mask_pre": mask_pre, "obs_raw": F.when(~mask_pre, F.col("obs_in"))})
+    nitrates = [name for name, v in by_var.items() if v.is_nitrate]
+    obs = F.col("obs_raw")
+    if nitrates:
+        obs = F.when(F.col("variable").isin(nitrates), obs * F.lit(NITRATE_NO3_TO_N)).otherwise(obs)
+    # the pre-masked observation every pass and sensor rule reads: NaN is NULL too
+    d = d.withColumn("obs", F.when(~F.isnan(obs), obs))
+    sensor = _by_variable({name: sensor_error_flag("obs", v.code) for name, v in by_var.items()})
+    d = d.select(*KEYS, "ts", "obs_in", "obs_raw", "mask_pre", sensor.alias("flag_sensor"), "obs")
+
+    def per_series(key, table):
+        return Q.sentemqc_table(table, passes[key[1].as_py()])
+
+    d = d.groupBy(*KEYS).applyInArrow(per_series, T.StructType(d.schema.fields + _BAND_FIELDS))
+    if nitrates:
+        back = F.lit(1.0 / NITRATE_NO3_TO_N)
+        is_n = F.col("variable").isin(nitrates)
+        d = d.withColumns(
+            {band: F.when(is_n, F.col(band) * back).otherwise(F.col(band))
+             for band in ("qcband_top", "qcband_bottom")}
         )
-        outs.append(
-            d.select(
-                *KEYS, ts, "obs_in", "obs_raw", "value_masked", "flag_global",
-                "is_flagged", "flag_reason", "qcband_top", "qcband_bottom", "mask_pre",
-                # per-component flags kept alongside (the reference drops
-                # them; they cost nothing and make audits/tests direct)
-                *[f"flag_run{i}" for i in range(1, 6)],
-            )
-        )
-    result = outs[0]
-    for o in outs[1:]:
-        result = result.unionByName(o)
-    return result
+    named = {name: F.col(name) for name in ("flag_sensor", *_RUN_FLAGS)}
+    glob = combine_flags_200(*named.values())
+    return d.select(
+        *KEYS, "ts", "obs_in", "obs_raw",
+        F.when(glob == 200, None).otherwise(F.col("obs_raw")).alias("value_masked"),
+        glob.alias("flag_global"),
+        (glob == 200).alias("is_flagged"),
+        flag_reasons(named).alias("flag_reason"),
+        "qcband_top", "qcband_bottom", "mask_pre", *_RUN_FLAGS,
+    )
 
 
 # long column -> wide suffix of the reference's EP3 export

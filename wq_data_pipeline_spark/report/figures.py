@@ -331,46 +331,41 @@ def render_sentemqc_figure(
     out_dir: str,
     station: str,
     variable: str,
-    top_col: str = "qcband_top",
-    bottom_col: str = "qcband_bottom",
-    value_col: str = "value",
     max_points: int = 1100,
-    title: str | None = None,
 ) -> str:
     """The sentemqc combined log plot (plot_combined_log_gap,
-    scripts/sentemqc.py:117-142): raw line, QC band envelope, accepted
-    dots vs flagged crosses, availability/mask/flag annotation. ``sq``
-    is :func:`operators.sentem.apply_sentemqc` output for ONE series
-    (plus band columns from the last pass)."""
+    scripts/sentemqc.py:117-142) of ONE series of the EP3 output
+    (:func:`plans.sentem_pipeline.run_sentemqc_plan`): the pre-masked
+    ``obs_raw`` line, the last pass's ``qcband_top``/``qcband_bottom``
+    envelope, accepted dots vs flagged crosses, and the availability
+    (``obs_raw`` present), masked (``obs_in`` <= 0, before the
+    pre-mask) and flagged shares."""
     os.makedirs(out_dir, exist_ok=True)
     d = sq.filter((F.col("station") == station) & (F.col("variable") == variable))
-    if value_col != "value":
-        d = d.withColumn("value", F.col(value_col))
-    d = d.withColumn(
-        "_acc", F.when(~F.col("is_flagged") & (F.col("value") > 0), F.col("value"))
-    ).withColumn(
-        "_flg", F.when(F.col("is_flagged") & (F.col("value") > 0), F.col("value"))
+    raw = F.col("obs_raw")
+    d = d.withColumns(
+        {
+            "_acc": F.when(~F.col("is_flagged") & (raw > 0), raw),
+            "_flg": F.when(F.col("is_flagged") & (raw > 0), raw),
+        }
     )
-    cols = ["value", "_acc", "_flg"] + [
-        c for c in (top_col, bottom_col) if c in sq.columns
-    ]
+    cols = ["obs_raw", "_acc", "_flg", "qcband_top", "qcband_bottom"]
     rows = bucketed_series(d, cols, max_points).get((station, variable), [])
     pct = d.agg(
-        F.round(F.avg(F.col("value").isNotNull().cast("double")) * 100, 1).alias("avail"),
-        F.round(F.avg((F.col("value") <= 0).cast("double")) * 100, 1).alias("masked"),
+        F.round(F.avg(raw.isNotNull().cast("double")) * 100, 1).alias("avail"),
+        F.round(F.avg((F.col("obs_in") <= 0).cast("double")) * 100, 1).alias("masked"),
         F.round(F.avg(F.col("is_flagged").cast("double")) * 100, 1).alias("flagged"),
     ).first()
     fig = Figure(
-        title=title or f"{station} — {variable} (sentemqc)",
+        title=f"{station} — {variable} (sentemqc)",
         xlabel="Time",
         ylabel=variable,
         log_y=True,
         height=400,
     )
-    fig.line(*_xy(rows, "value"), color=COLOR_RAW, lw=0.6, label="Raw")
-    if top_col in sq.columns:
-        fig.line(*_xy(rows, top_col), color=COLOR_GREY, lw=0.8, label="QC band top")
-        fig.line(*_xy(rows, bottom_col), color=COLOR_GREY, lw=0.8, label="QC band bottom")
+    fig.line(*_xy(rows, "obs_raw"), color=COLOR_RAW, lw=0.6, label="Raw")
+    fig.line(*_xy(rows, "qcband_top"), color=COLOR_GREY, lw=0.8, label="QC band top")
+    fig.line(*_xy(rows, "qcband_bottom"), color=COLOR_GREY, lw=0.8, label="QC band bottom")
     fig.markers(*_xy(rows, "_acc"), color=COLOR_ORANGE, size=1.2, label="Accepted")
     fig.markers(*_xy(rows, "_flg"), color=COLOR_BLUE, size=1.6, label="Flagged", shape="x")
     fig.annotate(

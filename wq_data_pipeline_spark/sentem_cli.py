@@ -57,30 +57,53 @@ def build_parser() -> argparse.ArgumentParser:
     return p
 
 
+def _var_map(parser: argparse.ArgumentParser, args: argparse.Namespace) -> list:
+    """The SentemVar list of the parsed arguments; every bad value is a
+    usage error, raised before Spark starts."""
+    from wq_data_pipeline_spark.plans.sentem_pipeline import SENTEMQC_CONFIG, SentemVar
+
+    known = ", ".join(str(c) for c in sorted(SENTEMQC_CONFIG))
+    codes = {}
+    for name, code in args.var:
+        if name in codes:
+            parser.error(f"--var {name} is given twice")
+        try:
+            codes[name] = int(code)
+        except ValueError:
+            parser.error(f"--var {name}: CODE {code!r} is not an integer (known codes: {known})")
+        if codes[name] not in SENTEMQC_CONFIG:
+            parser.error(f"--var {name}: unknown sensor code {code} (known codes: {known})")
+    offsets = {}
+    for name, offset in args.calibration:
+        try:
+            offsets[name] = float(offset)
+        except ValueError:
+            parser.error(f"--calibration {name}: OFFSET {offset!r} is not a number")
+    for flag, names in (("--nitrate", args.nitrate), ("--calibration", offsets)):
+        for name in names:
+            if name not in codes:
+                parser.error(f"{flag} {name}: no --var names {name!r}")
+    return [
+        SentemVar(
+            variable=name,
+            code=code,
+            is_nitrate=name in args.nitrate,
+            calibration_offset=offsets.get(name, 0.0),
+        )
+        for name, code in codes.items()
+    ]
+
+
 def main(argv: list[str] | None = None) -> None:
-    args = build_parser().parse_args(argv)
+    parser = build_parser()
+    args = parser.parse_args(argv)
+    var_map = _var_map(parser, args)
 
     from pyspark.sql import functions as F
 
-    from wq_data_pipeline_spark.plans.sentem_pipeline import (
-        SentemVar,
-        run_sentemqc_plan,
-        sentemqc_wide,
-    )
+    from wq_data_pipeline_spark.plans.sentem_pipeline import run_sentemqc_plan, sentemqc_wide
     from wq_data_pipeline_spark.session import get_spark
     from wq_data_pipeline_spark.sources.csv_source import melt_wide, read_wide_csv
-
-    offsets = {v: float(o) for v, o in args.calibration}
-    nitrates = set(args.nitrate)
-    var_map = [
-        SentemVar(
-            variable=name,
-            code=int(code),
-            is_nitrate=name in nitrates,
-            calibration_offset=offsets.get(name, 0.0),
-        )
-        for name, code in args.var
-    ]
 
     spark = get_spark(app_name="wq-spark-sentemqc")
     wide = read_wide_csv(spark, args.csv, timestamp_col=args.timestamp_col)
