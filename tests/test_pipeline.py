@@ -184,77 +184,74 @@ def _joins(plan: str) -> int:
 
 
 def test_report_tables_hold_no_join(spark, fixture_csv):
-    """The seasonal table counts its events in its own aggregate and the
-    meta table is one window plus one aggregate: neither plan joins or
-    broadcasts."""
+    """The report pass (events and seasonal summary) is one
+    grouped-Arrow pass over the long table, and the meta table one
+    window plus one aggregate: neither plan joins or broadcasts, and
+    the report pass holds no window."""
     from test_plan_budget import _count_op
 
     from wq_data_pipeline_spark.plans.qc_pipeline import (
         QCConfig,
         meta_stage,
+        report_pass,
         run_qc_pipeline,
-        seasonal_stage,
     )
     from wq_data_pipeline_spark.sources.csv_source import melt_wide, read_wide_csv
 
     wide = read_wide_csv(spark, fixture_csv, station_field="station", station_value="stn1")
     long = melt_wide(wide, ["o2", "ph"], station_col="station")
-    out = run_qc_pipeline(long, QCConfig(full_suite=True))
-    seasonal = seasonal_stage(out.timeseries.select("station", "variable", "ts", "clean"), out.events)
-    for name, df, windows in (("seasonal", seasonal, 0), ("meta", meta_stage(long), 1)):
+    report = report_pass(run_qc_pipeline(long, QCConfig(full_suite=True)).timeseries)
+    for name, df, windows in (("report", report, 0), ("meta", meta_stage(long), 1)):
         plan = df._jdf.queryExecution().executedPlan().toString()
         shape = (_joins(plan), _count_op(plan, "BroadcastExchange"), _count_op(plan, "Window"))
         assert shape == (0, 0, windows), (name, shape, plan)
+    plan = report._jdf.queryExecution().executedPlan().toString()
+    assert _count_op(plan, "FlatMapGroupsInArrow") == 1, plan
 
 
 def test_seasonal_marks_equal_a_left_join(spark):
-    """``seasonal_stats(marks=)`` gives the readings' summary with the
-    mark counts left-joined on (keys, season), 0-filled: a mark in a
-    season without readings adds no row, and a kind not asked for is
-    not counted."""
+    """The pipeline's seasonal table is ``seasonal_stats`` over the clean
+    series with the flat_values/flat_slopes event starts counted per
+    season and left-joined on (keys, season), 0-filled, on a series
+    running from DJF into MAM with flat runs in both seasons."""
     from pyspark.sql import functions as F
 
+    from wq_data_pipeline_spark.functions.scalars import season_expr
     from wq_data_pipeline_spark.operators.stats import seasonal_stats
+    from wq_data_pipeline_spark.plans.qc_pipeline import SEASONAL_SCHEMA, QCConfig, run_qc_pipeline
 
     ts = pd.date_range("2024-02-20", periods=1500, freq="15min")  # DJF into MAM
     v = np.random.default_rng(5).normal(5, 1, len(ts))
     v[::13] = np.nan
+    v[100:130] = 4.5  # flat runs: two in DJF, one in MAM
+    v[400:420] = 6.25
+    v[1100:1140] = 3.75
     readings = spark.createDataFrame(
         pd.DataFrame({"station": "s", "variable": "x", "ts": ts, "value": v})
     )
-    marks = spark.createDataFrame(
-        pd.DataFrame(
-            {
-                "station": "s",
-                "variable": "x",
-                "ts": pd.to_datetime(["2024-02-21", "2024-02-22", "2024-03-02", "2024-07-01", "2024-03-03"]),
-                "kind": ["a", "a", "b", "a", "c"],
-            }
-        )
-    )
+    out = run_qc_pipeline(readings, QCConfig(apply_sentem=False))
     keys = ["station", "variable"]
-    got = seasonal_stats(
-        readings, keys, marks=(marks, "kind", {"a": "a_n", "b": "b_n"})
-    ).toPandas()
-    counts = (
-        marks.groupBy(*keys, F.when(F.month("ts").isin(12, 1, 2), "DJF")
-                      .when(F.month("ts").isin(3, 4, 5), "MAM")
-                      .when(F.month("ts").isin(6, 7, 8), "JJA")
-                      .otherwise("SON").alias("season"))
-        .pivot("kind", ["a", "b"]).count()
-        .withColumnRenamed("a", "a_n").withColumnRenamed("b", "b_n")
+    counts = {"flat_values": "flat_values_events", "flat_slopes": "flat_slopes_events"}
+    starts = (
+        out.events.groupBy(*keys, season_expr("start").alias("season"))
+        .pivot("type", list(counts)).count()
     )
+    for kind, name in counts.items():
+        starts = starts.withColumnRenamed(kind, name)
     exp = (
-        seasonal_stats(readings, keys)
-        .join(counts, [*keys, "season"], "left")
-        .fillna(0, subset=["a_n", "b_n"])
+        seasonal_stats(out.timeseries.withColumnRenamed("clean", "value"), keys)
+        .join(starts, [*keys, "season"], "left")
+        .fillna(0, subset=list(counts.values()))
         .toPandas()
     )
+    assert out.seasonal.schema == SEASONAL_SCHEMA
+    got = out.seasonal.toPandas()
     assert list(got.columns) == list(exp.columns)
     got, exp = (d.sort_values("season").reset_index(drop=True) for d in (got, exp))
     pd.testing.assert_frame_equal(got, exp, check_dtype=False)
-    assert got.set_index("season")[["a_n", "b_n"]].to_dict("index") == {
-        "DJF": {"a_n": 2, "b_n": 0}, "MAM": {"a_n": 0, "b_n": 1},
+    assert got.set_index("season")[list(counts.values())].to_dict("index") == {
+        "DJF": {"flat_values_events": 2, "flat_slopes_events": 0},
+        "MAM": {"flat_values_events": 1, "flat_slopes_events": 1},
     }
 
 
@@ -425,3 +422,51 @@ def test_meta_sentinel_used(outputs):
     assert "-9999" in (rows["o2"].sentinel_used or "")
     assert rows["ph"].sentinel_used in ("[]", None)
     assert rows["o2"].duplicates == 0
+
+
+def test_numeric_station_runs_through_the_pipeline(spark, tmp_path):
+    """An all-digit station column, which CSV schema inference reads as
+    int, is a string series key: the pipeline and its sinks run, and
+    the station keeps its text."""
+    from wq_data_pipeline_spark.plans.qc_pipeline import QCConfig, run_qc_pipeline, write_outputs
+    from wq_data_pipeline_spark.sources.csv_source import melt_wide, read_wide_csv
+
+    ts = pd.date_range("2024-01-01", periods=300, freq="15min")
+    v = np.random.default_rng(8).normal(10, 1, len(ts))
+    v[50:70] = 9.0  # flat run
+    pd.DataFrame({"timestamp": ts, "station": 7, "o2": v}).to_csv(tmp_path / "wq.csv", index=False)
+    wide = read_wide_csv(spark, str(tmp_path / "wq.csv"))
+    out = run_qc_pipeline(melt_wide(wide, ["o2"], station_col="station"), QCConfig())
+    write_outputs(out, str(tmp_path / "out"))
+    assert {r.station for r in out.events.collect()} == {"7"}
+    assert (tmp_path / "out" / "qc_timeseries_long" / "station=7").is_dir()
+    events = pd.read_csv(next((tmp_path / "out" / "events").glob("part-*.csv")))
+    assert set(events["type"]) >= {"flat_values"}
+
+
+def test_outputs_unpin_every_pin(spark, monkeypatch, tmp_path):
+    """The CLI releases every frame the pipeline pinned: each frame
+    ``pinning.pin`` returns during a ``--figs`` run is passed to
+    ``pinning.unpin`` once."""
+    from wq_data_pipeline_spark import cli
+    from wq_data_pipeline_spark.operators import pinning
+
+    pinned, released = [], []
+    real_pin = pinning.pin
+
+    def pin(df, eager=False):
+        pinned.append(real_pin(df, eager))
+        return pinned[-1]
+
+    monkeypatch.setattr(pinning, "pin", pin)
+    monkeypatch.setattr(pinning, "unpin", released.append)
+    ts = pd.date_range("2024-01-01", periods=200, freq="15min")
+    v = np.random.default_rng(2).normal(10, 1, len(ts))
+    pd.DataFrame({"timestamp": ts, "station": "stn1", "o2": v}).to_csv(
+        tmp_path / "wq.csv", index=False
+    )
+    cli.main(
+        ["--csv", str(tmp_path / "wq.csv"), "--out", str(tmp_path / "out"), "--vars", "o2", "--figs"]
+    )
+    assert len(pinned) == 2
+    assert sorted(map(id, released)) == sorted(map(id, pinned))

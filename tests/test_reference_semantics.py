@@ -794,10 +794,11 @@ def _ref_gaussian(vals: list[float | None]) -> tuple[list, list]:
 
 
 def test_gaussian_smooth_matches_python_reference(spark):
-    """``windows.gaussian_smooth`` (shared by the QC figures and
-    w16_gaussian) against the pure-Python reference to 1e-12: one
-    series with leading and trailing NULL runs and an interior gap, and
-    one all-NULL series (filled, smooth and residual stay NULL)."""
+    """``windows.gaussian_smooth`` (behind w16_gaussian) against the
+    pure-Python reference to 1e-12, and the QC kernel's
+    ``series_qc.gaussian_smooth`` against it bit for bit: one series
+    with leading and trailing NULL runs and an interior gap, and one
+    all-NULL series (filled, smooth and residual stay NULL)."""
     from wq_data_pipeline_spark.operators.windows import gaussian_smooth
 
     t0 = pd.Timestamp("2024-01-01")
@@ -826,3 +827,13 @@ def test_gaussian_smooth_matches_python_reference(spark):
                 assert abs(r.smooth - s) <= 1e-12, (var, r, s)
                 assert abs(r.residual - (f - s)) <= 1e-12, (var, r, s)
     assert all(r.smooth is None for r in out if r.variable == "b")
+    # the per-series kernel's twin (the QC figures' smoother): the same
+    # floats, bit for bit, NaN where the Column form is NULL
+    from wq_data_pipeline_spark.operators import series_qc as Q
+
+    for var, vals in series.items():
+        got = [r for r in out if r.variable == var]
+        x = np.array([np.nan if v is None else v for v in vals])
+        for name, col in zip(("filled", "smooth", "residual"), Q.gaussian_smooth(x)):
+            want = [np.nan if r[name] is None else r[name] for r in got]
+            np.testing.assert_array_equal(col, want, err_msg=f"{var} {name}")

@@ -272,3 +272,28 @@ def test_qc_figures_null_station(spark, tmp_path):
         assert (figs / null_dir / name).read_bytes() == (figs / "stnA" / name).read_bytes(), name
     assert b"<polyline" in (figs / null_dir / "o2__00_raw.svg").read_bytes()
     assert "raw n=300" in (figs / null_dir / "o2__01_clean.svg").read_text()
+
+
+def _sql_plans(spark) -> dict[int, str]:
+    """Physical plan text of every SQL execution the UI store holds, by
+    execution id, once the listener bus has delivered its events."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    execs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    found = (execs.apply(i) for i in range(execs.size()))
+    return {e.executionId(): e.physicalPlanDescription() for e in found}
+
+
+def test_qc_figure_path_runs_no_window(spark, four_series_outputs, tmp_path):
+    """Without WRTDS, no SQL execution of the figure path holds a
+    window: the series inputs come from the per-series kernel."""
+    from test_plan_budget import _count_op
+
+    from wq_data_pipeline_spark.report import render_qc_figures
+
+    out = four_series_outputs
+    before = max(_sql_plans(spark), default=-1)
+    render_qc_figures(out.timeseries, out.events, out.seasonal, str(tmp_path), max_points=100)
+    plans = [p for i, p in _sql_plans(spark).items() if i > before]
+    assert plans
+    assert [p for p in plans if _count_op(p, "Window")] == [], plans
+    assert any(_count_op(p, "FlatMapCoGroupsInArrow") for p in plans), plans

@@ -267,3 +267,47 @@ def test_kernel_matches_column_algebra_on_anomalies(spark, full_suite):
     assert ts.filter("sm_flagged").count() > 0 and ts.filter("f_z").count() > 0
     kinds = {r.type for r in out.events.select("type").distinct().collect()}
     assert kinds == {"flat_values", "binary_switch", "flat_slopes"}
+
+
+def test_kernel_histogram_matches_decimal_histogram(spark):
+    """``series_qc.decimal_histogram`` (the QC figure 02 input) equals
+    ``stats.decimal_histogram`` bin for bin: negative values, NULLs,
+    integers and fractions sitting exactly on a ``linspace`` edge
+    (0.6 lands in bin 5 under both)."""
+    from wq_data_pipeline_spark.operators import series_qc as Q
+    from wq_data_pipeline_spark.operators.stats import decimal_histogram
+
+    rng = np.random.default_rng(31)
+    v = list(np.round(rng.normal(0, 20, 500), 3))
+    v += [0.6, 2.6, -0.4, 0.3, 0.7, 0.1, 0.9, 3.0, -2.0, 0.0, 5.999999999, None, None]
+    got = Q.decimal_histogram(np.array([np.nan if x is None else x for x in v]))
+    df = spark.createDataFrame(_series(v)[["station", "variable", "value"]])
+    want = {r.bin: r.bin_count for r in decimal_histogram(df, KEYS, "value").collect()}
+    assert got.tolist() == [want.get(b, 0) for b in range(10)]
+    assert Q.decimal_histogram(np.array([0.6]))[5] == 1
+    assert Q.decimal_histogram(np.array([np.nan])).tolist() == [0] * 10
+
+
+@pytest.mark.parametrize(
+    "values",
+    [[2.5], [1.0, None], [None, None, None], [None, 4.0, 1.5, None, 7.25, 3.0],
+     [round(0.1 * i + 0.37 * (i % 5), 3) if i % 7 else None for i in range(900)]],
+    ids=["one_row", "two_rows", "all_null", "null_values", "many_per_bucket"],
+)
+def test_kernel_buckets_match_bucketed_series(spark, values):
+    """``series_qc.time_buckets`` (the QC series figures' input) equals
+    ``figures.bucketed_series``: the same bucket starts, counts and
+    means, NaN where the mean is NULL."""
+    from wq_data_pipeline_spark.operators import series_qc as Q
+    from wq_data_pipeline_spark.report.figures import bucketed_series
+
+    pdf = _series(values)
+    want = bucketed_series(_readings(spark, pdf), ["value"], max_points=50)[("s", "x")]
+    ts = pdf["ts"].to_numpy().astype("datetime64[us]").astype(np.int64)
+    x = np.array([np.nan if v is None else v for v in values])
+    got = Q.time_buckets(ts, {"value": x}, max_points=50)
+    assert got["ts_us"].tolist() == [r.ts_us for r in want]
+    assert got["n_value"].tolist() == [r.n_value for r in want]
+    np.testing.assert_array_equal(
+        got["value"], [np.nan if r.value is None else r.value for r in want]
+    )

@@ -198,3 +198,24 @@ def test_jsonl_source_corrupt_record_policy(spark, tmp_path):
 
     with pytest.raises(TypeError):
         J.read_jsonl(spark, str(p), None)  # schema is mandatory
+
+
+def test_malformed_timestamp_drops_only_its_row(spark, tmp_path):
+    """A timestamp cell that does not parse is NULL and its row is
+    dropped, under ANSI too; every other row keeps its values."""
+    import datetime
+
+    from wq_data_pipeline_spark.sources.csv_source import read_wide_csv
+
+    (tmp_path / "wq.csv").write_text(
+        "timestamp,station,o2\n"
+        "2024-01-01 00:00:00,s,1.5\n"
+        "not-a-time,s,2.5\n"
+        "2024-01-01 00:30:00,s,3.5\n"
+    )
+    assert spark.conf.get("spark.sql.ansi.enabled") == "true"
+    rows = sorted(tuple(r) for r in read_wide_csv(spark, str(tmp_path / "wq.csv")).collect())
+    assert rows == [
+        (datetime.datetime(2024, 1, 1, 0, 0), "s", 1.5),
+        (datetime.datetime(2024, 1, 1, 0, 30), "s", 3.5),
+    ]

@@ -57,7 +57,6 @@ def build_parser() -> argparse.ArgumentParser:
 def main(argv: list[str] | None = None) -> None:
     args = build_parser().parse_args(argv)
 
-    from wq_data_pipeline_spark.operators.pinning import unpin
     from wq_data_pipeline_spark.plans.qc_pipeline import (
         QCConfig,
         run_qc_pipeline,
@@ -114,8 +113,7 @@ def main(argv: list[str] | None = None) -> None:
             out.timeseries, out.events, out.seasonal, f"{args.out}/figs"
         )
         print(f"wrote {len(paths)} figures to {args.out}/figs")
-    unpin(out.timeseries)
-    unpin(out.events)
+    out.unpin()
     print(f"wrote QC outputs to {args.out}")
 
 

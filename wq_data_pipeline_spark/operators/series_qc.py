@@ -1,26 +1,32 @@
 """Per-series QC kernel: the QC pipeline's clean stage, fallback flag
-suite, SentemQC passes and event detectors as numpy functions over
-ONE series.
+suite, SentemQC passes, event detectors, seasonal summary and figure
+inputs as numpy functions over ONE series.
 
 A series is given sorted by ``ts`` (int64 epoch microseconds, unique
 after the clean stage) with float64 values, NaN standing for NULL.
 ``plans/qc_pipeline.py`` runs :func:`qc_table` once per (station,
-variable) group through ``applyInArrow``, and :func:`events_table`
-over the pinned result, so the pipeline's whole chain is one
-Python-worker pass per series instead of a chain of Spark window
-passes. The EP3 runner (``plans/sentem_pipeline.py``) runs
-:func:`sentemqc_table` the same way, with each sensor code's passes.
+variable) group through ``applyInArrow``, and :func:`report_table`
+(events and seasonal summary) over the pinned result, so the
+pipeline's whole chain is one Python-worker pass per series instead
+of a chain of Spark window passes and aggregates. The QC figures
+(``report/figures.py``) run :func:`figure_table` over each series and
+its events in one cogrouped pass. The EP3 runner
+(``plans/sentem_pipeline.py``) runs :func:`sentemqc_table` the same
+way, with each sensor code's passes.
 
-The clean stage and the detectors reproduce the Spark Column algebra
-of the same name in ``operators/clean.py`` and
-``operators/detectors.py``, which the catalog still runs, and follow
-Spark's arithmetic, so both engines give the same floats:
+The clean stage, the detectors and the report functions reproduce the
+Spark Column algebra of the same name, which the catalog still runs:
+``operators/clean.py``, ``operators/detectors.py``,
+``stats.seasonal_stats``, ``stats.decimal_histogram``,
+``windows.gaussian_smooth`` and ``figures.bucketed_series``. They
+follow Spark's arithmetic, so both engines give the same floats:
 
-- a frame aggregate folds its rows in row order, as WindowExec does:
-  sums from 0.0 (``sum``/``avg``), Welford updates (``var_samp``,
-  ``stddev_pop``);
+- a frame or group aggregate folds its rows in row order, as
+  WindowExec and a one-partition aggregate do: sums from 0.0
+  (``sum``/``avg``), Welford updates (``var_samp``, ``stddev_pop``);
 - exact medians interpolate the middle pair (Spark ``percentile`` and
-  pandas' rolling median agree).
+  pandas' rolling median agree);
+- ``round`` is HALF_UP on the shortest decimal form of the double.
 
 The SentemQC band passes (:func:`sentemqc_series`) have no Column
 twin; the tests hold them to pandas' centred rolling mean, median and
@@ -29,7 +35,8 @@ triangular 5-point pass.
 
 The arrays hold NaN for NULL; the ``*_table`` functions turn every
 float column back into Arrow with a null mask, so NaN never leaves
-the kernel.
+the kernel. :func:`report_table` and :func:`figure_table` return one
+row per series whose list columns hold the series' rows.
 """
 
 from __future__ import annotations
@@ -37,6 +44,7 @@ from __future__ import annotations
 import math
 from collections.abc import Sequence
 from dataclasses import dataclass
+from decimal import ROUND_HALF_UP, Decimal
 
 import numpy as np
 import pandas as pd
@@ -45,7 +53,7 @@ import pyarrow.compute as pc
 
 from wq_data_pipeline_spark.operators.clean import DEFAULT_SENTINELS
 from wq_data_pipeline_spark.operators.sentem import TRI5_WEIGHTS
-from wq_data_pipeline_spark.operators.windows import centered_bounds
+from wq_data_pipeline_spark.operators.windows import GAUSS_TAPS, GAUSS_WEIGHTS, centered_bounds
 
 # Detector parameters: the reference's exact fallback-suite values,
 # durations converted at its 15-min default step (_to_points, :144-147).
@@ -498,6 +506,136 @@ EVENT_DETECTORS = {
 }
 
 
+# ------------------------------------------------------------------ report
+# A7's expected-point cadence, and the event kinds whose starts each
+# season counts (reference seasonal_stats, :277-290)
+SEASON_STEP_SECONDS = 900.0
+SEASON_EVENT_COUNTS = {"flat_values": "flat_values_events", "flat_slopes": "flat_slopes_events"}
+# the series columns every QC figure draws from, bucketed together
+FIGURE_VALUES = ("raw", "clean", "accepted", "smooth", "residual", "adiff")
+
+
+def _round_half_up(x: np.ndarray, places: int) -> np.ndarray:
+    """Spark's ``round`` of doubles: HALF_UP on the shortest decimal
+    form of each value (``BigDecimal.valueOf``)."""
+    q = Decimal(1).scaleb(-places)
+    return np.array(
+        [float(Decimal(repr(float(v))).quantize(q, ROUND_HALF_UP)) for v in x], dtype=float
+    )
+
+
+def seasonal_summary(
+    ts: np.ndarray,
+    x: np.ndarray,
+    season: np.ndarray,
+    events: dict[str, dict[str, np.ndarray]],
+    step_seconds: float = SEASON_STEP_SECONDS,
+) -> dict[str, np.ndarray]:
+    """Per-season coverage summary of one series sorted by ``ts``
+    (``stats.seasonal_stats``' arithmetic): season, n_rows,
+    coverage_pct (100·non-null / the integer expected points
+    max(1, round(span/step + 1))), nan_pct, both rounded HALF_UP to 4
+    places, and per :data:`SEASON_EVENT_COUNTS` kind the number of
+    ``events`` starting in the season."""
+    names, idx = np.unique(season, return_inverse=True)
+    k = len(names)
+    n_rows = np.bincount(idx, minlength=k)
+    n_obs = np.bincount(idx[~np.isnan(x)], minlength=k)
+    lo = np.full(k, np.iinfo(np.int64).max)
+    hi = np.full(k, np.iinfo(np.int64).min)
+    np.minimum.at(lo, idx, ts)
+    np.maximum.at(hi, idx, ts)
+    span = (hi - lo) / (step_seconds * _US_PER_S) + 1.0
+    expected = np.maximum(1, _round_half_up(span, 0).astype(np.int64))
+    out = {
+        "season": names.astype(object),
+        "n_rows": n_rows.astype(np.int64),
+        "coverage_pct": _round_half_up(n_obs / expected * 100.0, 4),
+        "nan_pct": _round_half_up((n_rows - n_obs) / n_rows * 100.0, 4),
+    }
+    for kind, name in SEASON_EVENT_COUNTS.items():
+        starts = idx[np.searchsorted(ts, events[kind]["start"])]
+        out[name] = np.bincount(starts, minlength=k).astype(np.int64)
+    return out
+
+
+def gaussian_smooth(x: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """(filled, smooth, residual) of one series, ``windows.gaussian_smooth``
+    over numpy: ``x`` forward-filled then back-filled, the GAUSS_WEIGHTS
+    taps over it added in tap order and renormalized over the taps that
+    exist (NaN when none does), and filled − smooth."""
+    n = len(x)
+    ok = ~np.isnan(x)
+    prev = np.maximum.accumulate(np.where(ok, np.arange(n), -1))
+    nxt = np.minimum.accumulate(np.where(ok, np.arange(n), n)[::-1])[::-1]
+    filled = np.where(prev >= 0, x[np.maximum(prev, 0)], np.nan)
+    filled = np.where(np.isnan(filled) & (nxt < n), x[np.minimum(nxt, n - 1)], filled)
+    num, den = np.zeros(n), np.zeros(n)
+    for k, wt in zip(range(-GAUSS_TAPS, GAUSS_TAPS + 1), GAUSS_WEIGHTS):
+        tap = _shift(filled, k)
+        have = ~np.isnan(tap)
+        num = num + np.where(have, tap, 0.0) * wt
+        den = den + np.where(have, wt, 0.0)
+    smooth = np.divide(num, den, out=np.full(n, np.nan), where=den > 0)
+    return filled, smooth, filled - smooth
+
+
+def time_buckets(
+    ts: np.ndarray, values: dict[str, np.ndarray], max_points: int
+) -> dict[str, np.ndarray]:
+    """``figures.bucketed_series`` of one series sorted by ``ts``: the
+    span [lo, hi] cut into buckets of ``(max(hi, lo + 1) − lo) div
+    max_points + 1`` µs; per non-empty bucket its ``ts_us`` (start),
+    each value's mean over the non-NaN rows (summed in row order from
+    0.0; NaN when there is none) and its count ``n_<name>``."""
+    lo, hi = ts[0], ts[-1]
+    step = (max(hi, lo + 1) - lo) // max_points + 1
+    b = ((ts - lo) / step).astype(np.int64)
+    keys, idx = np.unique(b, return_inverse=True)
+    out = {"ts_us": keys * step + lo}
+    counts = {}
+    for name, v in values.items():
+        ok = ~np.isnan(v)
+        n = np.bincount(idx, weights=ok, minlength=len(keys))
+        total = np.bincount(idx, weights=np.where(ok, v, 0.0), minlength=len(keys))
+        out[name] = np.divide(total, n, out=np.full(len(keys), np.nan), where=n > 0)
+        counts[f"n_{name}"] = n.astype(np.int64)
+    return {**out, **counts}
+
+
+def decimal_histogram(x: np.ndarray, nbins: int = 10) -> np.ndarray:
+    """Counts of the non-NaN values' fractional parts in ``nbins`` bins
+    (``stats.decimal_histogram``): the fraction is Spark's
+    ``pmod(v − floor(v), 1.0)``, with floor a saturated long, and bin i
+    holds ``edges[i] <= f < edges[i + 1]`` over ``np.linspace`` edges,
+    whose 1-ulp artefacts put an exact 0.6 in bin 5; the last bin takes
+    the rest."""
+    v = x[~np.isnan(x)]
+    r = np.fmod(v - np.clip(np.floor(v), -(2.0**63), 2.0**63), 1.0)
+    frac = np.where(r < 0, np.fmod(r + 1.0, 1.0), r)
+    edges = np.linspace(0.0, 1.0, nbins + 1)
+    return np.bincount(np.searchsorted(edges[1:nbins], frac, side="right"), minlength=nbins)
+
+
+def newest_spans(events: pa.Table, k: int) -> dict[str, pa.Array]:
+    """The ``k`` newest of one series' events as type, s, e (start and
+    end in µs), ordered by start, then end, descending (NULLs last),
+    then type."""
+    spans = pa.table(
+        {
+            "type": events.column("type"),
+            "s": pc.cast(events.column("start"), pa.int64()),
+            "e": pc.cast(events.column("end"), pa.int64()),
+        }
+    )
+    order = pc.sort_indices(
+        spans, [("s", "descending"), ("e", "descending"), ("type", "ascending")],
+        null_placement="at_end",
+    )
+    top = spans.take(order[:k])
+    return {c: top.column(c).combine_chunks() for c in top.column_names}
+
+
 # ------------------------------------------------------------------ Arrow
 def _sorted_series(table: pa.Table, value: str) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """(order, ts µs, values) of one group, sorted by ts; NULL and NaN
@@ -567,16 +705,12 @@ def sentemqc_table(table: pa.Table, passes: Sequence[BandPassCfg]) -> pa.Table:
     return out.append_column("qcband_top", _f64(top)).append_column("qcband_bottom", _f64(bottom))
 
 
-def events_table(table: pa.Table) -> pa.Table:
-    """One series' events from its (station, variable, ts, clean) Arrow
-    rows: station, variable, type, start, end, hours, value, n_points,
-    pre, post, pre_val, post_val; each detector fills its own columns
-    and leaves the others NULL (the J4 union)."""
-    with np.errstate(invalid="ignore", divide="ignore"):
-        _, ts, x = _sorted_series(table, "clean")
-        found = {name: fn(ts, x) for name, fn in EVENT_DETECTORS.items()}
+def _event_columns(found: dict[str, dict[str, np.ndarray]]) -> dict[str, np.ndarray]:
+    """The detectors' events as columns (the J4 union): type, start,
+    end, hours, value, n_points, pre, post, pre_val, post_val; each
+    detector fills its own columns and leaves the others NULL (NaN,
+    or a masked µs column for the timestamps)."""
     sizes = [len(ev["start"]) for ev in found.values()]
-    ts_type = table.schema.field("ts").type
 
     def column(name, fill, dtype):
         parts = [ev.get(name, np.full(k, fill, dtype)) for ev, k in zip(found.values(), sizes)]
@@ -584,22 +718,87 @@ def events_table(table: pa.Table) -> pa.Table:
 
     def ts_column(name):
         present = np.concatenate([np.full(k, name in ev) for ev, k in zip(found.values(), sizes)])
-        return pa.array(column(name, 0, np.int64), mask=~present).cast(ts_type)
+        return pa.array(column(name, 0, np.int64), mask=~present)
 
-    first = pa.array(np.zeros(sum(sizes), np.int64))
-    return pa.table(
-        {
-            "station": table.column("station").take(first),
-            "variable": table.column("variable").take(first),
-            "type": pa.array(np.repeat(list(found), sizes).astype(object), type=pa.string()),
-            "start": ts_column("start"),
-            "end": ts_column("end"),
-            "hours": _f64(column("hours", np.nan, float)),
-            "value": _f64(column("value", np.nan, float)),
-            "n_points": pa.array(column("n_points", 0, np.int64)),
-            "pre": ts_column("pre"),
-            "post": ts_column("post"),
-            "pre_val": _f64(column("pre_val", np.nan, float)),
-            "post_val": _f64(column("post_val", np.nan, float)),
+    return {
+        "type": np.repeat(list(found), sizes).astype(object),
+        "start": ts_column("start"),
+        "end": ts_column("end"),
+        "hours": column("hours", np.nan, float),
+        "value": column("value", np.nan, float),
+        "n_points": column("n_points", 0, np.int64),
+        "pre": ts_column("pre"),
+        "post": ts_column("post"),
+        "pre_val": column("pre_val", np.nan, float),
+        "post_val": column("post_val", np.nan, float),
+    }
+
+
+def _arrow(v) -> pa.Array | pa.ChunkedArray:
+    """An Arrow column of ``v``; a float array's NaN becomes NULL."""
+    if isinstance(v, (pa.Array, pa.ChunkedArray)):
+        return v
+    return _f64(v) if v.dtype == float else pa.array(v)
+
+
+def _one_row(values: dict, schema: pa.Schema) -> pa.Table:
+    """One row of ``schema`` from ``values``: a list field's cell holds
+    all of its given rows (a dict of columns for a list of structs), any
+    other field its one given value."""
+    cols = []
+    for f in schema:
+        v = values[f.name]
+        if pa.types.is_list(f.type):
+            item = f.type.value_type
+            if pa.types.is_struct(item):
+                v = pa.StructArray.from_arrays(
+                    [_arrow(v[g.name]).cast(g.type) for g in item], fields=list(item)
+                )
+            else:
+                v = _arrow(v).cast(item)
+            v = pa.ListArray.from_arrays(pa.array([0, len(v)], pa.int32()), v, type=f.type)
+        cols.append(_arrow(v).cast(f.type))
+    return pa.Table.from_arrays(cols, schema=schema)
+
+
+def _keys_of(table: pa.Table) -> dict[str, pa.ChunkedArray]:
+    """The group's (station, variable), from its first row."""
+    first = pa.array([0], pa.int64())
+    return {k: table.column(k).take(first) for k in ("station", "variable")}
+
+
+def report_table(table: pa.Table, schema: pa.Schema) -> pa.Table:
+    """One series' report row of ``schema`` from its (station,
+    variable, ts, clean, season) Arrow rows: station, variable,
+    ``events`` (the detectors' events, :func:`_event_columns`) and
+    ``seasons`` (one :func:`seasonal_summary` row per season)."""
+    with np.errstate(invalid="ignore", divide="ignore"):
+        order, ts, x = _sorted_series(table, "clean")
+        season = table.column("season").to_numpy(zero_copy_only=False)[order]
+        found = {name: fn(ts, x) for name, fn in EVENT_DETECTORS.items()}
+        seasons = seasonal_summary(ts, x, season, found)
+    return _one_row({**_keys_of(table), "events": _event_columns(found), "seasons": seasons}, schema)
+
+
+def figure_table(
+    series: pa.Table, events: pa.Table, schema: pa.Schema, *, max_points: int, max_spans: int
+) -> pa.Table:
+    """One series' figure-input row of ``schema`` from its (station,
+    variable, ts, raw, clean, accepted) Arrow rows and its (type,
+    start, end) events: station, variable, ``buckets``
+    (:func:`time_buckets` of :data:`FIGURE_VALUES`), ``hist``
+    (:func:`decimal_histogram` of clean) and ``spans``
+    (:func:`newest_spans`)."""
+    with np.errstate(invalid="ignore", divide="ignore"):
+        order, ts, clean = _sorted_series(series, "clean")
+        cols = {
+            c: series.column(c).to_numpy().astype(float, copy=False)[order]
+            for c in ("raw", "accepted")
         }
-    )
+        cols["clean"] = clean
+        _, cols["smooth"], cols["residual"] = gaussian_smooth(clean)
+        cols["adiff"] = np.abs(clean - _shift(clean, -1))
+        buckets = time_buckets(ts, cols, max_points)
+        hist = decimal_histogram(clean)
+    spans = newest_spans(events, max_spans)
+    return _one_row({**_keys_of(series), "buckets": buckets, "hist": hist, "spans": spans}, schema)

@@ -7,7 +7,7 @@ O(bins), not O(rows).
 
 from __future__ import annotations
 
-from collections.abc import Mapping, Sequence
+from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, functions as F
 
@@ -21,7 +21,6 @@ def seasonal_stats(
     ts: str = "ts",
     value: str = "value",
     step_seconds: float = 900.0,
-    marks: tuple[DataFrame, str, Mapping[str, str]] | None = None,
 ) -> DataFrame:
     """Per-season coverage/nan summary (A7; reference seasonal_stats,
     scripts/ufz_water_qc_pipeline.py:277-290).
@@ -34,37 +33,20 @@ def seasonal_stats(
     irregular — round() changes the denominator. Rounding of exact .5
     halves differs (Python banker's vs SQL half-up); measure-zero at
     µs timestamp resolution. nan_pct = null share of observed rows.
-
-    ``marks = (frame, kind, {kind value: output column})`` also counts
-    point marks (e.g. events by their start) per season, in the same
-    aggregate instead of a join: ``frame`` holds (keys..., ts, kind)
-    rows, each counted in the season of its ``ts``. The counts follow
-    ``nan_pct``, 0 where a season has no mark of that kind. Marks add
-    no row, no span and no season of their own: the result is the
-    readings' summary with the counts left-joined on (keys, season).
+    The QC pipeline's seasonal table comes from the same arithmetic in
+    ``series_qc.seasonal_summary``.
     """
     keys = list(keys)
     season = season_expr(ts).alias("season")
-    stamp, rows, counts = F.col(ts), F.count(F.lit(1)), {}
-    if marks is not None:
-        frame, kind, counts = marks
-        blank = F.lit(None).cast(df.schema[value].dataType)
-        df = df.select(*keys, ts, value, F.lit(None).cast("string").alias("_mark")).unionByName(
-            frame.select(*keys, ts, blank.alias(value), F.col(kind).alias("_mark"))
-        )
-        is_row = F.col("_mark").isNull()
-        stamp, rows = F.when(is_row, F.col(ts)), F.count_if(is_row)
-    out = df.groupBy(*keys, season).agg(
-        rows.alias("n_rows"),
-        F.count(value).alias("n_obs"),
-        F.min(stamp).alias("_min_ts"),
-        F.max(stamp).alias("_max_ts"),
-        *[F.count_if(F.col("_mark") == k).alias(name) for k, name in counts.items()],
-    )
-    if marks is not None:
-        out = out.filter(F.col("n_rows") > 0)
     return (
-        out.withColumn(
+        df.groupBy(*keys, season)
+        .agg(
+            F.count(F.lit(1)).alias("n_rows"),
+            F.count(value).alias("n_obs"),
+            F.min(ts).alias("_min_ts"),
+            F.max(ts).alias("_max_ts"),
+        )
+        .withColumn(
             "expected_points",
             F.greatest(
                 F.lit(1).cast("long"),
@@ -85,7 +67,6 @@ def seasonal_stats(
             F.round(
                 (F.col("n_rows") - F.col("n_obs")) / F.col("n_rows") * 100.0, 4
             ).alias("nan_pct"),
-            *counts.values(),
         )
     )
 

@@ -11,19 +11,19 @@ clean stage, fallback flag suite, SentemQC) through one
 a sorted series, so the chain costs no Spark window pass, no plan of
 a few hundred expressions to build, and no per-stage codegen.
 
-The plan is lazy except for three pins (operators/pinning.py), each
+The plan is lazy except for two pins (operators/pinning.py), each
 read by several sinks and figures, so the work behind each runs once:
 - the long table (the kernel's output);
-- the events table, from the long table's clean column through the
-  kernel's event detectors (a second grouped-Arrow pass over the pin;
-  the pin reports no partitioning, so that pass shuffles it by series
-  once more);
-- the seasonal table, one aggregate over the long table and the event
-  starts, read by its CSV and figure 06.
+- the report table (:func:`report_pass`): one more grouped-Arrow pass
+  over the long table's clean column, one row per series holding its
+  events (the kernel's detectors) and its seasonal summary (A7 plus
+  the flat event starts per season) as two list columns. The events
+  and seasonal outputs are ``inline`` projections of it; the pin
+  reports no partitioning, so the pass shuffles the long table by
+  series once more.
 
-The report tables hold no join: the seasonal table counts the event
-starts in its own aggregate, and the meta table is one window and one
-aggregate over the readings, so each costs one shuffle.
+The meta table is one window and one aggregate over the readings, so
+no report table joins anything.
 
 Outputs mirror the reference's artifacts:
 - wide QC timeseries parquet: ``{var}__raw/__clean/__accepted/
@@ -39,12 +39,12 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, functions as F, types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
-from wq_data_pipeline_spark.functions.scalars import sanitize_name
+from wq_data_pipeline_spark.functions.scalars import sanitize_name, season_expr
 from wq_data_pipeline_spark.operators import clean as C
+from wq_data_pipeline_spark.operators import pinning
 from wq_data_pipeline_spark.operators import series_qc as Q
-from wq_data_pipeline_spark.operators import stats as S
-from wq_data_pipeline_spark.operators.pinning import pin
 from wq_data_pipeline_spark.operators.windows import with_ts_delta
 from wq_data_pipeline_spark.session import ship_package
 
@@ -106,6 +106,31 @@ EVENTS_SCHEMA = T.StructType(
         T.StructField("post_val", T.DoubleType()),
     ]
 )
+SEASONAL_SCHEMA = T.StructType(
+    [
+        T.StructField("station", T.StringType()),
+        T.StructField("variable", T.StringType()),
+        T.StructField("season", T.StringType(), False),
+        T.StructField("n_rows", T.LongType(), False),
+        T.StructField("coverage_pct", T.DoubleType()),
+        T.StructField("nan_pct", T.DoubleType()),
+        *[T.StructField(name, T.LongType(), False) for name in Q.SEASON_EVENT_COUNTS.values()],
+    ]
+)
+
+
+def _list_of(schema: T.StructType) -> T.ArrayType:
+    """A list column of ``schema``'s rows without their series keys."""
+    return T.ArrayType(T.StructType(schema.fields[len(KEYS):]), containsNull=False)
+
+
+REPORT_SCHEMA = T.StructType(
+    [
+        *EVENTS_SCHEMA.fields[: len(KEYS)],
+        T.StructField("events", _list_of(EVENTS_SCHEMA), False),
+        T.StructField("seasons", _list_of(SEASONAL_SCHEMA), False),
+    ]
+)
 
 
 def qc_long(readings: DataFrame, cfg: QCConfig) -> DataFrame:
@@ -138,14 +163,25 @@ def qc_long(readings: DataFrame, cfg: QCConfig) -> DataFrame:
     )
 
 
-def seasonal_stage(cleaned: DataFrame, events: DataFrame, step_seconds: float = 900.0) -> DataFrame:
-    """A7 + per-season ``flat_values``/``flat_slopes`` event counts, in
-    one aggregate over the readings and the events' starts (no pivot,
-    no join; see ``stats.seasonal_stats(marks=)``)."""
-    d = cleaned.withColumnRenamed("clean", "value")
-    starts = events.select(*KEYS, F.col("start").alias("ts"), "type")
-    counts = {"flat_values": "flat_values_events", "flat_slopes": "flat_slopes_events"}
-    return S.seasonal_stats(d, KEYS, "ts", "value", step_seconds, marks=(starts, "type", counts))
+def report_pass(qc: DataFrame) -> DataFrame:
+    """Events and seasonal summary of every series in ONE Python-worker
+    pass over the long table: ``groupBy(station, variable)
+    .applyInArrow`` runs :func:`series_qc.report_table` on each series'
+    (ts, clean) and the season of each ts (``season_expr``, so the
+    season follows the session time zone). One row per series:
+    station, variable, ``events`` and ``seasons``, two list columns
+    whose ``inline`` gives :data:`EVENTS_SCHEMA` and
+    :data:`SEASONAL_SCHEMA`."""
+    schema = to_arrow_schema(REPORT_SCHEMA)
+
+    def per_series(table):
+        return Q.report_table(table, schema)
+
+    return (
+        qc.select(*KEYS, "ts", "clean", season_expr("ts").alias("season"))
+        .groupBy(*KEYS)
+        .applyInArrow(per_series, REPORT_SCHEMA)
+    )
 
 
 def meta_stage(readings: DataFrame) -> DataFrame:
@@ -221,38 +257,45 @@ class QCOutputs:
     events: DataFrame
     seasonal: DataFrame
     meta: DataFrame
+    # the frames run_qc_pipeline pinned, released by unpin()
+    pinned: tuple[DataFrame, ...] = ()
+
+    def unpin(self) -> None:
+        """Release every pin behind these outputs; call it after the
+        last sink or figure has read them."""
+        for df in self.pinned:
+            pinning.unpin(df)
 
 
 def run_qc_pipeline(readings: DataFrame, cfg: QCConfig | None = None) -> QCOutputs:
     """The full DAG. ``readings`` is the canonical long table
     (station, variable, ts, value).
 
-    Three subtrees are pinned, so each runs once however many actions
+    Two subtrees are pinned, so each runs once however many actions
     read it (reference recomputes nothing because everything lives in
     RAM; SURVEY §4.1 'Caching / reuse'):
 
     - the long table (:func:`qc_long`), read by ``widen``'s variable
-      collect, both parquet sinks, the events pass, the seasonal
-      table, every figure input and the CLI's WRTDS leg;
-    - the events table, read by the events CSV, the seasonal table
-      and the event figures;
-    - the seasonal table, read by its CSV and the coverage figure.
+      collect, both parquet sinks, the report pass, the series figures
+      and the CLI's WRTDS leg;
+    - the report table (:func:`report_pass`), whose ``inline``
+      projections are the events (read by the events CSV and the
+      event figures) and the seasonal table (read by its CSV and the
+      coverage figure).
 
     ``meta`` reads ``readings`` because it counts the pre-dedup
-    duplicates. Release the pins with ``operators.pinning.unpin``
-    after the last sink."""
+    duplicates. Release the pins with :meth:`QCOutputs.unpin` after
+    the last sink."""
     cfg = cfg or QCConfig()
-    qc = pin(qc_long(readings, cfg))
-    cleaned = qc.select(*KEYS, "ts", "clean")
-    events = pin(
-        cleaned.groupBy(*KEYS).applyInArrow(Q.events_table, EVENTS_SCHEMA)
-    )
+    qc = pinning.pin(qc_long(readings, cfg))
+    report = pinning.pin(report_pass(qc))
     return QCOutputs(
         timeseries=qc,
         timeseries_wide=widen(qc),
-        events=events,
-        seasonal=pin(seasonal_stage(cleaned, events)),
+        events=report.select(*KEYS, F.inline("events")),
+        seasonal=report.select(*KEYS, F.inline("seasons")),
         meta=meta_stage(readings),
+        pinned=(qc, report),
     )
 
 

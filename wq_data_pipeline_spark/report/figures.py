@@ -3,14 +3,17 @@
 ``{var}__08_accepted``) and the sentemqc combined log plot
 (scripts/sentemqc.py:117-142, emitted by run_sentemqc_on_dataframe).
 
-Grouped contract: each figure input is ONE collect over all
-(station, variable) series, so a report fires as many Spark jobs for 1
-series as for 1,000; the per-series loop only draws from driver-side
-dicts. Every collect is bounded per series: a time-BUCKETED aggregate
-(<= ``max_points`` rows), 10 histogram bins, 4 seasons, the
-``max_spans`` newest events and the 2000 largest WRTDS spikes (both
-``row_number`` windows). At 100 TB the driver still only ever sees
-O(pixels) rows per figure.
+Grouped contract: the series figures' inputs come from ONE cogrouped
+Arrow pass over all (station, variable) series — each series' QC rows
+with its events, through the kernel's ``series_qc.figure_table`` —
+and one collect of the seasonal coverage, so a report fires as many
+Spark jobs for 1 series as for 1,000; the per-series loop only draws
+from driver-side rows. Every collected row is bounded per series: a
+time-BUCKETED series (<= ``max_points`` buckets), 10 histogram bins,
+the ``max_spans`` newest events and 4 seasons; figure 07 adds a
+bucketed WRTDS fit and its 2000 largest spikes (a ``row_number``
+window). At 100 TB the driver still only ever sees O(pixels) rows per
+figure.
 
 Backend: matplotlib when importable (PNG, like the reference), else
 the stdlib SVG kit in :mod:`wq_data_pipeline_spark.report.svgplot`.
@@ -22,10 +25,11 @@ from __future__ import annotations
 import os
 from typing import Sequence
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, Window, functions as F, types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from wq_data_pipeline_spark.functions.scalars import sanitize_name
-from wq_data_pipeline_spark.operators.windows import gaussian_smooth, ordered
+from wq_data_pipeline_spark.operators import series_qc as Q
 from wq_data_pipeline_spark.report import svgplot as SP
 from wq_data_pipeline_spark.report.svgplot import (
     COLOR_BLUE,
@@ -34,6 +38,7 @@ from wq_data_pipeline_spark.report.svgplot import (
     COLOR_RAW,
     Figure,
 )
+from wq_data_pipeline_spark.session import ship_package
 
 try:  # optional PNG backend — not in this container
     import matplotlib
@@ -52,7 +57,49 @@ SEASON_ORDER = ["DJF", "MAM", "JJA", "SON"]
 NULL_STATION_DIR = "__HIVE_DEFAULT_PARTITION__"
 
 
+# one row per series from series_qc.figure_table
+_BUCKET = T.StructType(
+    [T.StructField("ts_us", T.LongType(), False)]
+    + [T.StructField(c, T.DoubleType()) for c in Q.FIGURE_VALUES]
+    + [T.StructField(f"n_{c}", T.LongType(), False) for c in Q.FIGURE_VALUES]
+)
+_SPAN = T.StructType(
+    [
+        T.StructField("type", T.StringType()),
+        T.StructField("s", T.LongType()),
+        T.StructField("e", T.LongType()),
+    ]
+)
+FIGURE_SCHEMA = T.StructType(
+    [
+        T.StructField("station", T.StringType()),
+        T.StructField("variable", T.StringType()),
+        T.StructField("buckets", T.ArrayType(_BUCKET, False), False),
+        T.StructField("hist", T.ArrayType(T.LongType(), False), False),
+        T.StructField("spans", T.ArrayType(_SPAN, False), False),
+    ]
+)
+
+
 # ---------------------------------------------------------------- grouped inputs
+def series_figure_inputs(
+    qc: DataFrame, events: DataFrame, max_points: int, max_spans: int
+) -> dict:
+    """The inputs of every series figure in one cogrouped Arrow pass
+    and one collect: ``{(station, variable): row}`` with the row's
+    ``buckets``, ``hist`` and ``spans`` (``series_qc.figure_table``)."""
+    ship_package(qc.sparkSession)
+    schema = to_arrow_schema(FIGURE_SCHEMA)
+
+    def per_series(series, spans):
+        return Q.figure_table(series, spans, schema, max_points=max_points, max_spans=max_spans)
+
+    series = qc.select(*KEYS, "ts", "raw", "clean", "accepted").groupBy(*KEYS)
+    spans = events.select(*KEYS, "type", "start", "end").groupBy(*KEYS)
+    rows = series.cogroup(spans).applyInArrow(per_series, FIGURE_SCHEMA).collect()
+    return {(r.station, r.variable): r for r in rows}
+
+
 def bucketed_series(df: DataFrame, value_cols: Sequence[str], max_points: int = 1100) -> dict:
     """Cluster-side time-bucket downsample of EVERY (station, variable)
     series in one collect: each series' span [lo, hi] (a per-series
@@ -182,33 +229,15 @@ def render_qc_figures(
     ``out_dir/<sanitized station>/`` (a NULL station under
     :data:`NULL_STATION_DIR`) with the reference's ``{var}__NN_name``
     basenames, so stations sharing a variable name do not overwrite
-    each other. Every input is one grouped collect over all series
-    (module docstring); series are drawn in (station, variable) order,
-    NULL station first. Returns written paths."""
+    each other. The series inputs are one cogrouped pass over all
+    series (module docstring); series are drawn in (station, variable)
+    order, NULL station first. Returns written paths."""
     from wq_data_pipeline_spark.operators.pinning import pin, unpin
-    from wq_data_pipeline_spark.operators.stats import decimal_histogram
     from wq_data_pipeline_spark.operators.wrtds import wrtds_buster, wrtds_residuals
 
-    # one bucketed pass shared by 00/01/03/04/05/08: 01's counts and
-    # 03's |successive diff| ride along in the same plan
-    gs = gaussian_smooth(qc, "clean", KEYS).withColumn(
-        "adiff", F.abs(F.col("clean") - F.lag("clean").over(ordered(KEYS)))
-    )
-    buckets = bucketed_series(
-        gs, ["raw", "clean", "accepted", "smooth", "residual", "adiff"], max_points
-    )
-    hist = {
-        (r.station, r.variable, r.bin): r.bin_count
-        for r in decimal_histogram(qc, KEYS, "clean").collect()
-    }
-    # newest spans first; (start, end, type) makes the order total
-    spans = _top_per_series(
-        events.select(
-            *KEYS, "type", F.unix_micros("start").alias("s"), F.unix_micros("end").alias("e")
-        ),
-        max_spans,
-        F.desc("s"), F.desc("e"), "type",
-    )
+    # one pass shared by 00-05 and 08: buckets (with 01's counts, 03's
+    # |successive diff| and 05's smoother), the histogram and the spans
+    inputs = series_figure_inputs(qc, events, max_points, max_spans)
     cov = {
         (r.station, r.variable, r.season): r.coverage_pct
         for r in seasonal.select(*KEYS, "season", "coverage_pct").collect()
@@ -227,8 +256,9 @@ def render_qc_figures(
         unpin(res)
 
     written: list[str] = []
-    for station, variable in sorted(buckets, key=lambda k: (k[0] is not None, k)):
-        rows = buckets[(station, variable)]
+    for station, variable in sorted(inputs, key=lambda k: (k[0] is not None, k)):
+        series = inputs[(station, variable)]
+        rows = series.buckets
         station_dir = os.path.join(
             out_dir, NULL_STATION_DIR if station is None else sanitize_name(station)
         )
@@ -255,7 +285,7 @@ def render_qc_figures(
         )
         f2.bars(
             [(b + 0.5) / 10 for b in range(10)],
-            [float(hist.get((station, variable, b), 0)) for b in range(10)],
+            [float(c) for c in series.hist],
             width=0.1,
         )
         written.append(save_figure(f2, pre + "02_decimal_hist"))
@@ -272,7 +302,7 @@ def render_qc_figures(
         written.append(save_figure(f3, pre + "03_quant_diffs"))
 
         # 04: flat events — raw + span overlays
-        ev = spans.get((station, variable), [])
+        ev = series.spans
         f4 = Figure(
             title="Flat values (orange) and flat slopes (blue)",
             xlabel="Time",

@@ -31,7 +31,8 @@ def read_wide_csv(
     df = spark.read.option("header", True).option("inferSchema", True).csv(path)
     if usecols:
         df = df.select(*usecols)
-    df = df.withColumn(timestamp_col, F.to_timestamp(F.col(timestamp_col)))
+    # try_: a malformed cell is NULL (and dropped below) under ANSI too
+    df = df.withColumn(timestamp_col, F.try_to_timestamp(F.col(timestamp_col)))
     df = df.filter(F.col(timestamp_col).isNotNull())
     if station_field is not None and station_value is not None:
         df = df.filter(F.col(station_field) == F.lit(station_value))
@@ -97,7 +98,9 @@ def melt_wide(
     present = [v for v in variables if v in df.columns]
     if not present:
         raise ValueError(f"none of {variables} present in {df.columns}")
-    station = F.col(station_col) if station_col else F.lit(station_literal)
+    # schema inference makes an all-digit station column numeric; the
+    # series key is a string either way
+    station = (F.col(station_col) if station_col else F.lit(station_literal)).cast("string")
     pairs = []
     for v in present:
         c = F.col(v).cast("double")
