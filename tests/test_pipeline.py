@@ -184,29 +184,29 @@ def _joins(plan: str) -> int:
 
 
 def test_report_tables_hold_no_join(spark, fixture_csv):
-    """The report pass (events and seasonal summary) is one
-    grouped-Arrow pass over the long table, and the meta table one
-    window plus one aggregate: neither plan joins or broadcasts, and
-    the report pass holds no window."""
+    """The events, seasonal and meta tables are projections of the
+    pinned series pass: their plans read the pin and hold no file scan,
+    no window, no join and no exchange."""
     from test_plan_budget import _count_op
 
-    from wq_data_pipeline_spark.plans.qc_pipeline import (
-        QCConfig,
-        meta_stage,
-        report_pass,
-        run_qc_pipeline,
-    )
+    from wq_data_pipeline_spark.plans.qc_pipeline import QCConfig, run_qc_pipeline
     from wq_data_pipeline_spark.sources.csv_source import melt_wide, read_wide_csv
 
     wide = read_wide_csv(spark, fixture_csv, station_field="station", station_value="stn1")
     long = melt_wide(wide, ["o2", "ph"], station_col="station")
-    report = report_pass(run_qc_pipeline(long, QCConfig(full_suite=True)).timeseries)
-    for name, df, windows in (("report", report, 0), ("meta", meta_stage(long), 1)):
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        shape = (_joins(plan), _count_op(plan, "BroadcastExchange"), _count_op(plan, "Window"))
-        assert shape == (0, 0, windows), (name, shape, plan)
-    plan = report._jdf.queryExecution().executedPlan().toString()
-    assert _count_op(plan, "FlatMapGroupsInArrow") == 1, plan
+    out = run_qc_pipeline(long, QCConfig(full_suite=True))
+    for name in ("events", "seasonal", "meta"):
+        plan = getattr(out, name)._jdf.queryExecution().executedPlan().toString()
+        shape = {
+            "pin": plan.count("Scan ExistingRDD["),
+            "scans": _count_op(plan, "FileScan"),
+            "windows": _count_op(plan, "Window"),
+            "joins": _joins(plan),
+            "exchanges": _count_op(plan, "Exchange") + _count_op(plan, "BroadcastExchange"),
+        }
+        assert shape == {"pin": 1, "scans": 0, "windows": 0, "joins": 0, "exchanges": 0}, (
+            name, shape, plan,
+        )
 
 
 def test_seasonal_marks_equal_a_left_join(spark):
@@ -256,13 +256,13 @@ def test_seasonal_marks_equal_a_left_join(spark):
 
 
 def test_meta_matches_pandas_reference(spark):
-    """Meta step, duplicates and sentinels against pandas on a series
-    with repeated timestamps and NULL-ts rows, and a 2-row series (the
-    15-min default step)."""
+    """The pipeline's meta step, duplicates and sentinels against pandas
+    on a series with repeated timestamps and NULL-ts rows, and a 2-row
+    series (the 15-min default step)."""
     import datetime as dt
     import json
 
-    from wq_data_pipeline_spark.plans.qc_pipeline import meta_stage
+    from wq_data_pipeline_spark.plans.qc_pipeline import QCConfig, run_qc_pipeline
 
     t0 = dt.datetime(2024, 5, 1)
     ts = [t0 + dt.timedelta(minutes=10 * i) for i in range(200)]
@@ -274,9 +274,10 @@ def test_meta_matches_pandas_reference(spark):
     rows += [("a", "y", ts[0], 1.0), ("a", "y", ts[1], -9999.0)]
     got = {
         r.variable: r
-        for r in meta_stage(
-            spark.createDataFrame(rows, "station string, variable string, ts timestamp, value double")
-        ).collect()
+        for r in run_qc_pipeline(
+            spark.createDataFrame(rows, "station string, variable string, ts timestamp, value double"),
+            QCConfig(apply_sentem=False),
+        ).meta.collect()
     }
     pdf = pd.DataFrame(rows, columns=["station", "variable", "ts", "value"])
     for var, g in pdf.groupby("variable"):
@@ -468,5 +469,59 @@ def test_outputs_unpin_every_pin(spark, monkeypatch, tmp_path):
     cli.main(
         ["--csv", str(tmp_path / "wq.csv"), "--out", str(tmp_path / "out"), "--vars", "o2", "--figs"]
     )
-    assert len(pinned) == 2
+    assert len(pinned) == 1
     assert sorted(map(id, released)) == sorted(map(id, pinned))
+
+
+def test_non_numeric_and_infinite_cells_become_null(spark, tmp_path):
+    """A CSV value column holding ``NA`` (read as string) and ±inf melts
+    to NULLs under ANSI, as pandas reads NA, and runs through the
+    pipeline and its sinks."""
+    from wq_data_pipeline_spark.plans.qc_pipeline import QCConfig, run_qc_pipeline, write_outputs
+    from wq_data_pipeline_spark.sources.csv_source import melt_wide, read_wide_csv
+
+    ts = pd.date_range("2024-01-01", periods=5, freq="15min")
+    csv = tmp_path / "wq.csv"
+    pd.DataFrame(
+        {"timestamp": ts, "station": "s", "o2": ["1.5", "NA", "inf", "-Infinity", "NaN"]}
+    ).to_csv(csv, index=False)
+    long = melt_wide(read_wide_csv(spark, str(csv)), ["o2"], station_col="station")
+    assert [r.value for r in long.orderBy("ts").collect()] == [1.5, None, None, None, None]
+    out = run_qc_pipeline(long, QCConfig())
+    write_outputs(out, str(tmp_path / "out"))
+    assert [r.raw for r in out.timeseries.orderBy("ts").collect()] == [1.5, None, None, None, None]
+    assert {r.duplicates for r in out.meta.collect()} == {0}
+
+
+def test_qc_job_count_is_fixed(spark, tmp_path):
+    """``run_qc_pipeline`` + ``write_outputs`` fire the same number of
+    Spark jobs for 1 series as for 4 (2 stations x 2 variables), and at
+    most 10: the series pass runs once, behind one pin, and every sink
+    reads a projection of it."""
+    from wq_data_pipeline_spark.plans.qc_pipeline import QCConfig, run_qc_pipeline, write_outputs
+    from wq_data_pipeline_spark.sources.csv_source import melt_wide, read_wide_csv
+
+    ts = pd.date_range("2024-01-01", periods=500, freq="15min")
+    rng = np.random.default_rng(6)
+    sc = spark.sparkContext
+    jobs = []
+    for stations, variables in ((1, 1), (2, 2)):
+        names = [f"v{j}" for j in range(variables)]
+        pd.concat(
+            pd.DataFrame(
+                {"timestamp": ts, "station": f"st{s}", **{v: rng.normal(10, 1, len(ts)) for v in names}}
+            )
+            for s in range(stations)
+        ).to_csv(tmp_path / f"wq{stations}.csv", index=False)
+        wide = read_wide_csv(spark, str(tmp_path / f"wq{stations}.csv"))
+        readings = melt_wide(wide, names, station_col="station")
+        group = f"test-qc-jobs-{stations}x{variables}"
+        sc.setJobGroup(group, group)
+        try:
+            out = run_qc_pipeline(readings, QCConfig(full_suite=True))
+            write_outputs(out, str(tmp_path / f"out{stations}"))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        out.unpin()
+        jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+    assert jobs[0] == jobs[1] <= 10, jobs

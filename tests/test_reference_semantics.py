@@ -412,8 +412,8 @@ def test_mask_sentinels_per_series_active_sets(spark):
     """Each series masks only its own active sentinels: in 'a' -9999 is
     active by count (5 hits, 2.5% < 5%), in 'b' -9 is active by
     fraction (2 hits < 5, 5% of 40 rows); the other sentinel of each
-    series stays. The aggregate ``active_sentinel_array`` (the meta
-    table's) agrees with the rows that were masked."""
+    series stays. The aggregate ``active_sentinel_array`` agrees with
+    the rows that were masked."""
     from wq_data_pipeline_spark.operators.clean import active_sentinel_array, mask_sentinels
 
     ts = pd.date_range("2024-01-01", periods=200, freq="15min")

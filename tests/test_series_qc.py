@@ -311,3 +311,47 @@ def test_kernel_buckets_match_bucketed_series(spark, values):
     np.testing.assert_array_equal(
         got["value"], [np.nan if r.value is None else r.value for r in want]
     )
+
+
+def test_all_null_ts_series_gets_only_a_meta_row(spark):
+    """A series whose every ts is NULL gives the kernel one row with no
+    long rows, no events and no seasons, and a meta (default step, all
+    NULL-ts rows but one counted as duplicates, the sentinel of 1 of
+    its 3 rows active); through the pipeline it gets a meta row and
+    nothing else, next to a series with timestamps."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    from wq_data_pipeline_spark.operators import series_qc as Q
+    from wq_data_pipeline_spark.plans.qc_pipeline import QCConfig, run_qc_pipeline, series_schema
+
+    cfg = QCConfig()
+    table = pa.table(
+        {
+            "station": ["s"] * 3,
+            "variable": ["z"] * 3,
+            "ts": pa.array([None] * 3, pa.timestamp("us", tz="UTC")),
+            "value": [1.0, None, -9999.0],
+            "season": pa.array([None] * 3, pa.string()),
+        }
+    )
+    row = Q.series_table(
+        table, to_arrow_schema(series_schema(cfg)), max_gap_seconds=cfg.max_gap_seconds,
+        z_thresh=cfg.z_thresh, value_range=None, full_suite=True, sentem=True,
+    ).to_pylist()
+    assert row == [
+        {
+            "station": "s", "variable": "z", "rows": [], "events": [], "seasons": [],
+            "step_seconds": 900.0, "duplicates": 2, "sentinel_used": "[-9999.0]",
+        }
+    ]
+
+    timed = _readings(spark, _series([1.0, 2.0, 3.0], station="s"))
+    untimed = spark.createDataFrame(
+        [("s", "z", None, v) for v in (1.0, None, -9999.0)], timed.schema
+    )
+    out = run_qc_pipeline(timed.unionByName(untimed), cfg)
+    assert {r.variable for r in out.meta.collect()} == {"x", "z"}
+    for name in ("timeseries", "events", "seasonal"):
+        assert "z" not in {r.variable for r in getattr(out, name).collect()}, name
+    assert [c for c in out.timeseries_wide.columns if c.startswith("z__")] == []

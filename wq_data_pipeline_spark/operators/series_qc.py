@@ -1,18 +1,29 @@
 """Per-series QC kernel: the QC pipeline's clean stage, fallback flag
-suite, SentemQC passes, event detectors, seasonal summary and figure
-inputs as numpy functions over ONE series.
+suite, SentemQC passes, event detectors, seasonal summary, meta and
+figure inputs as numpy functions over ONE series.
 
 A series is given sorted by ``ts`` (int64 epoch microseconds, unique
 after the clean stage) with float64 values, NaN standing for NULL.
-``plans/qc_pipeline.py`` runs :func:`qc_table` once per (station,
-variable) group through ``applyInArrow``, and :func:`report_table`
-(events and seasonal summary) over the pinned result, so the
-pipeline's whole chain is one Python-worker pass per series instead
-of a chain of Spark window passes and aggregates. The QC figures
-(``report/figures.py``) run :func:`figure_table` over each series and
-its events in one cogrouped pass. The EP3 runner
+``plans/qc_pipeline.py`` runs :func:`series_table` once per (station,
+variable) group through ``applyInArrow``: one Python-worker pass
+gives each series' QC long rows, events, seasonal summary and meta,
+instead of a chain of Spark window passes and aggregates. The QC
+figures (``report/figures.py``) run :func:`figure_table` over each
+series and its events in one cogrouped pass. The EP3 runner
 (``plans/sentem_pipeline.py``) runs :func:`sentemqc_table` the same
 way, with each sensor code's passes.
+
+:func:`series_table` returns a series as ONE row, its long rows a
+list column, so the JVM holds the whole series in one ``UnsafeRow``,
+which must stay under 2 GB (``BufferHolder``'s limit,
+``Integer.MAX_VALUE`` − 15 bytes). ``UnsafeRow.getSizeInBytes`` of the
+row of a 10k- and a 100k-point 15-minute series gives 112 bytes per
+point with SentemQC on and 88 without (8 bytes of list offset plus a
+row of 12 or 9 fixed-width fields), so a series tops out near 19M
+points with SentemQC (about 540 years at 15 minutes) and 24M without.
+A SentemQC reason adds its length rounded up to 8 bytes, 56 when it
+names all five passes, so a series flagged everywhere stops near 12.7M
+points.
 
 The clean stage, the detectors and the report functions reproduce the
 Spark Column algebra of the same name, which the catalog still runs:
@@ -35,12 +46,13 @@ triangular 5-point pass.
 
 The arrays hold NaN for NULL; the ``*_table`` functions turn every
 float column back into Arrow with a null mask, so NaN never leaves
-the kernel. :func:`report_table` and :func:`figure_table` return one
+the kernel. :func:`series_table` and :func:`figure_table` return one
 row per series whose list columns hold the series' rows.
 """
 
 from __future__ import annotations
 
+import json
 import math
 from collections.abc import Sequence
 from dataclasses import dataclass
@@ -175,6 +187,17 @@ def _median(g: np.ndarray) -> float:
     return (hi - pos) * v[lo] + (pos - lo) * v[hi]
 
 
+def _active_sentinels(value: np.ndarray) -> list[float]:
+    """The series' ACTIVE sentinels, ascending: matched by at least
+    SENTINEL_MIN_COUNT values or SENTINEL_MIN_FRAC of the rows
+    (``clean.active_sentinel_array``)."""
+    n = max(len(value), 1)
+    return sorted(
+        s for s in SENTINELS
+        if (c := np.count_nonzero(value == s)) >= SENTINEL_MIN_COUNT or c / n >= SENTINEL_MIN_FRAC
+    )
+
+
 def clean_series(
     ts: np.ndarray, value: np.ndarray, max_gap_seconds: float
 ) -> dict[str, np.ndarray]:
@@ -184,12 +207,7 @@ def clean_series(
     ``ts``, ``raw`` (post-dedup, pre-gap-null), ``clean``,
     ``dup_count``, ``gap_seconds`` (NaN at the series start),
     ``is_gap`` and ``row`` (the first input row of each ts)."""
-    n = len(value)
-    active = [
-        s for s in SENTINELS
-        if (c := np.count_nonzero(value == s)) >= SENTINEL_MIN_COUNT or c / n >= SENTINEL_MIN_FRAC
-    ]
-    v = np.where(np.isin(value, active), np.nan, value)
+    v = np.where(np.isin(value, _active_sentinels(value)), np.nan, value)
     uts, row, dup_count = np.unique(ts, return_index=True, return_counts=True)
     raw = v[row]
     for i in np.flatnonzero(dup_count > 1):
@@ -510,6 +528,8 @@ EVENT_DETECTORS = {
 # A7's expected-point cadence, and the event kinds whose starts each
 # season counts (reference seasonal_stats, :277-290)
 SEASON_STEP_SECONDS = 900.0
+# A3's step when a series has under 3 rows or no positive ts diff
+DEFAULT_STEP_SECONDS = 900.0
 SEASON_EVENT_COUNTS = {"flat_values": "flat_values_events", "flat_slopes": "flat_slopes_events"}
 # the series columns every QC figure draws from, bucketed together
 FIGURE_VALUES = ("raw", "clean", "accepted", "smooth", "residual", "adiff")
@@ -652,45 +672,6 @@ def _f64(x: np.ndarray) -> pa.Array:
     return pa.array(x, type=pa.float64(), mask=np.isnan(x))
 
 
-def qc_table(
-    table: pa.Table,
-    *,
-    max_gap_seconds: float,
-    z_thresh: float,
-    value_range: tuple[float, float] | None,
-    full_suite: bool,
-    sentem: bool,
-) -> pa.Table:
-    """One series' QC long table from its (station, variable, ts,
-    value) Arrow rows: station, variable, ts, clean, dup_count, raw,
-    gap_seconds, is_gap, f_z, saqc_flag, accepted and, with ``sentem``,
-    sm_masked, sm_flagged, sm_flagreason."""
-    with np.errstate(invalid="ignore", divide="ignore"):
-        order, ts, x = _sorted_series(table, "value")
-        c = clean_series(ts, x, max_gap_seconds)
-        f_z, flagged = flag_series(c["ts"], c["clean"], z_thresh, value_range, full_suite)
-        rows = pa.array(order[c["row"]])
-        cols = {
-            "station": table.column("station").take(rows),
-            "variable": table.column("variable").take(rows),
-            "ts": pa.array(c["ts"]).cast(table.schema.field("ts").type),
-            "clean": _f64(c["clean"]),
-            "dup_count": pa.array(c["dup_count"]),
-            "raw": _f64(c["raw"]),
-            "gap_seconds": _f64(c["gap_seconds"]),
-            "is_gap": pa.array(c["is_gap"]),
-            "f_z": pa.array(f_z),
-            "saqc_flag": pa.array(np.where(flagged, 255, 0).astype(np.int32)),
-            "accepted": _f64(np.where(flagged, np.nan, c["clean"])),
-        }
-        if sentem:
-            sm_flagged, reason = _flag_reasons(sentemqc_series(c["clean"])[0])
-            cols["sm_masked"] = _f64(np.where(sm_flagged, np.nan, _premask(c["clean"])))
-            cols["sm_flagged"] = pa.array(sm_flagged)
-            cols["sm_flagreason"] = pa.array(reason, type=pa.string())
-    return pa.table(cols)
-
-
 def sentemqc_table(table: pa.Table, passes: Sequence[BandPassCfg]) -> pa.Table:
     """One EP3 series: its Arrow rows sorted by ts, followed by
     ``flag_run{i}`` (100 OK / 200 flagged) for each pass and the last
@@ -767,17 +748,79 @@ def _keys_of(table: pa.Table) -> dict[str, pa.ChunkedArray]:
     return {k: table.column(k).take(first) for k in ("station", "variable")}
 
 
-def report_table(table: pa.Table, schema: pa.Schema) -> pa.Table:
-    """One series' report row of ``schema`` from its (station,
-    variable, ts, clean, season) Arrow rows: station, variable,
-    ``events`` (the detectors' events, :func:`_event_columns`) and
-    ``seasons`` (one :func:`seasonal_summary` row per season)."""
+def series_meta(ts: np.ndarray, value: np.ndarray, null_ts: int) -> dict[str, np.ndarray]:
+    """One series' meta (A3 and the reference's meta dict
+    ``{station, col, step, sentinel_used, duplicates}``, :738) from its
+    non-NULL timestamps ``ts`` (µs, sorted), every row's ``value``
+    (NULL-ts rows included) and the count of NULL-ts rows:
+    ``step_seconds``, the median of the positive ts diffs, or
+    DEFAULT_STEP_SECONDS under 3 rows or without one; ``duplicates``,
+    the zero diffs plus all NULL-ts rows but one; ``sentinel_used``,
+    the active sentinels as compact JSON."""
+    dt = np.diff(ts) / _US_PER_S
+    pos = dt[dt > 0]
+    step = _median(pos) if len(value) >= 3 and len(pos) else DEFAULT_STEP_SECONDS
+    return {
+        "step_seconds": np.array([step]),
+        "duplicates": np.array([np.count_nonzero(dt == 0) + max(null_ts - 1, 0)], np.int64),
+        "sentinel_used": np.array(
+            [json.dumps(_active_sentinels(value), separators=(",", ":"))], dtype=object
+        ),
+    }
+
+
+def series_table(
+    table: pa.Table,
+    schema: pa.Schema,
+    *,
+    max_gap_seconds: float,
+    z_thresh: float,
+    value_range: tuple[float, float] | None,
+    full_suite: bool,
+    sentem: bool,
+) -> pa.Table:
+    """One series' row of ``schema`` from its (station, variable, ts,
+    value, season) Arrow rows, NULL-ts rows included: station,
+    variable, and
+
+    - ``rows``, the QC long table over the rows with a ts: ts, clean,
+      dup_count, raw, gap_seconds, is_gap, f_z, saqc_flag, accepted
+      and, with ``sentem``, sm_masked, sm_flagged, sm_flagreason;
+    - ``events``, the detectors' events over clean (:func:`_event_columns`);
+    - ``seasons``, one :func:`seasonal_summary` row per season;
+    - step_seconds, duplicates and sentinel_used over every row
+      (:func:`series_meta`).
+
+    A series whose every ts is NULL gets its meta and empty lists."""
     with np.errstate(invalid="ignore", divide="ignore"):
-        order, ts, x = _sorted_series(table, "clean")
-        season = table.column("season").to_numpy(zero_copy_only=False)[order]
-        found = {name: fn(ts, x) for name, fn in EVENT_DETECTORS.items()}
-        seasons = seasonal_summary(ts, x, season, found)
-    return _one_row({**_keys_of(table), "events": _event_columns(found), "seasons": seasons}, schema)
+        timed = table.filter(pc.is_valid(table.column("ts")))
+        order, ts, x = _sorted_series(timed, "value")
+        c = clean_series(ts, x, max_gap_seconds)
+        f_z, flagged = flag_series(c["ts"], c["clean"], z_thresh, value_range, full_suite)
+        rows = {
+            "ts": c["ts"],
+            "clean": c["clean"],
+            "dup_count": c["dup_count"],
+            "raw": c["raw"],
+            "gap_seconds": c["gap_seconds"],
+            "is_gap": c["is_gap"],
+            "f_z": f_z,
+            "saqc_flag": np.where(flagged, 255, 0).astype(np.int32),
+            "accepted": np.where(flagged, np.nan, c["clean"]),
+        }
+        if sentem:
+            sm_flagged, reason = _flag_reasons(sentemqc_series(c["clean"])[0])
+            rows["sm_masked"] = np.where(sm_flagged, np.nan, _premask(c["clean"]))
+            rows["sm_flagged"] = sm_flagged
+            rows["sm_flagreason"] = pa.array(reason, type=pa.string())
+        found = {name: fn(c["ts"], c["clean"]) for name, fn in EVENT_DETECTORS.items()}
+        season = timed.column("season").to_numpy(zero_copy_only=False)[order[c["row"]]]
+        seasons = seasonal_summary(c["ts"], c["clean"], season, found)
+        meta = series_meta(ts, table.column("value").to_numpy(), table.num_rows - timed.num_rows)
+    return _one_row(
+        {**_keys_of(table), "rows": rows, "events": _event_columns(found), "seasons": seasons, **meta},
+        schema,
+    )
 
 
 def figure_table(

@@ -5,25 +5,22 @@ table.
 
 Where the reference loops over variables in pandas, this plan sends
 each whole (station, variable) series to one Python worker, once:
-``qc_long`` runs the per-series kernel (operators/series_qc.py:
-clean stage, fallback flag suite, SentemQC) through one
+:func:`series_pass` runs the per-series kernel
+(``operators/series_qc.series_table``: clean stage, fallback flag
+suite, SentemQC, event detectors, seasonal summary, meta) through one
 ``groupBy(station, variable).applyInArrow``. The kernel is numpy over
 a sorted series, so the chain costs no Spark window pass, no plan of
 a few hundred expressions to build, and no per-stage codegen.
 
-The plan is lazy except for two pins (operators/pinning.py), each
-read by several sinks and figures, so the work behind each runs once:
-- the long table (the kernel's output);
-- the report table (:func:`report_pass`): one more grouped-Arrow pass
-  over the long table's clean column, one row per series holding its
-  events (the kernel's detectors) and its seasonal summary (A7 plus
-  the flat event starts per season) as two list columns. The events
-  and seasonal outputs are ``inline`` projections of it; the pin
-  reports no partitioning, so the pass shuffles the long table by
-  series once more.
-
-The meta table is one window and one aggregate over the readings, so
-no report table joins anything.
+The pass returns each series as ONE row: its long rows, events and
+seasons as list columns, and its meta as plain columns. The plan is
+lazy except for one pin (operators/pinning.py) of that frame, and
+every output is a projection of the pin, so the kernel runs once
+however many sinks and figures read it, and the events, seasonal and
+meta tables need no join, window or shuffle. A series must fit in one
+JVM row, under 2 GB: about 19M points with SentemQC on, 24M without,
+12.7M if every point is flagged by all five SentemQC passes (the
+measurement is in ``operators/series_qc.py``).
 
 Outputs mirror the reference's artifacts:
 - wide QC timeseries parquet: ``{var}__raw/__clean/__accepted/
@@ -31,7 +28,7 @@ Outputs mirror the reference's artifacts:
   scripts/water_qc_output/processed/.../*__qc_timeseries.parquet)
 - events table (W4/W5/W6 emissions, J4 union)
 - seasonal summary (A7)
-- meta table (step, duplicates)
+- meta table (step, duplicates, active sentinels)
 """
 
 from __future__ import annotations
@@ -42,10 +39,8 @@ from pyspark.sql import DataFrame, functions as F, types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
 from wq_data_pipeline_spark.functions.scalars import sanitize_name, season_expr
-from wq_data_pipeline_spark.operators import clean as C
 from wq_data_pipeline_spark.operators import pinning
 from wq_data_pipeline_spark.operators import series_qc as Q
-from wq_data_pipeline_spark.operators.windows import with_ts_delta
 from wq_data_pipeline_spark.session import ship_package
 
 KEYS = ["station", "variable"]
@@ -72,9 +67,11 @@ class QCConfig:
     full_suite: bool = False
 
 
-_LONG_FIELDS = [
+_KEY_FIELDS = [
     T.StructField("station", T.StringType()),
     T.StructField("variable", T.StringType()),
+]
+_ROW_FIELDS = [
     T.StructField("ts", T.TimestampType()),
     T.StructField("clean", T.DoubleType()),
     T.StructField("dup_count", T.LongType(), False),
@@ -92,8 +89,7 @@ _SENTEM_FIELDS = [
 ]
 EVENTS_SCHEMA = T.StructType(
     [
-        T.StructField("station", T.StringType()),
-        T.StructField("variable", T.StringType()),
+        *_KEY_FIELDS,
         T.StructField("type", T.StringType(), False),
         T.StructField("start", T.TimestampType()),
         T.StructField("end", T.TimestampType()),
@@ -108,8 +104,7 @@ EVENTS_SCHEMA = T.StructType(
 )
 SEASONAL_SCHEMA = T.StructType(
     [
-        T.StructField("station", T.StringType()),
-        T.StructField("variable", T.StringType()),
+        *_KEY_FIELDS,
         T.StructField("season", T.StringType(), False),
         T.StructField("n_rows", T.LongType(), False),
         T.StructField("coverage_pct", T.DoubleType()),
@@ -117,36 +112,51 @@ SEASONAL_SCHEMA = T.StructType(
         *[T.StructField(name, T.LongType(), False) for name in Q.SEASON_EVENT_COUNTS.values()],
     ]
 )
+META_FIELDS = [
+    T.StructField("step_seconds", T.DoubleType()),
+    T.StructField("duplicates", T.LongType(), False),
+    # JSON-ish string (the reference stores the sorted list) so the CSV
+    # meta sink can carry it
+    T.StructField("sentinel_used", T.StringType()),
+]
 
 
-def _list_of(schema: T.StructType) -> T.ArrayType:
-    """A list column of ``schema``'s rows without their series keys."""
-    return T.ArrayType(T.StructType(schema.fields[len(KEYS):]), containsNull=False)
+def _list_of(fields: list[T.StructField]) -> T.ArrayType:
+    """A non-null list column of rows of ``fields``."""
+    return T.ArrayType(T.StructType(fields), containsNull=False)
 
 
-REPORT_SCHEMA = T.StructType(
-    [
-        *EVENTS_SCHEMA.fields[: len(KEYS)],
-        T.StructField("events", _list_of(EVENTS_SCHEMA), False),
-        T.StructField("seasons", _list_of(SEASONAL_SCHEMA), False),
-    ]
-)
+def series_schema(cfg: QCConfig) -> T.StructType:
+    """One row per series: its keys, the long rows, events and seasons
+    as list columns (their ``inline`` gives the long table,
+    :data:`EVENTS_SCHEMA` and :data:`SEASONAL_SCHEMA`), and the meta."""
+    rows = _ROW_FIELDS + (_SENTEM_FIELDS if cfg.apply_sentem else [])
+    return T.StructType(
+        [
+            *_KEY_FIELDS,
+            T.StructField("rows", _list_of(rows), False),
+            T.StructField("events", _list_of(EVENTS_SCHEMA.fields[len(KEYS):]), False),
+            T.StructField("seasons", _list_of(SEASONAL_SCHEMA.fields[len(KEYS):]), False),
+            *META_FIELDS,
+        ]
+    )
 
 
-def qc_long(readings: DataFrame, cfg: QCConfig) -> DataFrame:
-    """Clean, flag and (with ``cfg.apply_sentem``) SentemQC every series
-    in ONE Python-worker pass: ``groupBy(station, variable)
-    .applyInArrow`` runs :func:`series_qc.qc_table` on each whole
-    series. Columns: station, variable, ts, clean, dup_count, raw,
-    gap_seconds, is_gap, f_z, saqc_flag, accepted (+ sm_masked,
-    sm_flagged, sm_flagreason). Rows with a NULL ts are dropped first,
-    as ingest does (reference ensure_time_index). The workers import
-    the kernel by module reference, so the package is shipped first."""
+def series_pass(readings: DataFrame, cfg: QCConfig) -> DataFrame:
+    """Every series' QC in ONE Python-worker pass: ``groupBy(station,
+    variable).applyInArrow`` runs :func:`series_qc.series_table` on each
+    whole series, NULL-ts rows included, with the season of each ts
+    (``season_expr``, so the season follows the session time zone).
+    One row of :func:`series_schema` per series. The workers import the
+    kernel by module reference, so the package is shipped first."""
     ship_package(readings.sparkSession)
+    schema = series_schema(cfg)
+    arrow_schema = to_arrow_schema(schema)
 
     def per_series(key, table):
-        return Q.qc_table(
+        return Q.series_table(
             table,
+            arrow_schema,
             max_gap_seconds=cfg.max_gap_seconds,
             z_thresh=cfg.z_thresh,
             value_range=cfg.range_map.get(key[1].as_py()),
@@ -154,59 +164,20 @@ def qc_long(readings: DataFrame, cfg: QCConfig) -> DataFrame:
             sentem=cfg.apply_sentem,
         )
 
-    fields = _LONG_FIELDS + (_SENTEM_FIELDS if cfg.apply_sentem else [])
     return (
-        readings.select(*KEYS, "ts", "value")
-        .filter(F.col("ts").isNotNull())
+        readings.select(*KEYS, "ts", "value", season_expr("ts").alias("season"))
         .groupBy(*KEYS)
-        .applyInArrow(per_series, T.StructType(fields))
+        .applyInArrow(per_series, schema)
     )
 
 
-def report_pass(qc: DataFrame) -> DataFrame:
-    """Events and seasonal summary of every series in ONE Python-worker
-    pass over the long table: ``groupBy(station, variable)
-    .applyInArrow`` runs :func:`series_qc.report_table` on each series'
-    (ts, clean) and the season of each ts (``season_expr``, so the
-    season follows the session time zone). One row per series:
-    station, variable, ``events`` and ``seasons``, two list columns
-    whose ``inline`` gives :data:`EVENTS_SCHEMA` and
-    :data:`SEASONAL_SCHEMA`."""
-    schema = to_arrow_schema(REPORT_SCHEMA)
-
-    def per_series(table):
-        return Q.report_table(table, schema)
-
-    return (
-        qc.select(*KEYS, "ts", "clean", season_expr("ts").alias("season"))
-        .groupBy(*KEYS)
-        .applyInArrow(per_series, REPORT_SCHEMA)
-    )
-
-
-def meta_stage(readings: DataFrame) -> DataFrame:
-    """Per-series meta: inferred step, duplicate count, and the
-    ACTIVE sentinel set (reference meta dict
-    ``{station, col, step, sentinel_used, duplicates}``,
-    scripts/ufz_water_qc_pipeline.py:738).
-
-    One window (successive ts diffs) and one aggregate, no join. Rows
-    sharing a ts are sorted next to each other, so every one of them
-    but the first has a diff of 0: ``duplicates`` counts those, plus
-    all NULL-ts rows but one (a ``groupBy(ts)`` puts them in one
-    group)."""
-    d = with_ts_delta(readings.select(*KEYS, "ts", "value"), KEYS, "ts", out="_dt")
-    null_ts = F.count_if(F.col("ts").isNull())
-    active = C.active_sentinel_array(
-        Q.SENTINELS, "value", Q.SENTINEL_MIN_COUNT, Q.SENTINEL_MIN_FRAC
-    )
-    return d.groupBy(*KEYS).agg(
-        C.step_seconds("_dt").alias("step_seconds"),
-        (F.count_if(F.col("_dt") == 0) + F.greatest(null_ts - 1, F.lit(0))).alias("duplicates"),
-        # JSON-ish string (the reference stores the sorted list) so the
-        # CSV meta sink can carry it
-        F.to_json(active).alias("sentinel_used"),
-    )
+def qc_long(readings: DataFrame, cfg: QCConfig) -> DataFrame:
+    """The QC long table, the ``rows`` of :func:`series_pass`: station,
+    variable, ts, clean, dup_count, raw, gap_seconds, is_gap, f_z,
+    saqc_flag, accepted (+ sm_masked, sm_flagged, sm_flagreason). Rows
+    with a NULL ts get none, as at ingest (reference
+    ensure_time_index)."""
+    return series_pass(readings, cfg).select(*KEYS, F.inline("rows"))
 
 
 def widen(
@@ -257,45 +228,41 @@ class QCOutputs:
     events: DataFrame
     seasonal: DataFrame
     meta: DataFrame
-    # the frames run_qc_pipeline pinned, released by unpin()
-    pinned: tuple[DataFrame, ...] = ()
+    # the frame run_qc_pipeline pinned, released by unpin()
+    pinned: DataFrame
 
     def unpin(self) -> None:
-        """Release every pin behind these outputs; call it after the
-        last sink or figure has read them."""
-        for df in self.pinned:
-            pinning.unpin(df)
+        """Release the pin behind these outputs; call it after the last
+        sink or figure has read them."""
+        pinning.unpin(self.pinned)
 
 
 def run_qc_pipeline(readings: DataFrame, cfg: QCConfig | None = None) -> QCOutputs:
     """The full DAG. ``readings`` is the canonical long table
     (station, variable, ts, value).
 
-    Two subtrees are pinned, so each runs once however many actions
-    read it (reference recomputes nothing because everything lives in
-    RAM; SURVEY §4.1 'Caching / reuse'):
-
-    - the long table (:func:`qc_long`), read by ``widen``'s variable
-      collect, both parquet sinks, the report pass, the series figures
-      and the CLI's WRTDS leg;
-    - the report table (:func:`report_pass`), whose ``inline``
-      projections are the events (read by the events CSV and the
-      event figures) and the seasonal table (read by its CSV and the
-      coverage figure).
-
-    ``meta`` reads ``readings`` because it counts the pre-dedup
-    duplicates. Release the pins with :meth:`QCOutputs.unpin` after
-    the last sink."""
+    One subtree is pinned, :func:`series_pass`, so the kernel runs once
+    however many actions read it (reference recomputes nothing because
+    everything lives in RAM; SURVEY §4.1 'Caching / reuse'). Every
+    output is a projection of the pin: the long table and the events
+    and seasonal tables are the ``inline`` of its list columns, and the
+    meta its plain columns. The wide table pivots the long table over
+    the variables that have long rows, sorted, which one collect of the
+    pin finds. Release the pin with :meth:`QCOutputs.unpin` after the
+    last sink."""
     cfg = cfg or QCConfig()
-    qc = pinning.pin(qc_long(readings, cfg))
-    report = pinning.pin(report_pass(qc))
+    series = pinning.pin(series_pass(readings, cfg))
+    qc = series.select(*KEYS, F.inline("rows"))
+    variables = sorted(
+        {r.variable for r in series.filter(F.size("rows") > 0).select("variable").collect()}
+    )
     return QCOutputs(
         timeseries=qc,
-        timeseries_wide=widen(qc),
-        events=report.select(*KEYS, F.inline("events")),
-        seasonal=report.select(*KEYS, F.inline("seasons")),
-        meta=meta_stage(readings),
-        pinned=(qc, report),
+        timeseries_wide=widen(qc, variables),
+        events=series.select(*KEYS, F.inline("events")),
+        seasonal=series.select(*KEYS, F.inline("seasons")),
+        meta=series.select(*KEYS, *(f.name for f in META_FIELDS)),
+        pinned=series,
     )
 
 

@@ -93,7 +93,9 @@ def melt_wide(
 
     Missing variable columns are skipped silently, matching the
     reference's ``if col not in df.columns: continue``
-    (scripts/ufz_water_qc_pipeline.py:754). Non-finite values -> NULL.
+    (scripts/ufz_water_qc_pipeline.py:754). Non-numeric cells (``NA``,
+    which pandas reads as NaN, makes CSV inference read the column as
+    string) and non-finite values (NaN, ±inf) -> NULL.
     """
     present = [v for v in variables if v in df.columns]
     if not present:
@@ -103,8 +105,9 @@ def melt_wide(
     station = (F.col(station_col) if station_col else F.lit(station_literal)).cast("string")
     pairs = []
     for v in present:
-        c = F.col(v).cast("double")
-        clean = F.when(c.isNull() | F.isnan(c), None).otherwise(c)
+        # try_: a non-numeric cell is NULL under ANSI too
+        c = F.col(v).try_cast("double")
+        clean = F.when(c.isNull() | F.isnan(c) | (F.abs(c) == float("inf")), None).otherwise(c)
         pairs.append(F.struct(F.lit(v).alias("variable"), clean.alias("value")))
     return (
         df.select(
